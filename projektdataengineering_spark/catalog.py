@@ -100,30 +100,45 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pass, and the resolved logical plan is immutable — every action on
     it (and on anything derived from it) still scans the parquet.
     Nothing is persisted, so the bench's between-query cache hygiene is
-    unaffected. The memo lives ON the session object (a new session
-    never sees another session's plans) and the mtime/size key means a
-    regenerated fixture can never serve a stale relation.
-    """
-    import os
+    unaffected (scoping rule: :func:`session_file_memo`).
 
+    Self-joins: every call for a table returns the SAME frame, so both
+    sides of a self-join carry the same attribute ids and Spark rejects
+    the join condition as ambiguous. Give each side its own
+    ``.alias("a")`` / ``.alias("b")`` and refer to columns as
+    ``F.col("a.x")``.
+    """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
+
+    def scan():
+        df = spark.read.parquet(path)
+        return normalize_event_ts(df) if name == "events" else df
+
+    return session_file_memo(spark, "_pde_scan_memo", path, scan)
+
+
+def session_file_memo(spark: SparkSession, attr: str, path: str, build):
+    """``build()`` memoized per session and per file identity — the one
+    scoping rule of the engine's driver-side METADATA memos (scan plans,
+    footer schemas). The memo dict lives ON the session object as
+    ``attr`` (a new session never sees another session's entries), and
+    the (realpath, mtime_ns, size) key means a regenerated file can
+    never serve a stale entry."""
+    import os
+
     st = os.stat(path)
     key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
-    memo = getattr(spark, "_pde_scan_memo", None)
+    memo = getattr(spark, attr, None)
     if memo is None:
         memo = {}
-        spark._pde_scan_memo = memo
-    df = memo.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        if name == "events":
-            df = normalize_event_ts(df)
-        memo[key] = df
-    return df
+        setattr(spark, attr, memo)
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def load_events_since(spark: SparkSession, sf_dir: str, hwm) -> DataFrame:

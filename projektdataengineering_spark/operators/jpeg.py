@@ -49,7 +49,6 @@ ZIGZAG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int64)
-_UNZIGZAG = np.argsort(ZIGZAG)
 
 # T.81 Annex K.1 example quantization tables (luminance, chrominance).
 _Q_LUM = np.array([

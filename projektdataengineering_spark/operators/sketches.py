@@ -241,43 +241,6 @@ def bloom_filter_words(
     )
 
 
-def bloom_probe_condition(
-    key_sql: str, bw_col: str, m_bits: int, k_hashes: int
-) -> str:
-    """SQL predicate testing a probe row's key against a Bloom word
-    table planted as a literal array column ``bw_col`` (1-indexed,
-    word w at element w+1; see bloom_filter_words for the layout and
-    the 63-bit word rationale).
-
-    ONE md5 per probe row (the affine-lane rule — per-lane hashing was
-    the round-8 MinHash 3.8× regression, and on the Bloom probe it
-    cost more than the join it was meant to beat). The single-element
-    transform() binds the digest — and then its two 32-bit halves —
-    to lambda variables, because Catalyst's project-collapse would
-    otherwise inline the md5 into every one of the 2·k position
-    references (measured 3.6 s → 2.0 s at sf0.1 for the probe alone);
-    lanes stay plain BIGINT arithmetic on the bound halves. This is
-    the PORTABLE (DuckDB-replayable) probe; the runtime-filter joins
-    moved to the bloom_fast_* xxhash64 family in r18 (see below) —
-    use this form only where an oracle must replay the bit
-    positions."""
-    tests = " AND ".join(
-        f"((shiftright(element_at({bw_col}, CAST((((s.x + {j} * s.y)"
-        f" % 4294967296) % {m_bits}) div 63 AS INT) + 1), "
-        f"CAST((((s.x + {j} * s.y) % 4294967296) % {m_bits}) % 63"
-        f" AS INT)) & 1) = 1)"
-        for j in range(k_hashes)
-    )
-    return f"""
-    element_at(transform(
-      array(md5(concat({key_sql}, '#bloom'))), h ->
-        element_at(transform(array(named_struct(
-            'x', CAST(conv(substring(h, 1, 8), 16, 10) AS BIGINT),
-            'y', CAST(conv(substring(h, 9, 8), 16, 10) AS BIGINT))),
-          s -> ({tests})), 1)), 1)
-    """
-
-
 def bloom_dense_words(df, key_col: str, m_bits: int, k_hashes: int) -> list[int]:
     """Materialize a side's Bloom filter as the dense word list a probe
     plants into its plan (bounded collect: ≤ m_bits/63 + 1 rows — the

@@ -365,12 +365,10 @@ def scan_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_operators.py. (sf_dir is unused — the source IS the
     data.)"""
     from ..sources.pydatasource import register_synthetic_source
+    from ..streaming import scoped_conf
 
     register_synthetic_source(spark)
-    key = "spark.sql.python.filterPushdown.enabled"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
         df = (
             spark.read.format("synthdocspushdown")
             .option("rows", _PYSOURCE_ROWS)
@@ -392,11 +390,6 @@ def scan_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialized result, so a later collect can't re-plan the
         # pushFilters reader under a restored-default session
         return out.localCheckpoint(eager=True)
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 @query("scan_python_stream", oracle=_PYSTREAM_SQL)

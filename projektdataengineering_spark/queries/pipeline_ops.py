@@ -2959,10 +2959,6 @@ _STREAM_DELTA_SQL = f"""
 """
 
 _STREAM_DELTA_EPOCHS = 4
-# keyed-state bucket count for the cross-epoch first-wins kernel (the
-# stream_dedup_stateful DEDUP_BUCKETS discipline: per-signature groups
-# pay one Arrow round-trip per distinct doc — bucketing amortizes it)
-_STREAM_DELTA_BUCKETS = 64
 _STREAM_DELTA_LEDGER_SCHEMA = (
     "doc_id bigint, lang string, source string, n_toks bigint"
 )
@@ -2994,10 +2990,9 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions, no shuffle), probed against the PERSISTED corpus
     signature index as a stream-static LEFT ANTI join (stateless, the
     index is never re-signed), deduped across epochs by a CUSTOM
-    STATEFUL first-wins operator over {_STREAM_DELTA_BUCKETS}-way
-    signature hash buckets (applyInPandasWithState; each bucket's
-    state is its seen-signature list — the stream_dedup_stateful
-    bucketing discipline, since per-signature groups would pay one
+    STATEFUL first-wins fold over signature hash buckets
+    (streaming/stateful.py bucketed_state; each bucket's state is its
+    seen-signature list, since per-signature groups would pay one
     Arrow round-trip per distinct doc; unsigned docs carry per-doc
     fallback sigs so they pass through undeduped), quality-gated
     map-side, and published through the ledgersink streaming SINK
@@ -3029,11 +3024,12 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    import pandas as pd
 
     from ..sources.pydatasource import register_synthetic_source
     from ..sources.pysink import read_ledger, register_ledger_sink
     from ..streaming import stream_state_partitions
+    from ..streaming.stateful import STATE_BUCKETS, bucketed_state
 
     base = _stream_delta_workdir(sf_dir)
     ledger = os.path.join(base, "ledger")
@@ -3089,13 +3085,10 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # unsigned docs (< 2 tokens) have NULL lanes: the anti join
         # passes them (NULL never equals) and the per-doc fallback sig
-        # lets them through the dedup kernel untouched. Keyed-state
-        # granularity is a {_STREAM_DELTA_BUCKETS}-way HASH BUCKET of
-        # signatures, not one signature — the stream_dedup_stateful
-        # round-12 lesson (per-key Arrow groups pay one pandas
-        # round-trip per group; one group per distinct doc signature
-        # made the first cut of this kernel the probe's worst sf1 row).
-        # Each bucket's state is its seen-signature list.
+        # lets them through the dedup kernel untouched. Keyed state is
+        # bucketed by signature hash (bucketed_state: one group per
+        # distinct doc signature made the first cut of this kernel the
+        # probe's worst sf1 row).
         raw_key = F.concat(F.lit("raw#"), F.col("doc_id").cast("string"))
         sig = F.md5(
             F.concat_ws(
@@ -3111,49 +3104,27 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "doc_id", "lang", "source", "n_toks", "quality",
             sig.alias("sig"),
-            F.pmod(F.xxhash64(sig), F.lit(_STREAM_DELTA_BUCKETS))
+            F.pmod(F.xxhash64(sig), F.lit(STATE_BUCKETS))
             .cast("int")
             .alias("bucket"),
         )
 
-        out_schema = (
-            "doc_id long, lang string, source string, "
-            "n_toks long, quality boolean"
-        )
+        def first_wins(batch, st):
+            # stream order: the lowest doc_id of an unseen signature wins
+            fresh = batch.sort_values("doc_id", kind="stable").drop_duplicates("sig")
+            fresh = fresh[~fresh["sig"].isin(st.index)]
+            st = pd.concat([st, pd.DataFrame(index=pd.Index(fresh["sig"], name="sig"))])
+            return st, fresh[["doc_id", "lang", "source", "n_toks", "quality"]]
 
-        def first_wins(key, pdf_iter, state):
-            import pandas as pd
-
-            seen = set(state.get[0]) if state.exists else set()
-            parts = [pdf for pdf in pdf_iter if len(pdf)]
-            if not parts:
-                return iter(())
-            batch = pd.concat(parts).sort_values("doc_id", kind="stable")
-            out = []
-            for row in batch.itertuples(index=False):
-                if row.sig in seen:
-                    continue
-                seen.add(row.sig)
-                out.append(
-                    {
-                        "doc_id": int(row.doc_id),
-                        "lang": row.lang,
-                        "source": row.source,
-                        "n_toks": int(row.n_toks),
-                        "quality": bool(row.quality),
-                    }
-                )
-            state.update((sorted(seen),))
-            if not out:
-                return iter(())
-            return iter([pd.DataFrame(out)])
-
-        deduped = keyed.groupBy("bucket").applyInPandasWithState(
+        deduped = bucketed_state(
+            keyed,
             first_wins,
-            outputStructType=out_schema,
-            stateStructType="seen array<string>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+            state_fields="sig string",
+            out_schema=(
+                "doc_id long, lang string, source string, "
+                "n_toks long, quality boolean"
+            ),
+            output_mode="append",
         )
         admitted = deduped.filter("quality").select(
             "doc_id", "lang", "source", "n_toks"

@@ -23,6 +23,8 @@ production story for exactly-once; tests use the memory sink.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -109,10 +111,17 @@ def open_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-cost batch footer read and the ts column normalized with the
     same dtype branch as the batch path (catalog.normalize_event_ts).
     """
-    from ..catalog import normalize_event_ts
+    from ..catalog import normalize_event_ts, session_file_memo
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = _event_schema_for(spark, f"{sf_dir}/events.parquet")
+    # METADATA memo, not a result cache: the footer read measured
+    # ~120-180 ms of driver-side work per call (r19), paid once per
+    # streaming query invocation. The schema is a pure function of the
+    # file bytes under the nanosAsLong conf every caller sets.
+    path = f"{sf_dir}/events.parquet"
+    schema = session_file_memo(
+        spark, "_pde_event_schema_memo", path, lambda: spark.read.parquet(path).schema
+    )
     return normalize_event_ts(
         spark.readStream.schema(schema)
         .parquet(f"{sf_dir}/events.parque[t]")
@@ -120,33 +129,23 @@ def open_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (path, mtime_ns, size) → StructType. METADATA memo, not a result
-# cache: the zero-cost-in-principle footer read above measured
-# ~120-180 ms of driver-side work per call (r19), and every streaming
-# query in the suite pays it once per invocation — ~16 queries × 2
-# bench passes ≈ 4-6 s of pure repeated footer parsing. Keyed on the
-# file's identity so a regenerated fixture can never serve a stale
-# schema; the schema is a pure function of the file bytes under the
-# nanosAsLong conf set (identically) by every caller.
-_EVENT_SCHEMA_MEMO: dict = {}
-
-
-def _event_schema_for(spark: SparkSession, path: str):
-    import os
-
-    st = os.stat(path)
-    key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
-    schema = _EVENT_SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _EVENT_SCHEMA_MEMO[key] = schema
-    return schema
-
-
-from contextlib import contextmanager
-
-
 @contextmanager
+def scoped_conf(spark: SparkSession, confs: dict):
+    """Set each session conf in ``confs`` for the block; on exit restore
+    each key's previous value, or unset it if it had none."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def stream_state_partitions(spark, n: int = 4):
     """Temporarily size ``spark.sql.shuffle.partitions`` for a streaming
     query's STATE STORES.
@@ -168,15 +167,9 @@ def stream_state_partitions(spark, n: int = 4):
     The conf is restored on exit; the streaming query must START (and,
     for availableNow runs, finish) inside the scope.
     """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
-@contextmanager
 def stream_no_data_batches(spark, enabled: bool = False):
     """Temporarily toggle ``spark.sql.streaming.noDataMicroBatches.enabled``
     for one streaming run.
@@ -199,16 +192,10 @@ def stream_no_data_batches(spark, enabled: bool = False):
     eviction) and append-mode watermarked aggregates — those queries do
     not use this scope. Production continuous streams keep the default:
     there, no-data batches are how idle periods make progress."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "true" if enabled else "false")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    return scoped_conf(
+        spark,
+        {"spark.sql.streaming.noDataMicroBatches.enabled": str(enabled).lower()},
+    )
 
 
 def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "complete"):
@@ -262,7 +249,6 @@ def write_stream_idempotent(
     q.awaitTermination()
 
 
-@contextmanager
 def rocksdb_state_store(spark):
     """Temporarily select the RocksDB state store provider —
     transformWithState (the Spark 4 arbitrary-state API) REQUIRES it
@@ -271,19 +257,5 @@ def rocksdb_state_store(spark):
     stream_state_partitions: the provider class is pinned into a
     query's checkpoint at first start, so it must be a per-query
     choice, not a session constant the batch suite inherits."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    return scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": provider})

@@ -15,15 +15,172 @@ a shuffle — no single-node key set. State size is bounded by the TTL
 (processing-time here, to keep the operator deterministic under replay
 give keys an event-time watermark instead). Arrow batches flow per key
 group; the per-group pandas work is O(rows in batch).
+
+Every high-cardinality keyed fold (dedup, CDC, EWMA, attribution and
+the corpus-delta first-wins kernel) runs through ONE combinator,
+:func:`bucketed_state`; each operator supplies only its vectorized fold
+body. The per-key operators stay as the semantics references the tests
+compare against.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+# ---------------------------------------------------------------------------
+# bucketed_state: keyed state at HASH-BUCKET granularity
+# ---------------------------------------------------------------------------
+#
+# applyInPandasWithState pays one Python/Arrow round-trip per GROUP per
+# micro-batch, and with one group per key that round-trip was the whole
+# cost of every keyed fold profiled (dedup at sf1: 9.9 s; attribution at
+# sf1: 18.7 → 3.2 s once bucketed; CDC at sf0.1: 12.6 s of state update
+# time against ~0.2 s of fold arithmetic). So keys hash into a fixed
+# number of state groups: a bucket's state holds its keys' values as
+# parallel arrays (state-schema arrays stay primitive), and the fold body
+# sees the bucket's whole batch as one frame, grouped by key inside
+# pandas. Keys stay fully independent — bucket co-residence never mixes
+# their state.
+#
+# Horizon semantics are the EAGER form of the per-key operators' lazy
+# Spark timeout: expired keys (max_us + horizon < watermark) are swept
+# at the START of every bucket invocation, before the new rows fold, so a
+# re-arrival after expiry is ALWAYS a fresh history. (Spark's per-key
+# timeout fires only in a batch where the key has no data; the eager
+# sweep is deterministic under replay, the stricter contract.) Idle
+# buckets are swept by a bucket-level event-time timeout armed at the
+# bucket's earliest key deadline.
+STATE_BUCKETS = 64
+# the dedup operator's name for the same count (perfbench/etl.py imports
+# it to build its caller-supplied bucket column)
+DEDUP_BUCKETS = STATE_BUCKETS
+
+_PANDAS_DTYPES = {
+    "string": object,
+    "long": "int64",
+    "double": "float64",
+    "boolean": "bool",
+}
+
+
+def to_epoch_us(ts: pd.Series) -> np.ndarray:
+    """Event time as int64 epoch microseconds, Spark's TIMESTAMP unit.
+    The unit is pinned by the cast, not assumed: Arrow hands pandas
+    datetime64[ns] or datetime64[us] depending on the versions in play,
+    and both floor to the same µs."""
+    return ts.to_numpy(dtype="datetime64[us]").view("int64")
+
+
+def _upsert(st: pd.DataFrame, upd: pd.DataFrame) -> pd.DataFrame:
+    """``st`` with the rows of ``upd`` replacing or adding their keys."""
+    return pd.concat([st[~st.index.isin(upd.index)], upd])
+
+
+def _key_runs(batch: pd.DataFrame, key: str):
+    """Group a batch's rows by key for an order-defined fold: returns
+    (distinct keys sorted, row order, run bounds) where key i's rows are
+    ``order[bounds[i]:bounds[i + 1]]`` in (ts, event_id) order."""
+    codes, keys = pd.factorize(batch[key], sort=True)
+    order = np.lexsort((batch["event_id"].to_numpy(), to_epoch_us(batch["ts"]), codes))
+    bounds = np.r_[0, np.cumsum(np.bincount(codes, minlength=len(keys)))]
+    return pd.Index(keys, name=key), order, bounds
+
+
+def bucketed_state(
+    keyed: DataFrame,
+    fold,
+    *,
+    state_fields: str,
+    out_schema: str,
+    horizon: str | None = None,
+    output_mode: str = "update",
+) -> DataFrame:
+    """Run ``fold`` as keyed state over the ``bucket`` column of
+    ``keyed`` (the caller assigns buckets, normally
+    ``pmod(hash(key), STATE_BUCKETS)``).
+
+    ``state_fields`` is the per-key state as DDL over primitive types;
+    its first field names the key column of ``keyed``. On each bucket
+    invocation the combinator decodes the bucket's parallel-array state
+    into one table indexed by key, sweeps expired keys, and calls
+    ``fold(batch, st)`` with the bucket's non-empty micro-batch rows as
+    one frame. The fold returns ``(new_st, out)``: the whole new state
+    table in the same layout, and the rows to emit (``None`` for none),
+    columns in ``out_schema`` order. The combinator writes the state back
+    sorted by key, or removes it when no key is left.
+
+    With a ``horizon`` (pandas-Timedelta syntax, e.g. "365 days") the
+    input must carry ``ts`` under ``withWatermark``; the combinator keeps
+    each key's max event time and applies the eager sweep described
+    above. Without one the watermark is never read, so non-watermarked
+    streams work."""
+    fields = [f.split() for f in state_fields.split(",")]
+    if horizon is not None:
+        fields.append(["max_us", "long"])
+    names = [n for n, _ in fields]
+    key, carried = names[0], names[1:]
+    dtypes = {n: _PANDAS_DTYPES[t] for n, t in fields}
+    horizon_us = None if horizon is None else pd.Timedelta(horizon).value // 1_000
+
+    def _run(_bucket, pdf_iter, state: GroupState):
+        cols = state.get if state.exists else [[] for _ in names]
+        st = pd.DataFrame(
+            {n: np.asarray(v, dtype=dtypes[n]) for n, v in zip(carried, cols[1:])},
+            index=pd.Index(cols[0], dtype=dtypes[key], name=key),
+        )
+        if horizon_us is not None:
+            wm_us = state.getCurrentWatermarkMs() * 1_000
+            if wm_us > 0:
+                st = st[st["max_us"] + horizon_us >= wm_us]
+
+        out = None
+        frames = [] if state.hasTimedOut else [p for p in pdf_iter if len(p)]
+        if frames:
+            batch = pd.concat(frames, ignore_index=True)
+            if horizon_us is None:
+                st, out = fold(batch, st)
+            else:
+                seen = st["max_us"]
+                st, out = fold(batch, st.drop(columns="max_us"))
+                batch_max = pd.Series(to_epoch_us(batch["ts"])).groupby(batch[key]).max()
+                never = np.iinfo("int64").min
+                st = st.assign(
+                    max_us=np.maximum(
+                        seen.reindex(st.index, fill_value=never),
+                        batch_max.reindex(st.index, fill_value=never),
+                    )
+                )
+
+        if len(st) == 0:
+            state.remove()
+        else:
+            st = st.sort_index()
+            state.update((st.index.tolist(), *(st[c].tolist() for c in carried)))
+            if horizon_us is not None:
+                # Spark requires a timeout strictly beyond the watermark
+                deadline_ms = (int(st["max_us"].min()) + horizon_us) // 1_000
+                state.setTimeoutTimestamp(
+                    max(deadline_ms, state.getCurrentWatermarkMs() + 1)
+                )
+        return iter(() if out is None or len(out) == 0 else (out,))
+
+    return keyed.groupBy("bucket").applyInPandasWithState(
+        _run,
+        outputStructType=out_schema,
+        stateStructType=", ".join(f"{n} array<{t}>" for n, t in fields),
+        outputMode=output_mode,
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if horizon_us is None
+            else GroupStateTimeout.EventTimeTimeout
+        ),
+    )
+
 
 # Output/state schemas for the dedup operator over (key, ts, payload).
 # max_ts = the largest event time EVER seen for the key: the eviction
@@ -119,127 +276,48 @@ def dedup_stream_first_wins(keyed: DataFrame, horizon: str | None = None) -> Dat
     )
 
 
-# Bucketed first-wins dedup: identical to dedup_stream_first_wins
-# WHILE NO HORIZON EXPIRY FIRES (always, when horizon=None; see the
-# eager-vs-lazy divergence below for replays where a deadline passes —
-# a key re-arriving in the same batch its deadline expired is a fresh
-# first here vs a counted duplicate in the per-key twin), keyed-state
-# granularity a HASH BUCKET of keys instead of one key (the
-# attribution_stream posture): applyInPandasWithState pays one
-# python/Arrow round-trip per GROUP per batch, and at sf1 the per-KEY
-# form's ~10⁴ round-trips were the whole cost (9.9 s, the suite's
-# heaviest sf1 row — the exact pathology attribution fixed 18.7→3.2 s
-# with 64 buckets). A bucket's state holds its keys' (first_ts,
-# n_dropped, max_ts) as parallel arrays (epoch micros — state-schema
-# arrays stay primitive); keys remain fully independent.
-#
-# Horizon semantics are the EAGER form of the per-key operator's: the
-# fold sweeps expired keys (max_ts + horizon < watermark) at the START
-# of every bucket invocation — before folding the new rows, so a
-# re-arrival after expiry is ALWAYS a fresh first (the per-key twin
-# relies on Spark's lazy timeout, which only fires in a batch where the
-# key has no data; eager sweep is deterministic under replay, which is
-# the stricter contract). Idle buckets are swept by a bucket-level
-# event-time timeout armed at the bucket's earliest key deadline.
-DEDUP_BUCKETS = 64
-DEDUP_BUCKETED_STATE_SCHEMA = (
-    "keys array<string>, first_us array<long>, drops array<long>, "
-    "max_us array<long>"
-)
-
-
-def _make_dedup_bucketed(horizon: "pd.Timedelta | None"):
-    horizon_us = None if horizon is None else int(horizon.value // 1_000)
-
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            ks, firsts, drops, maxs = state.get
-            st = {
-                k: [int(f), int(d), int(m)]
-                for k, f, d, m in zip(ks, firsts, drops, maxs)
-            }
-        else:
-            st = {}
-        # watermark read only under a horizon: NoTimeout mode supports
-        # non-watermarked streams, where getCurrentWatermarkMs raises
-        if horizon_us is not None:
-            wm_us = state.getCurrentWatermarkMs() * 1_000
-            if wm_us > 0:
-                for k in [
-                    k for k, v in st.items() if v[2] + horizon_us < wm_us
-                ]:
-                    del st[k]
-
-        out = None
-        if not state.hasTimedOut:
-            frames = [pdf for pdf in pdf_iter if len(pdf)]
-            if frames:
-                batch = pd.concat(frames)
-                us = batch["ts"].astype("int64") // 1_000  # ns → us
-                agg = us.groupby(batch["key"], sort=True).agg(
-                    ["min", "max", "count"]
-                )
-                okeys, ofirst, odrop = [], [], []
-                for k, mn, mx, cnt in zip(
-                    agg.index, agg["min"], agg["max"], agg["count"]
-                ):
-                    if k in st:
-                        ent = st[k]
-                        ent[1] += int(cnt)
-                        ent[2] = max(ent[2], int(mx))
-                    else:
-                        ent = st[k] = [int(mn), int(cnt) - 1, int(mx)]
-                    okeys.append(k)
-                    ofirst.append(ent[0])
-                    odrop.append(ent[1])
-                out = pd.DataFrame(
-                    {
-                        "key": okeys,
-                        "first_ts": pd.to_datetime(ofirst, unit="us"),
-                        "n_dropped": odrop,
-                    }
-                )
-
-        if not st:
-            state.remove()
-            return iter(())
-        ks = sorted(st)
-        state.update((
-            ks,
-            [st[k][0] for k in ks],
-            [st[k][1] for k in ks],
-            [st[k][2] for k in ks],
-        ))
-        if horizon_us is not None:
-            # arm the bucket sweep at the earliest key deadline; Spark
-            # requires a timeout strictly beyond the current watermark
-            deadline_ms = (min(v[2] for v in st.values()) + horizon_us) // 1_000
-            state.setTimeoutTimestamp(max(deadline_ms, state.getCurrentWatermarkMs() + 1))
-        return iter(() if out is None else (out,))
-
-    return _fold
+# Bucketed first-wins dedup: identical emissions to
+# dedup_stream_first_wins while no horizon expiry fires (always, when
+# horizon=None). Where a deadline passes, bucketed_state's eager sweep
+# makes a key re-arriving in the batch its deadline expired a fresh
+# first, where the per-key operator's lazy timeout counts a duplicate.
+def _dedup_fold(batch: pd.DataFrame, st: pd.DataFrame):
+    g = pd.Series(to_epoch_us(batch["ts"])).groupby(batch["key"])
+    first = g.min()
+    prev = st.reindex(first.index, fill_value=0)
+    upd = pd.DataFrame(
+        {
+            # a carried key keeps its first_us; counts add up
+            "first_us": np.where(first.index.isin(st.index), prev["first_us"], first),
+            "n_seen": prev["n_seen"] + g.size(),
+        },
+        index=first.index,
+    )
+    return _upsert(st, upd), pd.DataFrame(
+        {
+            "key": upd.index,
+            "first_ts": pd.to_datetime(upd["first_us"].to_numpy(), unit="us"),
+            "n_dropped": upd["n_seen"].to_numpy() - 1,
+        }
+    )
 
 
 def dedup_stream_first_wins_bucketed(
     keyed: DataFrame, horizon: str | None = None
 ) -> DataFrame:
-    """Bucketed twin of dedup_stream_first_wins for high-cardinality
+    """Bucketed form of dedup_stream_first_wins for high-cardinality
     key spaces: input carries (bucket int, key string, ts timestamp);
-    state granularity is the bucket (see the module comment above for
-    the round-trip economics and the eager-sweep horizon contract).
-    Output schema and update-mode emissions are IDENTICAL to the
-    per-key operator — one (key, first_ts, n_dropped) row per touched
-    key per micro-batch."""
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _make_dedup_bucketed(pd.Timedelta(horizon) if horizon else None),
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=DEDUP_BUCKETED_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if horizon
-            else GroupStateTimeout.NoTimeout
-        ),
+    state granularity is the bucket (see bucketed_state for the
+    round-trip economics and the eager-sweep horizon contract). Output
+    schema and update-mode emissions are those of the per-key operator
+    — one (key, first_ts, n_dropped) row per touched key per
+    micro-batch."""
+    return bucketed_state(
+        keyed,
+        _dedup_fold,
+        state_fields="key string, first_us long, n_seen long",
+        out_schema=DEDUP_OUTPUT_SCHEMA,
+        horizon=horizon,
     )
 
 
@@ -544,200 +622,90 @@ def cdc_apply_stream(keyed: DataFrame, horizon: str | None = None) -> DataFrame:
     )
 
 
-# Bucketed CDC apply: identical per-key state machine to
-# cdc_apply_stream (below) — tombstones close generations, upserts
-# extend them, O(1) scalars per key — but the keyed-state granularity
-# is a HASH BUCKET of keys (the dedup/attribution posture, r19):
-# applyInPandasWithState pays one Python/Arrow round-trip per GROUP
-# per micro-batch, and the sf0.1 profile put the per-key form's whole
-# cost there (1500 key groups; state allUpdatesTimeMs 12.6 s of a
-# 10.1 s drain wall vs ~0.2 s of actual fold arithmetic). A bucket's
-# state holds its keys' scalars as parallel arrays; keys remain fully
-# independent (the fold groups by key inside the bucket).
-#
-# Horizon semantics are the EAGER form (the bucketed-dedup contract):
-# expired keys (max_ts + horizon < watermark) are swept at the START of
-# every bucket invocation, so a re-arrival after expiry is ALWAYS a
-# fresh history — deterministic under replay, stricter than the per-key
-# twin's lazy Spark timeout (which fires only in a batch where the key
-# has no data). Idle buckets are swept by a bucket-level event-time
-# timeout armed at the bucket's earliest key deadline.
-CDC_BUCKETS = 64
-CDC_BUCKETED_STATE_SCHEMA = (
-    "keys array<string>, n_tombs array<long>, gens array<long>, "
-    "last_ets array<string>, alives array<boolean>, n_seens array<long>, "
-    "max_us array<long>"
-)
-
-
-def _make_cdc_apply_bucketed(horizon: "pd.Timedelta | None"):
-    horizon_us = None if horizon is None else int(horizon.value // 1_000)
-
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            ks, tombs, gens, lets, alvs, seens, maxs = state.get
-            st = {
-                k: [int(t), int(g), le, bool(a), int(s), int(m)]
-                for k, t, g, le, a, s, m in zip(
-                    ks, tombs, gens, lets, alvs, seens, maxs
-                )
-            }
-        else:
-            st = {}
-        # eager horizon sweep (watermark read only under a horizon:
-        # NoTimeout mode supports non-watermarked streams)
-        if horizon_us is not None:
-            wm_us = state.getCurrentWatermarkMs() * 1_000
-            if wm_us > 0:
-                for k in [
-                    k for k, v in st.items() if v[5] + horizon_us < wm_us
-                ]:
-                    del st[k]
-
-        out = None
-        if not state.hasTimedOut:
-            frames = [pdf for pdf in pdf_iter if len(pdf)]
-            if frames:
-                batch = pd.concat(frames).sort_values(["ts", "event_id"])
-                us = batch["ts"].astype("int64") // 1_000  # ns → µs
-                okeys, otomb, oalive, olet, ogen, oseen = [], [], [], [], [], []
-                for k, idx in batch.groupby("key", sort=True).indices.items():
-                    et = batch["event_type"].to_numpy()[idx]
-                    is_del = et == "error"
-                    b_dels = int(is_del.sum())
-                    k_max = int(us.to_numpy()[idx].max())
-                    ent = st.get(k)
-                    if ent is None:
-                        ent = st[k] = [0, 0, "", True, 0, k_max]
-                    else:
-                        ent[5] = max(ent[5], k_max)
-                    if b_dels:
-                        # live rows after the batch's last tombstone open
-                        # the new generation (the per-key fold's rule)
-                        last_del_pos = int(is_del.nonzero()[0][-1])
-                        ent[1] = int((~is_del[last_del_pos + 1 :]).sum())
-                    else:
-                        ent[1] += len(idx)
-                    ent[0] += b_dels
-                    ent[4] += len(idx)
-                    ent[2] = str(et[-1])
-                    ent[3] = not bool(is_del[-1])
-                    okeys.append(k)
-                    otomb.append(ent[0])
-                    oalive.append(ent[3])
-                    olet.append(ent[2])
-                    ogen.append(ent[1])
-                    oseen.append(ent[4])
-                out = pd.DataFrame(
-                    {
-                        "key": okeys,
-                        "n_tombstones": otomb,
-                        "alive": oalive,
-                        "last_event_type": olet,
-                        "gen_events": ogen,
-                        "n_seen": oseen,
-                    }
-                )
-
-        if not st:
-            state.remove()
-            return iter(())
-        ks = sorted(st)
-        state.update((
-            ks,
-            [st[k][0] for k in ks],
-            [st[k][1] for k in ks],
-            [st[k][2] for k in ks],
-            [st[k][3] for k in ks],
-            [st[k][4] for k in ks],
-            [st[k][5] for k in ks],
-        ))
-        if horizon_us is not None:
-            deadline_ms = (min(v[5] for v in st.values()) + horizon_us) // 1_000
-            state.setTimeoutTimestamp(
-                max(deadline_ms, state.getCurrentWatermarkMs() + 1)
-            )
-        return iter(() if out is None else (out,))
-
-    return _fold
+# Bucketed CDC apply: the per-key state machine of cdc_apply_stream —
+# tombstones close generations, upserts extend them, O(1) scalars per
+# key — run through bucketed_state (the sf0.1 profile put the per-key
+# form's whole cost in 1500 per-group Arrow round-trips).
+def _cdc_fold(batch: pd.DataFrame, st: pd.DataFrame):
+    keys, order, bounds = _key_runs(batch, "key")
+    start, end = bounds[:-1], bounds[1:]
+    et = batch["event_type"].to_numpy()[order]
+    is_del = et == "error"
+    n_del = np.add.reduceat(is_del.astype("int64"), start)
+    # live rows after a key's last tombstone in this batch open its new
+    # generation; everything before belongs to closed ones
+    last_del = np.maximum.reduceat(np.where(is_del, np.arange(len(et)), -1), start)
+    prev = st.reindex(keys, fill_value=0)
+    upd = pd.DataFrame(
+        {
+            "n_tombstones": prev["n_tombstones"] + n_del,
+            "gen_events": np.where(
+                n_del > 0, end - 1 - last_del, prev["gen_events"] + (end - start)
+            ),
+            "last_event_type": et[end - 1],
+            "alive": ~is_del[end - 1],
+            "n_seen": prev["n_seen"] + (end - start),
+        }
+    )
+    out = upd.reset_index()[
+        ["key", "n_tombstones", "alive", "last_event_type", "gen_events", "n_seen"]
+    ]
+    return _upsert(st, upd), out
 
 
 def cdc_apply_stream_bucketed(
     keyed: DataFrame, horizon: str | None = None
 ) -> DataFrame:
-    """Bucketed twin of cdc_apply_stream for high-cardinality key
+    """Bucketed form of cdc_apply_stream for high-cardinality key
     spaces: input carries (bucket int, key string, ts timestamp,
     event_id long, event_type string); state granularity is the bucket
-    (see the module comment above for the round-trip economics and the
-    eager-sweep horizon contract). Output schema and update-mode
-    emissions are IDENTICAL to the per-key operator — one row per
-    touched key per micro-batch, same state-machine values."""
-    return keyed.groupBy("bucket").applyInPandasWithState(
-        _make_cdc_apply_bucketed(pd.Timedelta(horizon) if horizon else None),
-        outputStructType=CDC_OUTPUT_SCHEMA,
-        stateStructType=CDC_BUCKETED_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if horizon
-            else GroupStateTimeout.NoTimeout
+    (see bucketed_state for the round-trip economics and the eager-sweep
+    horizon contract). Output schema and update-mode emissions are
+    those of the per-key operator — one row per touched key per
+    micro-batch, same state-machine values."""
+    return bucketed_state(
+        keyed,
+        _cdc_fold,
+        state_fields=(
+            "key string, n_tombstones long, gen_events long, "
+            "last_event_type string, alive boolean, n_seen long"
         ),
+        out_schema=CDC_OUTPUT_SCHEMA,
+        horizon=horizon,
     )
 
 
-# Bucketed streaming EWMA: same recurrence as ewma_stream (below),
-# bucket-granular state for the same round-trip economics as the CDC
-# twin (sf0.1 profile: 1500 per-user groups were the whole cost).
-EWMA_BUCKETS = 64
-EWMA_BUCKETED_STATE_SCHEMA = (
-    "user_ids array<long>, s array<double>, n array<long>"
-)
-
-
 def make_ewma_fold_bucketed(alpha: float):
-    """Bucketed twin of make_ewma_fold: per-user (smoothed value, count)
-    pairs live as parallel arrays in the bucket's state; the fold sorts
-    the bucket's rows by (user_id, ts, event_id) and walks each user's
-    slice with the IDENTICAL scalar IEEE recurrence — same arithmetic,
-    same within-batch ordering contract (globally sorted is strictly
-    stronger than the per-key fold's per-chunk sort), so the final
-    state per user is bit-equal to the per-key operator's."""
+    """Bucketed form of make_ewma_fold: the fold sorts the bucket's rows
+    by (user_id, ts, event_id) and walks each user's slice with the
+    IDENTICAL scalar IEEE recurrence — same arithmetic, same
+    within-batch ordering contract (globally sorted is strictly
+    stronger than the per-key fold's per-chunk sort), so the state per
+    user is bit-equal to the per-key operator's. Like the per-key fold,
+    every user with rows in the batch emits its carried state, even
+    when all of those rows are NULL."""
 
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            uids, svals, ns = state.get
-            st = {int(u): [v, int(c)] for u, v, c in zip(uids, svals, ns)}
-        else:
-            st = {}
-        frames = [pdf.dropna(subset=["value"]) for pdf in pdf_iter]
-        frames = [pdf for pdf in frames if len(pdf)]
-        if not frames:
-            if not st:
-                state.remove()
-                return iter(())
-            # arrays unchanged; keep state as-is (re-update for safety)
-            us = sorted(st)
-            state.update((us, [st[u][0] for u in us], [st[u][1] for u in us]))
-            return iter(())
-        batch = pd.concat(frames).sort_values(["user_id", "ts", "event_id"])
-        ou, on, os_ = [], [], []
-        vals_all = batch["value"].to_numpy()
-        for u, idx in batch.groupby("user_id", sort=True).indices.items():
-            u = int(u)
-            ent = st.get(u)
-            s = ent[0] if ent is not None else None
-            n = ent[1] if ent is not None else 0
-            for x in vals_all[idx]:
+    def _fold(batch: pd.DataFrame, st: pd.DataFrame):
+        # NULL values never fold (the per-key fold's rule, ADVICE r6)
+        live = batch[batch["value"].notna()]
+        users, order, bounds = _key_runs(live, "user_id")
+        vals = live["value"].to_numpy()[order]
+        s_new = st["s"].reindex(users).to_numpy()  # NaN: no carried state
+        for i in range(len(users)):
+            s = None if np.isnan(s_new[i]) else s_new[i]
+            for x in vals[bounds[i] : bounds[i + 1]]:
                 s = x if s is None else alpha * x + (1.0 - alpha) * s
-            n += len(idx)
-            st[u] = [float(s), n]
-            ou.append(u)
-            on.append(n)
-            os_.append(float(s))
-        us = sorted(st)
-        state.update((us, [st[u][0] for u in us], [st[u][1] for u in us]))
-        return iter(
-            (pd.DataFrame({"user_id": ou, "n_events": on, "last_ewma": os_}),)
+            s_new[i] = s
+        n_new = st["n"].reindex(users, fill_value=0).to_numpy() + np.diff(bounds)
+        upd = pd.DataFrame({"s": s_new, "n": n_new}, index=users)
+        st = _upsert(st, upd)
+        emit = st[st.index.isin(batch["user_id"])]
+        return st, pd.DataFrame(
+            {
+                "user_id": emit.index,
+                "n_events": emit["n"].to_numpy(),
+                "last_ewma": emit["s"].to_numpy(),
+            }
         )
 
     return _fold
@@ -746,14 +714,12 @@ def make_ewma_fold_bucketed(alpha: float):
 def ewma_stream_bucketed(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
     """Apply the bucketed stateful EWMA to a streaming DataFrame with
     columns (bucket int, user_id long, ts timestamp, event_id long,
-    value double). Emissions per touched user are identical to
-    ewma_stream's."""
-    return keyed.groupBy("bucket").applyInPandasWithState(
+    value double). Emissions per touched user are ewma_stream's."""
+    return bucketed_state(
+        keyed,
         make_ewma_fold_bucketed(alpha),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_BUCKETED_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        state_fields="user_id long, s double, n long",
+        out_schema=EWMA_OUTPUT_SCHEMA,
     )
 
 
@@ -761,29 +727,16 @@ def ewma_stream_bucketed(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
 # (first, last) non-purchase channel seen so far — O(1) forever — and
 # every purchase emits its credit the moment it arrives, carrying the
 # state ACROSS micro-batches (the batch twin recomputes the whole
-# window every run; this one never re-reads history).
-#
-# Keyed-state granularity is a HASH BUCKET of users, not one user (the
-# heavy_hitters_stream posture): applyInPandasWithState pays one
-# python/Arrow round-trip per KEY per batch, which at 10k users made
-# the per-group overhead — not the arithmetic — the whole cost
-# (measured sf1: 18.7 s per-user keys vs ~5 s bucketed). A bucket's
-# state holds its users' (first, last) pairs as parallel arrays;
-# within the bucket every carry is a C-speed grouped ffill/shift, and
-# users remain fully independent (bucket co-residence never mixes
-# their state).
-_ATTRIB_BUCKETS = 64
-
+# window every run; this one never re-reads history). Users share
+# bucketed_state buckets; within a bucket every carry is a C-speed
+# grouped ffill/shift.
 ATTRIB_OUTPUT_SCHEMA = (
     "user_id long, event_id long, last_ch string, first_ch string, "
     "cents long"
 )
-ATTRIB_STATE_SCHEMA = (
-    "user_ids array<long>, first_chs array<string>, last_chs array<string>"
-)
 
 
-def _attribution_fold(key, pdf_iter, state: GroupState):
+def _attribution_fold(batch: pd.DataFrame, st: pd.DataFrame):
     """Per-bucket fold: rows sort (user_id, ts, event_id); the
     last-touch as of each row is the grouped ffill of the non-purchase
     channel shifted one row within the user (exactly the batch twin's
@@ -798,95 +751,73 @@ def _attribution_fold(key, pdf_iter, state: GroupState):
     Ordering bound: the make_ewma_fold contract — within-batch order
     pinned by the sort, cross-batch order is arrival order; exact
     under availableNow on the bounded fixture (one in-order batch)."""
-    if state.exists:
-        uids, firsts, lasts = state.get
-        st_first = dict(zip(uids, firsts))
-        st_last = dict(zip(uids, lasts))
-    else:
-        st_first, st_last = {}, {}
-    frames = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values(["user_id", "ts", "event_id"])
-        et = pdf["event_type"]
-        touch = et.where(et != "purchase", other=None)
-        g = touch.groupby(pdf["user_id"], sort=False)
-        # strictly-before last touch within the batch: grouped ffill,
-        # then shift 1 within the user
-        last_asof = g.ffill().groupby(pdf["user_id"], sort=False).shift(1)
-        # strictly-before first touch: keep only each user's first
-        # valid touch, carry it forward, shift 1 within the user
-        first_only = touch.where(g.cumcount() - touch.isna().groupby(pdf["user_id"], sort=False).cumsum() == 0)
-        fg = first_only.groupby(pdf["user_id"], sort=False)
-        first_asof = fg.ffill().groupby(pdf["user_id"], sort=False).shift(1)
-        users = pdf["user_id"]
-        # last-touch: the batch-local carry wins (more recent); the
-        # carried state fills the rows before any batch-local touch
-        last_asof = last_asof.fillna(users.map(st_last).astype(object))
-        # first-touch: pinned forever once set — the CARRIED state wins
-        # over any batch-local first; batch-local only seeds new users
-        first_asof = users.map(st_first).astype(object).fillna(first_asof)
+    pdf = batch.sort_values(["user_id", "ts", "event_id"], ignore_index=True)
+    et = pdf["event_type"]
+    users = pdf["user_id"]
+    touch = et.where(et != "purchase", other=None)
+    g = touch.groupby(users, sort=False)
+    # strictly-before last touch within the batch: grouped ffill, then
+    # shift 1 within the user
+    last_asof = g.ffill().groupby(users, sort=False).shift(1)
+    # strictly-before first touch: keep only each user's first valid
+    # touch, carry it forward, shift 1 within the user
+    first_only = touch.where(g.cumcount() - touch.isna().groupby(users, sort=False).cumsum() == 0)
+    first_asof = first_only.groupby(users, sort=False).ffill().groupby(users, sort=False).shift(1)
+    # last-touch: the batch-local carry wins (more recent); the carried
+    # state fills the rows before any batch-local touch
+    last_asof = last_asof.fillna(users.map(st["last_ch"]).astype(object))
+    # first-touch: pinned forever once set — the CARRIED state wins over
+    # any batch-local first; batch-local only seeds new users
+    first_asof = users.map(st["first_ch"]).astype(object).fillna(first_asof)
 
-        is_p = (et == "purchase").to_numpy()
-        if is_p.any():
-            v = pdf["value"].to_numpy()[is_p]
-            cents = [
-                None if pd.isna(x) else int(math.floor(x * 100 + 0.5))
-                for x in v
-            ]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "user_id": users.to_numpy()[is_p],
-                        "event_id": pdf["event_id"].to_numpy()[is_p],
-                        "last_ch": [
-                            c if isinstance(c, str) else "direct"
-                            for c in last_asof.to_numpy()[is_p]
-                        ],
-                        "first_ch": [
-                            c if isinstance(c, str) else "direct"
-                            for c in first_asof.to_numpy()[is_p]
-                        ],
-                        "cents": pd.Series(cents, dtype=object),
-                    }
-                )
-            )
-        # fold the batch's touches into the carried state
-        nn = touch.dropna()
-        if len(nn):
-            nu = users[nn.index]
-            batch_last = nn.groupby(nu, sort=False).last()
-            batch_first = nn.groupby(nu, sort=False).first()
-            for u, ch in batch_last.items():
-                st_last[int(u)] = ch
-            for u, ch in batch_first.items():
-                st_first.setdefault(int(u), ch)
-    uids = sorted(st_last)
-    state.update((
-        [int(u) for u in uids],
-        [st_first[u] for u in uids],
-        [st_last[u] for u in uids],
-    ))
-    return iter(frames)
+    out = None
+    is_p = (et == "purchase").to_numpy()
+    if is_p.any():
+        cents = [
+            None if pd.isna(x) else int(math.floor(x * 100 + 0.5))
+            for x in pdf["value"].to_numpy()[is_p]
+        ]
+        out = pd.DataFrame(
+            {
+                "user_id": users.to_numpy()[is_p],
+                "event_id": pdf["event_id"].to_numpy()[is_p],
+                "last_ch": [
+                    c if isinstance(c, str) else "direct"
+                    for c in last_asof.to_numpy()[is_p]
+                ],
+                "first_ch": [
+                    c if isinstance(c, str) else "direct"
+                    for c in first_asof.to_numpy()[is_p]
+                ],
+                "cents": pd.Series(cents, dtype=object),
+            }
+        )
+    # fold the batch's touches into the carried state
+    nn = touch.dropna()
+    if len(nn):
+        by_user = nn.groupby(users[nn.index])
+        seen = pd.DataFrame({"first_ch": by_user.first(), "last_ch": by_user.last()})
+        seen["first_ch"] = st["first_ch"].reindex(seen.index).combine_first(
+            seen["first_ch"]
+        )
+        st = _upsert(st, seen)
+    return st, out
 
 
 def attribution_stream(keyed: DataFrame) -> DataFrame:
     """Apply the stateful attribution fold to a streaming DataFrame
     with columns (user_id long, ts timestamp, event_id long,
-    event_type string, value double). Users hash into
-    _ATTRIB_BUCKETS keyed-state buckets (see the module comment on
-    per-key round-trip overhead); the fold keeps users independent
-    inside a bucket."""
+    event_type string, value double). Users hash into STATE_BUCKETS
+    keyed-state buckets (see bucketed_state); the fold keeps users
+    independent inside a bucket."""
     from pyspark.sql import functions as F
 
-    bucketed = keyed.withColumn(
-        "bucket", (F.col("user_id") % _ATTRIB_BUCKETS).cast("int")
-    )
-    return bucketed.groupBy("bucket").applyInPandasWithState(
+    return bucketed_state(
+        keyed.withColumn("bucket", (F.col("user_id") % STATE_BUCKETS).cast("int")),
         _attribution_fold,
-        outputStructType=ATTRIB_OUTPUT_SCHEMA,
-        stateStructType=ATTRIB_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        state_fields="user_id long, first_ch string, last_ch string",
+        out_schema=ATTRIB_OUTPUT_SCHEMA,
+        output_mode="append",
     )
 
 

@@ -6,6 +6,8 @@ results — the unified-API guarantee the streaming module is built on.
 
 from __future__ import annotations
 
+import pytest
+
 from projektdataengineering_spark.catalog import load_table
 from projektdataengineering_spark.streaming import (
     open_event_stream,
@@ -18,6 +20,56 @@ from projektdataengineering_spark.streaming import (
 
 def _canon(df):
     return sorted(map(tuple, (tuple(r) for r in df.collect())))
+
+
+# Bucket assignments the bucketed folds must be indifferent to: every
+# key in one state bucket, and pmod(hash(key), n) for an n that gives
+# each test key its own bucket.
+BUCKETINGS = ["one_bucket", "hash_separated"]
+
+
+def _with_buckets(spark, stream, key, how, keys):
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.streaming.stateful import STATE_BUCKETS
+
+    if how == "one_bucket":
+        return stream.withColumn("bucket", F.lit(0))
+    bucket = F.pmod(F.hash(key), F.lit(STATE_BUCKETS))
+    probe = spark.createDataFrame([(k,) for k in keys], [key])
+    assert probe.select(bucket).distinct().count() == len(keys), (
+        "the hash bucketing must separate the test keys"
+    )
+    return stream.withColumn("bucket", bucket)
+
+
+def _ordered_batches(src, frames):
+    """Write one parquet file per frame (µs timestamps) with increasing
+    mtimes: the file source plays them as ordered micro-batches."""
+    import os
+    import time
+
+    src.mkdir()
+    now = time.time()
+    for i, b in enumerate(frames):
+        f = src / f"batch{i + 1}.parquet"
+        b.astype({"ts": "datetime64[us]"}).to_parquet(f)
+        os.utime(f, (now - 100 + 20 * i, now - 100 + 20 * i))
+
+
+def _drain_batches(df, checkpoint):
+    """Run a bounded update-mode stream (one file per trigger upstream);
+    return each micro-batch's emitted rows, sorted, in batch order."""
+    got = {}
+    q = (
+        df.writeStream.outputMode("update")
+        .foreachBatch(lambda b, i: got.__setitem__(i, sorted(map(tuple, b.collect()))))
+        .option("checkpointLocation", str(checkpoint))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return [got[i] for i in sorted(got)]
 
 
 def test_stream_tumbling_matches_batch(spark, sf_dir):
@@ -529,19 +581,17 @@ def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
     assert not mid["alive"] and mid["gen_events"] == 0 and mid["n_tombstones"] == 1
 
 
-def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path):
-    """The r19 BUCKETED CDC fold (cdc_apply_stream_bucketed) must run the
-    identical per-key state machine as the per-key reference across
-    ordered micro-batches — generation carry-over, tombstone at a
-    boundary, post-tombstone re-insert — with keys sharing one state
-    bucket kept fully independent."""
-    import os
-    import time
-
+@pytest.mark.parametrize("buckets", BUCKETINGS)
+def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path, buckets):
+    """The bucketed CDC fold (cdc_apply_stream_bucketed) must emit, batch
+    for batch, exactly what the per-key reference cdc_apply_stream emits
+    across ordered micro-batches — generation carry-over, tombstone at a
+    boundary, post-tombstone re-insert — whether keys share one state
+    bucket or each has its own."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from projektdataengineering_spark.streaming.stateful import (
+        cdc_apply_stream,
         cdc_apply_stream_bucketed,
     )
 
@@ -555,55 +605,40 @@ def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path):
             }
         )
 
-    # same fixture as the per-key test — u1/u2 land in ONE bucket
-    b1 = rows(0, 0, [("u1", "click"), ("u2", "view"), ("u1", "view"), ("u2", "error")])
-    b2 = rows(10, 100, [("u1", "error"), ("u1", "purchase"), ("u2", "click"), ("u2", "view")])
+    # the per-key test's fixture
     src = tmp_path / "cdc_bucketed_src"
-    src.mkdir()
-    now = time.time()
-    for i, b in enumerate([b1, b2]):
-        f = src / f"batch{i + 1}.parquet"
-        b.astype({"ts": "datetime64[us]"}).to_parquet(f)
-        os.utime(f, (now - 40 + 20 * i, now - 40 + 20 * i))
+    _ordered_batches(src, [
+        rows(0, 0, [("u1", "click"), ("u2", "view"), ("u1", "view"), ("u2", "error")]),
+        rows(10, 100, [("u1", "error"), ("u1", "purchase"), ("u2", "click"), ("u2", "view")]),
+    ])
 
-    stream = (
-        spark.readStream.schema("key string, ts timestamp, event_id long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withColumn("bucket", F.lit(0).cast("int"))
+    def read():
+        return (
+            spark.readStream.schema("key string, ts timestamp, event_id long, event_type string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+
+    per_key = _drain_batches(cdc_apply_stream(read()), tmp_path / "ckpt_ref")
+    bucketed = _drain_batches(
+        cdc_apply_stream_bucketed(_with_buckets(spark, read(), "key", buckets, ["u1", "u2"])),
+        tmp_path / "ckpt_bucketed",
     )
-    q = (
-        cdc_apply_stream_bucketed(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("cdc_bucketed_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_cdc_bucketed"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    out = spark.table("cdc_bucketed_out").toPandas()
-    final = {r["key"]: r for _, r in out.sort_values("n_seen").iterrows()}
-    u1, u2 = final["u1"], final["u2"]
-    # identical assertions to the per-key reference test
-    assert (u1["n_tombstones"], u1["alive"], u1["gen_events"], u1["n_seen"]) == (1, True, 1, 4)
-    assert u1["last_event_type"] == "purchase"
-    assert (u2["n_tombstones"], u2["alive"], u2["gen_events"], u2["n_seen"]) == (1, True, 2, 4)
-    mid = out[(out["key"] == "u2") & (out["n_seen"] == 2)].iloc[0]
-    assert not mid["alive"] and mid["gen_events"] == 0 and mid["n_tombstones"] == 1
+    assert bucketed == per_key
+    # (key, n_tombstones, alive, last_event_type, gen_events, n_seen):
+    # u2 dead at the batch-1 boundary, then a fresh 2-event generation
+    assert ("u2", 1, False, "error", 0, 2) in per_key[0]
+    assert ("u2", 1, True, "view", 2, 4) in per_key[1]
 
 
-def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path):
-    """The r19 bucketed EWMA fold must carry (s, n) across micro-batches
-    and produce bit-equal finals to the per-key reference operator on
-    the same two-batch ordered stream (bucket co-residence must not mix
-    users' state)."""
-    import os
-    import time
-
+@pytest.mark.parametrize("buckets", BUCKETINGS)
+def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path, buckets):
+    """The bucketed EWMA fold must carry (s, n) across micro-batches and
+    emit, batch for batch, bit-equal rows to the per-key reference
+    operator (bucket co-residence must not mix users' state). User 4's
+    second-batch rows are all NULL: the per-key fold still emits its
+    carried state, so the bucketed fold must too."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from projektdataengineering_spark.streaming.stateful import (
         ewma_stream,
@@ -620,15 +655,11 @@ def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path):
             }
         )
 
-    b1 = rows(0, 0, [(1, 10.0), (2, 5.0), (1, None), (1, 7.0)])
-    b2 = rows(10, 100, [(2, 1.0), (1, 3.0), (3, 2.5), (2, None)])
     src = tmp_path / "ewma_bucketed_src"
-    src.mkdir()
-    now = time.time()
-    for i, b in enumerate([b1, b2]):
-        f = src / f"batch{i + 1}.parquet"
-        b.astype({"ts": "datetime64[us]"}).to_parquet(f)
-        os.utime(f, (now - 40 + 20 * i, now - 40 + 20 * i))
+    _ordered_batches(src, [
+        rows(0, 0, [(1, 10.0), (2, 5.0), (1, None), (1, 7.0), (4, 2.0)]),
+        rows(10, 100, [(2, 1.0), (1, 3.0), (3, 2.5), (2, None), (4, None), (4, None)]),
+    ])
 
     def read():
         return (
@@ -637,31 +668,16 @@ def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path):
             .parquet(str(src))
         )
 
-    def drain(df, name):
-        q = (
-            df.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        pdf = spark.table(name).toPandas()
-        return {
-            int(r["user_id"]): (int(r["n_events"]), r["last_ewma"])
-            for _, r in pdf.sort_values("n_events").iterrows()  # last wins
-        }
-
-    per_key = drain(ewma_stream(read(), alpha=0.25), "ewma_ref_out")
-    bucketed = drain(
+    per_key = _drain_batches(ewma_stream(read(), alpha=0.25), tmp_path / "ckpt_ref")
+    bucketed = _drain_batches(
         ewma_stream_bucketed(
-            read().withColumn("bucket", F.lit(0).cast("int")), alpha=0.25
+            _with_buckets(spark, read(), "user_id", buckets, [1, 2, 3, 4]), alpha=0.25
         ),
-        "ewma_bucketed_out",
+        tmp_path / "ckpt_bucketed",
     )
-    assert per_key == bucketed
-    assert per_key[1] == (3, 0.25 * 3.0 + 0.75 * (0.25 * 7.0 + 0.75 * 10.0))
+    assert bucketed == per_key
+    assert (1, 3, 0.25 * 3.0 + 0.75 * (0.25 * 7.0 + 0.75 * 10.0)) in per_key[1]
+    assert (4, 1, 2.0) in per_key[1]  # the NULL-only batch re-emits state
 
 
 def test_attribution_stream_carries_touch_state_across_batches(spark, tmp_path):
@@ -1038,46 +1054,89 @@ def test_transform_with_state_running_totals_or_documented_absence(
     assert got == exp
 
 
-def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path):
-    """Round-12 review regression: horizon=None (NoTimeout) on a
-    NON-watermarked stream must work — the fold may only read the
-    watermark when a horizon is configured (getCurrentWatermarkMs
-    raises without withWatermark)."""
+@pytest.mark.parametrize("buckets", BUCKETINGS)
+def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path, buckets):
+    """horizon=None (NoTimeout) on a NON-watermarked stream must work —
+    the fold may only read the watermark when a horizon is configured
+    (getCurrentWatermarkMs raises without withWatermark) — and, with no
+    expiry to diverge on, emit batch for batch what the per-key
+    reference dedup_stream_first_wins emits."""
     import pandas as pd
 
     from projektdataengineering_spark.streaming.stateful import (
+        dedup_stream_first_wins,
         dedup_stream_first_wins_bucketed,
     )
 
     src = tmp_path / "nohorizon_src"
-    src.mkdir()
-    pd.DataFrame(
-        {
-            "bucket": pd.array([0, 0, 1], dtype="int32"),
+    _ordered_batches(src, [
+        pd.DataFrame({
             "key": ["a", "a", "b"],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00:00", "2024-01-01 00:10:00",
-                 "2024-01-01 00:05:00"]
-            ),
-        }
-    ).to_parquet(src / "b1.parquet", coerce_timestamps="us")
+            "ts": pd.to_datetime(["2024-01-01 00:10:00", "2024-01-01 00:00:00",
+                                  "2024-01-01 00:05:00"]),
+        }),
+        pd.DataFrame({
+            "key": ["b", "c", "a"],
+            "ts": pd.to_datetime(["2024-01-02 00:00:00", "2024-01-02 00:01:00",
+                                  "2024-01-02 00:02:00"]),
+        }),
+    ])
 
-    stream = spark.readStream.schema("bucket int, key string, ts timestamp").parquet(
-        str(src)
+    def read():
+        return (
+            spark.readStream.schema("key string, ts timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+
+    per_key = _drain_batches(dedup_stream_first_wins(read()), tmp_path / "ckpt_ref")
+    bucketed = _drain_batches(
+        dedup_stream_first_wins_bucketed(  # no horizon, no watermark
+            _with_buckets(spark, read(), "key", buckets, ["a", "b", "c"])
+        ),
+        tmp_path / "ckpt_bucketed",
     )
-    q = (
-        dedup_stream_first_wins_bucketed(stream)  # no horizon, no watermark
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("dedup_nohorizon_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_nh"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = {(r["key"], r["first_ts"], r["n_dropped"])
-            for r in spark.table("dedup_nohorizon_out").collect()}
-    assert rows == {
-        ("a", pd.Timestamp("2024-01-01 00:00:00"), 1),
-        ("b", pd.Timestamp("2024-01-01 00:05:00"), 0),
-    }, rows
+    assert bucketed == per_key
+    assert per_key[1] == [
+        ("a", pd.Timestamp("2024-01-01 00:00:00"), 2),
+        ("b", pd.Timestamp("2024-01-01 00:05:00"), 1),
+        ("c", pd.Timestamp("2024-01-02 00:01:00"), 0),
+    ]
+
+
+def test_to_epoch_us_is_unit_independent():
+    """bucketed_state's event-time conversion must give the same epoch
+    µs for datetime64[ns] and datetime64[us] input (Arrow hands pandas
+    either, by version) — floor semantics, before and after 1970."""
+    import pandas as pd
+
+    from projektdataengineering_spark.streaming.stateful import to_epoch_us
+
+    ns = pd.Series(pd.to_datetime(
+        ["2024-01-01 00:00:00.123456789", "1969-12-31 23:59:59.9999995",
+         "1970-01-01 00:00:00.000000"]
+    ))
+    us = ns.astype("datetime64[us]")
+    assert ns.dtype == "datetime64[ns]" and us.dtype == "datetime64[us]"
+    assert to_epoch_us(ns).tolist() == to_epoch_us(us).tolist() == [
+        1_704_067_200_123_456, -1, 0,
+    ]
+
+
+def test_scoped_conf_restores_or_unsets(spark):
+    """scoped_conf: inside the block every conf holds its scoped value;
+    on exit — also when the block raises — a key that had a value gets
+    it back and a key that had none is unset again."""
+    from projektdataengineering_spark.streaming import scoped_conf
+
+    had, fresh = "spark.pde.test.scopedHad", "spark.pde.test.scopedFresh"
+    spark.conf.set(had, "7")
+    try:
+        with pytest.raises(RuntimeError):
+            with scoped_conf(spark, {had: "3", fresh: "on"}):
+                assert (spark.conf.get(had), spark.conf.get(fresh)) == ("3", "on")
+                raise RuntimeError("block failed")
+        assert spark.conf.get(had) == "7"
+        assert spark.conf.get(fresh, None) is None
+    finally:
+        spark.conf.unset(had)

@@ -7,9 +7,10 @@ bugs like the ns-timestamp events table):
 
 1. smoke: ``entry(spark)`` at sf0.001 returns >0 rows;
 2. every ``queries()`` entry runs at sf0.01 and, when ``oracle_sql()``
-   has a matching key, compares against DuckDB with the driver's rule:
-   sort columns by name, canonicalize (sorted rows of repr tuples),
-   require exact identity.
+   has a matching key, compares against DuckDB with the pytest oracle
+   harness's canonicalizer (tests/conftest.py ``_canon_frame``: sorted
+   columns, sorted rows of type-tagged exact cells), requiring exact
+   identity.
 
 Exit 0 = all green.  Run from the repo root:
     python tools/verify_driver.py [sf_dir]
@@ -17,36 +18,21 @@ Exit 0 = all green.  Run from the repo root:
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 
-def canon(df):
-    """Driver-rule canonicalization: sorted columns, sorted repr-rows."""
-    cols = sorted(df.columns)
-    df = df[cols]
-    rows = []
-    for tup in df.itertuples(index=False, name=None):
-        out = []
-        for v in tup:
-            if isinstance(v, float):
-                out.append("NaN" if math.isnan(v) else repr(round(v, 9)))
-            else:
-                out.append(repr(v))
-        rows.append(tuple(out))
-    rows.sort()
-    return cols, rows
-
-
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import duckdb
+    from conftest import _canon_frame
     from pyspark.sql import SparkSession
 
     spark = (SparkSession.builder.master("local[8]")
@@ -83,8 +69,8 @@ def main() -> int:
             fails.append((name, f"oracle error: {ex}"))
             print(f"[{i+1}/{len(qs)}] {name}: ORACLE ERROR {ex}", flush=True)
             continue
-        sc, srows = canon(spdf)
-        oc, orows = canon(odf)
+        sc, srows = _canon_frame(spdf)
+        oc, orows = _canon_frame(odf)
         if sc != oc:
             fails.append((name, f"schema {sc} != {oc}"))
             status = "SCHEMA MISMATCH"

@@ -6,8 +6,10 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from verify_driver import TABLES, canon  # type: ignore
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [_ROOT, os.path.join(_ROOT, "tests")]
+from conftest import _canon_frame  # type: ignore
+from verify_driver import TABLES  # type: ignore
 
 
 def main() -> int:
@@ -33,7 +35,7 @@ def main() -> int:
         if not sql:
             print(f"{name}: rows-only {len(spdf)}"); continue
         odf = con.execute(sql).df()
-        sc, srows = canon(spdf); oc, orows = canon(odf)
+        sc, srows = _canon_frame(spdf); oc, orows = _canon_frame(odf)
         if sc != oc: print(f"{name}: SCHEMA {sc} != {oc}"); rc = 1
         elif srows != orows:
             print(f"{name}: MISMATCH rows {len(srows)} vs {len(orows)}")
