@@ -31,11 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables that stay small at any scale factor (region/nation are
-# fixed-cardinality in TPC-H-style schemas) — always broadcast these in
-# joins; never shuffle them.
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to a microsecond TIMESTAMP regardless of

@@ -18,9 +18,12 @@ Conventions (enforced by the harness):
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 from importlib import import_module
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,8 +32,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # The shared incremental high-water-mark literal (reference O4 semantics).
 # Lives here — not in scans.py — because several query modules embed it in
 # their oracle SQL, and importing scans from another query module would
-# register scans' queries out of _MODULES order (the driver's correctness
-# window records the first 50 registry entries, so order is contractual).
+# register scans' queries out of _MODULES order (registration order breaks
+# ties in load_registry's correctness-window order).
 HWM_LITERAL = "2024-01-15 00:00:00"
 
 
@@ -57,8 +60,7 @@ def query(name: str, oracle: str | None = None, family: str = "misc"):
     return deco
 
 
-# Module import order (registration source order, before window
-# packing below).
+# Module import order = registration order.
 _MODULES = (
     "text",
     "similarity",
@@ -76,545 +78,88 @@ _MODULES = (
     "scalars",
     "advanced",
     "pipeline_llm",
-    # round-3 additions — never driver-verified, so load_registry
-    # front-loads them into this round's correctness window
     "relational_deep",
     "corpus_ops",
     "formats",
-    # round-6 additions
     "layout",
     "timeseries",
     "diagnostics",
-    # round-7 additions
     "graphs",
-    # round-9 additions
     "retrieval",
     "analytics",
-    # round-16 additions — maintenance MUST stay last: its oracle is
-    # composed at import time from pipeline_ops' and similarity's
-    # append oracles (see its module docstring)
+    # maintenance MUST stay last: its oracle is composed at import time
+    # from pipeline_ops' and similarity's append oracles (see its module
+    # docstring)
     "maintenance",
 )
 
-# Window packing: the driver's correctness pass records the FIRST 50
-# registry entries each round, so membership there is contractual.
-# These are the names that hold an ON-DISK driver row — round 1's
-# recorded window (CORRECTNESS_r01.json keys) and round 3's
-# (CORRECTNESS_r03.json keys).  Round 2's window is NOT counted:
-# CORRECTNESS_r02.json never landed in the repo (round-3 VERDICT.md,
-# "What's missing" #4), so its 44 not-yet-re-verified names re-enter
-# this round's window first.  load_registry orders: the r02-claimed
-# names, then never-verified additions, then _RECHECK (implementation
-# or oracle changed after their last driver row), then the rest in
-# registration order.
-_R01_WINDOW = frozenset((
-    "scan_project_cast", "filter_highwater", "filter_compound",
-    "project_conditional", "join_inner_equi", "join_left_outer",
-    "join_full_outer", "join_semi", "join_anti", "join_broadcast",
-    "join_multiway", "join_theta_range", "join_asof",
-    "join_range_bucketized", "join_fuzzy_levenshtein",
-    "agg_groupby_multi", "agg_distinct", "agg_having", "agg_rollup",
-    "agg_cube", "agg_approx_distinct", "agg_pivot", "agg_scalar_max",
-    "agg_grouping_sets", "agg_stats_moments", "subquery_avg_yearly",
-    "agg_approx_quantile", "agg_histogram", "agg_corr_exact",
-    "sort_limit_asc", "sort_limit_desc", "topk_per_group",
-    "window_rank", "window_lag_lead", "window_running_sum",
-    "window_range_frame", "window_first_last", "window_percentiles",
-    "set_union_all", "set_union_distinct", "set_intersect",
-    "set_except", "unpivot_metrics", "scalar_string", "scalar_date",
-    "scalar_math", "scalar_json", "array_ops", "map_ops",
-    "dedup_exact",
-))
-# Round-2's recorded window.  Its driver artifact is missing from the
-# repo, so these names do NOT count as driver-verified; they are
-# front-loaded into the round-4 window (minus the ones round 3
-# re-verified) so every operator regains an auditable driver row.
-_R02_WINDOW = frozenset((
-    "join_skew_salted", "pipeline_sequence_pack",
-    "pipeline_incremental_rollup", "text_tokenize_wordcount",
-    "text_ngram", "text_langid", "text_quality_score",
-    "text_fingerprint", "text_token_count", "text_redact_pattern",
-    "text_normalize", "sim_ngram_jaccard", "stream_tumbling_counts",
-    "stream_sliding_avg", "stream_session_windows",
-    "stream_late_data_policy", "stream_native_tumbling",
-    "stream_dedup_stateful", "udf_scalar", "udaf_grouped",
-    "udtf_explode_like", "multimodal_features", "split_train_test",
-    "sample_stratified", "dedup_keep_latest", "profile_numeric_stats",
-    "dedup_incremental", "dedup_embedding_cosine", "dedup_cluster_cc",
-    "pipeline_sessionize", "pipeline_session_stats",
-    "pipeline_user_retention", "pipeline_event_funnel",
-    "pipeline_event_zscore", "pipeline_value_outliers",
-    "pipeline_quality_band", "pipeline_length_filter",
-    "pipeline_token_budget", "pipeline_corpus_stats",
-    "pipeline_lang_balance", "pipeline_contamination",
-    "pipeline_gram_df", "pipeline_distinctive_terms",
-    "pipeline_doc_signature", "pipeline_minhash_pairs_portable",
-    "pipeline_customer_revenue", "pipeline_price_deciles",
-    "pipeline_schema_profile", "pipeline_scd2_history",
-    "pipeline_embedding_quantize",
-))
-# Round-3's recorded window (CORRECTNESS_r03.json keys — on disk,
-# 45 hash-pass + 5 by-design rows-only clean).
-_R03_WINDOW = frozenset((
-    "sim_cosine_topk", "sim_cosine_ann_lsh", "sim_cosine_ivf",
-    "sim_minhash_lsh", "sim_simhash", "sim_cosine_exact_pairs",
-    "stream_stream_join", "pipeline_neardup_degree",
-    "pipeline_debounce", "agg_weighted_avg", "join_exists_correlated",
-    "join_not_exists_agg", "subquery_scalar_select",
-    "sql_recursive_month_spine", "pipeline_chunk_overlap",
-    "pipeline_pmi_collocations", "pipeline_dq_report",
-    "pipeline_winsorize", "pipeline_repetition_filter",
-    "pipeline_vocab_encode", "pipeline_span_mask",
-    "pipeline_domain_mix", "join_min_cost_supplier",
-    "pipeline_volume_shipping", "pipeline_market_share",
-    "pipeline_promo_revenue", "agg_top_supplier_revenue",
-    "join_large_volume_customers", "join_only_late_supplier",
-    "agg_mode_exact", "agg_median_exact", "join_cross_calendar",
-    "scalar_bitwise", "agg_collect_set_sorted",
-    "pipeline_prefix_dedup", "pipeline_bigram_lm",
-    "pipeline_bpe_pair_counts", "pipeline_mixture_temperature",
-    "pipeline_embedding_norm_filter", "scan_csv_roundtrip",
-    "scan_jsonl_roundtrip", "scan_orc_roundtrip",
-    "agg_stats_moments", "join_asof", "text_tokenize_wordcount",
-    "text_ngram", "text_langid", "text_quality_score",
-    "text_fingerprint", "text_token_count",
-))
-# Round-4's recorded window (CORRECTNESS_r04.json keys — on disk,
-# 47 hash-pass + 3 by-design rows-only clean; it re-proved the 44
-# r02-claimed names plus 6 re-verifications).
-_R04_WINDOW = frozenset((
-    "text_redact_pattern", "text_normalize", "sim_ngram_jaccard",
-    "stream_tumbling_counts", "stream_sliding_avg",
-    "stream_session_windows", "stream_late_data_policy",
-    "stream_native_tumbling", "stream_dedup_stateful", "udf_scalar",
-    "udaf_grouped", "udtf_explode_like", "multimodal_features",
-    "split_train_test", "sample_stratified", "dedup_keep_latest",
-    "profile_numeric_stats", "dedup_incremental",
-    "dedup_embedding_cosine", "dedup_cluster_cc",
-    "pipeline_sessionize", "pipeline_session_stats",
-    "pipeline_user_retention", "pipeline_event_funnel",
-    "pipeline_event_zscore", "pipeline_value_outliers",
-    "pipeline_quality_band", "pipeline_length_filter",
-    "pipeline_token_budget", "pipeline_corpus_stats",
-    "pipeline_lang_balance", "pipeline_contamination",
-    "pipeline_gram_df", "pipeline_distinctive_terms",
-    "pipeline_doc_signature", "pipeline_minhash_pairs_portable",
-    "pipeline_customer_revenue", "pipeline_price_deciles",
-    "pipeline_schema_profile", "pipeline_scd2_history",
-    "pipeline_embedding_quantize", "pipeline_sequence_pack",
-    "pipeline_incremental_rollup", "join_skew_salted",
-    "text_tokenize_wordcount", "text_ngram", "text_langid",
-    "text_quality_score", "text_fingerprint", "text_token_count",
-))
-# Round-5's recorded window (CORRECTNESS_r05.json keys — on disk,
-# 43 hash-pass + 7 by-design rows-only clean; it cleared the whole
-# round-5 _RECHECK population and graduated sim_cosine_topk).
-_R05_WINDOW = frozenset((
-    "multimodal_video_frames", "sim_cosine_exact_pairs",
-    "stream_stream_join", "sim_simhash", "sim_cosine_ann_lsh",
-    "dedup_embedding_cosine", "sim_cosine_topk", "dedup_cluster_cc",
-    "pipeline_debounce", "filter_highwater", "project_conditional",
-    "join_asof", "join_range_bucketized", "agg_approx_distinct",
-    "agg_pivot", "agg_scalar_max", "agg_stats_moments",
-    "sort_limit_asc", "sort_limit_desc", "window_lag_lead",
-    "window_range_frame", "scalar_json", "map_ops",
-    "pipeline_dq_report", "pipeline_winsorize", "agg_mode_exact",
-    "agg_median_exact", "scalar_bitwise", "agg_collect_set_sorted",
-    "scan_jsonl_roundtrip", "dedup_exact", "scan_project_cast",
-    "filter_compound", "join_inner_equi", "join_left_outer",
-    "join_full_outer", "join_semi", "join_anti", "join_broadcast",
-    "join_multiway", "join_theta_range", "join_fuzzy_levenshtein",
-    "agg_groupby_multi", "agg_distinct", "agg_having", "agg_rollup",
-    "agg_cube", "agg_grouping_sets", "subquery_avg_yearly",
-    "agg_approx_quantile",
-))
-# Round-6's recorded window (CORRECTNESS_r06.json keys — on disk,
-# 44 hash-pass + 6 by-design rows-only, zero errors; it cleared the
-# whole round-6 _RECHECK population and graduated sim_simhash).
-_R06_WINDOW = frozenset((
-    "stream_ewma_stateful", "multimodal_audio_features",
-    "pipeline_dedup_clusters_portable", "pipeline_canonical_docs",
-    "pipeline_corpus_build", "join_fuzzy_jaro", "join_bucketed_colocated",
-    "pipeline_interval_concurrency", "agg_q22_antijoin_rollup",
-    "pipeline_bpe_train", "scan_parquet_schema_evolution",
-    "scan_python_datasource", "pipeline_zorder_layout",
-    "pipeline_ewma_smooth", "pipeline_time_gapfill",
-    "pipeline_key_skew_profile", "sim_minhash_lsh", "sim_simhash",
-    "dedup_cluster_cc", "sim_ngram_jaccard", "sim_cosine_ann_lsh",
-    "dedup_embedding_cosine", "sim_cosine_exact_pairs",
-    "pipeline_minhash_pairs_portable", "agg_histogram", "agg_corr_exact",
-    "topk_per_group", "window_rank", "window_running_sum",
-    "window_first_last", "window_percentiles", "set_union_all",
-    "set_union_distinct", "set_intersect", "set_except",
-    "unpivot_metrics", "scalar_string", "scalar_date", "scalar_math",
-    "array_ops", "sim_cosine_ivf", "pipeline_neardup_degree",
-    "agg_weighted_avg", "join_exists_correlated", "join_not_exists_agg",
-    "subquery_scalar_select", "sql_recursive_month_spine",
-    "pipeline_chunk_overlap", "pipeline_pmi_collocations",
-    "pipeline_repetition_filter",
-))
-# Round-7's recorded window (CORRECTNESS_r07.json keys — on disk,
-# 49 hash-pass + 1 by-design rows-only clean, zero errors; it cleared
-# the whole round-7 _RECHECK population and graduated graph_pagerank,
-# agg_hll_merge, sim_minhash_lsh and dedup_cluster_cc).
-_R07_WINDOW = frozenset((
-    "agg_hll_merge", "agg_top_supplier_revenue", "dedup_cluster_cc",
-    "graph_pagerank", "join_bucketed_colocated", "join_cross_calendar",
-    "join_large_volume_customers", "join_min_cost_supplier",
-    "join_only_late_supplier", "multimodal_video_frames",
-    "pipeline_bigram_lm", "pipeline_bpe_pair_counts",
-    "pipeline_canonical_docs", "pipeline_corpus_build",
-    "pipeline_dedup_clusters_portable", "pipeline_doc_signature",
-    "pipeline_domain_mix", "pipeline_embedding_norm_filter",
-    "pipeline_ewma_smooth", "pipeline_market_share",
-    "pipeline_minhash_pairs_portable", "pipeline_mixture_temperature",
-    "pipeline_prefix_dedup", "pipeline_promo_revenue",
-    "pipeline_span_mask", "pipeline_vocab_encode",
-    "pipeline_volume_shipping", "scan_csv_roundtrip",
-    "scan_jsonl_roundtrip", "scan_orc_roundtrip", "sim_minhash_lsh",
-    "sim_ngram_jaccard", "stream_dedup_stateful", "stream_ewma_stateful",
-    "stream_late_data_policy", "stream_native_tumbling",
-    "stream_session_windows", "stream_sliding_avg",
-    "stream_tumbling_counts", "text_fingerprint", "text_langid",
-    "text_ngram", "text_normalize", "text_quality_score",
-    "text_redact_pattern", "text_token_count", "text_tokenize_wordcount",
-    "udaf_grouped", "udf_scalar", "udtf_explode_like",
-))
-# Round-8's recorded window (CORRECTNESS_r08.json keys — on disk,
-# 49 hash-pass + 1 by-design rows-only (multimodal_video_frames, since
-# graduated), zero errors; it cleared the whole round-8 _RECHECK
-# population and the 11 round-8 additions).
-_R08_WINDOW = frozenset((
-    "agg_approx_distinct", "agg_approx_quantile", "agg_bloom_membership",
-    "agg_countmin_freq", "agg_heavy_hitters_mg", "agg_hll_merge",
-    "dedup_incremental", "dedup_keep_latest", "graph_pagerank",
-    "graph_triangle_count", "join_bucketed_colocated", "join_spatial_grid",
-    "multimodal_audio_features", "multimodal_features",
-    "multimodal_video_frames", "pipeline_bpe_encode", "pipeline_bpe_train",
-    "pipeline_cdc_apply", "pipeline_compaction_plan",
-    "pipeline_contamination", "pipeline_corpus_stats",
-    "pipeline_customer_revenue", "pipeline_distinctive_terms",
-    "pipeline_event_funnel", "pipeline_event_zscore", "pipeline_gram_df",
-    "pipeline_kanon_generalize", "pipeline_lang_balance",
-    "pipeline_length_filter", "pipeline_price_deciles",
-    "pipeline_quality_band", "pipeline_rank_fusion",
-    "pipeline_schema_profile", "pipeline_session_stats",
-    "pipeline_sessionize", "pipeline_snapshot_diff",
-    "pipeline_token_budget", "pipeline_user_retention",
-    "pipeline_value_outliers", "profile_numeric_stats", "sample_priority",
-    "sample_stratified", "scan_hive_partitioned", "sim_cosine_ann_lsh",
-    "sim_cosine_ivf", "split_train_test", "stream_cdc_stateful",
-    "stream_dedup_stateful", "stream_heavy_hitters", "text_char_diversity",
-))
-# Round-10's recorded window (CORRECTNESS_r10.json keys — on disk,
-# 50 hash-pass, zero rows-only, zero errors: the project's first
-# perfect window. Round 9's driver artifact never landed — like round
-# 2's — so the round-9 additions and the round-9 _RECHECK population
-# all drew their rows here).
-_R10_WINDOW = frozenset((
-    "agg_bloom_membership", "agg_countmin_freq", "agg_quantile_sketch",
-    "dedup_cluster_cc", "dedup_substring_spans", "er_mutual_best",
-    "filter_pareto_frontier", "graph_bfs_hops",
-    "graph_jaccard_neighbors", "graph_pagerank", "graph_triangle_count",
-    "join_bloom_prefiltered", "join_lateral_topn",
-    "multimodal_image_phash", "multimodal_video_frames",
-    "pipeline_ab_lift", "pipeline_attribution", "pipeline_bm25_topk",
-    "pipeline_boilerplate_blocks", "pipeline_cohort_matrix",
-    "pipeline_compaction_apply", "pipeline_dataset_datasheet",
-    "pipeline_event_transitions", "pipeline_feature_hash",
-    "pipeline_feature_scale", "pipeline_file_skipping",
-    "pipeline_gdpr_erasure", "pipeline_hybrid_retrieval",
-    "pipeline_kfold_assign", "pipeline_mad_outliers",
-    "pipeline_perplexity_filter", "pipeline_resample_ohlc",
-    "pipeline_substring_cut", "pipeline_target_encode",
-    "pipeline_time_interpolate", "pipeline_vocab_growth",
-    "pipeline_zorder_apply", "sample_priority", "scan_binary_files",
-    "scan_gzip_roundtrip", "sim_cosine_exact_pairs", "sim_cosine_ivf",
-    "sim_cosine_ivf_reuse", "sim_cosine_pq", "sim_minhash_lsh",
-    "sql_recursive_reachability", "stream_attribution",
-    "stream_ohlc_native", "stream_stream_left_join",
-    "udtf_python_native",
-))
-# Round-11's recorded window (CORRECTNESS_r11.json keys — on disk,
-# 50 hash-pass, zero rows-only, zero errors: second consecutive perfect
-# window. It re-proved the 9 round-11 additions, the whole round-11
-# _RECHECK population, and the stalest r05-era tier).
-_R11_WINDOW = frozenset((
-    "agg_distinct", "agg_groupby_multi", "agg_sketch_overlap",
-    "dedup_exact", "dedup_substring_spans", "er_mutual_best",
-    "filter_compound", "filter_highwater", "graph_jaccard_neighbors",
-    "graph_pagerank", "join_anti", "join_asof",
-    "join_bloom_prefiltered", "join_broadcast", "join_full_outer",
-    "join_fuzzy_levenshtein", "join_inner_equi", "join_left_outer",
-    "join_multiway", "join_range_bucketized", "join_semi",
-    "join_semireduced", "join_skew_salted", "join_theta_range",
-    "pipeline_bigram_kn", "pipeline_boilerplate_blocks",
-    "pipeline_bpe_pair_counts", "pipeline_canonical_docs",
-    "pipeline_corpus_build", "pipeline_debounce",
-    "pipeline_dedup_clusters_portable", "pipeline_doc_signature",
-    "pipeline_dp_counts", "pipeline_embedding_quantize",
-    "pipeline_filter_cascade", "pipeline_incremental_rollup",
-    "pipeline_merge_apply", "pipeline_minhash_pairs_portable",
-    "pipeline_neardup_apply", "pipeline_perplexity_filter",
-    "pipeline_scd2_history", "pipeline_sequence_pack",
-    "pipeline_substring_cut", "pipeline_time_interpolate",
-    "project_conditional", "scan_project_cast", "sim_cosine_topk",
-    "stream_dedup_within_watermark", "stream_stream_full_outer",
-    "stream_stream_join",
-))
-# Round-12's recorded window (CORRECTNESS_r12.json keys — on disk,
-# 50 hash-pass, zero rows-only, zero errors: third consecutive perfect
-# window. It proved the 6 round-12 additions, the whole round-12
-# _RECHECK population, and ALL 20 remaining r05-era rows — after it the
-# 32 r06 rows are the stalest tier, front-loaded into round 13).
-_R12_WINDOW = frozenset((
-    "agg_collect_set_sorted", "agg_cube", "agg_grouping_sets",
-    "agg_having", "agg_median_exact", "agg_mode_exact", "agg_pivot",
-    "agg_rollup", "agg_scalar_max", "agg_stats_moments",
-    "dedup_embedding_cosine", "dedup_incremental_neardup",
-    "dedup_neardup_index_append", "map_ops", "pipeline_bigram_kn",
-    "pipeline_bigram_lm", "pipeline_bm25_topk", "pipeline_bpe_encode",
-    "pipeline_bpe_train", "pipeline_canonical_docs",
-    "pipeline_contamination", "pipeline_corpus_build",
-    "pipeline_dedup_clusters_portable", "pipeline_doc_signature",
-    "pipeline_dp_counts", "pipeline_dq_report", "pipeline_dsir_select",
-    "pipeline_ewma_smooth", "pipeline_feature_hash", "pipeline_gram_df",
-    "pipeline_hybrid_retrieval", "pipeline_merge_apply",
-    "pipeline_merge_timetravel", "pipeline_minhash_pairs_portable",
-    "pipeline_neardup_apply", "pipeline_neardup_degree",
-    "pipeline_perplexity_filter", "pipeline_prefix_dedup",
-    "pipeline_winsorize", "scalar_bitwise", "scalar_json",
-    "scalar_variant", "sim_simhash", "sort_limit_asc", "sort_limit_desc",
-    "stream_dedup_stateful", "stream_session_native",
-    "subquery_avg_yearly", "window_lag_lead", "window_range_frame",
-))
-# Round-13's recorded window (CORRECTNESS_r13.json keys — on disk,
-# 50 hash-pass, zero rows-only, zero errors: fourth consecutive perfect
-# window. It proved the 9 round-13 additions, the whole round-13
-# _RECHECK population, and the entire stale r06 tier — after it the
-# 32 r07 rows are the stalest, front-loaded into round 14).
-_R13_WINDOW = frozenset((
-    "agg_corr_exact", "agg_histogram", "agg_q22_antijoin_rollup",
-    "agg_weighted_avg", "array_ops", "dedup_embedding_incremental",
-    "dedup_embedding_index_append", "join_exists_correlated",
-    "join_fuzzy_jaro", "join_not_exists_agg", "pipeline_bpe_encode",
-    "pipeline_bpe_train", "pipeline_chunk_overlap", "pipeline_corpus_build",
-    "pipeline_corpus_delta", "pipeline_interval_concurrency",
-    "pipeline_kanon_apply", "pipeline_kanon_generalize",
-    "pipeline_key_skew_profile", "pipeline_pmi_collocations",
-    "pipeline_repetition_filter", "pipeline_time_gapfill",
-    "pipeline_zorder_layout", "scalar_date", "scalar_math", "scalar_string",
-    "scalar_variant", "scan_parquet_schema_evolution",
-    "scan_python_datasource", "scan_python_pushdown", "scan_python_stream",
-    "scan_python_stream_parallel", "set_except", "set_intersect",
-    "set_union_all", "set_union_distinct", "sim_cosine_ivf",
-    "sim_cosine_ivf_reuse", "sink_python_datasource", "sink_python_stream",
-    "sql_recursive_month_spine", "subquery_scalar_select", "text_ngram",
-    "text_tokenize_wordcount", "topk_per_group", "unpivot_metrics",
-    "window_first_last", "window_percentiles", "window_rank",
-    "window_running_sum",
-))
-# Round-14's recorded window (CORRECTNESS_r14.json keys — on disk,
-# 50 hash-pass, zero rows-only, zero errors: fifth consecutive perfect
-# window. It proved the 6 round-14 additions, the whole round-14
-# _RECHECK population, and the entire stale r07 tier — after it the
-# 32 r08 rows are the stalest, front-loaded into round 15).
-_R14_WINDOW = frozenset((
-    "agg_top_supplier_revenue", "dedup_embedding_incremental",
-    "dedup_embedding_index_append", "dedup_incremental",
-    "dedup_stream_index_append", "join_cross_calendar",
-    "join_large_volume_customers", "join_min_cost_supplier",
-    "join_only_late_supplier", "pipeline_domain_mix",
-    "pipeline_embedding_norm_filter", "pipeline_market_share",
-    "pipeline_merge_evolve", "pipeline_mixture_temperature",
-    "pipeline_promo_revenue", "pipeline_span_mask", "pipeline_vacuum",
-    "pipeline_vocab_encode", "pipeline_volume_shipping",
-    "scan_csv_roundtrip", "scan_jsonl_roundtrip", "scan_orc_roundtrip",
-    "scan_python_pushdown", "scan_python_stream_parallel",
-    "sim_cosine_ann_lsh", "sim_cosine_ivfpq", "sim_cosine_pq",
-    "sim_ngram_jaccard", "sink_python_datasource", "sink_python_stream",
-    "stream_cdc_stateful", "stream_corpus_delta",
-    "stream_embedding_delta", "stream_ewma_stateful",
-    "stream_heavy_hitters", "stream_late_data_policy",
-    "stream_native_tumbling", "stream_session_windows",
-    "stream_sliding_avg", "stream_tumbling_counts",
-    "text_char_diversity", "text_fingerprint", "text_langid",
-    "text_normalize", "text_quality_score", "text_redact_pattern",
-    "text_token_count", "udaf_grouped", "udf_scalar",
-    "udtf_explode_like",
-))
-# Round-15's recorded window (CORRECTNESS_r15.json keys — on disk,
-# 50 hash-pass, zero rows-only, zero errors: sixth consecutive perfect
-# window. It proved the 6 round-15 additions, the whole round-15
-# _RECHECK population, and the entire stale r08 tier — after it the
-# 33 r10 rows are the stalest, front-loaded into round 16).
-_R15_WINDOW = frozenset((
-    "agg_approx_distinct", "agg_approx_quantile", "agg_heavy_hitters_mg",
-    "agg_hll_merge", "agg_important_stock", "agg_supplier_part_types",
-    "dedup_embedding_incremental", "dedup_embedding_index_append",
-    "dedup_keep_latest", "join_bucketed_colocated",
-    "join_promo_share_suppliers", "join_spatial_grid",
-    "multimodal_audio_features", "multimodal_features",
-    "pipeline_cdc_apply", "pipeline_compaction_plan",
-    "pipeline_corpus_stats", "pipeline_customer_revenue",
-    "pipeline_distinctive_terms", "pipeline_event_funnel",
-    "pipeline_event_zscore", "pipeline_lang_balance",
-    "pipeline_length_filter", "pipeline_merge_vacuum",
-    "pipeline_price_deciles", "pipeline_quality_band",
-    "pipeline_rank_fusion", "pipeline_schema_profile",
-    "pipeline_session_stats", "pipeline_sessionize",
-    "pipeline_snapshot_diff", "pipeline_token_budget",
-    "pipeline_user_retention", "pipeline_value_outliers",
-    "profile_numeric_stats", "sample_stratified",
-    "scan_hive_partitioned", "scan_python_stream",
-    "scan_python_stream_parallel", "sim_cosine_exact_pairs",
-    "sim_cosine_ivf", "sim_cosine_ivf_reuse", "sim_cosine_ivfpq",
-    "sim_cosine_ivfpq_reuse", "sim_cosine_pq", "sim_ivfpq_index_append",
-    "sim_minhash_lsh", "sink_python_stream", "split_train_test",
-    "stream_embedding_delta",
-))
-# Round-16's recorded window (CORRECTNESS_r16.json keys — on disk,
-# 50 hash-pass, zero rows-only, zero errors: seventh consecutive
-# perfect window. It proved the 5 round-16 additions, the whole
-# round-16 _RECHECK population, and the entire stale r10 tier — after
-# it the 40 r11 rows are the stalest, front-loaded into round 17).
-_R16_WINDOW = frozenset((
-    "agg_bloom_membership", "agg_countmin_freq", "agg_custdist_outer",
-    "agg_product_profit", "agg_quantile_sketch", "dedup_cluster_cc",
-    "dedup_embedding_incremental", "dedup_embedding_index_append",
-    "filter_pareto_frontier", "graph_bfs_hops", "graph_triangle_count",
-    "join_disjunctive_pushdown", "join_lateral_topn",
-    "multimodal_image_phash", "multimodal_video_frames",
-    "pipeline_ab_lift", "pipeline_attribution",
-    "pipeline_cohort_matrix", "pipeline_compaction_apply",
-    "pipeline_dataset_datasheet", "pipeline_event_transitions",
-    "pipeline_feature_scale", "pipeline_file_skipping",
-    "pipeline_gdpr_erasure", "pipeline_index_vacuum",
-    "pipeline_kfold_assign", "pipeline_mad_outliers",
-    "pipeline_merge_vacuum", "pipeline_resample_ohlc",
-    "pipeline_target_encode", "pipeline_vocab_growth",
-    "pipeline_zorder_apply", "sample_priority", "scan_binary_files",
-    "scan_gzip_roundtrip", "scan_python_stream",
-    "scan_python_stream_parallel", "sim_cosine_ivf",
-    "sim_cosine_ivf_reuse", "sim_cosine_ivfpq",
-    "sim_cosine_ivfpq_reuse", "sim_ivfpq_cell_skew",
-    "sim_ivfpq_index_append", "sink_python_stream",
-    "sql_recursive_reachability", "stream_attribution",
-    "stream_embedding_delta", "stream_ohlc_native",
-    "stream_stream_left_join", "udtf_python_native",
-))
-# Round-17's recorded window (CORRECTNESS_r17.json keys, 50/50 green:
-# the five round-17 additions, the round-17 _RECHECK population, and
-# the entire stale r11 tier — after it the 45 r12 rows are the
-# stalest, front-loaded into round 18).
-_R17_WINDOW = frozenset((
-    "agg_distinct", "agg_forecast_revenue", "agg_groupby_multi",
-    "agg_sketch_overlap", "dedup_embedding_index_append",
-    "dedup_exact", "dedup_neardup_index_append",
-    "dedup_substring_spans", "er_mutual_best", "filter_compound",
-    "filter_highwater", "graph_jaccard_neighbors", "graph_pagerank",
-    "join_anti", "join_asof", "join_bloom_prefiltered",
-    "join_broadcast", "join_full_outer", "join_fuzzy_levenshtein",
-    "join_inner_equi", "join_left_outer", "join_local_supplier_volume",
-    "join_multiway", "join_range_bucketized", "join_semi",
-    "join_semireduced", "join_shipping_priority", "join_skew_salted",
-    "join_theta_range", "pipeline_boilerplate_blocks",
-    "pipeline_bpe_pair_counts", "pipeline_debounce",
-    "pipeline_embedding_quantize", "pipeline_filter_cascade",
-    "pipeline_incremental_rollup", "pipeline_index_vacuum",
-    "pipeline_quality_classifier", "pipeline_scd2_history",
-    "pipeline_sequence_pack", "pipeline_substring_cut",
-    "pipeline_time_interpolate", "project_conditional",
-    "scan_project_cast", "sim_cosine_topk", "sim_ivf_member_skew",
-    "sim_ivfpq_cell_skew", "sim_ivfpq_index_append",
-    "stream_dedup_within_watermark", "stream_stream_full_outer",
-    "stream_stream_join",
-))
-_DRIVER_VERIFIED = (
-    _R01_WINDOW | _R03_WINDOW | _R04_WINDOW | _R05_WINDOW | _R06_WINDOW
-    | _R07_WINDOW | _R08_WINDOW | _R10_WINDOW | _R11_WINDOW | _R12_WINDOW
-    | _R13_WINDOW | _R14_WINDOW | _R15_WINDOW | _R16_WINDOW
-    | _R17_WINDOW
-)
+# Queries whose implementation, oracle or an upstream seam changed after
+# their last certifying driver row, mapped to the round of that change.
+# A name stays pending (first in the window) until a CORRECTNESS file of
+# that round or later certifies it, so entries expire on their own.
+# * round 20 — the five bucketed stream folds now run on
+#   streaming.stateful.bucketed_state, and scan_python_pushdown's conf
+#   gate is streaming.scoped_conf.
+_RECHECK: dict[str, int] = {
+    "stream_dedup_stateful": 20,
+    "stream_cdc_stateful": 20,
+    "stream_ewma_stateful": 20,
+    "stream_attribution": 20,
+    "stream_corpus_delta": 20,
+    "scan_python_pushdown": 20,
+}
 
-# Verified in an earlier round, but the implementation, oracle, or an
-# upstream seam changed afterwards — their old driver row no longer
-# certifies the current code, so they re-enter the window right after
-# the never-verified block.  Round-18 population (every round-17
-# recheck drew a green r17 row and dropped out); entries are added
-# here as round-18 work changes the seams they certify:
-# * pipeline_quality_classifier — two same-round changes (memory
-#   discipline: batch a family's seam changes into one recheck):
-#   (a) the bigram feature expression was made total (r17 ADVICE —
-#   sequence(1, size-1) no longer produced for 1-token docs instead
-#   of relying on lazy F.when shielding an out-of-range ws[i]), and
-#   (b) the weight table now ships as a fingerprint-keyed parquet
-#   model artifact (read-or-build + builds-counter discipline,
-#   r17 verdict task #6) instead of inline derivation.  Values and
-#   oracle unchanged — the r17 row certified the inline-weights code.
-_RECHECK: tuple[str, ...] = (
-    "pipeline_quality_classifier",
-)
+# The driver's per-round correctness records live in the repo root.
+_CORRECTNESS_DIR = Path(__file__).resolve().parents[2]
+_CORRECTNESS_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_MATCH_FIELDS = ("rows_match", "schema_match", "hash_match")
 
 
-def _latest_row_round(name: str) -> int:
-    """Most recent round whose on-disk driver artifact holds this
-    query's correctness row (0 = never verified)."""
-    if name in _R17_WINDOW:
-        return 17
-    if name in _R16_WINDOW:
-        return 16
-    if name in _R15_WINDOW:
-        return 15
-    if name in _R14_WINDOW:
-        return 14
-    if name in _R13_WINDOW:
-        return 13
-    if name in _R12_WINDOW:
-        return 12
-    if name in _R11_WINDOW:
-        return 11
-    if name in _R10_WINDOW:
-        return 10
-    if name in _R08_WINDOW:
-        return 8
-    if name in _R07_WINDOW:
-        return 7
-    if name in _R06_WINDOW:
-        return 6
-    if name in _R05_WINDOW:
-        return 5
-    if name in _R04_WINDOW:
-        return 4
-    if name in _R03_WINDOW:
-        return 3
-    if name in _R01_WINDOW:
-        return 1
-    return 0
+def _certifies(row: dict) -> bool:
+    """A driver row is evidence for the current code only if the query
+    ran (no ``err``) and matched its oracle on rows, schema and hash."""
+    return row.get("err") is None and all(row.get(f) is True for f in _MATCH_FIELDS)
+
+
+def latest_certified_rounds(root: Path = _CORRECTNESS_DIR) -> dict[str, int]:
+    """Map each query name to the latest round whose
+    ``CORRECTNESS_r{N}.json`` under ``root`` holds a certifying row for
+    it.  Names without one are absent; no files give ``{}``.  A file
+    that is not a JSON object of row objects raises with its path."""
+    latest: dict[str, int] = {}
+    for path in sorted(root.glob("CORRECTNESS_r*.json")):
+        m = _CORRECTNESS_FILE.fullmatch(path.name)
+        if m is None:
+            continue
+        try:
+            rows = json.loads(path.read_text())
+        except ValueError as exc:
+            raise ValueError(f"malformed correctness file {path}: {exc}") from exc
+        if not isinstance(rows, dict) or not all(isinstance(r, dict) for r in rows.values()):
+            raise ValueError(f"malformed correctness file {path}: expected an object of row objects")
+        rnd = int(m.group(1))
+        for name, row in rows.items():
+            if _certifies(row):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
 def load_registry() -> dict[str, QueryDef]:
-    """Import all query modules (populating REGISTRY) and return it,
-    ordered: r02-claimed-but-unproven first, then never-driver-verified
-    additions, then _RECHECK, then the rest with the STALEST driver row
-    first (dict order is the driver's correctness-window order — the
-    first 50 entries get driver rows this round, so leftover window
-    slots refresh the oldest evidence instead of re-proving last
-    round's)."""
+    """Import all query modules (populating REGISTRY) and return it in
+    the driver's correctness-window order: the driver records the first
+    50 entries each round, so the order decides which queries get fresh
+    evidence.
+
+    Pending ``_RECHECK`` names come first.  Every other name follows,
+    stalest first by its latest certifying round in the committed
+    CORRECTNESS files (round 0 if it has none); ties keep registration
+    order."""
     for mod in _MODULES:
         import_module(f"{__package__}.{mod}")
-    recheck = set(_RECHECK)
-    reclaim = [n for n in REGISTRY
-               if n in _R02_WINDOW and n not in _DRIVER_VERIFIED]
-    fresh = [n for n in REGISTRY
-             if n not in _DRIVER_VERIFIED and n not in _R02_WINDOW]
-    rest = [n for n in REGISTRY
-            if n in _DRIVER_VERIFIED and n not in recheck]
-    rest.sort(key=_latest_row_round)  # stable: registration order within a round
-    ordered = {}
-    for name in (*reclaim, *fresh, *_RECHECK, *rest):
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
+    latest = latest_certified_rounds()
+    pending = [n for n, rnd in _RECHECK.items() if latest.get(n, 0) < rnd]
+    rest = sorted((n for n in REGISTRY if n not in pending), key=lambda n: latest.get(n, 0))
+    ordered = {name: REGISTRY[name] for name in (*pending, *rest)}
     REGISTRY.clear()
     REGISTRY.update(ordered)
     return REGISTRY

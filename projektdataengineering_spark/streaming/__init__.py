@@ -30,8 +30,6 @@ from pyspark.sql import functions as F
 
 from ..functions import money
 
-EVENT_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
     """Per-(window, event_type) counts + value sums over tumbling

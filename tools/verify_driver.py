@@ -6,18 +6,19 @@ PLAIN SparkSession (no engine factory configs — catches config-dependence
 bugs like the ns-timestamp events table):
 
 1. smoke: ``entry(spark)`` at sf0.001 returns >0 rows;
-2. every ``queries()`` entry runs at sf0.01 and, when ``oracle_sql()``
-   has a matching key, compares against DuckDB with the pytest oracle
-   harness's canonicalizer (tests/conftest.py ``_canon_frame``: sorted
-   columns, sorted rows of type-tagged exact cells), requiring exact
-   identity.
+2. every ``queries()`` entry (or only the named ones) runs at sf0.01 and,
+   when ``oracle_sql()`` has a matching key, compares against DuckDB with
+   the pytest oracle harness's canonicalizer (tests/conftest.py
+   ``_canon_frame``: sorted columns, sorted rows of type-tagged exact
+   cells), requiring exact identity.
 
 Exit 0 = all green.  Run from the repo root:
-    python tools/verify_driver.py [sf_dir]
+    python tools/verify_driver.py [name ...] [--sf DIR]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -25,21 +26,32 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 sys.path.insert(0, os.path.join(_ROOT, "tests"))
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
 
 def main() -> int:
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    ap = argparse.ArgumentParser(description="Driver-style oracle check of registry queries.")
+    ap.add_argument("names", nargs="*", help="registered query names (default: all)")
+    ap.add_argument("--sf", help="fixture dir (default: sf0.01 beside the smoke's sf0.001)")
+    ns = ap.parse_args()
     import duckdb
     from conftest import _canon_frame
     from pyspark.sql import SparkSession
+
+    import __spark_entry__ as e
+    from projektdataengineering_spark.catalog import TABLES
+
+    qs = e.queries()
+    unknown = [n for n in ns.names if n not in qs]
+    if unknown:
+        ap.error(f"unknown query names: {', '.join(unknown)}")
+    if ns.names:
+        qs = {n: qs[n] for n in ns.names}
+    oracles = e.oracle_sql()
+    sf = ns.sf or os.path.join(os.path.dirname(e.SF0001), "sf0.01")
 
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.sql.shuffle.partitions", "8")
              .config("spark.ui.enabled", "false").getOrCreate())
-    import __spark_entry__ as e
 
     n = len(e.entry(spark).collect())
     assert n > 0, "entry() smoke returned 0 rows"
@@ -49,9 +61,7 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
 
-    oracles = e.oracle_sql()
     fails = []
-    qs = e.queries()
     for i, (name, fn) in enumerate(qs.items()):
         try:
             spdf = fn(spark, sf).toPandas()
