@@ -7,6 +7,12 @@ Europe/Berlin via env — SURVEY.md §1.2 — we standardize on UTC and treat
 event-time columns as UTC), and Arrow is enabled for the few Pandas-UDF
 operators. Only `master`/`shuffle.partitions` defaults are local-test
 conveniences; production callers pass their own.
+
+A session this factory starts on its own ``local[...]`` master runs the
+engine's Python worker daemon (:mod:`.worker_daemon`), which removes the
+per-task re-read of ``pyspark.zip`` from every Python task's fixed cost.
+Sessions given a ``master`` (or built with SPARK_GRAFT_NO_LOCAL_MASTER)
+keep Spark's stock daemon.
 """
 
 from __future__ import annotations
@@ -96,8 +102,26 @@ def get_spark(
     if master is not None:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_GRAFT_NO_LOCAL_MASTER"):
-        builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        builder = (
+            builder.master(f"local[{cpus}]")
+            .config(
+                "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+            )
+            # Every Python task's set-up calls importlib.invalidate_caches(),
+            # which re-reads pyspark.zip's directory once per cached
+            # zipimporter (14 in a worker): 150-190 ms of each task's fixed
+            # cost. The engine daemon re-reads an archive only when its
+            # stat changed; a trivial 4-task mapInPandas op went from
+            # 0.58 s to 0.24 s at local[4] on a 4-core host.
+            # Set only here: a local daemon starts in the driver's cwd and
+            # PYTHONPATH, the sys.path its forked workers already import
+            # this package from. On a cluster the package may reach
+            # executors only through pyFiles, which join sys.path after
+            # the daemon has started, so Spark's stock daemon stays.
+            .config(
+                "spark.python.daemon.module",
+                "projektdataengineering_spark.worker_daemon",
+            )
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -47,6 +47,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 # pandas. Keys stay fully independent — bucket co-residence never mixes
 # their state.
 #
+# That per-group round-trip is distinct from the per-TASK fixed cost of
+# the Python worker every state partition's task runs in. Bucketing cuts
+# only the former; the engine's worker daemon (worker_daemon.py, used by
+# session.get_spark's local master) cuts the latter's main part, a
+# ~150 ms re-read of pyspark.zip's directory in every task's set-up.
+#
 # Horizon semantics are the EAGER form of the per-key operators' lazy
 # Spark timeout: expired keys (max_us + horizon < watermark) are swept
 # at the START of every bucket invocation, before the new rows fold, so a
