@@ -14,6 +14,9 @@ named-table loader over a directory of parquet files. Explicit behaviors:
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -123,8 +126,6 @@ def session_file_memo(spark: SparkSession, attr: str, path: str, build):
     ``attr`` (a new session never sees another session's entries), and
     the (realpath, mtime_ns, size) key means a regenerated file can
     never serve a stale entry."""
-    import os
-
     st = os.stat(path)
     key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
     memo = getattr(spark, attr, None)
@@ -134,6 +135,121 @@ def session_file_memo(spark: SparkSession, attr: str, path: str, build):
     if key not in memo:
         memo[key] = build()
     return memo[key]
+
+
+# ---------------------------------------------------------------------------
+# Persisted artifacts: every index, model, ledger and rewritten table a
+# query keeps between calls lives at .scratch/<kind>/<key>, written once
+# through `persisted` and reused until a source or a key parameter changes
+# ---------------------------------------------------------------------------
+
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
+# kind → (fixture tables every key fingerprints, key function). The key
+# function returns (params, gens) and is read at each call, so a retuned
+# constant re-keys; `gens` maps a generation label ("v2", "pub2", or "g"
+# for every retrain generation) to the arrival-batch parameters its suffix
+# folds (index lines only, else None). Filled by artifact_kind.
+KINDS: dict[str, tuple[tuple[str, ...], object]] = {}
+
+# real builds per kind since process start (a reuse never counts)
+BUILDS: Counter = Counter()
+
+
+def artifact_kind(kind: str, *tables: str, key=None) -> None:
+    """Declare a kind of persisted artifact: the fixture ``tables`` its
+    artifacts derive from and, optionally, ``key() -> (params, gens)``."""
+    KINDS[kind] = (tables, key or (lambda: ({}, None)))
+
+
+def staging_path(path: str, pid: int, token: str) -> str:
+    """Where an install stages ``path`` before its rename; a crashed
+    build leaves exactly this shape behind."""
+    return f"{path}.tmp.{pid}.{token}"
+
+
+def install(path: str, build) -> None:
+    """Write-once directory install: ``build(tmp)`` writes a
+    process-unique staging path, then one atomic ``os.rename`` publishes
+    it, so a reader never sees a half-written artifact. A build that
+    raises leaves nothing behind; a concurrent winner of the rename
+    (same content, by keying) is kept. A build that ran for an artifact
+    under :data:`SCRATCH` counts in ``BUILDS[kind]``."""
+    import shutil
+    import uuid
+
+    if os.path.exists(path):
+        return
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = staging_path(path, os.getpid(), uuid.uuid4().hex[:8])
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(path):  # not a lost race: surface it
+            raise
+    kind_dir = os.path.dirname(path)
+    if os.path.dirname(kind_dir) == SCRATCH:
+        BUILDS[os.path.basename(kind_dir)] += 1
+
+
+def persisted(kind, sources, params, build=None, *, gen=0, batch=None) -> str:
+    """The one read-or-build seam for artifacts: returns
+    ``.scratch/<kind>/<key>``, first running ``build(tmp)`` through
+    :func:`install` when it is absent (``build=None`` only addresses).
+
+    The key is the content fingerprint of the ``sources`` files (size
+    and mtime each) plus the sorted ``params`` as ``_{name}{value}``, so
+    a regenerated source or a retuned parameter lands a new key and can
+    never reuse a stale artifact. ``gen`` names a later generation of
+    the same line: ``"v2"`` (an append) or ``n >= 1`` (retrain ``g{n}``)
+    is the first generation's key plus ``_{label}-`` and the sorted
+    ``batch`` parameters (the generation's arrival-batch definition),
+    so every generation of a line shares its first key as a prefix."""
+    from .sources import source_fingerprint
+
+    key = source_fingerprint(*sources) + "".join(
+        f"_{k}{v}" for k, v in sorted(params.items())
+    )
+    if gen:
+        label = gen if isinstance(gen, str) else f"g{gen}"
+        key += f"_{label}-" + "-".join(
+            f"{k}{v}" for k, v in sorted((batch or {}).items())
+        )
+    path = os.path.join(SCRATCH, kind, key)
+    if build is not None:
+        install(path, build)
+    return path
+
+
+def artifact(
+    kind: str, sf_dir: str, build=None, *, gen=0, inputs=(), **params
+) -> str:
+    """:func:`persisted` for a declared kind: its fixture tables under
+    ``sf_dir`` are the sources, ``params`` add to (or override) the
+    kind's key parameters, and a generation's suffix folds the kind's
+    batch parameters for that generation. ``inputs`` are the installed
+    artifacts this one is derived from; they join the sources, so a
+    rebuilt input re-keys everything derived from it instead of leaving
+    it to serve content built from the input's previous install."""
+    tables, key = KINDS[kind]
+    base, gens = key()
+    batch = gens[gen if isinstance(gen, str) else "g"] if gen else None
+    return persisted(
+        kind,
+        [os.path.join(sf_dir, f"{t}.parquet") for t in tables] + list(inputs),
+        {**base, **params},
+        build,
+        gen=gen,
+        batch=batch,
+    )
 
 
 def load_events_since(spark: SparkSession, sf_dir: str, hwm) -> DataFrame:

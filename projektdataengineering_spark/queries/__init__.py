@@ -99,7 +99,8 @@ _MODULES = (
 # that round or later certifies it, so entries expire on their own.
 # * round 20 — the five bucketed stream folds now run on
 #   streaming.stateful.bucketed_state, and scan_python_pushdown's conf
-#   gate is streaming.scoped_conf.
+#   gate is streaming.scoped_conf; every query that keeps an artifact
+#   now reads or builds it through catalog.persisted.
 _RECHECK: dict[str, int] = {
     "stream_dedup_stateful": 20,
     "stream_cdc_stateful": 20,
@@ -107,6 +108,45 @@ _RECHECK: dict[str, int] = {
     "stream_attribution": 20,
     "stream_corpus_delta": 20,
     "scan_python_pushdown": 20,
+    "dedup_embedding_incremental": 20,
+    "dedup_embedding_index_append": 20,
+    "dedup_incremental_neardup": 20,
+    "dedup_neardup_index_append": 20,
+    "dedup_stream_index_append": 20,
+    "join_bucketed_colocated": 20,
+    "pipeline_compaction_apply": 20,
+    "pipeline_corpus_delta": 20,
+    "pipeline_file_skipping": 20,
+    "pipeline_gdpr_erasure": 20,
+    "pipeline_index_vacuum": 20,
+    "pipeline_kanon_apply": 20,
+    "pipeline_merge_apply": 20,
+    "pipeline_merge_evolve": 20,
+    "pipeline_merge_timetravel": 20,
+    "pipeline_merge_vacuum": 20,
+    "pipeline_neardup_apply": 20,
+    "pipeline_quality_classifier": 20,
+    "pipeline_vacuum": 20,
+    "pipeline_zorder_apply": 20,
+    "scan_binary_files": 20,
+    "scan_csv_roundtrip": 20,
+    "scan_gzip_roundtrip": 20,
+    "scan_hive_partitioned": 20,
+    "scan_jsonl_roundtrip": 20,
+    "scan_orc_roundtrip": 20,
+    "scan_parquet_schema_evolution": 20,
+    "sim_cosine_ivf": 20,
+    "sim_cosine_ivf_reuse": 20,
+    "sim_cosine_ivfpq": 20,
+    "sim_cosine_ivfpq_reuse": 20,
+    "sim_cosine_pq": 20,
+    "sim_ivf_member_skew": 20,
+    "sim_ivfpq_cell_skew": 20,
+    "sim_ivfpq_gen_serving": 20,
+    "sim_ivfpq_index_append": 20,
+    "sink_python_datasource": 20,
+    "sink_python_stream": 20,
+    "stream_embedding_delta": 20,
 }
 
 # The driver's per-round correctness records live in the repo root.

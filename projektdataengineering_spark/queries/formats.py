@@ -12,9 +12,10 @@ reading the ORIGINAL parquet. A lossy serializer, a mis-parsed
 timestamp, or a float that fails to survive text encoding breaks the
 hash.
 
-Scratch layout: each query owns `<repo>/.scratch/formats/<name>`,
-rewritten (overwrite mode) on every call — idempotent, safe under
-driver re-runs. Text formats pin `timestampFormat` with microsecond
+Scratch layout: each round-trip copy is a persisted artifact
+(`catalog.artifact`, kind "formats"), written once per source
+fingerprint through a staged install and re-read on every call —
+idempotent, safe under driver re-runs. Text formats pin `timestampFormat` with microsecond
 precision on BOTH write and read; doubles rely on shortest-round-trip
 encoding (Spark writes Java's Double.toString, which parses back
 bit-equal).
@@ -32,23 +33,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import artifact, artifact_kind, load_table
 from ..functions import SQL_DSUM, dsum
 from . import query
 
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".scratch",
-    "formats",
-)
+# the fixture tables the round-trip copies are made from
+artifact_kind("formats", "documents", "events", "lineitem", "orders")
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-
-
-def _scratch_dir(name: str, sf_dir: str) -> str:
-    # one scratch per (query, scale) so sf0.001 tests and the sf0.01
-    # driver run never clobber each other mid-flight
-    return os.path.join(_SCRATCH, f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
 
 
 # ---------------------------------------------------------------------------
@@ -89,16 +81,16 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     query removes by casting explicitly). NTZ also keeps the whole
     cycle timezone-free: no instant↔local rendering on write, parse,
     or pandas conversion, under ANY session timezone."""
-    path = _scratch_dir("csv_orders", sf_dir)
-    orders = load_table(spark, sf_dir, "orders").withColumn(
-        "o_orderdate", F.col("o_orderdate").cast("timestamp_ntz")
-    )
-    (
-        orders.write.mode("overwrite")
-        .option("header", True)
-        .option("timestampNTZFormat", _TS_FMT)
-        .csv(path)
-    )
+
+    def write(p: str) -> None:
+        orders = load_table(spark, sf_dir, "orders").withColumn(
+            "o_orderdate", F.col("o_orderdate").cast("timestamp_ntz")
+        )
+        orders.write.option("header", True).option(
+            "timestampNTZFormat", _TS_FMT
+        ).csv(p)
+
+    path = artifact("formats", sf_dir, write, q="csv_orders")
     back = (
         spark.read.schema(_ORDERS_DDL)
         .option("header", True)
@@ -145,9 +137,14 @@ def scan_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer id checksum proving no row was dropped or duplicated.
     The ns→µs events conversion happens BEFORE the write, so the
     cycle matches what a collector actually lands."""
-    path = _scratch_dir("jsonl_events", sf_dir)
-    ev = load_table(spark, sf_dir, "events")
-    ev.write.mode("overwrite").option("timestampFormat", _TS_FMT).json(path)
+    path = artifact(
+        "formats",
+        sf_dir,
+        lambda p: load_table(spark, sf_dir, "events")
+        .write.option("timestampFormat", _TS_FMT)
+        .json(p),
+        q="jsonl_events",
+    )
     back = (
         spark.read.schema(_EVENTS_DDL)
         .option("timestampFormat", _TS_FMT)
@@ -185,9 +182,12 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and column pruning (tests/test_plans.py's pushdown assertions
     would hold on this scan too). Proves the engine can sit on an
     ORC lake without a conversion step."""
-    path = _scratch_dir("orc_lineitem", sf_dir)
-    li = load_table(spark, sf_dir, "lineitem")
-    li.write.mode("overwrite").orc(path)
+    path = artifact(
+        "formats",
+        sf_dir,
+        lambda p: load_table(spark, sf_dir, "lineitem").write.orc(p),
+        q="orc_lineitem",
+    )
     back = spark.read.orc(path)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -235,16 +235,19 @@ def scan_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     schema in a catalog — catalog.py's seam); scans stay columnar,
     pruned, and pushdown-eligible; the late column simply reads as
     missing→NULL for old files, with zero data movement."""
-    path = _scratch_dir("parquet_evolve", sf_dir)
-    orders = load_table(spark, sf_dir, "orders")
-    gen0 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    gen1 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
-    gen0.write.mode("overwrite").parquet(os.path.join(path, "gen=0"))
-    gen1.write.mode("overwrite").parquet(os.path.join(path, "gen=1"))
+
+    def write(p: str) -> None:
+        orders = load_table(spark, sf_dir, "orders")
+        gen0 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_custkey", "o_totalprice"
+        )
+        gen1 = orders.filter(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
+        )
+        gen0.write.parquet(os.path.join(p, "gen=0"))
+        gen1.write.parquet(os.path.join(p, "gen=1"))
+
+    path = artifact("formats", sf_dir, write, q="parquet_evolve")
     back = spark.read.option("mergeSchema", True).parquet(
         os.path.join(path, "gen=0"), os.path.join(path, "gen=1")
     )
@@ -507,49 +510,11 @@ def scan_python_stream_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LEDGER_SCHEMA = "row_id bigint, bucket int, payload string"
 
 
-def _ledger_workdir(kind: str) -> str:
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "ledgersink",
-        f"{kind}_r{_PYSTREAM_ROWS}_b{_PYSTREAM_BATCH}",
-    )
-
-
-def _ledger_run_complete(path: str, pattern: str) -> bool:
-    """Terminal-state check for a reusable ledger workdir (r13 ADVICE):
-    manifest EXISTENCE is not completion — a crash between epochs
-    leaves a partial ledger that an existence-only guard would serve
-    (and hash-certify wrong) forever. A run is reusable only when the
-    sum of its manifests' n_rows equals the full feed; anything else
-    is invalidated by the caller (workdir AND checkpoint together —
-    they are one unit) and rerun."""
-    import glob
-    import json
-
-    names = glob.glob(os.path.join(path, pattern))
-    if not names:
-        return False
-    total = 0
-    for name in names:
-        try:
-            with open(name) as fh:
-                total += int(json.load(fh)["n_rows"])
-        except (OSError, ValueError, KeyError, TypeError):
-            return False
-    return total == _PYSTREAM_ROWS
-
-
-def _invalidate_ledger(path: str) -> None:
-    """Drop a partial/corrupt ledger run whole: parts, manifests, the
-    stream checkpoint, and the feed's HWM file live under one workdir
-    and are deleted as one unit, so the rerun starts from a clean
-    offset-0 world instead of a mismatched half-state."""
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
+# the three ledger fixtures (sf_dir is unused — the source IS the data):
+# `run` is batch, stream or vacuum
+artifact_kind(
+    "ledgersink", key=lambda: ({"r": _PYSTREAM_ROWS, "b": _PYSTREAM_BATCH}, None)
+)
 
 
 @query("sink_python_datasource", oracle=_PYSTREAM_SQL)
@@ -574,23 +539,22 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: writes are partition-parallel and never touch the
     driver; commit is O(tasks) metadata. (sf_dir is unused — the
     source IS the data.)"""
-    import os
-
     from ..sources.pydatasource import register_synthetic_source
     from ..sources.pysink import read_ledger, register_ledger_sink
 
     register_synthetic_source(spark)
     register_ledger_sink(spark)
-    path = _ledger_workdir("batch")
-    if not _ledger_run_complete(path, "manifest.json"):
-        _invalidate_ledger(path)
+
+    def write(p: str) -> None:
         df = (
             spark.read.format("synthdocs")
             .option("rows", _PYSTREAM_ROWS)
             .option("partitions", 8)
             .load()
         )
-        df.write.format("ledgersink").option("path", path).mode("append").save()
+        df.write.format("ledgersink").option("path", p).mode("append").save()
+
+    path = artifact("ledgersink", sf_dir, write, run="batch")
     back = read_ledger(spark, path, _LEDGER_SCHEMA)
     return back.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -598,6 +562,40 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("payload").alias("min_payload"),
         F.max("payload").alias("max_payload"),
     )
+
+
+def _run_ledger_stream(spark: SparkSession, partitions: int):
+    """Build function for a streamed ledger workdir: the partition-parallel
+    synthdocsfeed reader streams into the ledgersink, one manifest per
+    epoch, with the checkpoint and the feed's HWM file inside the
+    workdir."""
+    from ..streaming import stream_state_partitions
+
+    def run(path: str) -> None:
+        os.makedirs(path)
+        stream = (
+            spark.readStream.format("synthdocsfeed")
+            .option("rows", _PYSTREAM_ROWS)
+            .option("batchrows", _PYSTREAM_BATCH)
+            .option("partitions", partitions)
+            .option("hwmpath", os.path.join(path, ".feed-hwm"))
+            .load()
+        )
+        with stream_state_partitions(spark):
+            q = (
+                stream.writeStream.format("ledgersink")
+                .option("path", path)
+                .option("checkpointLocation", os.path.join(path, ".checkpoint"))
+                .outputMode("append")
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+            q.awaitTermination()
+
+    return run
 
 
 @query("sink_python_stream", oracle=_PYSTREAM_SQL)
@@ -619,41 +617,14 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries twice all break id_checksum). Epoch-manifest count and
     replay idempotence are pinned by tests/test_formats_sink.py.
     (sf_dir is unused — the source IS the data.)"""
-    import os
-
     from ..sources.pydatasource import register_synthetic_source
     from ..sources.pysink import read_ledger, register_ledger_sink
-    from ..streaming import stream_state_partitions
 
     register_synthetic_source(spark)
     register_ledger_sink(spark)
-    path = _ledger_workdir("stream")
-    if not _ledger_run_complete(path, "manifest-*.json"):
-        _invalidate_ledger(path)
-        os.makedirs(path, exist_ok=True)
-        stream = (
-            spark.readStream.format("synthdocsfeed")
-            .option("rows", _PYSTREAM_ROWS)
-            .option("batchrows", _PYSTREAM_BATCH)
-            .option("partitions", 4)
-            .option("hwmpath", os.path.join(path, ".feed-hwm"))
-            .load()
-        )
-        with stream_state_partitions(spark):
-            q = (
-                stream.writeStream.format("ledgersink")
-                .option("path", path)
-                .option(
-                    "checkpointLocation", os.path.join(path, ".checkpoint")
-                )
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            q.awaitTermination()
+    # one staged install of the whole run (parts, manifests, checkpoint,
+    # the feed's HWM file): a crash between epochs is never visible
+    path = artifact("ledgersink", sf_dir, _run_ledger_stream(spark, 4), run="stream")
     back = read_ledger(spark, path, _LEDGER_SCHEMA)
     return back.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -725,38 +696,22 @@ def pipeline_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_ledger_sink,
         vacuum_ledger,
     )
-    from ..streaming import stream_state_partitions
+    import shutil
 
     register_synthetic_source(spark)
     register_ledger_sink(spark)
-    path = _ledger_workdir("vacuum")
+    path = artifact("ledgersink", sf_dir, run="vacuum")
     marker = os.path.join(path, "_VACUUMED.json")
+    # Unlike the other ledgers, this one is mutated after its install
+    # (epoch replay, orphan aging, the GC itself), so the install alone
+    # does not mean the fixture is finished: the stats marker, written
+    # last by os.replace, does — a ledger without it is rebuilt whole.
     if not os.path.exists(marker):
-        _invalidate_ledger(path)
-        os.makedirs(path, exist_ok=True)
-        stream = (
-            spark.readStream.format("synthdocsfeed")
-            .option("rows", _PYSTREAM_ROWS)
-            .option("batchrows", _PYSTREAM_BATCH)
-            .option("partitions", _VACUUM_FEED_PARTS)
-            .option("hwmpath", os.path.join(path, ".feed-hwm"))
-            .load()
+        shutil.rmtree(path, ignore_errors=True)
+        artifact(
+            "ledgersink", sf_dir, _run_ledger_stream(spark, _VACUUM_FEED_PARTS),
+            run="vacuum",
         )
-        with stream_state_partitions(spark):
-            q = (
-                stream.writeStream.format("ledgersink")
-                .option("path", path)
-                .option(
-                    "checkpointLocation", os.path.join(path, ".checkpoint")
-                )
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            q.awaitTermination()
 
         # replay epoch 0 at the writer level: identical content (the
         # deterministic feed), fresh part file — the original epoch-0
@@ -851,13 +806,14 @@ def scan_hive_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     20% scan before a byte is read; the explicit-schema re-read keeps
     schema authority with the engine (inference is banned,
     SURVEY.md §1.2)."""
-    ev = load_table(spark, sf_dir, "events")
-    out = _scratch_dir("hive_events", sf_dir)
-    (
-        ev.select("event_id", "ts", "user_id", "value", "props", "event_type")
-        .write.mode("overwrite")
-        .partitionBy("event_type")
-        .parquet(out)
+    out = artifact(
+        "formats",
+        sf_dir,
+        lambda p: load_table(spark, sf_dir, "events")
+        .select("event_id", "ts", "user_id", "value", "props", "event_type")
+        .write.partitionBy("event_type")
+        .parquet(p),
+        q="hive_events",
     )
     back = (
         spark.read.schema(_EVENTS_DDL)
@@ -910,20 +866,21 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown for incremental pickup (the R5 high-water-mark semantics
     applied to objects).
     """
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < _BINFILE_N_DOCS)
-        .select("doc_id", "text")
-    )
-    out = _scratch_dir("binfiles", sf_dir)
-    os.makedirs(out, exist_ok=True)
-    # overwrite-every-call (module convention): regenerated fixtures
-    # can never leave stale payloads behind
-    for f in os.listdir(out):
-        os.unlink(os.path.join(out, f))
-    for row in docs.collect():
-        with open(os.path.join(out, f"doc_{row['doc_id']}.bin"), "wb") as fh:
-            fh.write(row["text"].encode("utf-8"))
+
+    def write(p: str) -> None:
+        docs = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < _BINFILE_N_DOCS)
+            .select("doc_id", "text")
+        )
+        os.makedirs(p)
+        for row in docs.collect():
+            with open(os.path.join(p, f"doc_{row['doc_id']}.bin"), "wb") as fh:
+                fh.write(row["text"].encode("utf-8"))
+
+    # keyed on the documents fingerprint: a regenerated fixture can never
+    # leave stale payloads behind
+    out = artifact("formats", sf_dir, write, q="binfiles")
     back = spark.read.format("binaryFile").load(out)
     return back.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
@@ -978,22 +935,21 @@ def scan_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     each); a single multi-TB .gz would serialize the scan. The read
     back here consumes the multi-file layout the writer produced.
     """
-    path = _scratch_dir("gzip_lineitem", sf_dir)
-    # spread BEFORE the write: the fixture arrives as ~3 input splits,
-    # and with a non-splittable codec the written file count IS the
-    # read-back parallelism — exactly the many-medium-files mitigation
-    # the docstring prescribes (write 7.6 s → ~2 s at 32 cores)
     from ..catalog import spread_small_input
 
-    li = spread_small_input(
-        load_table(spark, sf_dir, "lineitem")
-    ).withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp_ntz"))
-    (
-        li.write.mode("overwrite")
-        .option("compression", "gzip")
-        .option("timestampNTZFormat", _TS_FMT)
-        .json(path)
-    )
+    def write(p: str) -> None:
+        # spread BEFORE the write: the fixture arrives as ~3 input splits,
+        # and with a non-splittable codec the written file count IS the
+        # read-back parallelism — exactly the many-medium-files mitigation
+        # the docstring prescribes (write 7.6 s → ~2 s at 32 cores)
+        li = spread_small_input(
+            load_table(spark, sf_dir, "lineitem")
+        ).withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp_ntz"))
+        li.write.option("compression", "gzip").option(
+            "timestampNTZFormat", _TS_FMT
+        ).json(p)
+
+    path = artifact("formats", sf_dir, write, q="gzip_lineitem")
     back = (
         spark.read.schema(_LINEITEM_DDL)
         .option("timestampNTZFormat", _TS_FMT)

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import artifact, artifact_kind, load_table
 from ..functions import revenue_expr
 from ..operators.asof import asof_join
 from ..operators.skew import salted_join
@@ -487,6 +487,10 @@ def join_fuzzy_jaro(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_BUCKETS = 8
+artifact_kind("bucketed", "orders", "customer", key=lambda: ({"n": _BUCKETS}, None))
+
+
 @query(
     "join_bucketed_colocated",
     oracle="""
@@ -516,38 +520,23 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side. Bucket count scales with cluster width (8 here only to
     match fixture size; production = O(cores), stable across reruns
     so old and new files stay co-bucketed)."""
-    import os as _os
+    import os
 
-    from ..sources import ensure_bucketed, source_fingerprint
+    from ..sources import ensure_bucketed
 
-    # Cache tag = fixture basename + CONTENT fingerprint of the source
-    # parquets: regenerated fixtures at the same path get a fresh tag
-    # (never stale reuse), and ensure_bucketed makes the write-once
-    # cache atomic + cross-session-safe (round-8 ADVICE).
-    fp = source_fingerprint(
-        _os.path.join(sf_dir, "orders.parquet"),
-        _os.path.join(sf_dir, "customer.parquet"),
-    )
-    tag = f"{_os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{fp}"
-    scratch = _os.path.join(
-        _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))),
-        ".scratch",
-        "bucketed",
-        tag,
-    )
+    # each bucketed copy is keyed on the CONTENT fingerprint of the two
+    # source parquets (regenerated fixtures at the same path get a fresh
+    # key — never stale reuse), and ensure_bucketed makes the write-once
+    # cache atomic + cross-session-safe (round-8 ADVICE)
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-
-    ensure_bucketed(
-        spark, o, f"orders_bq_{tag}", _os.path.join(scratch, "orders"),
-        ("o_custkey",), 8,
-    )
-    ensure_bucketed(
-        spark, c, f"customer_bq_{tag}", _os.path.join(scratch, "customer"),
-        ("c_custkey",), 8,
-    )
-    ob = spark.table(f"orders_bq_{tag}")
-    cb = spark.table(f"customer_bq_{tag}")
+    names = {}
+    for table, df, col in (("orders", o, "o_custkey"), ("customer", c, "c_custkey")):
+        path = artifact("bucketed", sf_dir, t=table)
+        names[table] = f"{table}_bq_{os.path.basename(path)}"
+        ensure_bucketed(spark, df, names[table], path, (col,), _BUCKETS)
+    ob = spark.table(names["orders"])
+    cb = spark.table(names["customer"])
     return (
         ob.join(cb, ob.o_custkey == cb.c_custkey)
         .groupBy("o_custkey", "c_mktsegment")

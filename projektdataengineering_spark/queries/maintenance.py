@@ -7,13 +7,14 @@ close snapshot retention for the merge table and the streaming ledger;
 this module applies the same discipline to the third persisted-state
 family: the ANN/signature indexes that the `*_index_append` queries
 version. Without it, every superseded generation — a stale v2 left by
-a retuned arrival-batch geometry (see similarity._append_v2_path), or
-a crashed staged write's `.tmp` directory — lives on disk forever; at
+a retuned arrival-batch geometry (the generation suffix of
+catalog.persisted), or a crashed staged write's `.tmp` directory —
+lives on disk forever; at
 10^10 vectors an orphaned code-table generation is the ~100 GB
 artifact the vacuum verb exists for (round-15 verdict, "What's
 missing" #2).
 
-Scope: ONE index line at a time — the generations sharing a v1 tag
+Scope: ONE index line at a time — the generations sharing a v1 key
 (corpus fingerprint + hyperparameters). Sibling lines under the same
 scratch family (a different fingerprint after a fixture regeneration,
 the √N-regime probe's k=⌈√N⌉ index) are other LIVE configurations and
@@ -36,18 +37,24 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import artifact, staging_path
 from . import query
 from .pipeline_ops import _INCR_APPEND_SQL
 from .similarity import _einc_append_oracle, _ivfpq_append_oracle
 
-# Fake pid for the planted crashed-stage directory — a value a real
-# staged write can never race with (pids are recycled, but the plant
-# is created and removed within one invocation). The plant reproduces
-# _atomic_dir_write's ACTUAL crash shape, `{path}.tmp.<pid>.<hex8>`
-# (layout.py:335), so the certified GC row exercises the artifact
+# The planted crashed-stage directory: the seam's own staging name
+# (catalog.staging_path) with a fake pid a real staged write can never
+# race with (pids are recycled, but the plant is created and removed
+# within one invocation), so the certified GC row exercises the artifact
 # production really leaves behind.
-_PLANT_PID = 4242
-_PLANT_SUFFIX = f".tmp.{_PLANT_PID}.cafef00d"
+_PLANT_SUFFIX = staging_path("", 4242, "cafef00d")
+
+# family → (artifact kind of its index line, id column)
+_INDEX_LINES = {
+    "neardup": ("neardup_index", "doc_id"),
+    "embedding": ("embed_ivf_index", "vec_id"),
+    "ivfpq": ("ivfpq_codes", "vec_id"),
+}
 
 
 def _line_members(v1_path: str) -> list[str]:
@@ -55,7 +62,7 @@ def _line_members(v1_path: str) -> list[str]:
     line: v1 itself, every v2 generation (`{v1}_v2*` — geometry-tagged
     or legacy), every RETRAIN generation (`{v1}_g*` — the
     skew-cutover lines), and every staged-write temp of any of them
-    (`.tmp.` infix, the _atomic_dir_write crash shape). A sibling
+    (`.tmp.` infix, the catalog.staging_path crash shape). A sibling
     line whose tag merely shares a prefix (e.g. `_b4` vs `_b42`) is
     excluded by requiring the separator."""
     parent, base = os.path.split(v1_path)
@@ -152,18 +159,11 @@ def commit_generation_cutover(sf_dir: str, live_gen: int) -> int:
     live-generation pointer and unlinking the superseded snapshots."""
     import re
 
-    from .similarity import (
-        _embed_index_path,
-        _ivf_index_path,
-        _ivfpq_code_index_path,
-        _member_gen_path,
-    )
-
+    # the two consumer lines of the shared quantizer, and its centroids
+    kinds = {"code": "ivfpq_codes", "member": "embed_ivf_index", "centroids": "ivf"}
     if live_gen >= 1:
         live_lines = {
-            "code": _ivfpq_code_index_path(sf_dir, gen=live_gen),
-            "member": _member_gen_path(sf_dir, live_gen),
-            "centroids": _ivf_index_path(sf_dir, gen=live_gen)[1],
+            name: artifact(kind, sf_dir, gen=live_gen) for name, kind in kinds.items()
         }
         missing = {
             name: p
@@ -178,14 +178,7 @@ def commit_generation_cutover(sf_dir: str, live_gen: int) -> int:
                 "actually serve"
             )
 
-    _, cents0 = _ivf_index_path(sf_dir)
-    lines = [
-        os.path.split(_ivfpq_code_index_path(sf_dir)),
-        os.path.split(_embed_index_path(sf_dir)),
-        # the gen-keyed centroid .npy: the gen tag is inserted before
-        # the extension (centroids_{tag}_g{n}-{geom}.npy)
-        (os.path.dirname(cents0), os.path.basename(cents0)[: -len(".npy")]),
-    ]
+    lines = [os.path.split(artifact(kind, sf_dir)) for kind in kinds.values()]
     expired = 0
     for parent, base in lines:
         if not os.path.isdir(parent):
@@ -246,7 +239,7 @@ def pipeline_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     is swept by a PRE-PASS of the same idempotent vacuum — pre-clean +
     vacuum ≡ vacuum — and then exactly ONE orphan is planted per
     family in the crashed-staged-write shape (`{v2}.tmp.<pid>.<hex>`,
-    _atomic_dir_write's actual crash artifact), so expired_generations
+    catalog.install's actual crash artifact), so expired_generations
     is 1 by construction, independent of history. Exactly-the-orphans
     deletion, retained-generation byte-identity, decoy-line safety and
     re-vacuum idempotence are pinned by
@@ -257,19 +250,8 @@ def pipeline_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated parquet scans per family. At 100 TB generations
     live in a catalog manifest and the sweep is a metadata transaction,
     the pipeline_merge_vacuum posture."""
-    from .pipeline_ops import (
-        _neardup_index_path,
-        _neardup_v2_path,
-        dedup_neardup_index_append,
-    )
-    from .similarity import (
-        _embed_index_path,
-        _embed_index_v2_path,
-        _ivfpq_code_index_path,
-        _ivfpq_code_v2_path,
-        dedup_embedding_index_append,
-        sim_ivfpq_index_append,
-    )
+    from .pipeline_ops import dedup_neardup_index_append
+    from .similarity import dedup_embedding_index_append, sim_ivfpq_index_append
 
     # materialize both retained generations per family (idempotent
     # read-or-build inside each appender; the audit frames they return
@@ -278,17 +260,12 @@ def pipeline_index_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_embedding_index_append(spark, sf_dir)
     sim_ivfpq_index_append(spark, sf_dir)
 
-    # every retained path comes from the appender module's own helper
-    # (r16 verdict task): the vacuum can never disagree with a
-    # producer about which generation is current
-    families = (
-        ("neardup", _neardup_index_path(sf_dir), _neardup_v2_path(sf_dir), "doc_id"),
-        ("embedding", _embed_index_path(sf_dir), _embed_index_v2_path(sf_dir), "vec_id"),
-        ("ivfpq", _ivfpq_code_index_path(sf_dir), _ivfpq_code_v2_path(sf_dir), "vec_id"),
-    )
-
+    # every retained path comes from the seam, keyed exactly as the
+    # appenders key it (r16 verdict task): the vacuum can never disagree
+    # with a producer about which generation is current
     out: DataFrame | None = None
-    for fam, v1, v2, idcol in families:
+    for fam, (kind, idcol) in _INDEX_LINES.items():
+        v1, v2 = artifact(kind, sf_dir), artifact(kind, sf_dir, gen="v2")
         _vacuum_index_line(v1, v2)  # pre-clean accumulated history
         plant = f"{v2}{_PLANT_SUFFIX}"
         shutil.copytree(v1, plant)

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import artifact, artifact_kind, load_table
 from . import query
 
 # First byte of md5(doc_id) partitions [0x00, 0xff] into 80/10/10:
@@ -651,28 +651,19 @@ _QCLS_BUCKETS = 256
 _QCLS_NUM = 8  # keep ⇔ _QCLS_NUM * logit_sum + n_feats > 0 (tau = -1/8)
 _QCLS_MODEL_VERSION = 1  # bump when the (synthetic) training recipe changes
 
-_QCLS_MODEL_BUILDS = 0  # tests assert a second scoring call skips the build
-
-
-def _qcls_model_path() -> str:
-    """Persisted model-artifact location for the quality classifier's
-    weight table — the index read-or-build keying discipline
-    (similarity._embed_index_path): every constant that shapes the
-    parameters (model version, bucket count, threshold numerator) is
-    folded into the key, so retuning the model geometry lands a NEW
-    artifact instead of silently reusing a stale one. No source
-    fingerprint: the model is trained OFFLINE (here: derived
-    deterministically), so the artifact is corpus-independent — it
-    ships once per model version, the production posture where the
-    fastText .bin is a release artifact, not a per-dataset build."""
-    import os
-
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "qcls_model",
-        f"weights_v{_QCLS_MODEL_VERSION}_b{_QCLS_BUCKETS}_n{_QCLS_NUM}",
-    )
+# The classifier's weight table: every constant that shapes the parameters
+# (model version, bucket count, threshold numerator) is folded into the key,
+# so retuning the model geometry lands a NEW artifact instead of silently
+# reusing a stale one. No source: the model is trained OFFLINE (here:
+# derived deterministically), so the artifact is corpus-independent — it
+# ships once per model version, the production posture where the fastText
+# .bin is a release artifact, not a per-dataset build.
+artifact_kind(
+    "qcls_model",
+    key=lambda: (
+        {"v": _QCLS_MODEL_VERSION, "b": _QCLS_BUCKETS, "n": _QCLS_NUM}, None
+    ),
+)
 
 
 def _qcls_weights(spark: SparkSession) -> DataFrame:
@@ -684,13 +675,8 @@ def _qcls_weights(spark: SparkSession) -> DataFrame:
     builds-counter test (a second scoring call must not re-derive).
     Swapping in genuinely trained weights = writing a new artifact at
     a bumped _QCLS_MODEL_VERSION; the scoring plan never changes."""
-    global _QCLS_MODEL_BUILDS
-    import os
 
-    from .layout import _atomic_dir_write
-
-    path = _qcls_model_path()
-    if not os.path.isdir(path):
+    def write(p: str) -> None:
         pos = lambda h, i: F.expr(
             f"locate(substr({h}, {i}, 1), '0123456789abcdef') - 1"
         )
@@ -702,9 +688,10 @@ def _qcls_weights(spark: SparkSession) -> DataFrame:
                 - 128
             ).cast("long").alias("w"),
         )
-        _atomic_dir_write(lambda p: weights.coalesce(1).write.parquet(p), path)
-        _QCLS_MODEL_BUILDS += 1
-    return spark.read.parquet(path)
+        weights.coalesce(1).write.parquet(p)
+
+    # sf_dir is unused: the kind declares no source tables
+    return spark.read.parquet(artifact("qcls_model", "", write))
 
 _QCLS_SQL = f"""
     WITH toks AS (

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import artifact, artifact_kind, load_table
 from ..functions import SQL_REVENUE, revenue_expr, token_ngrams
 from . import query
 
@@ -2016,21 +2016,10 @@ _KANON_APPLY_SQL = f"""
 """
 
 
-def _kanon_workdir(sf_dir: str) -> str:
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "kanon",
-        # _rs = residual-suppression release layout: the tag carries
-        # every semantics knob that shapes the released bytes, so a
-        # layout change can never silently reuse a stale release
-        f"{fp}_k{_KANON_K}_rs",
-    )
+# rs = residual-suppression release layout: the key carries every
+# semantics knob that shapes the released bytes, so a layout change can
+# never silently reuse a stale release
+artifact_kind("kanon", "documents", key=lambda: ({"k": _KANON_K, "rs": ""}, None))
 
 
 @query("pipeline_kanon_apply", oracle=_KANON_APPLY_SQL)
@@ -2074,78 +2063,70 @@ def pipeline_kanon_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     write; the audit is two partial-aggregated scans (disk + source).
     At 100 TB the release table partitions by (lang, source) so a
     class audit prunes to its own cell."""
-    import os
-
-    from .layout import _atomic_dir_write
-
-    base = _kanon_workdir(sf_dir)
-    released_path = os.path.join(base, "released")
-    manifest_path = os.path.join(base, "manifest")
     cols = [
         "lang", "source", "n_released", "n_suppressed", "n_classes",
         "min_class_size", "k_ok",
     ]
-    if os.path.isdir(manifest_path):
-        return spark.read.parquet(manifest_path).select(*cols)
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", "n_chars"
-    )
-    k = _KANON_K
-    pub_c = F.count(F.lit(1)).over(
-        Window.partitionBy("lang", "source", "level", "band_label")
-    )
-    final = (
-        _kanon_assigned(docs)
-        .withColumn("pub_c", pub_c)
-        .withColumn(
-            "level",
-            F.when(
-                (F.col("level") < 3) & (F.col("pub_c") >= k), F.col("level")
-            ).otherwise(F.lit(3).cast("bigint")),
+    def write_manifest(out: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "lang", "source", "n_chars"
         )
-        .withColumn(
-            "band_label",
-            F.when(F.col("level") < 3, F.col("band_label")).otherwise(
-                F.lit("suppressed")
-            ),
+        k = _KANON_K
+        pub_c = F.count(F.lit(1)).over(
+            Window.partitionBy("lang", "source", "level", "band_label")
         )
-        .drop("pub_c")
-    )
-    if not os.path.isdir(released_path):
-        rel = final.filter(F.col("level") < 3)
-        _atomic_dir_write(lambda p: rel.write.parquet(p), released_path)
+        final = (
+            _kanon_assigned(docs)
+            .withColumn("pub_c", pub_c)
+            .withColumn(
+                "level",
+                F.when(
+                    (F.col("level") < 3) & (F.col("pub_c") >= k), F.col("level")
+                ).otherwise(F.lit(3).cast("bigint")),
+            )
+            .withColumn(
+                "band_label",
+                F.when(F.col("level") < 3, F.col("band_label")).otherwise(
+                    F.lit("suppressed")
+                ),
+            )
+            .drop("pub_c")
+        )
+        released_path = artifact(
+            "kanon", sf_dir, lambda p: final.filter(F.col("level") < 3).write.parquet(p),
+            part="released",
+        )
 
-    per_class = (
-        spark.read.parquet(released_path)
-        .groupBy("lang", "source", "level", "band_label")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    pc = per_class.groupBy("lang", "source").agg(
-        F.sum("c").cast("long").alias("n_released"),
-        F.count(F.lit(1)).cast("long").alias("n_classes"),
-        F.min("c").cast("long").alias("min_class_size"),
-    )
-    src = final.groupBy("lang", "source").agg(
-        F.sum(F.when(F.col("level") == 3, 1).otherwise(0))
-        .cast("long")
-        .alias("n_suppressed")
-    )
-    result = src.join(pc, ["lang", "source"], "left").select(
-        "lang",
-        "source",
-        F.coalesce("n_released", F.lit(0)).cast("long").alias("n_released"),
-        "n_suppressed",
-        F.coalesce("n_classes", F.lit(0)).cast("long").alias("n_classes"),
-        "min_class_size",
-        (
-            F.col("min_class_size").isNull()
-            | (F.col("min_class_size") >= _KANON_K)
-        ).alias("k_ok"),
-    )
-    _atomic_dir_write(
-        lambda p: result.coalesce(1).write.parquet(p), manifest_path
-    )
+        per_class = (
+            spark.read.parquet(released_path)
+            .groupBy("lang", "source", "level", "band_label")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        pc = per_class.groupBy("lang", "source").agg(
+            F.sum("c").cast("long").alias("n_released"),
+            F.count(F.lit(1)).cast("long").alias("n_classes"),
+            F.min("c").cast("long").alias("min_class_size"),
+        )
+        src = final.groupBy("lang", "source").agg(
+            F.sum(F.when(F.col("level") == 3, 1).otherwise(0))
+            .cast("long")
+            .alias("n_suppressed")
+        )
+        src.join(pc, ["lang", "source"], "left").select(
+            "lang",
+            "source",
+            F.coalesce("n_released", F.lit(0)).cast("long").alias("n_released"),
+            "n_suppressed",
+            F.coalesce("n_classes", F.lit(0)).cast("long").alias("n_classes"),
+            "min_class_size",
+            (
+                F.col("min_class_size").isNull()
+                | (F.col("min_class_size") >= _KANON_K)
+            ).alias("k_ok"),
+        ).coalesce(1).write.parquet(out)
+
+    manifest_path = artifact("kanon", sf_dir, write_manifest, part="manifest")
     return spark.read.parquet(manifest_path).select(*cols)
 
 
@@ -2240,18 +2221,7 @@ def pipeline_dataset_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _neardup_apply_workdir(sf_dir: str) -> str:
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "neardup_apply",
-        fp,
-    )
+artifact_kind("neardup_apply", "documents")
 
 
 @query(
@@ -2300,65 +2270,58 @@ def pipeline_neardup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated scans. At 100 TB this is the dedup sweep's commit step
     — the same shape, with the cluster table persisted and the write
     partitioned by (lang, source)."""
-    import os
-
     from ..operators.graph import connected_components
-    from .layout import _atomic_dir_write
 
-    base = _neardup_apply_workdir(sf_dir)
-    kept_path = os.path.join(base, "kept")
-    manifest_path = os.path.join(base, "manifest")
     cols = [
         "lang", "source", "docs_before", "docs_after", "docs_removed",
         "kept_id_sum", "kept_token_sum",
     ]
-    if os.path.isdir(manifest_path):
-        return spark.read.parquet(manifest_path).select(*cols)
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", "source"
-    )
-    cc = connected_components(_portable_pairs(spark, sf_dir), "doc_a", "doc_b")
-    if not os.path.isdir(kept_path):
-        # no forced broadcast: cluster mass is data-dependent (the
-        # near-dup fraction of the corpus), so the id-only cluster
-        # table is left to AQE — tiny here, persisted + shuffle-joined
-        # at 100 TB — rather than pinned to driver/executor memory
-        keep = (
+    def write_manifest(out: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "text", "lang", "source"
+        )
+
+        def write_kept(p: str) -> None:
+            cc = connected_components(_portable_pairs(spark, sf_dir), "doc_a", "doc_b")
+            # no forced broadcast: cluster mass is data-dependent (the
+            # near-dup fraction of the corpus), so the id-only cluster
+            # table is left to AQE — tiny here, persisted + shuffle-joined
+            # at 100 TB — rather than pinned to driver/executor memory
             docs.join(
                 cc.select(F.col("node").alias("doc_id"), F.col("comp").alias("cid")),
                 "doc_id",
                 "left",
-            )
-            .filter(F.coalesce(F.col("cid"), F.col("doc_id")) == F.col("doc_id"))
-            .select("doc_id", "text", "lang", "source")
-        )
-        _atomic_dir_write(lambda p: keep.write.parquet(p), kept_path)
+            ).filter(
+                F.coalesce(F.col("cid"), F.col("doc_id")) == F.col("doc_id")
+            ).select("doc_id", "text", "lang", "source").write.parquet(p)
 
-    before = docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("docs_before")
-    )
-    after = (
-        spark.read.parquet(kept_path)
-        .groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("docs_after"),
-            F.sum("doc_id").cast("long").alias("kept_id_sum"),
-            F.sum(F.size(F.split("text", " "))).cast("long").alias("kept_token_sum"),
+        kept_path = artifact("neardup_apply", sf_dir, write_kept, part="kept")
+        before = docs.groupBy("lang", "source").agg(
+            F.count(F.lit(1)).cast("long").alias("docs_before")
         )
-    )
-    result = before.join(after, ["lang", "source"], "left").select(
-        "lang",
-        "source",
-        "docs_before",
-        F.coalesce("docs_after", F.lit(0)).cast("long").alias("docs_after"),
-        (F.col("docs_before") - F.coalesce("docs_after", F.lit(0)))
-        .cast("long")
-        .alias("docs_removed"),
-        F.coalesce("kept_id_sum", F.lit(0)).cast("long").alias("kept_id_sum"),
-        F.coalesce("kept_token_sum", F.lit(0)).cast("long").alias("kept_token_sum"),
-    )
-    _atomic_dir_write(lambda p: result.coalesce(1).write.parquet(p), manifest_path)
+        after = (
+            spark.read.parquet(kept_path)
+            .groupBy("lang", "source")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("docs_after"),
+                F.sum("doc_id").cast("long").alias("kept_id_sum"),
+                F.sum(F.size(F.split("text", " "))).cast("long").alias("kept_token_sum"),
+            )
+        )
+        before.join(after, ["lang", "source"], "left").select(
+            "lang",
+            "source",
+            "docs_before",
+            F.coalesce("docs_after", F.lit(0)).cast("long").alias("docs_after"),
+            (F.col("docs_before") - F.coalesce("docs_after", F.lit(0)))
+            .cast("long")
+            .alias("docs_removed"),
+            F.coalesce("kept_id_sum", F.lit(0)).cast("long").alias("kept_id_sum"),
+            F.coalesce("kept_token_sum", F.lit(0)).cast("long").alias("kept_token_sum"),
+        ).coalesce(1).write.parquet(out)
+
+    manifest_path = artifact("neardup_apply", sf_dir, write_manifest, part="manifest")
     return spark.read.parquet(manifest_path).select(*cols)
 
 
@@ -2480,41 +2443,21 @@ _INCR_SPLIT_DUCK = (
     f" <= {_INCR_BATCH_POS}"
 )
 
-_NEARDUP_INDEX_BUILDS = 0  # tests assert index reuse skips the build
-
-
-def _neardup_index_path(sf_dir: str) -> str:
-    """Persisted corpus-signature index location, keyed by the
-    documents source fingerprint + every parameter that shapes the
-    signatures (the _ivf_centroids keying discipline: a regenerated
-    fixture or retuned sketch can never silently reuse a stale
-    index)."""
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "neardup_index",
-        f"sig_{fp}_l{_PORTABLE_LANES}_b{_INCR_BATCH_POS}",
-    )
-
-
-def _neardup_v2_path(sf_dir: str) -> str:
-    """Canonical v2 path of the near-dup signature line, keyed by the
-    family's arrival-batch definition (the md5 split position) on top
-    of the v1 key — the similarity._append_v2_path discipline (r16
-    verdict task): retuning _INCR_BATCH_POS must REBUILD v2 under a
-    new key, never reuse one built for a different batch, and every
-    consumer (the appender, pipeline_index_vacuum, tests) derives the
-    path from THIS helper so the line's addressing can never fork.
-    The v1 tag also folds the split (it shapes the corpus side too);
-    v2's key re-states it because a v2's batch definition must be
-    self-sufficient, not an accident of what the corpus key happens
-    to carry."""
-    return f"{_neardup_index_path(sf_dir)}_v2-p{_INCR_BATCH_POS}"
+# The corpus-signature index line: keyed by the documents fingerprint +
+# every parameter that shapes the signatures, so a regenerated fixture or
+# retuned sketch can never silently reuse a stale index. Its v2 append
+# re-states the arrival-batch definition (the md5 split position) in the
+# generation suffix: a v2's batch definition must be self-sufficient, not
+# an accident of what the corpus key happens to carry. "pub2" is the
+# published-delta append of the live loop (dedup_stream_index_append).
+artifact_kind(
+    "neardup_index",
+    "documents",
+    key=lambda: (
+        {"l": _PORTABLE_LANES, "b": _INCR_BATCH_POS},
+        {"v2": {"p": _INCR_BATCH_POS}, "pub2": {}},
+    ),
+)
 
 
 def _corpus_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2524,23 +2467,17 @@ def _corpus_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet — the corpus text is never re-tokenized, re-hashed or
     even re-scanned. At 100 TB this is the difference between an
     O(batch) nightly dedup and an O(corpus) one."""
-    global _NEARDUP_INDEX_BUILDS
-    import os
 
-    from .layout import _atomic_dir_write
-
-    path = _neardup_index_path(sf_dir)
-    if not os.path.isdir(path):
+    def write(p: str) -> None:
         corpus = (
             load_table(spark, sf_dir, "documents")
             .select("doc_id", "text")
             .filter(~F.expr(_INCR_SPLIT_SPARK))
             .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         )
-        sig = _signature_of(corpus)
-        _atomic_dir_write(lambda p: sig.write.parquet(p), path)
-        _NEARDUP_INDEX_BUILDS += 1
-    return spark.read.parquet(path)
+        _signature_of(corpus).write.parquet(p)
+
+    return spark.read.parquet(artifact("neardup_index", sf_dir, write))
 
 
 # The shared index-build/probe CTE chain (sig → split → bsig/csig →
@@ -2635,7 +2572,7 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index build and the probe from the raw documents table, so the
     hash certifies the persisted index bit-for-bit against
     recomputation; tests/test_operators.py proves the reuse (second
-    call builds nothing) via the _NEARDUP_INDEX_BUILDS counter.
+    call builds nothing) via catalog.BUILDS["neardup_index"].
 
     Scale shape: index probe is an equijoin on 4×32-hex keys — ids
     and signatures shuffle, never text; batch-side signing is the
@@ -2721,17 +2658,12 @@ def dedup_neardup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit is two partial-aggregated index scans. At 100 TB versions
     live in a catalog manifest and the append is a metadata commit of
     batch-sized files — same bound."""
-    import os
-
-    from .layout import _atomic_dir_write
-
-    v1_path = _neardup_index_path(sf_dir)
-    v2_path = _neardup_v2_path(sf_dir)
     # read-or-build v1 UNCONDITIONALLY (no-op read when present): a
     # partially cleaned scratch dir (v1 gone, v2 surviving) must
     # self-heal instead of failing the audit's v1 scan
     v1 = _corpus_signature_index(spark, sf_dir)
-    if not os.path.isdir(v2_path):
+
+    def write_v2(p: str) -> None:
         _, bsig, cm, bm, lanes = _incr_probe_frames(spark, sf_dir)
         keepers = (
             bsig.join(cm, "doc_id", "left")
@@ -2742,8 +2674,10 @@ def dedup_neardup_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("doc_id", *lanes)
         )
-        v2 = v1.select("doc_id", *lanes).unionByName(keepers)
-        _atomic_dir_write(lambda p: v2.write.parquet(p), v2_path)
+        v1.select("doc_id", *lanes).unionByName(keepers).write.parquet(p)
+
+    v1_path = artifact("neardup_index", sf_dir)
+    v2_path = artifact("neardup_index", sf_dir, write_v2, gen="v2")
 
     def audit(version: int, path: str) -> DataFrame:
         idx = spark.read.parquet(path)
@@ -2802,18 +2736,7 @@ _DELTA_SQL = f"""
 """
 
 
-def _corpus_delta_workdir(sf_dir: str) -> str:
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "corpus_delta",
-        fp,
-    )
+artifact_kind("corpus_delta", "documents")
 
 
 @query("pipeline_corpus_delta", oracle=_DELTA_SQL)
@@ -2847,87 +2770,81 @@ def pipeline_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     the audit is two partial-aggregated scans. At 100 TB the delta is
     the unit of catalog commit — exactly the reference's weekly
     increment, now safe to replay."""
-    import os
-
-    from .layout import _atomic_dir_write
-
-    base = _corpus_delta_workdir(sf_dir)
-    delta_path = os.path.join(base, "delta")
-    manifest_path = os.path.join(base, "manifest")
     cols = [
         "lang", "source", "n_batch", "n_dup_corpus", "n_dup_batch",
         "n_quality_fail", "n_admitted", "tok_sum",
     ]
-    if os.path.isdir(manifest_path):
-        return spark.read.parquet(manifest_path).select(*cols)
 
-    batch_docs, bsig, cm, bm, lanes = _incr_probe_frames(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "source", "text"
-    )
-    verdict = (
-        batch_docs.select("doc_id")
-        .join(bsig, "doc_id", "left")
-        .join(cm, "doc_id", "left")
-        .join(bm, lanes, "left")
-        .select(
-            "doc_id",
-            F.col("dup_of_corpus").isNotNull().alias("dup_c"),
-            (
-                F.col("dup_of_corpus").isNull()
-                & F.col("first_in_batch").isNotNull()
-                & (F.col("first_in_batch") < F.col("doc_id"))
-            ).alias("dup_b"),
-            (
-                F.col("dup_of_corpus").isNull()
-                & (
-                    F.col("first_in_batch").isNull()
-                    | (F.col("first_in_batch") == F.col("doc_id"))
-                )
-            ).alias("keep"),
+    def write_manifest(out: str) -> None:
+        batch_docs, bsig, cm, bm, lanes = _incr_probe_frames(spark, sf_dir)
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "lang", "source", "text"
         )
-    )
-    quality = F.length("text").between(150, 500)
-    full = verdict.join(docs, "doc_id").select(
-        "doc_id", "lang", "source", "dup_c", "dup_b", "keep",
-        quality.alias("quality"),
-        F.size(F.split("text", " ")).cast("long").alias("n_toks"),
-    )
-    if not os.path.isdir(delta_path):
-        admitted = full.filter(F.col("keep") & F.col("quality")).select(
-            "doc_id", "lang", "source", "n_toks"
+        verdict = (
+            batch_docs.select("doc_id")
+            .join(bsig, "doc_id", "left")
+            .join(cm, "doc_id", "left")
+            .join(bm, lanes, "left")
+            .select(
+                "doc_id",
+                F.col("dup_of_corpus").isNotNull().alias("dup_c"),
+                (
+                    F.col("dup_of_corpus").isNull()
+                    & F.col("first_in_batch").isNotNull()
+                    & (F.col("first_in_batch") < F.col("doc_id"))
+                ).alias("dup_b"),
+                (
+                    F.col("dup_of_corpus").isNull()
+                    & (
+                        F.col("first_in_batch").isNull()
+                        | (F.col("first_in_batch") == F.col("doc_id"))
+                    )
+                ).alias("keep"),
+            )
         )
-        _atomic_dir_write(lambda p: admitted.write.parquet(p), delta_path)
+        quality = F.length("text").between(150, 500)
+        full = verdict.join(docs, "doc_id").select(
+            "doc_id", "lang", "source", "dup_c", "dup_b", "keep",
+            quality.alias("quality"),
+            F.size(F.split("text", " ")).cast("long").alias("n_toks"),
+        )
+        delta_path = artifact(
+            "corpus_delta",
+            sf_dir,
+            lambda p: full.filter(F.col("keep") & F.col("quality"))
+            .select("doc_id", "lang", "source", "n_toks")
+            .write.parquet(p),
+            part="delta",
+        )
 
-    live = full.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_batch"),
-        F.sum(F.when(F.col("dup_c"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_dup_corpus"),
-        F.sum(F.when(F.col("dup_b"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_dup_batch"),
-        F.sum(F.when(F.col("keep") & ~F.col("quality"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_quality_fail"),
-    )
-    disk = (
-        spark.read.parquet(delta_path)
-        .groupBy("lang", "source")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_admitted"),
-            F.sum("n_toks").cast("long").alias("tok_sum"),
+        live = full.groupBy("lang", "source").agg(
+            F.count(F.lit(1)).cast("long").alias("n_batch"),
+            F.sum(F.when(F.col("dup_c"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_dup_corpus"),
+            F.sum(F.when(F.col("dup_b"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_dup_batch"),
+            F.sum(F.when(F.col("keep") & ~F.col("quality"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_quality_fail"),
         )
-    )
-    result = live.join(disk, ["lang", "source"], "left").select(
-        "lang", "source", "n_batch", "n_dup_corpus", "n_dup_batch",
-        "n_quality_fail",
-        F.coalesce("n_admitted", F.lit(0)).cast("long").alias("n_admitted"),
-        F.coalesce("tok_sum", F.lit(0)).cast("long").alias("tok_sum"),
-    )
-    _atomic_dir_write(
-        lambda p: result.coalesce(1).write.parquet(p), manifest_path
-    )
+        disk = (
+            spark.read.parquet(delta_path)
+            .groupBy("lang", "source")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_admitted"),
+                F.sum("n_toks").cast("long").alias("tok_sum"),
+            )
+        )
+        live.join(disk, ["lang", "source"], "left").select(
+            "lang", "source", "n_batch", "n_dup_corpus", "n_dup_batch",
+            "n_quality_fail",
+            F.coalesce("n_admitted", F.lit(0)).cast("long").alias("n_admitted"),
+            F.coalesce("tok_sum", F.lit(0)).cast("long").alias("tok_sum"),
+        ).coalesce(1).write.parquet(out)
+
+    manifest_path = artifact("corpus_delta", sf_dir, write_manifest, part="manifest")
     return spark.read.parquet(manifest_path).select(*cols)
 
 
@@ -2964,18 +2881,9 @@ _STREAM_DELTA_LEDGER_SCHEMA = (
 )
 
 
-def _stream_delta_workdir(sf_dir: str) -> str:
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "documents.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_corpus_delta",
-        f"{fp}_e{_STREAM_DELTA_EPOCHS}",
-    )
+artifact_kind(
+    "stream_corpus_delta", "documents", key=lambda: ({"e": _STREAM_DELTA_EPOCHS}, None)
+)
 
 
 @query("stream_corpus_delta", oracle=_STREAM_DELTA_SQL)
@@ -3007,10 +2915,10 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted doc published exactly once across epochs, no dup
     (corpus or cross-epoch) published, no quality-fail leaked.
     Epoch-replay idempotence on this ledger is pinned by
-    tests/test_formats_sink.py; the completion guard is terminal-state
-    (marker written only after processAllAvailable returns — a crashed
-    partial run is invalidated WITH its checkpoint as one unit and
-    rerun, the r13-ADVICE discipline).
+    tests/test_formats_sink.py; completion is terminal-state (the
+    workdir, checkpoint included, installs as one unit only after
+    processAllAvailable returns — a crashed partial run is never
+    visible, the r13-ADVICE discipline).
 
     Scale shape: the corpus side is a parquet index scan (built once
     per corpus version); per epoch, signing is map-side over the
@@ -3022,7 +2930,6 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference R8/O4 weekly append (weather_task.py:99-104) as a
     continuous, replay-safe stream."""
     import os
-    import shutil
 
     import pandas as pd
 
@@ -3031,12 +2938,12 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import stream_state_partitions
     from ..streaming.stateful import STATE_BUCKETS, bucketed_state
 
-    base = _stream_delta_workdir(sf_dir)
-    ledger = os.path.join(base, "ledger")
-    marker = os.path.join(base, "_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(ledger, exist_ok=True)
+    # the whole workdir (ledger, manifests, checkpoint) is one staged
+    # install: a run that dies mid-stream never becomes visible, so a
+    # visible ledger is a complete one
+    def run_stream(base: str) -> None:
+        ledger = os.path.join(base, "ledger")
+        os.makedirs(ledger)
         register_synthetic_source(spark)
         register_ledger_sink(spark)
 
@@ -3144,10 +3051,11 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 q.stop()
             q.awaitTermination()
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
 
-    back = read_ledger(spark, ledger, _STREAM_DELTA_LEDGER_SCHEMA)
+    base = artifact("stream_corpus_delta", sf_dir, run_stream)
+    back = read_ledger(
+        spark, os.path.join(base, "ledger"), _STREAM_DELTA_LEDGER_SCHEMA
+    )
     return back.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n_admitted"),
         F.sum("n_toks").cast("long").alias("tok_sum"),
@@ -3234,15 +3142,13 @@ def dedup_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from ..sources.pysink import read_ledger
-    from .layout import _atomic_dir_write
 
-    v1_path = _neardup_index_path(sf_dir)
-    v2_path = f"{v1_path}_pub2"
     v1 = _corpus_signature_index(spark, sf_dir)
     lanes = [f"m{i}" for i in range(_PORTABLE_LANES)]
-    if not os.path.isdir(v2_path):
+
+    def write_v2(p: str) -> None:
         stream_corpus_delta(spark, sf_dir)  # ensure the ledger exists
-        ledger = os.path.join(_stream_delta_workdir(sf_dir), "ledger")
+        ledger = os.path.join(artifact("stream_corpus_delta", sf_dir), "ledger")
         admitted = read_ledger(
             spark, ledger, _STREAM_DELTA_LEDGER_SCHEMA
         ).select("doc_id")
@@ -3252,10 +3158,12 @@ def dedup_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(admitted, "doc_id")
             .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         )
-        v2 = v1.select("doc_id", *lanes).unionByName(
+        v1.select("doc_id", *lanes).unionByName(
             _signature_of(docs).select("doc_id", *lanes)
-        )
-        _atomic_dir_write(lambda p: v2.write.parquet(p), v2_path)
+        ).write.parquet(p)
+
+    v1_path = artifact("neardup_index", sf_dir)
+    v2_path = artifact("neardup_index", sf_dir, write_v2, gen="pub2")
 
     def audit(version: int, path: str) -> DataFrame:
         idx = spark.read.parquet(path)

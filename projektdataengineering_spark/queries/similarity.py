@@ -40,7 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, spread_small_input
+from ..catalog import artifact, artifact_kind, load_table, spread_small_input
 from ..functions import token_ngrams
 from ..functions.xxh64 import hash_int, hash_long
 from . import query
@@ -627,8 +627,6 @@ def _ivf_train_centroids(
     the driver. At 100 TB the component explosion would be replaced by
     per-batch partial sums in the same mapInPandas (one row per
     cell×dim per batch); the plan shape is otherwise identical."""
-    global _IVF_TRAIN_RUNS
-    _IVF_TRAIN_RUNS += 1
     init = [r["vec"] for r in e.orderBy("vec_id").limit(k).collect()]
     cents = np.stack([np.asarray(v, dtype=np.float64) for v in init])
     cents /= np.linalg.norm(cents, axis=1, keepdims=True)
@@ -675,41 +673,54 @@ def _ivf_train_centroids(
 
 
 _IVF_CENTROID_CACHE: dict[str, "np.ndarray"] = {}
-_IVF_TRAIN_RUNS = 0  # Lloyd trainings this process; tests assert reuse skips them
 
 
-def _ivf_index_path(
-    sf_dir: str, k: int = _IVF_K, gen: int = 0
-) -> tuple[str, str]:
-    """(tag, path) for the persisted coarse-quantizer index.
+def _twin_geometry() -> dict:
+    """The planted-twin arrival batch (dedup's twin constants) as key
+    parameters — ONE definition folded into every generation suffix of
+    the embedding-side lines, so v2 appends and retrain generations can
+    never diverge on what 'same batch geometry' means (r16 review): a
+    retrain generation's membership is EXACTLY the cutover membership
+    (corpus ∪ the geometry-defined appends, _cutover_members), so a
+    retuned twin constant must land a NEW line, never reuse one built
+    on a different membership."""
+    from .dedup import _TWIN_AMPLITUDE, _TWIN_EVERY, _TWIN_OFFSET
 
-    The tag folds the CONTENT fingerprint of the embeddings source with
-    every hyperparameter that shapes the trained centroids, so a
-    regenerated fixture or a retuned quantizer can never silently reuse
-    a stale index — the same keying discipline as ensure_bucketed
-    (round-8 ADVICE). ``k`` defaults to the fixture K; the √N-regime
-    probe trains its own K and the tag keeps the indexes apart.
-    ``gen`` is the RETRAIN generation: the skew trigger
-    (ivf_retrain_generation) bumps it so a quantizer retrained on the
-    post-append distribution lands under a NEW key instead of
-    clobbering the generation the current code tables were encoded
-    against; gen=0 (the original corpus training) keeps the historical
-    tag exactly."""
+    return {"e": _TWIN_EVERY, "o": _TWIN_OFFSET, "a": _TWIN_AMPLITUDE}
+
+
+# The coarse-quantizer line: the embeddings fingerprint + every
+# hyperparameter that shapes the trained centroids, so a regenerated
+# fixture or a retuned quantizer can never silently reuse a stale index.
+# ``k`` defaults to the fixture K; the √N-regime probe trains its own K
+# and the key keeps the indexes apart. A RETRAIN generation (the skew
+# trigger, ivf_retrain_generation) lands under ``gen=n`` instead of
+# clobbering the generation the current code tables were encoded against.
+artifact_kind(
+    "ivf",
+    "embeddings",
+    key=lambda: ({"k": _IVF_K, "i": _IVF_ITERS, "d": _IVF_DIM}, {"g": _twin_geometry()}),
+)
+
+
+def _load_npy(cache: dict, path: str, force_disk_reload: bool) -> "np.ndarray":
+    """One persisted array per artifact directory, memoized in-process
+    by path; ``force_disk_reload`` drops the memo first so a registered
+    reuse query genuinely exercises the disk round-trip."""
     import os
 
-    from ..sources import source_fingerprint
+    if force_disk_reload:
+        cache.pop(path, None)
+    if path not in cache:
+        cache[path] = np.load(os.path.join(path, "array.npy"))
+    return cache[path]
 
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = f"{fp}_k{k}_i{_IVF_ITERS}_d{_IVF_DIM}"
-    if gen:
-        tag = f"{tag}{_gen_tag(gen)}"
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "ivf",
-        f"centroids_{tag}.npy",
-    )
-    return tag, path
+
+def _save_npy(path: str, arr: "np.ndarray") -> None:
+    import os
+
+    os.makedirs(path)
+    np.save(os.path.join(path, "array.npy"), arr)
 
 
 def _ivf_centroids(
@@ -718,40 +729,19 @@ def _ivf_centroids(
 ) -> "np.ndarray":
     """Train-once / reuse-forever IVF index: memory cache → on-disk
     ``.npy`` keyed by source fingerprint (+ hyperparams) → Lloyd
-    training as the last resort, persisted via write-temp + atomic
-    rename (the ensure_bucketed recipe — a concurrent session's winner
-    is bit-identical by determinism of the trainer, so losing the race
-    just means loading the winner's file).
+    training as the last resort, installed through catalog.persisted
+    (a concurrent session's winner is bit-identical by determinism of
+    the trainer, so losing the race just means loading the winner's
+    file).
 
     This is the difference between an ANN demo and an ANN system: at
     100 TB the index is built once per corpus version and every query
-    session mmap-loads K×dim floats instead of re-running k-means.
-    ``force_disk_reload`` drops the in-process cache first so the
-    registered reuse query genuinely exercises the disk round-trip."""
-    import os
-
-    tag, path = _ivf_index_path(sf_dir, k=k, gen=gen)
-    if force_disk_reload:
-        _IVF_CENTROID_CACHE.pop(tag, None)
-    cached = _IVF_CENTROID_CACHE.get(tag)
-    if cached is not None:
-        return cached
-    if os.path.exists(path):
-        cents = np.load(path)
-        _IVF_CENTROID_CACHE[tag] = cents
-        return cents
-    cents = _ivf_train_centroids(spark, e, k=k)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.{os.getpid()}.tmp.npy"  # .npy suffix: np.save appends otherwise
-    np.save(tmp, cents)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.unlink(tmp)
-        if not os.path.exists(path):  # not a lost race — surface it
-            raise
-    _IVF_CENTROID_CACHE[tag] = cents
-    return cents
+    session mmap-loads K×dim floats instead of re-running k-means."""
+    path = artifact(
+        "ivf", sf_dir, lambda p: _save_npy(p, _ivf_train_centroids(spark, e, k=k)),
+        gen=gen, k=k,
+    )
+    return _load_npy(_IVF_CENTROID_CACHE, path, force_disk_reload)
 
 
 def _ivf_assign(df: DataFrame, cents_bc, nprobe: int = _IVF_NPROBE) -> DataFrame:
@@ -990,7 +980,9 @@ def _pq_train_codebooks(spark: SparkSession, e: DataFrame) -> "np.ndarray":
 
 
 _PQ_BOOK_CACHE: dict[str, "np.ndarray"] = {}
-_PQ_TRAIN_RUNS = 0
+artifact_kind(
+    "pq_books", "embeddings", key=lambda: ({"m": _PQ_M, "k": _PQ_K, "i": _PQ_ITERS}, None)
+)
 
 
 def _pq_codebooks(
@@ -998,45 +990,12 @@ def _pq_codebooks(
     force_disk_reload: bool = False,
 ) -> "np.ndarray":
     """Persisted PQ codebooks — identical write-once/reuse-forever
-    contract as _ivf_centroids (memory → fingerprint-keyed .npy with
-    atomic rename → train as last resort). ``force_disk_reload`` drops
-    the in-process cache first so a registered reuse query genuinely
-    exercises the disk round-trip (the _ivf_centroids contract)."""
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = f"{fp}_pq_m{_PQ_M}_k{_PQ_K}_i{_PQ_ITERS}"
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "ivf",
-        f"pqbooks_{tag}.npy",
+    contract as _ivf_centroids (memory → fingerprint-keyed .npy →
+    train as last resort)."""
+    path = artifact(
+        "pq_books", sf_dir, lambda p: _save_npy(p, _pq_train_codebooks(spark, e))
     )
-    if force_disk_reload:
-        _PQ_BOOK_CACHE.pop(tag, None)
-    cached = _PQ_BOOK_CACHE.get(tag)
-    if cached is not None:
-        return cached
-    if os.path.exists(path):
-        books = np.load(path)
-        _PQ_BOOK_CACHE[tag] = books
-        return books
-    global _PQ_TRAIN_RUNS
-    _PQ_TRAIN_RUNS += 1
-    books = _pq_train_codebooks(spark, e)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.{os.getpid()}.tmp.npy"
-    np.save(tmp, books)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.unlink(tmp)
-        if not os.path.exists(path):
-            raise
-    _PQ_BOOK_CACHE[tag] = books
-    return books
+    return _load_npy(_PQ_BOOK_CACHE, path, force_disk_reload)
 
 
 def pq_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1195,40 +1154,23 @@ def sim_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_certified(exact, pq_top3(spark, sf_dir), _PQ_RECALL_BOUND)
 
 
-_IVFPQ_ENCODE_RUNS = 0  # map-side code-table builds; tests assert reuse skips
-
-
-def _ivfpq_code_index_path(
-    sf_dir: str, k_cells: int = _IVF_K, gen: int = 0
-) -> str:
-    """Persisted IVFADC code-table location — the _ivf_index_path /
-    _embed_index_path keying discipline: embeddings-source content
-    fingerprint + every hyperparameter that shapes the stored codes
-    (the coarse quantizer's AND the product quantizer's), so a
-    regenerated fixture or a retuned index can never silently reuse a
-    stale code table. ``gen`` is the RETRAIN generation (the
-    _ivf_index_path discipline): the skew-triggered cutover re-encodes
-    under a NEW line instead of clobbering the one mid-flight probes
-    are reading; a retrain generation is a LIVE configuration, so
-    pipeline_index_vacuum deliberately does not treat it as an orphan
-    of the gen-0 line."""
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = (
-        f"{fp}_k{k_cells}_i{_IVF_ITERS}_d{_IVF_DIM}"
-        f"_m{_PQ_M}_c{_PQ_K}_p{_PQ_ITERS}"
-    )
-    if gen:
-        tag = f"{tag}{_gen_tag(gen)}"
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "ivfpq_codes",
-        f"codes_{tag}",
-    )
+# The IVFADC code line: embeddings fingerprint + every hyperparameter
+# that shapes the stored codes (the coarse quantizer's AND the product
+# quantizer's), so a regenerated fixture or a retuned index can never
+# silently reuse a stale code table. A RETRAIN generation re-encodes under
+# ``gen=n`` instead of clobbering the line mid-flight probes are reading;
+# it is a LIVE configuration, so pipeline_index_vacuum deliberately does
+# not treat it as an orphan of the gen-0 line. Its arrivals are the twins
+# only, so the generation suffix folds no split.
+artifact_kind(
+    "ivfpq_codes",
+    "embeddings",
+    key=lambda: (
+        {"k": _IVF_K, "i": _IVF_ITERS, "d": _IVF_DIM,
+         "m": _PQ_M, "c": _PQ_K, "p": _PQ_ITERS},
+        {"v2": _twin_geometry(), "g": _twin_geometry()},
+    ),
+)
 
 
 def _encode_codes_frame(assigned: DataFrame, books_bc) -> DataFrame:
@@ -1263,7 +1205,7 @@ def _ivfpq_code_index(
     lists WITH the PQ codes, as a parquet table physically partitioned
     by cell (one directory per inverted list — partition pruning IS the
     nprobe cell selection at the storage layer). Built once per corpus
-    version (staged write + atomic rename, _atomic_dir_write); every
+    version (catalog.persisted's staged install); every
     later probe session reads codes straight from parquet and the
     corpus is never re-encoded — the encode-once/probe-forever
     operating mode the 100-TB deployment runs in (the r14 verdict's
@@ -1280,13 +1222,8 @@ def _ivfpq_code_index(
     CURRENT membership (corpus ∪ accumulated appends) re-encoded under
     the gen-keyed quantizer — by passing both; the defaults keep the
     historical gen-0 build (full corpus, original quantizer) exactly."""
-    global _IVFPQ_ENCODE_RUNS
-    import os
 
-    from .layout import _atomic_dir_write
-
-    path = _ivfpq_code_index_path(sf_dir, k_cells=k_cells, gen=gen)
-    if not os.path.isdir(path):
+    def write(p: str) -> None:
         e = (
             members
             if members is not None
@@ -1297,13 +1234,9 @@ def _ivfpq_code_index(
         # one file per inverted list (the faiss layout): the build-time
         # cell shuffle is paid once per corpus version and keeps the
         # probe-side scan from paying per-input-partition small files
-        _atomic_dir_write(
-            lambda p: codes.repartition("cell")
-            .write.partitionBy("cell")
-            .parquet(p),
-            path,
-        )
-        _IVFPQ_ENCODE_RUNS += 1
+        codes.repartition("cell").write.partitionBy("cell").parquet(p)
+
+    path = artifact("ivfpq_codes", sf_dir, write, gen=gen, k=k_cells)
     return spark.read.parquet(path).select(
         F.col("cell").cast("int").alias("cell"), "vec_id", "codes"
     )
@@ -1549,7 +1482,7 @@ def sim_cosine_ivfpq_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     the code table is ~100 GB of cell-partitioned parquet built once
     per corpus version, and a query session's cost is nprobe/K of a
     code scan — never a corpus re-encode. Keying/staleness discipline
-    in _ivfpq_code_index_path; encode-skip on second invocation proven
+    in the "ivfpq_codes" kind; encode-skip on second invocation proven
     by the builds-counter pytest (tests/test_operators.py)."""
     exact = _exact_top3_per_query(spark, sf_dir)
     return _recall_certified(
@@ -1578,7 +1511,7 @@ def sim_cosine_ivf_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     call trains and persists it — still hash-identical). The
     train-once/probe-forever split is the 100-TB operating mode: index
     build is a per-corpus-version batch job, query sessions load K×dim
-    floats. Index keying/staleness discipline in _ivf_index_path;
+    floats. Index keying/staleness discipline in the "ivf" kind;
     Lloyd-skip on second invocation proven in tests/test_operators.py."""
     exact = _exact_top3_per_query(spark, sf_dir)
     return _recall_certified(
@@ -2509,108 +2442,22 @@ _EINC_SPLIT_DUCK = (
     f" <= {_EINC_BATCH_POS}"
 )
 
-_EMBED_INDEX_BUILDS = 0  # tests assert index reuse skips the build
-
-
-def _batch_geometry_tag(split_fragment: str = "") -> str:
-    """The arrival-batch geometry rendered as a key fragment — ONE
-    definition shared by the v2 append paths (_append_v2_path) and the
-    retrain-generation tags (_gen_tag), so the two generation kinds
-    can never diverge on what 'same batch geometry' means (r16
-    review). ``split_fragment`` carries a family's EXTRA
-    batch-definition constants beyond the shared twin geometry: the
-    embedding member family's arrivals are twins ∪ the md5
-    fresh-quarter, so its keys fold the split position too (r16
-    ADVICE — a retuned split must rebuild, never silently reuse); the
-    IVFADC code family's arrivals are twins only, so it passes
-    nothing."""
-    from .dedup import _TWIN_AMPLITUDE, _TWIN_EVERY, _TWIN_OFFSET
-
-    tag = f"e{_TWIN_EVERY}-o{_TWIN_OFFSET}-a{_TWIN_AMPLITUDE}"
-    return f"{tag}-{split_fragment}" if split_fragment else tag
-
-
-def _einc_batch_tag() -> str:
-    """The embedding member family's COMPLETE arrival-batch definition
-    as a key fragment: the shared twin geometry PLUS the md5
-    fresh-quarter split position (_EINC_BATCH_POS) — the constant that
-    decides which base vectors play the arrival batch, hence which
-    keepers a v2 holds (r16 ADVICE: the twin-only tag under-keyed the
-    embedding line's v2)."""
-    return _batch_geometry_tag(f"p{_EINC_BATCH_POS}")
-
-
-def _append_v2_path(v1_path: str, batch_tag: str | None = None) -> str:
-    """v2 generation path for an append-family index, keyed by the
-    ARRIVAL-BATCH geometry as well as the v1 key (r15 ADVICE): the v1
-    path already folds the corpus fingerprint and quantizer
-    hyperparameters, but v2's CONTENT additionally depends on which
-    batch was appended — retuning the batch-defining constants
-    (_TWIN_EVERY/_TWIN_OFFSET/_TWIN_AMPLITUDE, and for the embedding
-    family the split position via its ``batch_tag``) must REBUILD v2
-    under a new key, not reuse a stale v2 built for a different batch
-    (which would surface as a loud oracle hash mismatch instead of a
-    rebuild). ``batch_tag`` defaults to the shared twin-only geometry
-    (the IVFADC code family's batch definition); families whose batch
-    definition has more constants pass their own complete fragment.
-    Superseded tags left behind by a retune are exactly what
-    pipeline_index_vacuum garbage-collects."""
-    tag = _batch_geometry_tag() if batch_tag is None else batch_tag
-    return f"{v1_path}_v2-{tag}"
-
-
-def _embed_index_v2_path(sf_dir: str) -> str:
-    """Canonical v2 path of the embedding member line — v1 key +
-    the family's COMPLETE batch definition (twins + split). The one
-    producer (dedup_embedding_index_append), every consumer (the
-    member skew audit, pipeline_index_vacuum, tests) and the GC all
-    read THIS helper, so the line's addressing can never fork (r16
-    verdict task: derive every v2 path from its appender)."""
-    return _append_v2_path(_embed_index_path(sf_dir), _einc_batch_tag())
-
-
-def _ivfpq_code_v2_path(sf_dir: str) -> str:
-    """Canonical v2 path of the IVFADC code line — v1 key + the
-    twin-only batch definition (its arrivals carry no split). Same
-    single-producer discipline as _embed_index_v2_path."""
-    return _append_v2_path(_ivfpq_code_index_path(sf_dir))
-
-
-def _gen_tag(gen: int) -> str:
-    """Tag suffix for a RETRAIN generation, folding the arrival-batch
-    geometry alongside the generation number: a retrain generation's
-    membership is EXACTLY the canonical cutover membership (corpus ∪
-    the geometry-defined appends — _cutover_members, the one producer
-    allowed to train under a gen key), so retuning the twin constants
-    must land a NEW gen line instead of silently reusing one trained
-    on a different membership — the same stale-reuse class
-    _append_v2_path closes for the v2 append (r16 review). Advancing
-    past gen=1 (a skew event on a retrain line itself) is the engine
-    host's cutover-commit loop: it bumps the live generation it
-    audits, and the superseded line is commit_generation_cutover's
-    (maintenance.py) to expire."""
-    return f"_g{gen}-{_batch_geometry_tag()}"
-
-
-def _embed_index_path(sf_dir: str) -> str:
-    """Persisted corpus cell-index location — the _ivf_index_path /
-    _neardup_index_path keying discipline: embeddings-source content
-    fingerprint + every parameter that shapes the stored cells (the
-    quantizer's hyperparameters and the corpus/batch split), so a
-    regenerated fixture or retuned index can never silently reuse a
-    stale member table."""
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = f"{fp}_k{_IVF_K}_i{_IVF_ITERS}_d{_IVF_DIM}_b{_EINC_BATCH_POS}"
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "embed_ivf_index",
-        f"cells_{tag}",
-    )
+# The corpus cell-index (member) line: embeddings fingerprint + every
+# parameter that shapes the stored cells (the quantizer's hyperparameters
+# and the corpus/batch split), so a regenerated fixture or retuned index
+# can never silently reuse a stale member table. Its v2 arrivals are the
+# twins ∪ the md5 fresh-quarter, so the v2 suffix folds the split position
+# too (r16 ADVICE: a retuned split must rebuild, never silently reuse);
+# its retrain generations carry the same twin-only suffix as the code
+# line's — one generation key, two consumers (r17).
+artifact_kind(
+    "embed_ivf_index",
+    "embeddings",
+    key=lambda: (
+        {"k": _IVF_K, "i": _IVF_ITERS, "d": _IVF_DIM, "b": _EINC_BATCH_POS},
+        {"v2": {**_twin_geometry(), "p": _EINC_BATCH_POS}, "g": _twin_geometry()},
+    ),
+)
 
 
 def _corpus_cell_index(spark: SparkSession, sf_dir: str, cents_bc) -> DataFrame:
@@ -2620,22 +2467,16 @@ def _corpus_cell_index(spark: SparkSession, sf_dir: str, cents_bc) -> DataFrame:
     (write-temp + atomic rename); every later batch reads members
     straight from parquet and the corpus is never re-assigned, so the
     nightly loop is O(batch) like its MinHash twin."""
-    global _EMBED_INDEX_BUILDS
-    import os
 
-    from .layout import _atomic_dir_write
-
-    path = _embed_index_path(sf_dir)
-    if not os.path.isdir(path):
+    def write(p: str) -> None:
         corpus = (
             _embeddings_normed(spark, sf_dir)
             .select("vec_id", "vec")
             .filter(~F.expr(_EINC_SPLIT_SPARK))
         )
-        members = _ivf_assign(corpus, cents_bc).select("vec_id", "vec", "cell")
-        _atomic_dir_write(lambda p: members.write.parquet(p), path)
-        _EMBED_INDEX_BUILDS += 1
-    return spark.read.parquet(path)
+        _ivf_assign(corpus, cents_bc).select("vec_id", "vec", "cell").write.parquet(p)
+
+    return spark.read.parquet(artifact("embed_ivf_index", sf_dir, write))
 
 
 def _einc_oracle() -> str:
@@ -2726,7 +2567,7 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup_embedding_cosine certification applied to the IVF path
     (twin margins cos ≈ 0.998 vs random ≤ ~0.6 keep the boolean off
     any knife edge). Index build-skip on second invocation is pinned
-    by tests/test_operators.py via _EMBED_INDEX_BUILDS.
+    by tests/test_operators.py via catalog.BUILDS["embed_ivf_index"].
 
     Scale shape: O(corpus) work happens once per corpus version (the
     quantizer training and one member-assignment pass, both persisted);
@@ -2825,13 +2666,8 @@ def sim_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated index scans. At 100 TB versions live in a
     catalog manifest and the append is a metadata commit of
     batch-sized, cell-partitioned files — same bound."""
-    import os
-
     from .dedup import _TWIN_OFFSET
-    from .layout import _atomic_dir_write
 
-    v1_path = _ivfpq_code_index_path(sf_dir)
-    v2_path = _ivfpq_code_v2_path(sf_dir)
     e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
     echk = e.localCheckpoint(eager=False)
     cents = _ivf_centroids(spark, sf_dir, echk)
@@ -2841,7 +2677,8 @@ def sim_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read-or-build v1 UNCONDITIONALLY (no-op read when present): a
     # partially cleaned scratch dir must self-heal, not fail the audit
     v1 = _ivfpq_code_index(spark, sf_dir, bc_c, bc_b)
-    if not os.path.isdir(v2_path):
+
+    def write_v2(p: str) -> None:
         # the arrival batch = the planted twins — ONE definition of the
         # twin geometry (_einc_arrival_frame), selected by the id band
         # the fixture reserves for twins
@@ -2849,13 +2686,12 @@ def sim_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id") >= _TWIN_OFFSET
         )
         tw_codes = _encode_codes_frame(_ivf_assign(twins, bc_c), bc_b)
-        v2 = v1.unionByName(tw_codes.select("cell", "vec_id", "codes"))
-        _atomic_dir_write(
-            lambda p: v2.repartition("cell")
-            .write.partitionBy("cell")
-            .parquet(p),
-            v2_path,
-        )
+        v1.unionByName(tw_codes.select("cell", "vec_id", "codes")).repartition(
+            "cell"
+        ).write.partitionBy("cell").parquet(p)
+
+    v1_path = artifact("ivfpq_codes", sf_dir)
+    v2_path = artifact("ivfpq_codes", sf_dir, write_v2, gen="v2")
 
     def audit(version: int, path: str) -> DataFrame:
         idx = spark.read.parquet(path)
@@ -3032,19 +2868,14 @@ def dedup_embedding_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     two partial-aggregated index scans. At 100 TB versions live in a
     catalog manifest and the append is a metadata commit of
     batch-sized, cell-partitioned files — same bound."""
-    import os
-
-    from .layout import _atomic_dir_write
-
-    v1_path = _embed_index_path(sf_dir)
-    v2_path = _embed_index_v2_path(sf_dir)
     e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
     cents = _ivf_centroids(spark, sf_dir, e.localCheckpoint(eager=False))
     bc = spark.sparkContext.broadcast(cents)
     # read-or-build v1 UNCONDITIONALLY (no-op read when present): a
     # partially cleaned scratch dir must self-heal, not fail the audit
     v1 = _corpus_cell_index(spark, sf_dir, bc)
-    if not os.path.isdir(v2_path):
+
+    def write_v2(p: str) -> None:
         batch, matches = _einc_probe_frames(spark, sf_dir)
         keepers = (
             batch.join(matches, "vec_id", "left")
@@ -3053,8 +2884,10 @@ def dedup_embedding_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("vec_id", "vec", "cell")
         )
-        v2 = v1.select("vec_id", "vec", "cell").unionByName(keepers)
-        _atomic_dir_write(lambda p: v2.write.parquet(p), v2_path)
+        v1.select("vec_id", "vec", "cell").unionByName(keepers).write.parquet(p)
+
+    v1_path = artifact("embed_ivf_index", sf_dir)
+    v2_path = artifact("embed_ivf_index", sf_dir, write_v2, gen="v2")
 
     def audit(version: int, path: str) -> DataFrame:
         idx = spark.read.parquet(path)
@@ -3078,18 +2911,9 @@ def dedup_embedding_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ESTREAM_EPOCHS = 3  # base id-window epochs; the feed adds 1 twin epoch
 
 
-def _estream_workdir(sf_dir: str) -> str:
-    import os
-
-    from ..sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".scratch",
-        "stream_embedding_delta",
-        f"{fp}_e{_ESTREAM_EPOCHS}",
-    )
+artifact_kind(
+    "stream_embedding_delta", "embeddings", key=lambda: ({"e": _ESTREAM_EPOCHS}, None)
+)
 
 
 @query("stream_embedding_delta", family="dedup", oracle=_einc_oracle())
@@ -3122,8 +2946,9 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival must still point at it, which is why the ledger alone is
     not sufficient state). Epoch-manifest replay idempotence is pinned
     by tests/test_formats_sink.py; completion is terminal-state (the
-    r13-ADVICE guard: a crashed partial run is invalidated WITH its
-    checkpoint and rerun).
+    r13-ADVICE guard: the workdir, checkpoint included, installs as one
+    unit only after the stream drains, so a crashed partial run is
+    never visible).
 
     Scale shape: per epoch, only the epoch's arrivals are assigned
     map-side; the corpus side is a parquet index scan; the quadratic
@@ -3134,7 +2959,6 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     them), same geometry either way because the quantizer is one
     shared kernel."""
     import os
-    import shutil
 
     from .dedup import (
         EMBEDDING_DUP_THRESHOLD,
@@ -3143,12 +2967,9 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         _TWIN_OFFSET,
     )
 
-    base = _estream_workdir(sf_dir)
-    ledger = os.path.join(base, "ledger")
-    marker = os.path.join(base, "_COMPLETE")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(ledger, exist_ok=True)
+    def run_stream(base: str) -> None:
+        ledger = os.path.join(base, "ledger")
+        os.makedirs(ledger)
         from ..sources.pydatasource import register_synthetic_source
         from ..sources.pysink import register_ledger_sink
 
@@ -3165,7 +2986,7 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         # table. Monotone epochs guarantee every carried id < every
         # current id. A mid-run epoch retry could append twice —
         # harmless, seen feeds MIN aggregates only; a process-level
-        # crash is covered by the terminal-state invalidation below.
+        # crash never installs the workdir.
         acc: dict = {"seen": None}
 
         # Twin geometry passed EXPLICITLY from dedup.py's constants
@@ -3276,14 +3097,12 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 q.stop()
             q.awaitTermination()
-        with open(marker, "w") as fh:
-            fh.write("ok\n")
 
     from ..sources.pysink import read_ledger
 
     back = read_ledger(
         spark,
-        ledger,
+        os.path.join(artifact("stream_embedding_delta", sf_dir, run_stream), "ledger"),
         "vec_id bigint, dup_of_corpus bigint, dup_of_batch bigint, keep boolean",
     )
     return back.select("vec_id", "dup_of_corpus", "dup_of_batch", "keep")
@@ -3506,8 +3325,8 @@ def sim_ivfpq_cell_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     superseded one is commit_generation_cutover's to expire."""
     import os
 
-    v1_path = _ivfpq_code_index_path(sf_dir)
-    v2_path = _ivfpq_code_v2_path(sf_dir)
+    v1_path = artifact("ivfpq_codes", sf_dir)
+    v2_path = artifact("ivfpq_codes", sf_dir, gen="v2")
     if not (os.path.isdir(v1_path) and os.path.isdir(v2_path)):
         sim_ivfpq_index_append(spark, sf_dir)  # idempotent read-or-build
 
@@ -3598,8 +3417,8 @@ def sim_ivf_member_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates is the one O(N) pass a skewed quantizer costs anyway."""
     import os
 
-    v1_path = _embed_index_path(sf_dir)
-    v2_path = _embed_index_v2_path(sf_dir)
+    v1_path = artifact("embed_ivf_index", sf_dir)
+    v2_path = artifact("embed_ivf_index", sf_dir, gen="v2")
     if not (os.path.isdir(v1_path) and os.path.isdir(v2_path)):
         dedup_embedding_index_append(spark, sf_dir)  # idempotent
 
@@ -3630,7 +3449,7 @@ def ivf_retrain_generation(
     """The ACT half of the skew trigger: retrain the coarse quantizer
     on the CANONICAL cutover membership (_cutover_members — corpus ∪
     accumulated appends) through the ordinary read-or-build, under the
-    bumped generation key (_ivf_index_path gen tag) — the round-15
+    bumped generation key (the "ivf" kind's gen suffix) — the round-15
     verdict's 'existing read-or-build with a bumped index key'. The
     membership is computed here, not caller-supplied, so the gen key
     always addresses centroids trained on the membership its folded
@@ -3640,20 +3459,6 @@ def ivf_retrain_generation(
     expire once the cutover commits."""
     members = _cutover_members(spark, sf_dir).localCheckpoint(eager=False)
     return _ivf_centroids(spark, sf_dir, members, k=k, gen=gen)
-
-
-def _member_gen_path(sf_dir: str, gen: int) -> str:
-    """Gen-keyed MEMBER-line location: the member line's v1 key (which
-    folds the split position — the family's corpus/arrival boundary)
-    plus the shared retrain-generation tag, so the member cutover and
-    the code cutover of the same generation carry the SAME _g{gen}
-    suffix — one generation key, two consumers (r17: the verdict's
-    shared-generation cutover). pipeline_index_vacuum's `{base}_g*`
-    retention pattern covers it as a live configuration."""
-    return f"{_embed_index_path(sf_dir)}{_gen_tag(gen)}"
-
-
-_MEMBER_GEN_BUILDS = 0  # tests assert cutover reuse skips the rebuild
 
 
 def _ivf_member_gen_index(
@@ -3676,30 +3481,24 @@ def _ivf_member_gen_index(
     line is a caller error and raises — the audit half
     (ivfpq_retrain_if_skewed) enforces the same never-installed
     check on its side."""
-    global _MEMBER_GEN_BUILDS
     import os
 
-    from .layout import _atomic_dir_write
-
-    path = _member_gen_path(sf_dir, gen)
-    if not os.path.isdir(path):
+    def write(p: str) -> None:
+        # the serving line: the previous cutover, or the v2 append for gen 1
+        serving_path = artifact("embed_ivf_index", sf_dir, gen=gen - 1 or "v2")
         if gen >= 2:
-            serving_path = _member_gen_path(sf_dir, gen - 1)
             if not os.path.isdir(serving_path):
                 raise FileNotFoundError(
                     f"generation {gen - 1} was never cut over: no member "
                     f"line at {serving_path}; cannot derive gen-{gen} "
                     "holdings"
                 )
-        else:
-            serving_path = _embed_index_v2_path(sf_dir)
-            if not os.path.isdir(serving_path):
-                dedup_embedding_index_append(spark, sf_dir)
+        elif not os.path.isdir(serving_path):
+            dedup_embedding_index_append(spark, sf_dir)
         holdings = spark.read.parquet(serving_path).select("vec_id", "vec")
-        rows = _ivf_assign(holdings, cents_bc).select("vec_id", "vec", "cell")
-        _atomic_dir_write(lambda p: rows.write.parquet(p), path)
-        _MEMBER_GEN_BUILDS += 1
-    return spark.read.parquet(path)
+        _ivf_assign(holdings, cents_bc).select("vec_id", "vec", "cell").write.parquet(p)
+
+    return spark.read.parquet(artifact("embed_ivf_index", sf_dir, write, gen=gen))
 
 
 def ivfpq_retrain_if_skewed(
@@ -3748,8 +3547,8 @@ def ivfpq_retrain_if_skewed(
 
     if current_gen == 0:
         audit_paths = {
-            "code": _ivfpq_code_v2_path(sf_dir),
-            "member": _embed_index_v2_path(sf_dir),
+            "code": artifact("ivfpq_codes", sf_dir, gen="v2"),
+            "member": artifact("embed_ivf_index", sf_dir, gen="v2"),
         }
         if not os.path.isdir(audit_paths["code"]):
             sim_ivfpq_index_append(spark, sf_dir)
@@ -3757,8 +3556,8 @@ def ivfpq_retrain_if_skewed(
             dedup_embedding_index_append(spark, sf_dir)
     else:
         audit_paths = {
-            "code": _ivfpq_code_index_path(sf_dir, gen=current_gen),
-            "member": _member_gen_path(sf_dir, current_gen),
+            "code": artifact("ivfpq_codes", sf_dir, gen=current_gen),
+            "member": artifact("embed_ivf_index", sf_dir, gen=current_gen),
         }
         for line, p in audit_paths.items():
             if not os.path.isdir(p):
@@ -3777,11 +3576,9 @@ def ivfpq_retrain_if_skewed(
     # trigger call on an already-cut-over line must not ship the
     # centroid/codebook matrices cluster-wide just for the
     # read-or-build's isdir check to discard them
-    _, cents_gen_path = _ivf_index_path(sf_dir, gen=gen)
-    if (
-        os.path.isdir(_ivfpq_code_index_path(sf_dir, gen=gen))
-        and os.path.isdir(_member_gen_path(sf_dir, gen))
-        and os.path.exists(cents_gen_path)
+    if all(
+        os.path.isdir(artifact(kind, sf_dir, gen=gen))
+        for kind in ("ivfpq_codes", "embed_ivf_index", "ivf")
     ):
         return True, gen
     members = _cutover_members(spark, sf_dir).localCheckpoint(eager=False)

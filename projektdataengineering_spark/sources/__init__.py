@@ -245,9 +245,9 @@ def write_bucketed(
 
 def source_fingerprint(*paths: str) -> str:
     """12-hex content fingerprint of source files (size + mtime_ns per
-    path) — folded into bucketed-cache tags so regenerated sources at
-    the same path can never silently reuse a stale bucketed table
-    (round-8 ADVICE)."""
+    path) — the start of every persisted-artifact key
+    (catalog.persisted), so regenerated sources at the same path can
+    never silently reuse a stale artifact (round-8 ADVICE)."""
     import hashlib
     import os
 
@@ -278,38 +278,36 @@ def ensure_bucketed(
       clobbering a shared path another session may be mid-read on
       (round-8 ADVICE: tableExists() alone is session-local and lied
       about the files).
-    * Otherwise → write to a process-unique temp dir, then atomically
-      ``os.rename`` into ``path``. If a concurrent session won the
-      rename race, discard our temp and register over the winner's
-      files (same content by construction — callers put a
-      source_fingerprint in ``path``/``name``, so a path can only ever
-      hold one logical content version; stale fingerprints just leave
-      orphaned dirs behind, which is safe garbage, never wrong reuse).
+    * Otherwise → write the bucketed files through the artifact seam's
+      staged install (``catalog.install``: process-unique temp dir, one
+      atomic rename; a concurrent session's winner is kept and registered
+      — same content by construction, because callers key ``path`` on a
+      source fingerprint, so a path only ever holds one logical content
+      version; stale fingerprints just leave orphaned dirs behind, which
+      is safe garbage, never wrong reuse).
     """
     import os
-    import shutil
     import uuid
 
-    if spark.catalog.tableExists(name) and os.path.isdir(path):
-        return
-    if not os.path.isdir(path):
-        tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    from ..catalog import install
+
+    if os.path.isdir(path):
+        if spark.catalog.tableExists(name):
+            return
+    else:
+        # a registration whose directory vanished would serve a stale
+        # file listing over the rewrite below
+        spark.sql(f"DROP TABLE IF EXISTS `{name}`")
+
+    def write(tmp: str) -> None:
         tmp_name = f"{name}_tmp_{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").option("path", tmp).bucketBy(
             n_buckets, *bucket_cols
         ).format("parquet").saveAsTable(tmp_name)
         # external table: DROP unregisters without touching the files
         spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            # "lost the race" is only true if a winner's directory is
-            # actually there; a permissions/path failure must surface
-            # HERE, not as an obscure read error off the registered
-            # table later
-            if not os.path.isdir(path):
-                raise
+
+    install(path, write)
     cols_ddl = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     )

@@ -14,6 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from projektdataengineering_spark.catalog import artifact
 from projektdataengineering_spark.sources.pydatasource import (
     register_synthetic_source,
 )
@@ -75,41 +76,48 @@ def test_batch_sink_abort_gc(tmp_path):
     assert not glob.glob(os.path.join(path, "manifest*"))
 
 
-def test_ledger_reuse_guard_requires_complete_run(tmp_path):
-    """The registered sink queries reuse a prior run's ledger ONLY when
-    its manifests account for every feed row (r14 fix for the r13
-    ADVICE): manifest EXISTENCE alone would serve a crash-truncated
-    partial ledger forever. Partial, corrupt, and empty states all
-    fail the check; invalidation drops the workdir as ONE unit
-    (parts + manifests + checkpoint + the feed's HWM file)."""
+def test_ledger_install_hides_partial_run(tmp_path, monkeypatch):
+    """A ledger workdir is installed as ONE unit through the artifact
+    seam (r14 fix for the r13 ADVICE): a run that crashes after
+    committing some epochs leaves nothing visible — no ledger at the
+    final path, no staging directory with its parts, manifests,
+    checkpoint and the feed's HWM file — so a later call reruns it from
+    a clean offset-0 world instead of serving a crash-truncated ledger;
+    a complete run is installed once and then reused without rerunning."""
+    from projektdataengineering_spark import catalog
     from projektdataengineering_spark.queries import formats as FT
 
-    path = str(tmp_path / "ledger")
-    os.makedirs(path)
-    assert not FT._ledger_run_complete(path, "manifest-*.json")  # empty
+    monkeypatch.setattr(catalog, "SCRATCH", str(tmp_path))
+    runs = []
 
-    # partial: one epoch of a multi-epoch run landed before a crash
-    with open(os.path.join(path, "manifest-0.json"), "w") as fh:
-        json.dump({"files": ["part-a.jsonl"], "n_rows": 6000}, fh)
-    assert not FT._ledger_run_complete(path, "manifest-*.json")
+    def run(rows_done):
+        def build(path):
+            runs.append(rows_done)
+            os.makedirs(os.path.join(path, ".checkpoint", "offsets"))
+            with open(os.path.join(path, ".feed-hwm"), "w") as fh:
+                fh.write(str(rows_done))
+            with open(os.path.join(path, "manifest-0.json"), "w") as fh:
+                json.dump({"files": ["part-a.jsonl"], "n_rows": rows_done}, fh)
+            if rows_done < FT._PYSTREAM_ROWS:
+                raise RuntimeError("stream died between epochs")
 
-    # complete: manifests tile the whole feed
-    with open(os.path.join(path, "manifest-1.json"), "w") as fh:
-        json.dump({"files": ["part-b.jsonl"],
-                   "n_rows": FT._PYSTREAM_ROWS - 6000}, fh)
-    assert FT._ledger_run_complete(path, "manifest-*.json")
+        return build
 
-    # corrupt manifest → not reusable, regardless of the others
-    with open(os.path.join(path, "manifest-1.json"), "w") as fh:
-        fh.write("{torn")
-    assert not FT._ledger_run_complete(path, "manifest-*.json")
-
-    # invalidation removes the whole unit, checkpoint and HWM included
-    os.makedirs(os.path.join(path, ".checkpoint", "offsets"))
-    with open(os.path.join(path, ".feed-hwm"), "w") as fh:
-        fh.write("6000")
-    FT._invalidate_ledger(path)
+    # partial: one epoch landed before a crash → nothing visible
+    with pytest.raises(RuntimeError):
+        catalog.artifact("ledgersink", "", run(6000), run="stream")
+    path = catalog.artifact("ledgersink", "", run="stream")
     assert not os.path.exists(path)
+    assert os.listdir(tmp_path / "ledgersink") == []  # staging dropped whole
+
+    # complete: installed, then reused (the build never runs again)
+    assert catalog.artifact(
+        "ledgersink", "", run(FT._PYSTREAM_ROWS), run="stream"
+    ) == path
+    assert catalog.artifact("ledgersink", "", run(6000), run="stream") == path
+    assert runs == [6000, FT._PYSTREAM_ROWS]
+    with open(os.path.join(path, "manifest-0.json")) as fh:
+        assert json.load(fh)["n_rows"] == FT._PYSTREAM_ROWS
 
 
 def test_stream_corpus_delta_epoch_replay_idempotent(spark, sf_dir):
@@ -122,7 +130,7 @@ def test_stream_corpus_delta_epoch_replay_idempotent(spark, sf_dir):
     from projektdataengineering_spark.queries import pipeline_ops as P
 
     df1 = sorted(map(tuple, P.stream_corpus_delta(spark, sf_dir).collect()))
-    ledger = os.path.join(P._stream_delta_workdir(sf_dir), "ledger")
+    ledger = os.path.join(artifact("stream_corpus_delta", sf_dir), "ledger")
     manifests = sorted(glob.glob(os.path.join(ledger, "manifest-*.json")))
     assert len(manifests) == P._STREAM_DELTA_EPOCHS, manifests
     target = next(m for m in manifests if json.load(open(m))["n_rows"] > 0)
@@ -162,7 +170,7 @@ def test_stream_embedding_delta_epoch_replay_idempotent(spark, sf_dir):
     rows1 = sorted(
         map(tuple, S.stream_embedding_delta(spark, sf_dir).collect())
     )
-    ledger = os.path.join(S._estream_workdir(sf_dir), "ledger")
+    ledger = os.path.join(artifact("stream_embedding_delta", sf_dir), "ledger")
     manifests = sorted(glob.glob(os.path.join(ledger, "manifest-*.json")))
     assert len(manifests) == S._ESTREAM_EPOCHS + 1, manifests  # + twins
     target = next(m for m in manifests if json.load(open(m))["n_rows"] > 0)
@@ -205,8 +213,8 @@ def test_stream_index_append_installs_exactly_published_sigs(spark, sf_dir):
     from projektdataengineering_spark.sources.pysink import read_ledger
 
     rows1 = sorted(map(tuple, P.dedup_stream_index_append(spark, sf_dir).collect()))
-    v1_path = P._neardup_index_path(sf_dir)
-    v2_path = f"{v1_path}_pub2"
+    v1_path = artifact("neardup_index", sf_dir)
+    v2_path = artifact("neardup_index", sf_dir, gen="pub2")
 
     v1 = spark.read.parquet(v1_path)
     v2 = spark.read.parquet(v2_path)
@@ -215,7 +223,7 @@ def test_stream_index_append_installs_exactly_published_sigs(spark, sf_dir):
         r["doc_id"]
         for r in v2.select("doc_id").exceptAll(v1.select("doc_id")).collect()
     )
-    ledger = os.path.join(P._stream_delta_workdir(sf_dir), "ledger")
+    ledger = os.path.join(artifact("stream_corpus_delta", sf_dir), "ledger")
     published = read_ledger(
         spark, ledger, P._STREAM_DELTA_LEDGER_SCHEMA
     ).select("doc_id")

@@ -8,6 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from projektdataengineering_spark.catalog import BUILDS, KINDS, artifact
 from projektdataengineering_spark.queries import load_registry
 
 REGISTRY = load_registry()
@@ -1374,6 +1375,7 @@ def test_ivf_index_persists_and_skips_retraining(spark, sf_dir):
     by clearing the in-memory cache) loads the file and must NOT
     retrain — and the loaded centroids are bit-identical."""
     import os
+    import shutil
 
     import numpy as np
 
@@ -1384,24 +1386,24 @@ def test_ivf_index_persists_and_skips_retraining(spark, sf_dir):
         .select("vec_id", "vec")
         .localCheckpoint()
     )
-    tag, path = S._ivf_index_path(sf_dir)
-    S._IVF_CENTROID_CACHE.pop(tag, None)
+    path = artifact("ivf", sf_dir)
+    S._IVF_CENTROID_CACHE.pop(path, None)
     if os.path.exists(path):
-        os.unlink(path)
+        shutil.rmtree(path)
 
-    runs0 = S._IVF_TRAIN_RUNS
+    runs0 = BUILDS["ivf"]
     c1 = S._ivf_centroids(spark, sf_dir, e)
-    assert S._IVF_TRAIN_RUNS == runs0 + 1, "first call must train"
+    assert BUILDS["ivf"] == runs0 + 1, "first call must train"
     assert os.path.exists(path), "index file must be persisted"
 
-    S._IVF_CENTROID_CACHE.pop(tag, None)  # simulate a new session
+    S._IVF_CENTROID_CACHE.pop(path, None)  # simulate a new session
     c2 = S._ivf_centroids(spark, sf_dir, e)
-    assert S._IVF_TRAIN_RUNS == runs0 + 1, "second call must NOT retrain"
+    assert BUILDS["ivf"] == runs0 + 1, "second call must NOT retrain"
     np.testing.assert_array_equal(c1, c2)
 
     # third call: warm in-process path, still no retrain
     c3 = S._ivf_centroids(spark, sf_dir, e)
-    assert S._IVF_TRAIN_RUNS == runs0 + 1
+    assert BUILDS["ivf"] == runs0 + 1
     np.testing.assert_array_equal(c1, c3)
 
 
@@ -1415,15 +1417,13 @@ def test_compaction_apply_executes_and_reuses(spark, sf_dir):
     import os
 
     from projektdataengineering_spark.queries.layout import (
-        _compaction_workdir,
         pipeline_compaction_apply,
     )
 
     rows = pipeline_compaction_apply(spark, sf_dir).collect()
     assert rows
-    base = _compaction_workdir(sf_dir)
     for sub in ("before", "after", "manifest"):
-        assert os.path.isdir(os.path.join(base, sub)), sub
+        assert os.path.isdir(artifact("compaction", sf_dir, part=sub)), sub
     total_before = total_after = 0
     for r in rows:
         assert r["row_parity"] and r["rows_before"] == r["rows_after"]
@@ -1432,7 +1432,7 @@ def test_compaction_apply_executes_and_reuses(spark, sf_dir):
         for side, n in (("before", r["files_before"]), ("after", r["files_after"])):
             leaf = glob.glob(
                 os.path.join(
-                    base, side,
+                    artifact("compaction", sf_dir, part=side),
                     f"event_type={r['event_type']}",
                     f"event_date={r['event_date']}",
                     "*", "*.parquet",
@@ -1443,10 +1443,11 @@ def test_compaction_apply_executes_and_reuses(spark, sf_dir):
         total_after += r["files_after"]
     assert total_after < total_before, "compaction must reduce total file count"
 
-    mtime = os.path.getmtime(os.path.join(base, "manifest"))
+    manifest = artifact("compaction", sf_dir, part="manifest")
+    mtime = os.path.getmtime(manifest)
     again = pipeline_compaction_apply(spark, sf_dir).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
-    assert os.path.getmtime(os.path.join(base, "manifest")) == mtime
+    assert os.path.getmtime(manifest) == mtime
 
 
 def test_substring_spans_semantics(spark, tmp_path):
@@ -1661,6 +1662,7 @@ def test_pq_recall_and_codebook_persistence(spark, sf_dir):
     trained codebooks persist and a fresh-cache call must NOT retrain,
     and on tiny fixtures K clamps to the corpus size."""
     import os
+    import shutil
 
     import numpy as np
 
@@ -1673,26 +1675,17 @@ def test_pq_recall_and_codebook_persistence(spark, sf_dir):
     )
     n = e.count()
     # force one training
-    from projektdataengineering_spark.sources import source_fingerprint
-
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    tag = f"{fp}_pq_m{S._PQ_M}_k{S._PQ_K}_i{S._PQ_ITERS}"
-    S._PQ_BOOK_CACHE.pop(tag, None)
-    path = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(S.__file__)))
-        ),
-        ".scratch", "ivf", f"pqbooks_{tag}.npy",
-    )
+    path = artifact("pq_books", sf_dir)
+    S._PQ_BOOK_CACHE.pop(path, None)
     if os.path.exists(path):
-        os.unlink(path)
-    runs0 = S._PQ_TRAIN_RUNS
+        shutil.rmtree(path)
+    runs0 = BUILDS["pq_books"]
     b1 = S._pq_codebooks(spark, sf_dir, e)
-    assert S._PQ_TRAIN_RUNS == runs0 + 1
+    assert BUILDS["pq_books"] == runs0 + 1
     assert b1.shape == (S._PQ_M, min(S._PQ_K, n), S._IVF_DIM // S._PQ_M)
-    S._PQ_BOOK_CACHE.pop(tag, None)  # fresh session simulation
+    S._PQ_BOOK_CACHE.pop(path, None)  # fresh session simulation
     b2 = S._pq_codebooks(spark, sf_dir, e)
-    assert S._PQ_TRAIN_RUNS == runs0 + 1, "disk hit must not retrain"
+    assert BUILDS["pq_books"] == runs0 + 1, "disk hit must not retrain"
     np.testing.assert_array_equal(b1, b2)
 
     rows = S.sim_cosine_pq(spark, sf_dir).collect()
@@ -1936,7 +1929,7 @@ def test_merge_apply_cow_copy_and_idempotence(spark, tmp_path):
 
     from projektdataengineering_spark.queries.layout import (
         _MERGE_BUCKETS,
-        _merge_workdir,
+        _merge_versions,
         pipeline_merge_apply,
     )
 
@@ -1975,24 +1968,25 @@ def test_merge_apply_cow_copy_and_idempotence(spark, tmp_path):
         (4, "insert"): (1, 1, 750, True),
     }, got
 
-    base = _merge_workdir(d)
-    base_b1 = os.path.join(base, "base", "bucket=1")
-    merged_b1 = os.path.join(base, "merged", "bucket=1")
+    base, merged = _merge_versions(spark, d)
+    base_b1 = os.path.join(base, "bucket=1")
+    merged_b1 = os.path.join(merged, "bucket=1")
     same = filecmp.cmpfiles(
         base_b1, merged_b1, os.listdir(base_b1), shallow=False
     )
     assert same[1] == [] and same[2] == [] and same[0], same
-    assert not os.path.isdir(os.path.join(base, "merged", "bucket=3"))
-    assert not os.path.isdir(os.path.join(base, "merged", "bucket=5"))
-    assert not os.path.isdir(os.path.join(base, "base", "bucket=5"))
+    assert not os.path.isdir(os.path.join(merged, "bucket=3"))
+    assert not os.path.isdir(os.path.join(merged, "bucket=5"))
+    assert not os.path.isdir(os.path.join(base, "bucket=5"))
 
-    mtime = os.path.getmtime(os.path.join(base, "manifest"))
+    manifest = artifact("merge", d, part="manifest", inputs=(base, merged))
+    mtime = os.path.getmtime(manifest)
     again = {
         (r.bucket, r.action): (r.n_keys, r.sum_events, r.sum_cents, r.rewritten)
         for r in pipeline_merge_apply(spark, d).collect()
     }
     assert again == got
-    assert os.path.getmtime(os.path.join(base, "manifest")) == mtime
+    assert os.path.getmtime(manifest) == mtime
 
 
 def test_semireduced_prunes_both_exchange_inputs(spark, sf_dir):
@@ -2100,21 +2094,21 @@ def test_embedding_incremental_index_reuse_and_verdict(spark, sf_dir):
     from projektdataengineering_spark.queries.dedup import (
         _TWIN_EVERY, _TWIN_OFFSET)
 
-    path = S._embed_index_path(sf_dir)
+    path = artifact("embed_ivf_index", sf_dir)
     if os.path.isdir(path):
         shutil.rmtree(path)
 
-    builds0 = S._EMBED_INDEX_BUILDS
+    builds0 = BUILDS["embed_ivf_index"]
     r1 = S.dedup_embedding_incremental(spark, sf_dir)
     rows1 = sorted(map(tuple, r1.collect()))
-    assert S._EMBED_INDEX_BUILDS == builds0 + 1, "first call must build"
+    assert BUILDS["embed_ivf_index"] == builds0 + 1, "first call must build"
     assert os.path.isdir(path), "member index must be persisted"
 
-    trains0 = S._IVF_TRAIN_RUNS
+    trains0 = BUILDS["ivf"]
     r2 = S.dedup_embedding_incremental(spark, sf_dir)
     rows2 = sorted(map(tuple, r2.collect()))
-    assert S._EMBED_INDEX_BUILDS == builds0 + 1, "second call must NOT rebuild"
-    assert S._IVF_TRAIN_RUNS == trains0, "second call must NOT retrain"
+    assert BUILDS["embed_ivf_index"] == builds0 + 1, "second call must NOT rebuild"
+    assert BUILDS["ivf"] == trains0, "second call must NOT retrain"
     assert rows1 == rows2
 
     # the probe plan reads the CORPUS side from the index parquet
@@ -2204,26 +2198,26 @@ def test_ivfpq_code_index_persists_and_skips_reencode(spark, sf_dir):
 
     from projektdataengineering_spark.queries import similarity as S
 
-    path = S._ivfpq_code_index_path(sf_dir)
-    for p in (path, S._ivfpq_code_v2_path(sf_dir)):
+    path = artifact("ivfpq_codes", sf_dir)
+    for p in (path, artifact("ivfpq_codes", sf_dir, gen="v2")):
         if os.path.isdir(p):
             shutil.rmtree(p)
 
-    builds0 = S._IVFPQ_ENCODE_RUNS
+    builds0 = BUILDS["ivfpq_codes"]
     r1 = S.ivfpq_top3(spark, sf_dir)
     rows1 = sorted(map(tuple, r1.collect()))
-    assert S._IVFPQ_ENCODE_RUNS == builds0 + 1, "first call must encode"
+    assert BUILDS["ivfpq_codes"] == builds0 + 1, "first call must encode"
     assert os.path.isdir(path), "code index must be persisted"
     # physically cell-partitioned: one directory per inverted list
     cells = [d for d in os.listdir(path) if d.startswith("cell=")]
     assert len(cells) > 1, cells
 
-    trains0, pq0 = S._IVF_TRAIN_RUNS, S._PQ_TRAIN_RUNS
+    trains0, pq0 = BUILDS["ivf"], BUILDS["pq_books"]
     r2 = S.ivfpq_top3(spark, sf_dir, force_disk_reload=True)
     rows2 = sorted(map(tuple, r2.collect()))
-    assert S._IVFPQ_ENCODE_RUNS == builds0 + 1, "second call must NOT re-encode"
-    assert S._IVF_TRAIN_RUNS == trains0, "second call must NOT retrain IVF"
-    assert S._PQ_TRAIN_RUNS == pq0, "second call must NOT retrain PQ"
+    assert BUILDS["ivfpq_codes"] == builds0 + 1, "second call must NOT re-encode"
+    assert BUILDS["ivf"] == trains0, "second call must NOT retrain IVF"
+    assert BUILDS["pq_books"] == pq0, "second call must NOT retrain PQ"
     assert rows1 == rows2
     # the ADC plan reads the member codes FROM the index parquet
     assert any(path in f for f in r2.inputFiles()), (path, r2.inputFiles()[:3])
@@ -2243,8 +2237,8 @@ def test_ivfpq_index_append_codes_and_replay(spark, sf_dir):
     from projektdataengineering_spark.queries import similarity as S
     from projektdataengineering_spark.queries.dedup import _TWIN_OFFSET
 
-    v1_path = S._ivfpq_code_index_path(sf_dir)
-    v2_path = S._ivfpq_code_v2_path(sf_dir)
+    v1_path = artifact("ivfpq_codes", sf_dir)
+    v2_path = artifact("ivfpq_codes", sf_dir, gen="v2")
     if os.path.isdir(v2_path):
         shutil.rmtree(v2_path)
 
@@ -2290,7 +2284,7 @@ def test_atomic_installers_concurrent_writer_race(spark, sf_dir, tmp_path):
     """Two writers racing the staged-write installers leave EXACTLY one
     valid generation and both readers agree (r14 verdict task #6 — the
     one multi-writer discipline the executed-layout family hadn't
-    pinned). Directory installer (_atomic_dir_write): the loser's
+    pinned). Directory installer (catalog.install): the loser's
     os.rename onto the winner's directory fails, its staging is
     cleaned, the winner's content survives byte-identical. File
     installer (the .npy centroid/codebook recipe): both writers are
@@ -2301,7 +2295,7 @@ def test_atomic_installers_concurrent_writer_race(spark, sf_dir, tmp_path):
 
     import numpy as np
 
-    from projektdataengineering_spark.queries.layout import _atomic_dir_write
+    from projektdataengineering_spark.catalog import install
 
     final = str(tmp_path / "idx")
 
@@ -2316,14 +2310,14 @@ def test_atomic_installers_concurrent_writer_race(spark, sf_dir, tmp_path):
         writer("A")(p)
         # B completes its ENTIRE install while A sits between staging
         # and rename — the worst-case interleaving
-        _atomic_dir_write(writer("B"), final)
+        install(final, writer("B"))
 
-    _atomic_dir_write(racing_writer, final)  # A stages, B wins, A loses
+    install(final, racing_writer)  # A stages, B wins, A loses
     assert sorted(os.listdir(tmp_path)) == ["idx"], "loser staging must be GCed"
     with open(os.path.join(final, "part-0.txt")) as fh:
         assert fh.read() == "B", "winner's generation must survive intact"
     # idempotent re-install over an existing generation: untouched
-    _atomic_dir_write(writer("C"), final)
+    install(final, writer("C"))
     with open(os.path.join(final, "part-0.txt")) as fh:
         assert fh.read() == "B"
 
@@ -2383,7 +2377,8 @@ def test_merge_vacuum_gc_precision_and_byte_identity(spark, sf_dir):
 
     from projektdataengineering_spark.queries import layout as L
 
-    root = L._vtable_root(sf_dir)
+    gens = L._merge_generations(spark, sf_dir)
+    root = artifact("merge", sf_dir, part="vtable", inputs=gens)
     if os.path.isdir(root):
         shutil.rmtree(root)
 
@@ -2418,8 +2413,7 @@ def test_merge_vacuum_gc_precision_and_byte_identity(spark, sf_dir):
     assert on_disk == retained
 
     # every retained pool file byte-identical to its published source
-    base_dir = L._merge_workdir(sf_dir)
-    gens = [os.path.join(base_dir, d) for d in ("merged2", "merged", "base")]
+    gens = gens[::-1]  # merged2, merged, base
     for rel in sorted(retained):
         src = next(
             os.path.join(g, rel) for g in gens
@@ -2430,7 +2424,7 @@ def test_merge_vacuum_gc_precision_and_byte_identity(spark, sf_dir):
     # published generation dirs untouched: base still holds v0's
     # private files even though the pool GC'd them
     for rel in sorted(only_v0):
-        assert os.path.exists(os.path.join(base_dir, "base", rel)), rel
+        assert os.path.exists(os.path.join(gens[2], rel)), rel
 
     # re-vacuum: idempotent no-op
     stats2 = L._vacuum_expired_versions(root)
@@ -2462,7 +2456,7 @@ def test_einc_probe_covers_every_exact_threshold_pair(spark, sf_dir):
 
     batch_df, _ = S._einc_probe_frames(spark, sf_dir)
     bp = batch_df.toPandas()  # vec_id, vec, cell, probes
-    corpus = spark.read.parquet(S._embed_index_path(sf_dir)).toPandas()
+    corpus = spark.read.parquet(artifact("embed_ivf_index", sf_dir)).toPandas()
 
     def unit(col):
         m = np.stack([np.asarray(v, dtype=np.float64) for v in col])
@@ -2516,19 +2510,19 @@ def test_incremental_neardup_index_reuse_and_partition(spark, sf_dir):
 
     from projektdataengineering_spark.queries import pipeline_ops as P
 
-    path = P._neardup_index_path(sf_dir)
+    path = artifact("neardup_index", sf_dir)
     if os.path.isdir(path):
         shutil.rmtree(path)
 
-    builds0 = P._NEARDUP_INDEX_BUILDS
+    builds0 = BUILDS["neardup_index"]
     r1 = P.dedup_incremental_neardup(spark, sf_dir)
     rows1 = sorted(map(tuple, r1.collect()))
-    assert P._NEARDUP_INDEX_BUILDS == builds0 + 1, "first call must build"
+    assert BUILDS["neardup_index"] == builds0 + 1, "first call must build"
     assert os.path.isdir(path), "index must be persisted"
 
     r2 = P.dedup_incremental_neardup(spark, sf_dir)
     rows2 = sorted(map(tuple, r2.collect()))
-    assert P._NEARDUP_INDEX_BUILDS == builds0 + 1, "second call must NOT rebuild"
+    assert BUILDS["neardup_index"] == builds0 + 1, "second call must NOT rebuild"
     assert rows1 == rows2
 
     # the probe plan reads the CORPUS side from the index parquet
@@ -2554,24 +2548,23 @@ def test_merge_replay_is_byte_identical_and_timetravel_consistent(spark, sf_dir)
     must see v1 − v0 deltas that match the merge audit's actions
     (inserts grow a bucket's key count, deletes shrink it)."""
     import hashlib
-    import os
 
     from projektdataengineering_spark.queries import layout as L
 
     # first apply (or reuse of a prior run — either way installs all)
     audit1 = {tuple(r[:2]): tuple(r[2:]) for r in L.pipeline_merge_apply(
         spark, sf_dir).collect()}
-    base_dir = L._merge_workdir(sf_dir)
-    snap_base = _tree_digest(os.path.join(base_dir, "base"))
-    snap_merged = _tree_digest(os.path.join(base_dir, "merged"))
+    base_path, merged_path = L._merge_versions(spark, sf_dir)
+    snap_base = _tree_digest(base_path)
+    snap_merged = _tree_digest(merged_path)
     assert snap_base and snap_merged
 
     # replay: same changelog, same invocation
     audit2 = {tuple(r[:2]): tuple(r[2:]) for r in L.pipeline_merge_apply(
         spark, sf_dir).collect()}
     assert audit1 == audit2
-    assert _tree_digest(os.path.join(base_dir, "base")) == snap_base
-    assert _tree_digest(os.path.join(base_dir, "merged")) == snap_merged
+    assert _tree_digest(base_path) == snap_base
+    assert _tree_digest(merged_path) == snap_merged
 
     # time-travel consistency: per bucket, v1 keys = v0 keys
     # + inserts − deletes per the audit
@@ -2600,9 +2593,7 @@ def test_merge_evolve_schema_on_disk_and_replay(spark, sf_dir):
     from projektdataengineering_spark.queries import layout as L
 
     rows1 = sorted(map(tuple, L.pipeline_merge_evolve(spark, sf_dir).collect()))
-    base_dir = L._merge_workdir(sf_dir)
-    v1_path = os.path.join(base_dir, "merged")
-    v2_path = os.path.join(base_dir, "merged2")
+    _, v1_path, v2_path = L._merge_generations(spark, sf_dir)
 
     def bucket_schemas(root):
         out = {}
@@ -2676,13 +2667,11 @@ def test_kanon_apply_release_is_k_anonymous_from_disk(spark, sf_dir):
     released byte unchanged (content-addressed, the merge_apply
     discipline)."""
     import hashlib
-    import os
 
     from projektdataengineering_spark.queries import pipeline_ops as P
 
     manifest1 = sorted(map(tuple, P.pipeline_kanon_apply(spark, sf_dir).collect()))
-    base = P._kanon_workdir(sf_dir)
-    released_path = os.path.join(base, "released")
+    released_path = artifact("kanon", sf_dir, part="released")
 
     snap = _tree_digest(released_path)
     assert snap, "release must be physically installed"
@@ -2721,8 +2710,8 @@ def test_embedding_index_append_is_exact_and_idempotent(spark, sf_dir):
 
     audit1 = {r["version"]: tuple(r[1:]) for r in
               S.dedup_embedding_index_append(spark, sf_dir).collect()}
-    v1_path = S._embed_index_path(sf_dir)
-    v2_path = S._embed_index_v2_path(sf_dir)
+    v1_path = artifact("embed_ivf_index", sf_dir)
+    v2_path = artifact("embed_ivf_index", sf_dir, gen="v2")
 
     key = lambda r: (r["vec_id"], r["cell"], tuple(r["vec"]))
     v1_rows = {key(r) for r in spark.read.parquet(v1_path).collect()}
@@ -2756,7 +2745,6 @@ def test_corpus_delta_funnel_partitions_and_replays(spark, sf_dir):
     keep∧quality docs, and a replay must leave every delta byte
     unchanged (content-addressed, the merge_apply discipline)."""
     import hashlib
-    import os
 
     from projektdataengineering_spark.queries import pipeline_ops as P
 
@@ -2764,8 +2752,7 @@ def test_corpus_delta_funnel_partitions_and_replays(spark, sf_dir):
     for lang, source, n_batch, dc, db, qf, adm, toks in m1:
         assert n_batch == dc + db + qf + adm, (lang, source, m1)
 
-    base = P._corpus_delta_workdir(sf_dir)
-    delta_path = os.path.join(base, "delta")
+    delta_path = artifact("corpus_delta", sf_dir, part="delta")
     delta_ids = {r["doc_id"] for r in spark.read.parquet(delta_path).collect()}
     verdict = P.dedup_incremental_neardup(spark, sf_dir)
     kept = {r["doc_id"] for r in verdict.filter("keep").collect()}
@@ -2791,8 +2778,8 @@ def test_neardup_index_append_is_exact_and_idempotent(spark, sf_dir):
 
     audit1 = {r["version"]: tuple(r[1:]) for r in
               P.dedup_neardup_index_append(spark, sf_dir).collect()}
-    v1_path = P._neardup_index_path(sf_dir)
-    v2_path = P._neardup_v2_path(sf_dir)
+    v1_path = artifact("neardup_index", sf_dir)
+    v2_path = artifact("neardup_index", sf_dir, gen="v2")
 
     v1_rows = {tuple(r) for r in spark.read.parquet(v1_path).collect()}
     v2_rows = {tuple(r) for r in spark.read.parquet(v2_path).collect()}
@@ -2828,20 +2815,19 @@ def test_index_vacuum_removes_exactly_orphans(spark, sf_dir):
     import shutil
 
     from projektdataengineering_spark.queries import maintenance as M
-    from projektdataengineering_spark.queries import similarity as S
 
     audit1 = sorted(
         map(tuple, M.pipeline_index_vacuum(spark, sf_dir).collect())
     )
     assert all(row[4] == 1 for row in audit1), audit1  # planted orphan only
 
-    v1 = S._embed_index_path(sf_dir)
-    v2 = S._embed_index_v2_path(sf_dir)
+    v1 = artifact("embed_ivf_index", sf_dir)
+    v2 = artifact("embed_ivf_index", sf_dir, gen="v2")
     before = {p: _tree_digest(p) for p in (v1, v2)}
 
     # plant three orphan shapes in the embedding line (a stale-geometry
     # v2 from a retune, a crashed staged write of v1 in
-    # _atomic_dir_write's real `{path}.tmp.<pid>.<hex>` shape, and a
+    # catalog.install's real `{path}.tmp.<pid>.<hex>` shape, and a
     # crashed CUTOVER stage of a retrain generation) + one DECOY
     # sibling line and one COMPLETED retrain generation (both live
     # configurations that must survive)
@@ -2890,31 +2876,31 @@ def test_commit_generation_cutover_expires_superseded(spark, sf_dir):
     S.sim_ivfpq_index_append(spark, sf_dir)
     S.dedup_embedding_index_append(spark, sf_dir)
 
-    pq_v1 = S._ivfpq_code_index_path(sf_dir)
-    pq_v2 = S._ivfpq_code_v2_path(sf_dir)
-    em_v1 = S._embed_index_path(sf_dir)
-    em_v2 = S._embed_index_v2_path(sf_dir)
-    _, cents0 = S._ivf_index_path(sf_dir)
-    cents_stem = cents0[: -len(".npy")]
+    pq_v1 = artifact("ivfpq_codes", sf_dir)
+    pq_v2 = artifact("ivfpq_codes", sf_dir, gen="v2")
+    em_v1 = artifact("embed_ivf_index", sf_dir)
+    em_v2 = artifact("embed_ivf_index", sf_dir, gen="v2")
 
     # plant generation artifacts by copy (the commit verb's contract is
     # path arithmetic — training real gen-2 lines would test the same
     # rmtree): superseded g1, live g2, a crashed g1 stage, a decoy line
     plants = {
-        "pq_g1": S._ivfpq_code_index_path(sf_dir, gen=1),
-        "pq_g2": S._ivfpq_code_index_path(sf_dir, gen=2),
-        "em_g1": S._member_gen_path(sf_dir, 1),
-        "em_g2": S._member_gen_path(sf_dir, 2),
-        "pq_g1_tmp": f"{S._ivfpq_code_index_path(sf_dir, gen=1)}.tmp.777.feedface",
+        "pq_g1": artifact("ivfpq_codes", sf_dir, gen=1),
+        "pq_g2": artifact("ivfpq_codes", sf_dir, gen=2),
+        "em_g1": artifact("embed_ivf_index", sf_dir, gen=1),
+        "em_g2": artifact("embed_ivf_index", sf_dir, gen=2),
+        "pq_g1_tmp": artifact("ivfpq_codes", sf_dir, gen=1) + ".tmp.777.feedface",
         "decoy": os.path.join(os.path.dirname(pq_v1), "codes_decoytag_g1-e9-o9-a9"),
     }
-    cents_g1 = f"{cents_stem}{S._gen_tag(1)}.npy"
-    cents_g2 = f"{cents_stem}{S._gen_tag(2)}.npy"
+    cents_g1 = artifact("ivf", sf_dir, gen=1)
+    cents_g2 = artifact("ivf", sf_dir, gen=2)
     for p in plants.values():
         if os.path.isdir(p):
             shutil.rmtree(p)
         shutil.copytree(pq_v1, p)
     for c in (cents_g1, cents_g2):
+        if os.path.isdir(c):
+            shutil.rmtree(c)
         with open(c, "w") as fh:
             fh.write("stub centroids\n")
     before = {p: _tree_digest(p) for p in (pq_v1, pq_v2, em_v1, em_v2)}
@@ -2957,28 +2943,34 @@ def test_v2_keys_fold_each_family_batch_definition(sf_dir, monkeypatch):
     from projektdataengineering_spark.queries import similarity as S
 
     # neardup: the split position is the batch definition
-    nd = P._neardup_v2_path(sf_dir)
+    nd = artifact("neardup_index", sf_dir, gen="v2")
     monkeypatch.setattr(P, "_INCR_BATCH_POS", P._INCR_BATCH_POS + 3)
-    nd_retuned = P._neardup_v2_path(sf_dir)
+    nd_retuned = artifact("neardup_index", sf_dir, gen="v2")
     assert nd != nd_retuned, "neardup retune must change the v2 key"
     assert f"-p{P._INCR_BATCH_POS}" in os.path.basename(nd_retuned)
 
     # embedding: twins + the fresh-quarter split — the v2 key itself
     # must fold the split (not merely inherit it from the v1 tag)
-    em_tag = S._einc_batch_tag()
-    assert em_tag.endswith(f"p{S._EINC_BATCH_POS}")
-    em = S._embed_index_v2_path(sf_dir)
+    def v2_batch(kind):  # the batch definition a kind's v2 suffix folds
+        return KINDS[kind][1]()[1]["v2"]
+
+    em_tag = v2_batch("embed_ivf_index")
+    assert em_tag["p"] == S._EINC_BATCH_POS
+    em = artifact("embed_ivf_index", sf_dir, gen="v2")
     monkeypatch.setattr(S, "_EINC_BATCH_POS", S._EINC_BATCH_POS + 3)
-    assert S._einc_batch_tag() != em_tag, "einc retune must change the tag"
-    assert S._embed_index_v2_path(sf_dir) != em
+    assert v2_batch("embed_ivf_index") != em_tag, "einc retune must change the tag"
+    assert artifact("embed_ivf_index", sf_dir, gen="v2") != em
+    assert os.path.basename(artifact("embed_ivf_index", sf_dir, gen="v2")).endswith(
+        f"-p{S._EINC_BATCH_POS}"
+    ), "the v2 key itself must fold the split"
     # the twin-only shared tag is deliberately split-free (the IVFADC
     # family's arrivals carry no split)
-    assert f"p{S._EINC_BATCH_POS}" not in S._batch_geometry_tag()
+    assert "p" not in v2_batch("ivfpq_codes")
 
     # both retuned keys still match the vacuum's v2 line pattern
     for v1p, v2p in (
-        (P._neardup_index_path(sf_dir), nd_retuned),
-        (S._embed_index_path(sf_dir), S._embed_index_v2_path(sf_dir)),
+        (artifact("neardup_index", sf_dir), nd_retuned),
+        (artifact("embed_ivf_index", sf_dir), artifact("embed_ivf_index", sf_dir, gen="v2")),
     ):
         assert os.path.basename(v2p).startswith(
             f"{os.path.basename(v1p)}_v2"
@@ -3020,6 +3012,7 @@ def test_ivfpq_cell_skew_flip_and_retrain_generation(spark, sf_dir):
     touching the gen-0 centroids the live code tables were encoded
     against — with read-or-build reuse on the bumped key too."""
     import os
+    import shutil
 
     from pyspark.sql import functions as F
 
@@ -3035,7 +3028,7 @@ def test_ivfpq_cell_skew_flip_and_retrain_generation(spark, sf_dir):
 
     # hot-spot append: the arrivals all land in the fullest cell;
     # doubling the corpus into one list forces max/(N/K) ≥ K/2 > bound
-    v1 = spark.read.parquet(S._ivfpq_code_index_path(sf_dir))
+    v1 = spark.read.parquet(artifact("ivfpq_codes", sf_dir))
     n = v1.count()
     m1 = v1.groupBy("cell").agg(F.count(F.lit(1)).alias("mass"))
     hot_cell = m1.orderBy(F.desc("mass"), "cell").first()["cell"]
@@ -3050,26 +3043,26 @@ def test_ivfpq_cell_skew_flip_and_retrain_generation(spark, sf_dir):
     assert flipped["skew_ratio"] > S._IVF_SKEW_BOUND
 
     # retrain wiring: bumped key, gen-0 untouched, reuse on re-call
-    tag0, p0 = S._ivf_index_path(sf_dir)
-    tag1, p1 = S._ivf_index_path(sf_dir, gen=1)
-    assert tag1 != tag0 and p1 != p0
+    p0 = artifact("ivf", sf_dir)
+    p1 = artifact("ivf", sf_dir, gen=1)
+    assert p1 != p0
     if os.path.exists(p1):
-        os.unlink(p1)
-    S._IVF_CENTROID_CACHE.pop(tag1, None)
+        shutil.rmtree(p1)
+    S._IVF_CENTROID_CACHE.pop(p1, None)
     mtime0 = os.path.getmtime(p0)
-    trains0 = S._IVF_TRAIN_RUNS
+    trains0 = BUILDS["ivf"]
     try:
         cents = S.ivf_retrain_generation(spark, sf_dir, gen=1)
-        assert S._IVF_TRAIN_RUNS == trains0 + 1, "bumped key must train"
+        assert BUILDS["ivf"] == trains0 + 1, "bumped key must train"
         assert os.path.exists(p1), "retrained centroids under the new key"
         assert os.path.getmtime(p0) == mtime0, "gen-0 centroids untouched"
         assert cents.shape == (S._IVF_K, S._IVF_DIM)
         S.ivf_retrain_generation(spark, sf_dir, gen=1)
-        assert S._IVF_TRAIN_RUNS == trains0 + 1, "bumped key must reuse too"
+        assert BUILDS["ivf"] == trains0 + 1, "bumped key must reuse too"
     finally:
         if os.path.exists(p1):
-            os.unlink(p1)
-        S._IVF_CENTROID_CACHE.pop(tag1, None)
+            shutil.rmtree(p1)
+        S._IVF_CENTROID_CACHE.pop(p1, None)
 
 
 def test_ivfpq_skew_cutover_builds_generation_line(spark, sf_dir, monkeypatch):
@@ -3096,19 +3089,19 @@ def test_ivfpq_skew_cutover_builds_generation_line(spark, sf_dir, monkeypatch):
     from projektdataengineering_spark.queries import maintenance as M
     from projektdataengineering_spark.queries import similarity as S
 
-    v1 = S._ivfpq_code_index_path(sf_dir)
-    v2 = S._ivfpq_code_v2_path(sf_dir)
-    g1 = S._ivfpq_code_index_path(sf_dir, gen=1)
-    em_v1 = S._embed_index_path(sf_dir)
-    em_v2 = S._embed_index_v2_path(sf_dir)
-    mg1 = S._member_gen_path(sf_dir, 1)
-    tag1, cpath1 = S._ivf_index_path(sf_dir, gen=1)
+    v1 = artifact("ivfpq_codes", sf_dir)
+    v2 = artifact("ivfpq_codes", sf_dir, gen="v2")
+    g1 = artifact("ivfpq_codes", sf_dir, gen=1)
+    em_v1 = artifact("embed_ivf_index", sf_dir)
+    em_v2 = artifact("embed_ivf_index", sf_dir, gen="v2")
+    mg1 = artifact("embed_ivf_index", sf_dir, gen=1)
+    cpath1 = artifact("ivf", sf_dir, gen=1)
     for d in (g1, mg1):
         if os.path.isdir(d):
             shutil.rmtree(d)
     if os.path.exists(cpath1):
-        os.unlink(cpath1)
-    S._IVF_CENTROID_CACHE.pop(tag1, None)
+        shutil.rmtree(cpath1)
+    S._IVF_CENTROID_CACHE.pop(cpath1, None)
 
     S.sim_ivfpq_index_append(spark, sf_dir)  # ensure v1+v2 on disk
     S.dedup_embedding_index_append(spark, sf_dir)  # ensure member v1+v2
@@ -3116,19 +3109,19 @@ def test_ivfpq_skew_cutover_builds_generation_line(spark, sf_dir, monkeypatch):
     before = {p: _tree_digest(p) for p in (v1, v2, em_v1, em_v2)}
     bound0 = S._IVF_SKEW_BOUND
     monkeypatch.setattr(S, "_IVF_SKEW_BOUND", 1.0)  # fixture skew ~1.3
-    trains0, enc0 = S._IVF_TRAIN_RUNS, S._IVFPQ_ENCODE_RUNS
-    mb0 = S._MEMBER_GEN_BUILDS
+    trains0, enc0 = BUILDS["ivf"], BUILDS["ivfpq_codes"]
+    mb0 = BUILDS["embed_ivf_index"]
     try:
         assert S.ivfpq_retrain_if_skewed(spark, sf_dir) == (True, 1)
-        assert S._IVF_TRAIN_RUNS == trains0 + 1, "cutover must retrain"
-        assert S._IVFPQ_ENCODE_RUNS == enc0 + 1, "cutover must re-encode"
-        assert S._MEMBER_GEN_BUILDS == mb0 + 1, "cutover must re-assign members"
+        assert BUILDS["ivf"] == trains0 + 1, "cutover must retrain"
+        assert BUILDS["ivfpq_codes"] == enc0 + 1, "cutover must re-encode"
+        assert BUILDS["embed_ivf_index"] == mb0 + 1, "cutover must re-assign members"
         assert os.path.exists(cpath1), "gen-1 centroids at the bumped key"
         assert os.path.isdir(g1), "gen-1 code line at the bumped key"
         assert os.path.isdir(mg1), "gen-1 MEMBER line at the bumped key"
         # one generation key, two consumers: same _g1 tag fragment
-        gen_frag = S._gen_tag(1)
-        assert g1.endswith(gen_frag) and mg1.endswith(gen_frag)
+        gen_frag = g1[len(v1):]
+        assert gen_frag.startswith("_g1-") and mg1 == em_v1 + gen_frag
         cells = [d for d in os.listdir(g1) if d.startswith("cell=")]
         assert len(cells) > 1, "cutover line must stay cell-partitioned"
         g1_ids = {
@@ -3169,9 +3162,9 @@ def test_ivfpq_skew_cutover_builds_generation_line(spark, sf_dir, monkeypatch):
         )
         # second trigger call: read-or-build reuse on ALL artifacts
         assert S.ivfpq_retrain_if_skewed(spark, sf_dir) == (True, 1)
-        assert S._IVF_TRAIN_RUNS == trains0 + 1
-        assert S._IVFPQ_ENCODE_RUNS == enc0 + 1
-        assert S._MEMBER_GEN_BUILDS == mb0 + 1
+        assert BUILDS["ivf"] == trains0 + 1
+        assert BUILDS["ivfpq_codes"] == enc0 + 1
+        assert BUILDS["embed_ivf_index"] == mb0 + 1
         # the host loop (r16 ADVICE): audit the cut-over generation
         # under the RESTORED bound — gen-1's natural skew clears it,
         # so the loop parks at (False, 1) instead of being stuck
@@ -3193,8 +3186,8 @@ def test_ivfpq_skew_cutover_builds_generation_line(spark, sf_dir, monkeypatch):
             if os.path.isdir(d):
                 shutil.rmtree(d)
         if os.path.exists(cpath1):
-            os.unlink(cpath1)
-        S._IVF_CENTROID_CACHE.pop(tag1, None)
+            shutil.rmtree(cpath1)
+        S._IVF_CENTROID_CACHE.pop(cpath1, None)
 
 
 def test_ivfpq_cutover_line_serves(spark, sf_dir, emb_matrix, monkeypatch):
@@ -3217,9 +3210,9 @@ def test_ivfpq_cutover_line_serves(spark, sf_dir, emb_matrix, monkeypatch):
         _TWIN_OFFSET,
     )
 
-    g1 = S._ivfpq_code_index_path(sf_dir, gen=1)
-    mg1 = S._member_gen_path(sf_dir, 1)
-    tag1, cpath1 = S._ivf_index_path(sf_dir, gen=1)
+    g1 = artifact("ivfpq_codes", sf_dir, gen=1)
+    mg1 = artifact("embed_ivf_index", sf_dir, gen=1)
+    cpath1 = artifact("ivf", sf_dir, gen=1)
     # clean slate (r16 review): leftover gen-1 artifacts from an
     # interrupted prior run would make this test certify stale bytes
     # instead of the current cutover path
@@ -3227,8 +3220,8 @@ def test_ivfpq_cutover_line_serves(spark, sf_dir, emb_matrix, monkeypatch):
         if os.path.isdir(d):
             shutil.rmtree(d)
     if os.path.exists(cpath1):
-        os.unlink(cpath1)
-    S._IVF_CENTROID_CACHE.pop(tag1, None)
+        shutil.rmtree(cpath1)
+    S._IVF_CENTROID_CACHE.pop(cpath1, None)
     monkeypatch.setattr(S, "_IVF_SKEW_BOUND", 1.0)  # fixture skew ~1.3
     try:
         assert S.ivfpq_retrain_if_skewed(spark, sf_dir) == (True, 1)
@@ -3299,8 +3292,8 @@ def test_ivfpq_cutover_line_serves(spark, sf_dir, emb_matrix, monkeypatch):
             if os.path.isdir(d):
                 shutil.rmtree(d)
         if os.path.exists(cpath1):
-            os.unlink(cpath1)
-        S._IVF_CENTROID_CACHE.pop(tag1, None)
+            shutil.rmtree(cpath1)
+        S._IVF_CENTROID_CACHE.pop(cpath1, None)
 
 
 def test_qcls_model_artifact_reuse(spark, sf_dir):
@@ -3316,21 +3309,21 @@ def test_qcls_model_artifact_reuse(spark, sf_dir):
 
     from projektdataengineering_spark.queries import mlprep as ML
 
-    path = ML._qcls_model_path()
+    path = artifact("qcls_model", sf_dir)
     if os.path.isdir(path):
         shutil.rmtree(path)
-    b0 = ML._QCLS_MODEL_BUILDS
+    b0 = BUILDS["qcls_model"]
     out1 = {
         r["doc_id"]: (r["n_feats"], r["logit_sum"], r["keep"])
         for r in ML.pipeline_quality_classifier(spark, sf_dir).collect()
     }
-    assert ML._QCLS_MODEL_BUILDS == b0 + 1, "first call must install"
+    assert BUILDS["qcls_model"] == b0 + 1, "first call must install"
     assert os.path.isdir(path), "artifact parquet at the version key"
     out2 = {
         r["doc_id"]: (r["n_feats"], r["logit_sum"], r["keep"])
         for r in ML.pipeline_quality_classifier(spark, sf_dir).collect()
     }
-    assert ML._QCLS_MODEL_BUILDS == b0 + 1, "second call must reuse"
+    assert BUILDS["qcls_model"] == b0 + 1, "second call must reuse"
     assert out1 == out2
     # artifact parameters == the documented derivation (md5 nibbles)
     pos = lambda h, i: F.expr(
@@ -3398,16 +3391,16 @@ def test_commit_generation_cutover_refuses_missing_live_gen(spark, sf_dir):
     from projektdataengineering_spark.queries import similarity as S
 
     S.sim_ivfpq_index_append(spark, sf_dir)
-    pq_v1 = S._ivfpq_code_index_path(sf_dir)
-    g1 = S._ivfpq_code_index_path(sf_dir, gen=1)
-    g3_code = S._ivfpq_code_index_path(sf_dir, gen=3)
-    g3_member = S._member_gen_path(sf_dir, 3)
-    _, g3_cents = S._ivf_index_path(sf_dir, gen=3)
+    pq_v1 = artifact("ivfpq_codes", sf_dir)
+    g1 = artifact("ivfpq_codes", sf_dir, gen=1)
+    g3_code = artifact("ivfpq_codes", sf_dir, gen=3)
+    g3_member = artifact("embed_ivf_index", sf_dir, gen=3)
+    g3_cents = artifact("ivf", sf_dir, gen=3)
     for p in (g1, g3_code, g3_member):
         if os.path.isdir(p):
             shutil.rmtree(p)
     if os.path.exists(g3_cents):
-        os.unlink(g3_cents)
+        shutil.rmtree(g3_cents)
     shutil.copytree(pq_v1, g1)  # a superseded line the bug would sweep
     try:
         with _pytest.raises(FileNotFoundError):
@@ -3436,9 +3429,9 @@ def test_member_gen_index_follows_serving_line(spark, sf_dir):
 
     from projektdataengineering_spark.queries import similarity as S
 
-    g1 = S._member_gen_path(sf_dir, 1)
-    g2 = S._member_gen_path(sf_dir, 2)
-    tag1, cpath1 = S._ivf_index_path(sf_dir, gen=1)
+    g1 = artifact("embed_ivf_index", sf_dir, gen=1)
+    g2 = artifact("embed_ivf_index", sf_dir, gen=2)
+    cpath1 = artifact("ivf", sf_dir, gen=1)
     for d in (g1, g2):
         if os.path.isdir(d):
             shutil.rmtree(d)
@@ -3464,8 +3457,8 @@ def test_member_gen_index_follows_serving_line(spark, sf_dir):
             if os.path.isdir(d):
                 shutil.rmtree(d)
         if os.path.exists(cpath1):
-            os.unlink(cpath1)
-        S._IVF_CENTROID_CACHE.pop(tag1, None)
+            shutil.rmtree(cpath1)
+        S._IVF_CENTROID_CACHE.pop(cpath1, None)
 
 
 def test_retrain_trigger_audits_member_line(spark, sf_dir, monkeypatch):
@@ -3482,16 +3475,16 @@ def test_retrain_trigger_audits_member_line(spark, sf_dir, monkeypatch):
 
     S.sim_ivfpq_index_append(spark, sf_dir)
     S.dedup_embedding_index_append(spark, sf_dir)
-    member_v2 = S._embed_index_v2_path(sf_dir)
-    g1 = S._ivfpq_code_index_path(sf_dir, gen=1)
-    mg1 = S._member_gen_path(sf_dir, 1)
-    tag1, cpath1 = S._ivf_index_path(sf_dir, gen=1)
+    member_v2 = artifact("embed_ivf_index", sf_dir, gen="v2")
+    g1 = artifact("ivfpq_codes", sf_dir, gen=1)
+    mg1 = artifact("embed_ivf_index", sf_dir, gen=1)
+    cpath1 = artifact("ivf", sf_dir, gen=1)
     for d in (g1, mg1):
         if os.path.isdir(d):
             shutil.rmtree(d)
     if os.path.exists(cpath1):
-        os.unlink(cpath1)
-    S._IVF_CENTROID_CACHE.pop(tag1, None)
+        shutil.rmtree(cpath1)
+    S._IVF_CENTROID_CACHE.pop(cpath1, None)
 
     real = S._cell_masses
 
@@ -3511,7 +3504,7 @@ def test_retrain_trigger_audits_member_line(spark, sf_dir, monkeypatch):
     try:
         # code line clears the real bound; only the member line breaches
         code_clears = not S._occupancy_audit(
-            2, real(spark, S._ivfpq_code_v2_path(sf_dir))
+            2, real(spark, artifact("ivfpq_codes", sf_dir, gen="v2"))
         ).collect()[0]["needs_retrain"]
         assert code_clears, "precondition: fixture code skew under bound"
         assert S.ivfpq_retrain_if_skewed(spark, sf_dir) == (True, 1)
@@ -3523,8 +3516,8 @@ def test_retrain_trigger_audits_member_line(spark, sf_dir, monkeypatch):
             if os.path.isdir(d):
                 shutil.rmtree(d)
         if os.path.exists(cpath1):
-            os.unlink(cpath1)
-        S._IVF_CENTROID_CACHE.pop(tag1, None)
+            shutil.rmtree(cpath1)
+        S._IVF_CENTROID_CACHE.pop(cpath1, None)
 
 
 def test_shuffle_shard_prefix_sum_matches_global_window(spark, sf_dir):
@@ -3585,10 +3578,10 @@ def test_gen_serving_reuses_persisted_lines(spark, sf_dir):
 
     n1 = S.sim_ivfpq_gen_serving(spark, sf_dir).count()
     trains0, enc0, mb0 = (
-        S._IVF_TRAIN_RUNS, S._IVFPQ_ENCODE_RUNS, S._MEMBER_GEN_BUILDS,
+        BUILDS["ivf"], BUILDS["ivfpq_codes"], BUILDS["embed_ivf_index"],
     )
     n2 = S.sim_ivfpq_gen_serving(spark, sf_dir).count()
-    assert (S._IVF_TRAIN_RUNS, S._IVFPQ_ENCODE_RUNS, S._MEMBER_GEN_BUILDS) == (
+    assert (BUILDS["ivf"], BUILDS["ivfpq_codes"], BUILDS["embed_ivf_index"]) == (
         trains0, enc0, mb0,
     ), "second serving call must not rebuild any gen-1 artifact"
     assert n1 == n2 > 0

@@ -728,14 +728,14 @@ def test_embedding_incremental_probes_persisted_index(spark, sf_dir):
     once at index build) — and the per-cell BLAS kernel must appear
     exactly ONCE (both verdicts are conditional mins of a single
     aggregate over the pair stream)."""
-    from projektdataengineering_spark.queries import similarity as S
+    from projektdataengineering_spark.catalog import artifact
 
     df = REGISTRY["dedup_embedding_incremental"].fn(spark, sf_dir)
     f = plan_facts(df)
     assert f.count("FlatMapGroupsInPandas") == 1, f.nodes
     assert f.cartesian_like == 0, f.nodes
     # the persisted member lists are read as a real parquet scan
-    idx = S._embed_index_path(sf_dir)
+    idx = artifact("embed_ivf_index", sf_dir)
     assert any(idx in fl for fl in df.inputFiles()), (idx, df.inputFiles())
 
 
