@@ -69,6 +69,22 @@ _TWIN_EVERY = 20
 _TWIN_AMPLITUDE = 0.06
 EMBEDDING_DUP_THRESHOLD = 0.95
 
+
+def _planted_twins(frame: DataFrame) -> DataFrame:
+    """The planted twins of a (vec_id, vec) frame: every
+    ``_TWIN_EVERY``-th vector re-emitted at id + ``_TWIN_OFFSET`` with
+    component i scaled by 1 + amp·((i mod 7) − 3)/3 (0-indexed) — the
+    one Spark definition of the twin fixture."""
+    return frame.filter(F.col("vec_id") % _TWIN_EVERY == 0).select(
+        (F.col("vec_id") + _TWIN_OFFSET).alias("vec_id"),
+        F.transform(
+            "vec",
+            lambda x, i: x
+            * (1.0 + _TWIN_AMPLITUDE * ((i % 7).cast("double") - 3.0) / 3.0),
+        ).alias("vec"),
+    )
+
+
 # DuckDB oracle: recompute the SAME twin construction in SQL (list
 # index i is 1-based there, Spark's transform index is 0-based — hence
 # (i-1)), then score EVERY pair exactly (no LSH) and keep pairs >= the
@@ -147,15 +163,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_rows = emb.count()  # parquet-stats count for adaptive LSH bits
     vec = _as_double(F.col("embedding"))
     base = emb.select("vec_id", vec.alias("vec"))
-    twins = base.filter(F.col("vec_id") % _TWIN_EVERY == 0).select(
-        (F.col("vec_id") + _TWIN_OFFSET).alias("vec_id"),
-        F.transform(
-            "vec",
-            lambda x, i: x
-            * (1.0 + _TWIN_AMPLITUDE * ((i % 7).cast("double") - 3.0) / 3.0),
-        ).alias("vec"),
-    )
-    corpus = base.unionByName(twins)
+    corpus = base.unionByName(_planted_twins(base))
     e = corpus.select("vec_id", "vec", _norm(F.col("vec")).alias("norm"))
     scored = lsh_candidate_cosine_frame(
         e, directed=False, n_rows=n_rows + n_rows // _TWIN_EVERY + 1

@@ -2890,14 +2890,14 @@ artifact_kind(
 def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LIVE nightly corpus-delta loop (round-13 verdict task #4):
     pipeline_corpus_delta's batch composition run as ONE CONTINUOUS
-    STREAMING QUERY through the engine's own extension seams — the
-    partition-parallel docsfeed Python source walks the documents
-    table in monotone doc_id-window micro-batches (executor-side
-    pyarrow range scans, sources/pydatasource.py), each epoch is
-    signed map-side (the portable-MinHash lanes — pure array
-    expressions, no shuffle), probed against the PERSISTED corpus
-    signature index as a stream-static LEFT ANTI join (stateless, the
-    index is never re-signed), deduped across epochs by a CUSTOM
+    STREAMING QUERY — the batch split's documents are staged as one
+    parquet file per monotone doc_id-window epoch and replayed one
+    epoch per micro-batch (staged epoch files → JVM file source,
+    streaming.epoch_file_feed), each epoch is signed map-side (the
+    portable-MinHash lanes — pure array expressions, no shuffle),
+    probed against the PERSISTED corpus signature index as a
+    stream-static LEFT ANTI join (stateless, the index is never
+    re-signed), deduped across epochs by a CUSTOM
     STATEFUL first-wins fold over signature hash buckets
     (streaming/stateful.py bucketed_state; each bucket's state is its
     seen-signature list, since per-signature groups would pay one
@@ -2916,8 +2916,8 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (corpus or cross-epoch) published, no quality-fail leaked.
     Epoch-replay idempotence on this ledger is pinned by
     tests/test_formats_sink.py; completion is terminal-state (the
-    workdir, checkpoint included, installs as one unit only after
-    processAllAvailable returns — a crashed partial run is never
+    workdir, feed and checkpoint included, installs as one unit only
+    after processAllAvailable returns — a crashed partial run is never
     visible, the r13-ADVICE discipline).
 
     Scale shape: the corpus side is a parquet index scan (built once
@@ -2933,18 +2933,16 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from ..sources.pydatasource import register_synthetic_source
     from ..sources.pysink import read_ledger, register_ledger_sink
-    from ..streaming import stream_state_partitions
+    from ..streaming import epoch_file_feed, stream_state_partitions
     from ..streaming.stateful import STATE_BUCKETS, bucketed_state
 
-    # the whole workdir (ledger, manifests, checkpoint) is one staged
-    # install: a run that dies mid-stream never becomes visible, so a
-    # visible ledger is a complete one
+    # the whole workdir (feed, ledger, manifests, checkpoint) is one
+    # staged install: a run that dies mid-stream never becomes visible,
+    # so a visible ledger is a complete one
     def run_stream(base: str) -> None:
         ledger = os.path.join(base, "ledger")
         os.makedirs(ledger)
-        register_synthetic_source(spark)
         register_ledger_sink(spark)
 
         # static side first: read-or-build the persisted corpus index
@@ -2952,16 +2950,18 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.col(f"m{i}") for i in range(_PORTABLE_LANES)]
         )
 
-        feed = (
-            spark.readStream.format("docsfeed")
-            .option("path", os.path.join(sf_dir, "documents.parquet"))
-            .option("epochs", _STREAM_DELTA_EPOCHS)
-            .option("partitions", 4)
-            .load()
+        # the batch split as monotone doc_id-window epochs
+        docs = load_table(spark, sf_dir, "documents")
+        lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+        arrivals = docs.filter(F.expr(_INCR_SPLIT_SPARK)).select(
+            "doc_id", "lang", "source", "text",
+            ((F.col("doc_id") - lo) * _STREAM_DELTA_EPOCHS / (hi - lo + 1))
+            .cast("int")
+            .alias("epoch"),
         )
+        feed = epoch_file_feed(spark, arrivals, os.path.join(base, "feed"))
         toked = (
-            feed.filter(F.expr(_INCR_SPLIT_SPARK))
-            .select(
+            feed.select(
                 "doc_id",
                 "lang",
                 "source",

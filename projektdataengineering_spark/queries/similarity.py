@@ -2599,19 +2599,10 @@ def _einc_arrival_frame(e: DataFrame) -> DataFrame:
     md5-split fresh quarter plus the planted ±6% twins of every 20th
     base vector — ONE definition of the arrival fixture, shared by the
     batch incremental dedup (_einc_probe_frames) and the streaming
-    twin's seen-so-far reconstruction (stream_embedding_delta)."""
-    from .dedup import _TWIN_AMPLITUDE, _TWIN_EVERY, _TWIN_OFFSET
+    twin's epoch feed (stream_embedding_delta)."""
+    from .dedup import _planted_twins
 
-    fresh = e.filter(F.expr(_EINC_SPLIT_SPARK))
-    twins = e.filter(F.col("vec_id") % _TWIN_EVERY == 0).select(
-        (F.col("vec_id") + _TWIN_OFFSET).alias("vec_id"),
-        F.transform(
-            "vec",
-            lambda x, i: x
-            * (1.0 + _TWIN_AMPLITUDE * ((i % 7).cast("double") - 3.0) / 3.0),
-        ).alias("vec"),
-    )
-    return fresh.unionByName(twins)
+    return e.filter(F.expr(_EINC_SPLIT_SPARK)).unionByName(_planted_twins(e))
 
 
 def _ivfpq_append_oracle() -> str:
@@ -2908,7 +2899,7 @@ def dedup_embedding_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # epoch verdict per micro-batch through the manifest-committed ledger
 # ---------------------------------------------------------------------------
 
-_ESTREAM_EPOCHS = 3  # base id-window epochs; the feed adds 1 twin epoch
+_ESTREAM_EPOCHS = 3  # base id-window epochs; the twins add 1 epoch
 
 
 artifact_kind(
@@ -2920,16 +2911,18 @@ artifact_kind(
 def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LIVE nightly loop on the VECTOR modality — the streaming
     twin of dedup_embedding_incremental, completing the incremental-
-    dedup matrix (text × vectors, batch × stream): the embfeed Python
-    source walks the embeddings table in monotone vec_id-window
-    micro-batches and then emits the planted-twin epoch (the exact
-    batch fixture, float64-bit-identical, all twin ids above all base
-    ids — so stream arrival order IS global id order); each epoch's
-    arrivals are verdicted inside foreachBatch against the PERSISTED
-    IVF member lists (corpus — never re-assigned) plus the arrivals
-    already seen (each epoch's assigned frame is checkpointed and
-    carried forward — the index-append discipline in-process, so
-    seen-so-far is never re-derived from the table), through the SAME
+    dedup matrix (text × vectors, batch × stream): the batch twin's own
+    arrivals (_einc_arrival_frame) are staged as one parquet file per
+    epoch — the base arrivals in monotone vec_id windows, then the
+    planted-twin epoch (all twin ids above all base ids — so stream
+    arrival order IS global id order) — and replayed one epoch per
+    micro-batch (staged epoch files → JVM file source,
+    streaming.epoch_file_feed); each epoch's arrivals are verdicted
+    inside foreachBatch against the PERSISTED IVF member lists
+    (corpus — never re-assigned) plus the arrivals already seen (each
+    epoch's assigned frame is checkpointed and carried forward — the
+    index-append discipline in-process, so seen-so-far is never
+    re-derived from the table), through the SAME
     _ivf_assign quantizer and _cell_threshold_matches kernel as the
     batch twin; the per-epoch verdict rows land in the ledgersink
     with one atomic manifest per epoch (the foreachBatch per-epoch
@@ -2946,9 +2939,9 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival must still point at it, which is why the ledger alone is
     not sufficient state). Epoch-manifest replay idempotence is pinned
     by tests/test_formats_sink.py; completion is terminal-state (the
-    r13-ADVICE guard: the workdir, checkpoint included, installs as one
-    unit only after the stream drains, so a crashed partial run is
-    never visible).
+    r13-ADVICE guard: the workdir, feed and checkpoint included,
+    installs as one unit only after the stream drains, so a crashed
+    partial run is never visible).
 
     Scale shape: per epoch, only the epoch's arrivals are assigned
     map-side; the corpus side is a parquet index scan; the quadratic
@@ -2960,20 +2953,13 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared kernel."""
     import os
 
-    from .dedup import (
-        EMBEDDING_DUP_THRESHOLD,
-        _TWIN_AMPLITUDE,
-        _TWIN_EVERY,
-        _TWIN_OFFSET,
-    )
+    from ..sources.pysink import read_ledger, register_ledger_sink
+    from ..streaming import epoch_file_feed, stream_state_partitions
+    from .dedup import EMBEDDING_DUP_THRESHOLD, _TWIN_OFFSET
 
     def run_stream(base: str) -> None:
         ledger = os.path.join(base, "ledger")
         os.makedirs(ledger)
-        from ..sources.pydatasource import register_synthetic_source
-        from ..sources.pysink import register_ledger_sink
-
-        register_synthetic_source(spark)
         register_ledger_sink(spark)
 
         e_all = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
@@ -2989,30 +2975,21 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         # crash never installs the workdir.
         acc: dict = {"seen": None}
 
-        # Twin geometry passed EXPLICITLY from dedup.py's constants
-        # (r14 ADVICE): the reader's defaults happen to match, but a
-        # change to _TWIN_* would otherwise desync the stream fixture
-        # from the batch/oracle fixture with no signal — one source of
-        # truth, wired at build time.
-        feed = (
-            spark.readStream.format("embfeed")
-            .option("path", os.path.join(sf_dir, "embeddings.parquet"))
-            .option("epochs", _ESTREAM_EPOCHS)
-            .option("partitions", 4)
-            .option("twinevery", _TWIN_EVERY)
-            .option("twinoffset", _TWIN_OFFSET)
-            .option("twinamp", _TWIN_AMPLITUDE)
-            .load()
+        # the batch twin's arrivals: base arrivals in monotone vec_id
+        # windows 0..E-1, the planted twins (ids above every base id)
+        # in epoch E
+        lo, hi = e_all.agg(F.min("vec_id"), F.max("vec_id")).first()
+        arrivals = _einc_arrival_frame(e_all).withColumn(
+            "epoch",
+            F.when(F.col("vec_id") >= _TWIN_OFFSET, _ESTREAM_EPOCHS)
+            .otherwise((F.col("vec_id") - lo) * _ESTREAM_EPOCHS / (hi - lo + 1))
+            .cast("int"),
         )
-        # the feed emits every base row + the twin epoch; arrivals are
-        # the md5-split quarter plus all twins (ids above _TWIN_OFFSET)
-        stream_arrivals = feed.filter(
-            F.expr(_EINC_SPLIT_SPARK) | (F.col("vec_id") >= _TWIN_OFFSET)
+        stream_arrivals = epoch_file_feed(
+            spark, arrivals, os.path.join(base, "feed")
         )
 
         def publish_epoch(df, batch_id: int) -> None:
-            if df.isEmpty():
-                return  # empty epoch window: nothing to verdict
             batch_e = _ivf_assign(df.select("vec_id", "vec"), bc).localCheckpoint()
             seen = acc["seen"]  # prior epochs' assigned arrivals
             batch_leg = batch_e.select(
@@ -3082,8 +3059,6 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else acc["seen"].unionByName(batch_e)
             )
 
-        from ..streaming import stream_state_partitions
-
         with stream_state_partitions(spark):
             q = (
                 stream_arrivals.writeStream.foreachBatch(publish_epoch)
@@ -3097,8 +3072,6 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 q.stop()
             q.awaitTermination()
-
-    from ..sources.pysink import read_ledger
 
     back = read_ledger(
         spark,

@@ -315,236 +315,9 @@ class SyntheticDocsFeedStreamReader(DataSourceStreamReader):
                 pass
 
 
-class DocsFeedDataSource(DataSource):
-    """``spark.readStream.format("docsfeed").option("path", parquet)``
-    — a partition-parallel streaming feed over a REAL parquet table
-    (the documents fixture), completing the source-extension seam's
-    production story: synthdocsfeed proves the offset/partition
-    lifecycle on generated rows; this reader walks an existing table's
-    doc_id key space in ``epochs`` monotone id-window micro-batches,
-    each window split into ``partitions`` executor tasks that read
-    their slice straight from parquet with a pyarrow range filter
-    (row-group pruning via column stats — the predicate ships to the
-    scan, nothing row-shaped passes through the driver). Monotone
-    epochs make stream-order first-wins ≡ global min-id first-wins,
-    which is what lets stream_corpus_delta certify against the batch
-    twin's exact oracle."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "docsfeed"
-
-    def schema(self) -> str:
-        return "doc_id bigint, lang string, source string, text string"
-
-    def streamReader(self, schema) -> "DocsFeedStreamReader":
-        return DocsFeedStreamReader(self.options)
-
-
-class DocsFeedStreamReader(DataSourceStreamReader):
-    """Offsets are ``{"epoch": e}``; epoch e covers the id window
-    [min + span·e/E, min + span·(e+1)/E). The id bounds come from the
-    parquet FOOTER (driver-side metadata read, no data scan) — the
-    replay contract is the same as synthdocsfeed's: a re-planned epoch
-    re-reads the exact same id window from the immutable table."""
-
-    def __init__(self, options) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("docsfeed requires .option('path', parquet)")
-        self.epochs = int(options.get("epochs", "4"))
-        self.n_parts = int(options.get("partitions", "4"))
-        lo, hi = self._id_bounds(self.path)
-        self._lo, self._hi = lo, hi + 1  # [lo, hi)
-        self._epoch = 0
-
-    @staticmethod
-    def _id_bounds(path: str) -> tuple[int, int]:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-        los, his = [], []
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            for i in range(rg.num_columns):
-                c = rg.column(i)
-                if c.path_in_schema == "doc_id" and c.statistics is not None:
-                    los.append(c.statistics.min)
-                    his.append(c.statistics.max)
-        if not los:
-            raise ValueError(f"docsfeed: no doc_id stats in {path}")
-        return min(los), max(his)
-
-    def _window(self, e0: int, e1: int) -> tuple[int, int]:
-        span = self._hi - self._lo
-        return (
-            self._lo + span * e0 // self.epochs,
-            self._lo + span * e1 // self.epochs,
-        )
-
-    def initialOffset(self) -> dict:
-        return {"epoch": 0}
-
-    def latestOffset(self) -> dict:
-        self._epoch = min(self._epoch + 1, self.epochs)
-        return {"epoch": self._epoch}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = self._window(int(start["epoch"]), int(end["epoch"]))
-        n = max(1, self.n_parts)
-        bounds = [lo + (hi - lo) * i // n for i in range(n + 1)]
-        return [
-            RangeInputPartition(a, b)
-            for a, b in zip(bounds, bounds[1:])
-            if b > a
-        ]
-
-    def read(self, partition: RangeInputPartition):
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(
-            self.path,
-            columns=["doc_id", "lang", "source", "text"],
-            filters=[("doc_id", ">=", partition.lo),
-                     ("doc_id", "<", partition.hi)],
-        )
-        cols = [tbl.column(c).to_pylist()
-                for c in ("doc_id", "lang", "source", "text")]
-        return iter(list(zip(*cols)))
-
-    def commit(self, end: dict) -> None:
-        pass  # immutable table + deterministic windows: replay IS safe
-
-
-class EmbRangePartition(InputPartition):
-    """One executor task's [lo, hi) base-id slice; ``twin`` marks the
-    planted-twin epoch (emit perturbed copies at id + offset)."""
-
-    def __init__(self, lo: int, hi: int, twin: bool) -> None:
-        self.lo = lo
-        self.hi = hi
-        self.twin = twin
-
-
-class EmbFeedDataSource(DataSource):
-    """``spark.readStream.format("embfeed").option("path", parquet)`` —
-    the VECTOR twin of docsfeed: walks the embeddings table's vec_id
-    space in ``epochs`` monotone id-window micro-batches, then emits
-    ONE final epoch of planted near-duplicate twins (every
-    ``twinevery``-th base vector, per-component ±``twinamp``
-    perturbation, id + ``twinoffset`` — the exact fixture geometry the
-    batch dedup family certifies against, reproduced bit-for-bit in
-    float64). Twin ids all exceed base ids, so the arrival order is
-    globally id-monotone — stream-order first-wins ≡ global min-id
-    first-wins, which is what lets stream_embedding_delta hash-match
-    the batch twin's exact all-pairs oracle."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "embfeed"
-
-    def schema(self) -> str:
-        return "vec_id bigint, vec array<double>"
-
-    def streamReader(self, schema) -> "EmbFeedStreamReader":
-        return EmbFeedStreamReader(self.options)
-
-
-class EmbFeedStreamReader(DataSourceStreamReader):
-    def __init__(self, options) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("embfeed requires .option('path', parquet)")
-        self.epochs = int(options.get("epochs", "3"))  # base windows
-        self.n_parts = int(options.get("partitions", "4"))
-        self.twin_every = int(options.get("twinevery", "20"))
-        self.twin_offset = int(options.get("twinoffset", "10000000"))
-        self.twin_amp = float(options.get("twinamp", "0.06"))
-        lo, hi = self._bounds()
-        self._lo, self._hi = lo, hi + 1
-        self._epoch = 0
-
-    def _bounds(self) -> tuple[int, int]:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(self.path).metadata
-        los, his = [], []
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            for i in range(rg.num_columns):
-                c = rg.column(i)
-                if c.path_in_schema == "vec_id" and c.statistics is not None:
-                    los.append(c.statistics.min)
-                    his.append(c.statistics.max)
-        if not los:
-            raise ValueError(f"embfeed: no vec_id stats in {self.path}")
-        return min(los), max(his)
-
-    def initialOffset(self) -> dict:
-        return {"epoch": 0}
-
-    def latestOffset(self) -> dict:
-        # epochs base windows + 1 twin epoch
-        self._epoch = min(self._epoch + 1, self.epochs + 1)
-        return {"epoch": self._epoch}
-
-    def partitions(self, start: dict, end: dict):
-        out = []
-        span = self._hi - self._lo
-        n = max(1, self.n_parts)
-        for e in range(int(start["epoch"]), int(end["epoch"])):
-            twin = e >= self.epochs
-            if twin:
-                lo, hi = self._lo, self._hi  # twins derive from ALL base ids
-            else:
-                lo = self._lo + span * e // self.epochs
-                hi = self._lo + span * (e + 1) // self.epochs
-            bounds = [lo + (hi - lo) * i // n for i in range(n + 1)]
-            out.extend(
-                EmbRangePartition(a, b, twin)
-                for a, b in zip(bounds, bounds[1:])
-                if b > a
-            )
-        return out
-
-    def read(self, partition: EmbRangePartition):
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(
-            self.path,
-            columns=["vec_id", "embedding"],
-            filters=[("vec_id", ">=", partition.lo),
-                     ("vec_id", "<", partition.hi)],
-        )
-        ids = tbl.column("vec_id").to_pylist()
-        vecs = tbl.column("embedding").to_pylist()
-        if not partition.twin:
-            return iter(
-                [(i, [float(x) for x in v]) for i, v in zip(ids, vecs)]
-            )
-        # the planted-twin epoch: bit-for-bit the dedup fixture's
-        # transform — x * (1 + amp * ((i % 7) - 3) / 3), 0-indexed
-        amp = self.twin_amp
-        out = []
-        for i, v in zip(ids, vecs):
-            if i % self.twin_every != 0:
-                continue
-            tw = [
-                float(x) * (1.0 + amp * ((j % 7) - 3.0) / 3.0)
-                for j, x in enumerate(v)
-            ]
-            out.append((i + self.twin_offset, tw))
-        return iter(out)
-
-    def commit(self, end: dict) -> None:
-        pass  # immutable table + deterministic windows: replay IS safe
-
-
 def register_synthetic_source(spark) -> None:
     """Idempotent registration (re-registering the same name is fine —
     latest wins, matching Spark's own semantics)."""
     spark.dataSource.register(SyntheticDocsDataSource)
     spark.dataSource.register(SyntheticDocsFeedDataSource)
     spark.dataSource.register(SyntheticDocsPushdownDataSource)
-    spark.dataSource.register(DocsFeedDataSource)
-    spark.dataSource.register(EmbFeedDataSource)

@@ -1140,3 +1140,35 @@ def test_scoped_conf_restores_or_unsets(spark):
         assert spark.conf.get(fresh, None) is None
     finally:
         spark.conf.unset(had)
+
+
+def test_epoch_file_feed_delivers_one_epoch_per_batch_in_id_order(spark, tmp_path):
+    """epoch_file_feed's contract: micro-batch k holds exactly epoch
+    k's rows, so an id-monotone epoch assignment arrives in id order
+    (every batch's smallest id above the previous batch's largest)."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.streaming import epoch_file_feed
+
+    ids = list(range(30))
+    random.Random(7).shuffle(ids)
+    frame = spark.createDataFrame(
+        [(i, f"r{i}") for i in ids], "id long, tag string"
+    ).withColumn("epoch", (F.col("id") / 10).cast("int"))
+    feed = epoch_file_feed(spark, frame.repartition(3), str(tmp_path / "feed"))
+    got = {}
+    q = (
+        feed.writeStream.foreachBatch(lambda b, i: got.__setitem__(i, b.collect()))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    batches = [got[i] for i in sorted(got)]
+    assert [sorted((r["id"], r["tag"], r["epoch"]) for r in b) for b in batches] == [
+        [(i, f"r{i}", e) for i in range(10 * e, 10 * e + 10)] for e in range(3)
+    ]
+    for prev, cur in zip(batches, batches[1:]):
+        assert min(r["id"] for r in cur) > max(r["id"] for r in prev)

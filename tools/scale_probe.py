@@ -179,12 +179,12 @@ HEAVY_QUERIES = [
     ("pipeline_corpus_delta", "corpus (round 13, executed delta publish — probe + gate + content-addressed write, reuse path)"),
     # round 14 — the r13 verdict's missing row plus the three additions
     ("scan_python_pushdown", "formats (round 13, pushFilters native pushdown — fixed-size source, probes the stride-walk scan)"),
-    ("stream_corpus_delta", "corpus (round 14, LIVE nightly delta loop — docsfeed epochs → index probe → stateful first-wins → per-epoch manifests; reuse path after first run)"),
+    ("stream_corpus_delta", "corpus (round 14, LIVE nightly delta loop — staged epoch files → JVM file source → index probe → stateful first-wins → per-epoch manifests; reuse path after first run)"),
     ("pipeline_vacuum", "layout (round 14, executed ledger retention GC — fixed-size source, reuse path)"),
     ("pipeline_merge_evolve", "layout (round 14, write-side schema evolution on the executed merge table, reuse path)"),
     ("ivfpq_top3", "similarity (round 14, distributed IVFADC — cell-partitioned codes, no driver collect)"),
     ("dedup_stream_index_append", "dedup (round 14, publication-gated index commit from the stream ledger, reuse path)"),
-    ("stream_embedding_delta", "dedup (round 14, LIVE vector nightly loop — embfeed epochs → persisted-IVF probe → per-epoch manifests; reuse path after first run)"),
+    ("stream_embedding_delta", "dedup (round 14, LIVE vector nightly loop — staged epoch files → JVM file source → persisted-IVF probe → per-epoch manifests; reuse path after first run)"),
     # round 15 — persisted-code-table IVFADC + the lakehouse lifecycle close
     ("ivfpq_top3_reuse", "similarity (round 15, IVFADC on the persisted code table — encode-once/probe-forever, raw ANN)"),
     ("sim_ivfpq_index_append", "similarity (round 15, executed code-index append, reuse path)"),
