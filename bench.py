@@ -6,11 +6,18 @@ session and prints ONE JSON line on stdout:
     {"metric": "suite_wall_sec", "value": N, "unit": "sec",
      "queries": {"q": sec, ...}, "sf": 0.1, "passes": 2,
      "warmup_sec": W, "pass_walls": [...],
+     "cpus": C, "master": "local[C]", "spark_version": "4.x",
      "queries_elided": K, "full": "BENCH_full.json"}
 
 Each query is executed with a `noop` write — full plan execution on the
 executors, zero driver materialization — so the timing measures the
-engine, not result transfer.
+engine, not result transfer. The warm-up, the hygiene between queries
+and the timed run are ``projektdataengineering_spark.runner``'s, shared
+with the tools.
+
+``cpus`` (``sc.defaultParallelism``), ``master`` and ``spark_version``
+are read from the live session, so a run's record names the cores it
+actually had, not the ones an environment variable asked for.
 
 Measurement boundary (round-5 ADVICE, bench.py:97): ``value`` is
 warm-up + the first pass's suite wall, i.e. the timer starts BEFORE the
@@ -263,8 +270,36 @@ def _n_passes(argv: list[str]) -> int:
     return max(1, n)
 
 
+def _stdout_line(headline: dict, merged: dict[str, float]) -> str:
+    """The one stdout JSON line: failures always included, then
+    slowest-first until the size budget OR the hard query cap is hit
+    (BENCH_full.json always carries the complete record)."""
+    def line(kept: dict[str, float]) -> str:
+        return json.dumps(
+            {**headline, "queries": kept,
+             "queries_elided": len(merged) - len(kept),
+             "full": "BENCH_full.json"}
+        )
+
+    ordered = sorted(merged, key=lambda n: (merged[n] >= 0, -merged[n]))
+    n_failed = sum(1 for v in merged.values() if v < 0)
+    kept: dict[str, float] = {}
+    for name in ordered:
+        is_fail = merged[name] < 0
+        if not is_fail and len(kept) >= max(_STDOUT_MAX_QUERIES, n_failed):
+            break
+        kept[name] = merged[name]
+        # failure entries are exempt from byte-budget eviction (the
+        # headline "failed" count backstops even a hard truncation)
+        if len(line(kept)) > _STDOUT_LINE_BUDGET and len(kept) > 1 and not is_fail:
+            del kept[name]
+            break
+    return line(kept)
+
+
 def main() -> int:
     from projektdataengineering_spark.queries import load_registry
+    from projektdataengineering_spark.runner import Hygiene, run_query, warm_up
     from projektdataengineering_spark.session import get_spark
 
     n_passes = _n_passes(sys.argv[1:])
@@ -272,42 +307,11 @@ def main() -> int:
     t_suite0 = time.perf_counter()  # BEFORE warm-up — see docstring
     spark = get_spark(app_name="pde-bench")
     registry = load_registry()
-
-    # Warm the session (JVM/codegen) on the flagship before per-query
-    # timing, and spin up the reusable Python/Arrow worker pool with one
-    # trivial mapInPandas — otherwise the alphabetically-first
-    # pandas-UDF query absorbs the worker cold-start into its
-    # measurement. This block is INSIDE the suite-wall timer.
-    try:
-        from projektdataengineering_spark.flagship import flagship
-
-        flagship(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        spark.range(32).repartition(32).mapInPandas(
-            lambda it: it, "id long"
-        ).write.format("noop").mode("overwrite").save()
-        # Warm the text/columnar WRITER paths too: the csv/json/orc
-        # datasources JIT their write+read pipelines on first use, and
-        # without this the alphabetically-early scan_*_roundtrip
-        # queries absorb ~5 s of one-time codegen into pass 0 (measured
-        # r6: all three "regressed" +0.3-0.6 s for exactly this reason
-        # — min-of-2-passes still included one cold component).
-        warm_dir = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), ".scratch", "bench_warmup"
-        )
-        tiny = spark.range(10).selectExpr(
-            "id", "cast(id as string) s", "timestamp'2024-01-01' ts"
-        )
-        for fmt in ("csv", "json", "orc"):
-            p = os.path.join(warm_dir, fmt)
-            tiny.write.mode("overwrite").format(fmt).save(p)
-            spark.read.format(fmt).load(p).write.format("noop").mode(
-                "overwrite"
-            ).save()
+    try:  # inside the suite-wall timer
+        warm_up(spark, SF_DIR)
     except Exception as exc:
         print(f"bench: warm-up failed: {exc}", file=sys.stderr)
     warmup_sec = round(time.perf_counter() - t_suite0, 3)
-
-    import gc
 
     pass_timings: list[dict[str, float]] = []
     pass_walls: list[float] = []
@@ -315,88 +319,18 @@ def main() -> int:
     for _ in range(n_passes):
         timings: dict[str, float] = {}
         t_pass = time.perf_counter()
-        hygiene_sec = 0.0
-        for qi, name in enumerate(sorted(registry)):
-            qd = registry[name]
-            t_hyg = time.perf_counter()
-            # Session hygiene BETWEEN queries, inside the pass wall but
-            # outside each per-query timer (the tools/scale_probe.py
-            # lesson, applied here in round 8): drop cached/checkpoint
-            # blocks (cheap, every query) and force a JVM GC every 8th
-            # so one query's leftovers can't tax a later query's
-            # driver-side loop. Measured: without this,
-            # pipeline_bpe_train (12 sequential argmax actions) reads
-            # 11-16 s mid-suite vs ~5 s in a clean session — the
-            # accumulated state of ~100 earlier queries, not bpe
-            # itself, was being measured. (A per-query System.gc makes
-            # every number clean but adds ~0.6 s × registry to the
-            # wall; every-8th keeps per-query noise ≲1 s at ~1/8 the
-            # gc cost.)
-            # young-generation collect per query (frees the previous
-            # query's DataFrame/py4j cycles at ~1-5 ms); the FULL gen-2
-            # collect rides the every-8th block below — at 245 queries
-            # the per-query full scan of the grown module heap measured
-            # ~64 ms each (~16 s/pass) for no additional reclaim
-            gc.collect(1)
-            spark.catalog.clearCache()
-            # clearCache drops only CATALOG-cached relations; RDD blocks
-            # from localCheckpoint (the lineage-cut discipline of every
-            # iterative operator — pagerank/CC/BFS create ~15 per run)
-            # stay in the block manager until the driver GCs the
-            # DataFrame refs AND the async ContextCleaner gets around to
-            # them. Across 217 queries × 2 passes those orphans add up
-            # to real storage-memory pressure: r10 measured
-            # graph_pagerank at 5.45 s warm with a 25.7 s outlier pass
-            # late in the suite vs 3.2 s in a clean session, on
-            # unchanged code. No query holds persisted state across
-            # calls (verified: zero module-level .persist/.cache), so
-            # everything still pinned here is an orphan — drop it
-            # synchronously instead of waiting on weak-ref cleanup.
+        # inside the pass wall, outside each per-query timer
+        hygiene = Hygiene(spark)
+        for name in sorted(registry):
+            hygiene()
             try:
-                for jrdd in list(
-                    spark.sparkContext._jsc.getPersistentRDDs().values()
-                ):
-                    jrdd.unpersist(False)
-                # streaming queries leave their memory-sink tables
-                # registered (driver-held rows); drop them so two
-                # passes over 30+ streaming queries don't pile up
-                # driver memory and stretch the periodic System.gc.
-                # Every 8th query (with the JVM gc), NOT every query:
-                # the r14 hygiene decomposition measured listTables as
-                # the single largest hygiene component (~135 ms RPC ×
-                # registry = ~33 s/pass, 52% of the total) while the
-                # pileup it prevents is bounded by 8 queries' views —
-                # a handful of driver-side metadata entries
-                if qi % 8 == 0:
-                    for tbl in spark.catalog.listTables():
-                        if tbl.tableType == "TEMPORARY" and tbl.name.endswith(
-                            ("_sink", "_out")
-                        ):
-                            spark.catalog.dropTempView(tbl.name)
-            except Exception as hyg_exc:
-                # hygiene must never fail the bench — but a silently
-                # dead sweep would let the checkpoint-orphan drift it
-                # prevents (pagerank 3.2→5.5 s) return with no signal,
-                # so make the breakage visible once per query
-                print(
-                    f"bench: hygiene sweep failed before {name}: "
-                    f"{type(hyg_exc).__name__}: {hyg_exc}",
-                    file=sys.stderr,
-                )
-            if qi % 8 == 0:
-                gc.collect()  # full gen-2 pass, amortized
-                spark._jvm.System.gc()
-            hygiene_sec += time.perf_counter() - t_hyg
-            t0 = time.perf_counter()
-            try:
-                qd.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                timings[name] = round(time.perf_counter() - t0, 3)
+                timings[name] = round(run_query(spark, registry[name], SF_DIR), 3)
             except Exception as exc:  # record failures, keep benching
                 timings[name] = -1.0
                 print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
         pass_walls.append(round(time.perf_counter() - t_pass, 3))
         pass_timings.append(timings)
-        pass_hygiene.append(round(hygiene_sec, 3))
+        pass_hygiene.append(round(hygiene.seconds, 3))
     # per-pass Σ of successful per-query timings — the hygiene-free,
     # noise-robust suite signal the query-sum gate below reads
     pass_query_sums = [
@@ -428,6 +362,10 @@ def main() -> int:
         # headline-level failure count: survives even if the stdout
         # byte budget truncates individual failure entries below
         "failed": sum(1 for v in merged.values() if v < 0),
+        # the session the run actually used (r19 verdict item 2)
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
+        "spark_version": spark.version,
     }
     if abs(_sf_of(SF_DIR) - 0.1) < 1e-9:
         over = {
@@ -491,32 +429,7 @@ def main() -> int:
     except OSError as exc:
         print(f"bench: could not write BENCH_full.json: {exc}", file=sys.stderr)
 
-    # stdout line: failures always included, then slowest-first until
-    # the size budget OR the hard query cap is hit (BENCH_full.json
-    # always carries the complete record)
-    ordered = sorted(merged, key=lambda n: (merged[n] >= 0, -merged[n]))
-    n_failed = sum(1 for v in merged.values() if v < 0)
-    kept: dict[str, float] = {}
-    for name in ordered:
-        is_fail = merged[name] < 0
-        if not is_fail and len(kept) >= max(_STDOUT_MAX_QUERIES, n_failed):
-            break
-        kept[name] = merged[name]
-        line = json.dumps(
-            {**headline, "queries": kept,
-             "queries_elided": len(merged) - len(kept),
-             "full": "BENCH_full.json"}
-        )
-        # failure entries are exempt from byte-budget eviction (the
-        # headline "failed" count backstops even a hard truncation)
-        if len(line) > _STDOUT_LINE_BUDGET and len(kept) > 1 and not is_fail:
-            del kept[name]
-            break
-    print(json.dumps(
-        {**headline, "queries": kept,
-         "queries_elided": len(merged) - len(kept),
-         "full": "BENCH_full.json"}
-    ))
+    print(_stdout_line(headline, merged))
     spark.stop()
     return 0
 

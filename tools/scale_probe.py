@@ -28,9 +28,11 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
+from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from projektdataengineering_spark.runner import Hygiene, run_query  # noqa: E402
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 SF_LABELS = ["sf0.001", "sf0.01", "sf0.1"]
@@ -204,27 +206,13 @@ HEAVY_QUERIES = [
 
 
 def time_query(fn, spark, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    df.write.format("noop").mode("overwrite").save()
-    dt = time.perf_counter() - t0
-    # Session hygiene BETWEEN measurements (outside the timer): drop
-    # the plan reference and force-release cached/localCheckpoint
-    # blocks so a 25-query sf1 sweep doesn't degrade later
-    # measurements with accumulated executor memory pressure — the
-    # round-6 probe measured sim_simhash at 14s@sf0.1 mid-sweep vs
-    # 1.8s in a fresh session before this cleanup existed.
-    del df
-    import gc as _gc
-
-    _gc.collect()
-    spark.catalog.clearCache()
-    # ...and a JVM-side GC so the ContextCleaner actually reclaims
-    # dead broadcasts/accumulators between measurements (python-side
-    # gc alone left sim_cosine_ivf — many tiny driver-iteration jobs —
-    # 7x inflated mid-sweep)
-    spark._jvm.System.gc()
-    return dt
+    """``runner.run_query`` of ``fn`` after a FULL hygiene sweep (Python
+    and JVM GC before every measurement, not bench's every 8th call):
+    the round-6 probe read sim_simhash at 14 s@sf0.1 mid-sweep against
+    1.8 s in a fresh session, and Python-side gc alone left
+    sim_cosine_ivf 7x inflated."""
+    Hygiene(spark)(full=True)
+    return run_query(spark, SimpleNamespace(fn=fn), sf_dir)
 
 
 def main() -> int:
