@@ -98,7 +98,8 @@ _MODULES = (
 # A name stays pending (first in the window) until a CORRECTNESS file of
 # that round or later certifies it, so entries expire on their own.
 # * round 20 — the five bucketed stream folds now run on
-#   streaming.stateful.bucketed_state, and scan_python_pushdown's conf
+#   streaming.stateful.bucketed_state (one keyed-state group per state
+#   partition, derived there), and scan_python_pushdown's conf
 #   gate is streaming.scoped_conf; every query that keeps an artifact
 #   now reads or builds it through catalog.persisted.
 _RECHECK: dict[str, int] = {

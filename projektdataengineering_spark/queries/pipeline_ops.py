@@ -2898,9 +2898,9 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed against the PERSISTED corpus signature index as a
     stream-static LEFT ANTI join (stateless, the index is never
     re-signed), deduped across epochs by a CUSTOM
-    STATEFUL first-wins fold over signature hash buckets
-    (streaming/stateful.py bucketed_state; each bucket's state is its
-    seen-signature list, since per-signature groups would pay one
+    STATEFUL first-wins fold over one signature group per state
+    partition (streaming/stateful.py bucketed_state; each group's state
+    is its seen-signature list, since per-signature groups would pay one
     Arrow round-trip per distinct doc; unsigned docs carry per-doc
     fallback sigs so they pass through undeduped), quality-gated
     map-side, and published through the ledgersink streaming SINK
@@ -2935,7 +2935,7 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.pysink import read_ledger, register_ledger_sink
     from ..streaming import epoch_file_feed, stream_state_partitions
-    from ..streaming.stateful import STATE_BUCKETS, bucketed_state
+    from ..streaming.stateful import bucketed_state
 
     # the whole workdir (feed, ledger, manifests, checkpoint) is one
     # staged install: a run that dies mid-stream never becomes visible,
@@ -2992,10 +2992,7 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # unsigned docs (< 2 tokens) have NULL lanes: the anti join
         # passes them (NULL never equals) and the per-doc fallback sig
-        # lets them through the dedup kernel untouched. Keyed state is
-        # bucketed by signature hash (bucketed_state: one group per
-        # distinct doc signature made the first cut of this kernel the
-        # probe's worst sf1 row).
+        # lets them through the dedup kernel untouched.
         raw_key = F.concat(F.lit("raw#"), F.col("doc_id").cast("string"))
         sig = F.md5(
             F.concat_ws(
@@ -3011,9 +3008,6 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "doc_id", "lang", "source", "n_toks", "quality",
             sig.alias("sig"),
-            F.pmod(F.xxhash64(sig), F.lit(STATE_BUCKETS))
-            .cast("int")
-            .alias("bucket"),
         )
 
         def first_wins(batch, st):
@@ -3023,20 +3017,20 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             st = pd.concat([st, pd.DataFrame(index=pd.Index(fresh["sig"], name="sig"))])
             return st, fresh[["doc_id", "lang", "source", "n_toks", "quality"]]
 
-        deduped = bucketed_state(
-            keyed,
-            first_wins,
-            state_fields="sig string",
-            out_schema=(
-                "doc_id long, lang string, source string, "
-                "n_toks long, quality boolean"
-            ),
-            output_mode="append",
-        )
-        admitted = deduped.filter("quality").select(
-            "doc_id", "lang", "source", "n_toks"
-        )
         with stream_state_partitions(spark):
+            deduped = bucketed_state(
+                keyed,
+                first_wins,
+                state_fields="sig string",
+                out_schema=(
+                    "doc_id long, lang string, source string, "
+                    "n_toks long, quality boolean"
+                ),
+                output_mode="append",
+            )
+            admitted = deduped.filter("quality").select(
+                "doc_id", "lang", "source", "n_toks"
+            )
             q = (
                 admitted.writeStream.format("ledgersink")
                 .option("path", ledger)

@@ -208,29 +208,21 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture spans well under a year, so the horizon never fires here
     and the oracle equality is exact.
 
-    Keyed-state granularity is a HASH BUCKET of users, not one user
-    (per-KEY Arrow groups made this the suite's heaviest sf1 row at
-    9.9 s, pure per-group overhead): see streaming/stateful.py
-    bucketed_state for the round-trip economics and the eager
-    horizon-sweep contract. The per-key operator remains the
-    semantics reference, pinned by tests/test_streaming.py's
-    eviction/state-row assertions; the bucketed form's cross-batch
-    carry + sweep and its per-key parity are pinned there too."""
+    Keyed state is one group of users per state partition
+    (streaming/stateful.py bucketed_state: round-trip economics, eager
+    horizon sweep); tests/test_streaming.py pins its parity with the
+    per-key reference operator."""
     from ..streaming import (
         open_event_stream,
         run_to_memory_sink,
         stream_no_data_batches,
         stream_state_partitions,
     )
-    from ..streaming.stateful import STATE_BUCKETS, dedup_stream_first_wins_bucketed
+    from ..streaming.stateful import dedup_stream_first_wins_bucketed
 
     keyed = (
         open_event_stream(spark, sf_dir)
-        .select(
-            (F.col("user_id") % STATE_BUCKETS).cast("int").alias("bucket"),
-            F.col("user_id").cast("string").alias("key"),
-            "ts",
-        )
+        .select(F.col("user_id").cast("string").alias("key"), "ts")
         .withWatermark("ts", "1 minute")
     )
     # no-data batch scoped off (r19): the 365-day horizon fires zero
@@ -362,18 +354,11 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_to_memory_sink,
         stream_state_partitions,
     )
-    from ..streaming.stateful import STATE_BUCKETS, ewma_stream_bucketed
+    from ..streaming.stateful import ewma_stream_bucketed
 
-    # bucketed keyed state: the per-key form paid one Arrow round-trip
-    # per user per batch (1500 groups — profiled as the whole cost:
-    # allUpdatesTimeMs 8.5 s of a 5.0 s drain wall, summed across 4
-    # stores); the bucketed fold runs the identical scalar IEEE
-    # recurrence per user. ewma_stream stays as the per-key semantics
-    # reference (tests pin their parity).
-    keyed = open_event_stream(spark, sf_dir).select(
-        (F.col("user_id") % STATE_BUCKETS).cast("int").alias("bucket"),
-        "user_id", "ts", "event_id", "value"
-    )
+    # one state group per state partition (stateful.bucketed_state); the
+    # fold runs ewma_stream's identical scalar IEEE recurrence per user
+    keyed = open_event_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
     with stream_state_partitions(spark):
         run_to_memory_sink(
             ewma_stream_bucketed(keyed, alpha=0.25),
@@ -536,25 +521,17 @@ def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_no_data_batches,
         stream_state_partitions,
     )
-    from ..streaming.stateful import STATE_BUCKETS, cdc_apply_stream_bucketed
+    from ..streaming.stateful import cdc_apply_stream_bucketed
 
-    # Keyed-state granularity is a hash bucket of keys, not one key
-    # (streaming/stateful.py bucketed_state): the sf0.1 profile put the
-    # per-key form's cost in 1500 per-group Arrow round-trips (state
-    # allUpdatesTimeMs 12.6 s of a 10.1 s drain). The per-key operator
-    # (cdc_apply_stream) remains the semantics reference; their parity
-    # is pinned by tests/test_streaming.py. The final no-data
+    # One state group per state partition (stateful.bucketed_state;
+    # cdc_apply_stream is the per-key reference). The final no-data
     # batch is scoped off: the 365-day horizon can fire zero timeouts
     # inside the fixture span, so that batch re-commits unchanged state
     # and emits nothing (profiled: rows=0, ~1.9 s of plan+store-commit).
     keyed = (
         open_event_stream(spark, sf_dir)
         .select(
-            (F.col("user_id") % STATE_BUCKETS).cast("int").alias("bucket"),
-            F.col("user_id").cast("string").alias("key"),
-            "ts",
-            "event_id",
-            "event_type",
+            F.col("user_id").cast("string").alias("key"), "ts", "event_id", "event_type"
         )
         .withWatermark("ts", "1 minute")
     )

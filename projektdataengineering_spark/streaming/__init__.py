@@ -192,8 +192,9 @@ def stream_state_partitions(spark, n: int = 4):
     jobs choose it per deployment, which is exactly why it's a scoped
     override rather than a session constant.
 
-    The conf is restored on exit; the streaming query must START (and,
-    for availableNow runs, finish) inside the scope.
+    The conf is restored on exit. Build and start inside one scope; n is
+    part of the checkpoint's identity (stateful.bucketed_state derives its
+    groups from it at build time). availableNow runs also finish inside.
     """
     return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 

@@ -25,46 +25,51 @@ compare against.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 # ---------------------------------------------------------------------------
-# bucketed_state: keyed state at HASH-BUCKET granularity
+# bucketed_state: keyed state at STATE-PARTITION granularity
 # ---------------------------------------------------------------------------
 #
 # applyInPandasWithState pays one Python/Arrow round-trip per GROUP per
 # micro-batch, and with one group per key that round-trip was the whole
 # cost of every keyed fold profiled (dedup at sf1: 9.9 s; attribution at
 # sf1: 18.7 → 3.2 s once bucketed; CDC at sf0.1: 12.6 s of state update
-# time against ~0.2 s of fold arithmetic). So keys hash into a fixed
-# number of state groups: a bucket's state holds its keys' values as
-# parallel arrays (state-schema arrays stay primitive), and the fold body
-# sees the bucket's whole batch as one frame, grouped by key inside
-# pandas. Keys stay fully independent — bucket co-residence never mixes
-# their state.
+# time against ~0.2 s of fold arithmetic). So keys share state groups: a
+# group's state holds its keys' values as parallel arrays (state-schema
+# arrays stay primitive), and the fold body sees the group's whole batch
+# as one frame, grouped by key inside pandas. Keys stay fully
+# independent — co-residence never mixes their state.
 #
-# That per-group round-trip is distinct from the per-TASK fixed cost of
-# the Python worker every state partition's task runs in. Bucketing cuts
-# only the former; the engine's worker daemon (worker_daemon.py, used by
-# session.get_spark's local master) cuts the latter's main part, a
-# ~150 ms re-read of pyspark.zip's directory in every task's set-up.
+# The combinator alone assigns groups, one per state partition: with n =
+# spark.sql.shuffle.partitions when the frame is built (the count
+# stream_state_partitions scopes and Spark pins into the checkpoint), a
+# key's group is ids[pmod(hash(key), n)], ids[j] being the smallest int
+# Spark's hash partitioner sends to partition j. Each state task thus pays
+# the ~9 ms per-group round-trip once per micro-batch, and state width
+# scales with n. (The per-TASK Python worker cost is the worker daemon's,
+# worker_daemon.py.)
 #
 # Horizon semantics are the EAGER form of the per-key operators' lazy
 # Spark timeout: expired keys (max_us + horizon < watermark) are swept
-# at the START of every bucket invocation, before the new rows fold, so a
+# at the START of every group invocation, before the new rows fold, so a
 # re-arrival after expiry is ALWAYS a fresh history. (Spark's per-key
 # timeout fires only in a batch where the key has no data; the eager
 # sweep is deterministic under replay, the stricter contract.) Idle
-# buckets are swept by a bucket-level event-time timeout armed at the
-# bucket's earliest key deadline.
-STATE_BUCKETS = 64
-# the dedup operator's name for the same count (perfbench/etl.py imports
-# it to build its caller-supplied bucket column)
-DEDUP_BUCKETS = STATE_BUCKETS
+# groups are swept by a group-level event-time timeout armed at the
+# group's earliest key deadline.
+
+# Kept only because perfbench/etl.py imports it to build a bucket column
+# (which bucketed_state replaces); remove with the next benchmark change.
+DEDUP_BUCKETS = 64
 
 _PANDAS_DTYPES = {
     "string": object,
@@ -97,6 +102,21 @@ def _key_runs(batch: pd.DataFrame, key: str):
     return pd.Index(keys, name=key), order, bounds
 
 
+@functools.cache
+def _group_ids(spark, n: int) -> tuple[int, ...]:
+    """ids[j]: the smallest non-negative int that Spark's hash partitioner
+    sends to partition j, from its own pmod(hash(i), n) over an inline
+    table (evaluated on the driver, no job)."""
+    k = 8 * n
+    while True:
+        values = ", ".join(f"({i})" for i in range(k))
+        rows = spark.sql(f"SELECT i, pmod(hash(i), {n}) FROM VALUES {values} AS t(i)").collect()
+        first = {p: i for i, p in sorted(rows, reverse=True)}  # the smallest i wins
+        if len(first) == n:
+            return tuple(first[j] for j in range(n))
+        k *= 2
+
+
 def bucketed_state(
     keyed: DataFrame,
     fold,
@@ -106,15 +126,21 @@ def bucketed_state(
     horizon: str | None = None,
     output_mode: str = "update",
 ) -> DataFrame:
-    """Run ``fold`` as keyed state over the ``bucket`` column of
-    ``keyed`` (the caller assigns buckets, normally
-    ``pmod(hash(key), STATE_BUCKETS)``).
+    """Run ``fold`` as keyed state, one group per state partition (see
+    above; a ``bucket`` column of ``keyed`` is replaced). Build and start
+    inside one ``stream_state_partitions`` scope: the count is part of
+    the checkpoint's identity. A restart built at another count than the
+    checkpoint pins fails the micro-batch when a group runs on another
+    partition than the built count gives it, or has state stored at
+    another count. Neither check sees a fresh group that the pinned
+    count places where the built one would (the pinned count divides the
+    built one), so a batch made only of such keys still re-homes them.
 
     ``state_fields`` is the per-key state as DDL over primitive types;
-    its first field names the key column of ``keyed``. On each bucket
-    invocation the combinator decodes the bucket's parallel-array state
+    its first field names the key column of ``keyed``. On each group
+    invocation the combinator decodes the group's parallel-array state
     into one table indexed by key, sweeps expired keys, and calls
-    ``fold(batch, st)`` with the bucket's non-empty micro-batch rows as
+    ``fold(batch, st)`` with the group's non-empty micro-batch rows as
     one frame. The fold returns ``(new_st, out)``: the whole new state
     table in the same layout, and the rows to emit (``None`` for none),
     columns in ``out_schema`` order. The combinator writes the state back
@@ -132,9 +158,27 @@ def bucketed_state(
     key, carried = names[0], names[1:]
     dtypes = {n: _PANDAS_DTYPES[t] for n, t in fields}
     horizon_us = None if horizon is None else pd.Timedelta(horizon).value // 1_000
+    spark = keyed.sparkSession
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    group_ids = _group_ids(spark, parts)
+    ids = F.array(*(F.lit(i) for i in group_ids))
 
-    def _run(_bucket, pdf_iter, state: GroupState):
-        cols = state.get if state.exists else [[] for _ in names]
+    def _run(group, pdf_iter, state: GroupState):
+        p = TaskContext.get().partitionId()
+        if p >= parts or group_ids[p] != group[0]:
+            raise ValueError(
+                f"keyed state group {group[0]} runs on state partition {p} of a "
+                f"checkpoint pinned at another count, query built at {parts}: "
+                "rebuild at the pinned count or use a new checkpoint"
+            )
+        cols = [[] for _ in names]
+        if state.exists:
+            stored, *cols = state.get
+            if stored != parts:
+                raise ValueError(
+                    f"keyed state stored at {stored} state partitions, query "
+                    f"built at {parts}: rebuild at {stored} or use a new checkpoint"
+                )
         st = pd.DataFrame(
             {n: np.asarray(v, dtype=dtypes[n]) for n, v in zip(carried, cols[1:])},
             index=pd.Index(cols[0], dtype=dtypes[key], name=key),
@@ -166,7 +210,7 @@ def bucketed_state(
             state.remove()
         else:
             st = st.sort_index()
-            state.update((st.index.tolist(), *(st[c].tolist() for c in carried)))
+            state.update((parts, st.index.tolist(), *(st[c].tolist() for c in carried)))
             if horizon_us is not None:
                 # Spark requires a timeout strictly beyond the watermark
                 deadline_ms = (int(st["max_us"].min()) + horizon_us) // 1_000
@@ -175,10 +219,11 @@ def bucketed_state(
                 )
         return iter(() if out is None or len(out) == 0 else (out,))
 
+    keyed = keyed.withColumn("bucket", ids[F.pmod(F.hash(key), F.lit(parts))])
     return keyed.groupBy("bucket").applyInPandasWithState(
         _run,
         outputStructType=out_schema,
-        stateStructType=", ".join(f"{n} array<{t}>" for n, t in fields),
+        stateStructType="partitions int, " + ", ".join(f"{n} array<{t}>" for n, t in fields),
         outputMode=output_mode,
         timeoutConf=(
             GroupStateTimeout.NoTimeout
@@ -312,11 +357,11 @@ def dedup_stream_first_wins_bucketed(
     keyed: DataFrame, horizon: str | None = None
 ) -> DataFrame:
     """Bucketed form of dedup_stream_first_wins for high-cardinality
-    key spaces: input carries (bucket int, key string, ts timestamp);
-    state granularity is the bucket (see bucketed_state for the
-    round-trip economics and the eager-sweep horizon contract). Output
-    schema and update-mode emissions are those of the per-key operator
-    — one (key, first_ts, n_dropped) row per touched key per
+    key spaces: input carries (key string, ts timestamp); state
+    granularity is one group per state partition (see bucketed_state
+    for the round-trip economics and the eager-sweep horizon contract).
+    Output schema and update-mode emissions are those of the per-key
+    operator — one (key, first_ts, n_dropped) row per touched key per
     micro-batch."""
     return bucketed_state(
         keyed,
@@ -663,12 +708,12 @@ def cdc_apply_stream_bucketed(
     keyed: DataFrame, horizon: str | None = None
 ) -> DataFrame:
     """Bucketed form of cdc_apply_stream for high-cardinality key
-    spaces: input carries (bucket int, key string, ts timestamp,
-    event_id long, event_type string); state granularity is the bucket
-    (see bucketed_state for the round-trip economics and the eager-sweep
-    horizon contract). Output schema and update-mode emissions are
-    those of the per-key operator — one row per touched key per
-    micro-batch, same state-machine values."""
+    spaces: input carries (key string, ts timestamp, event_id long,
+    event_type string); state granularity is one group per state
+    partition (see bucketed_state for the round-trip economics and the
+    eager-sweep horizon contract). Output schema and update-mode
+    emissions are those of the per-key operator — one row per touched
+    key per micro-batch, same state-machine values."""
     return bucketed_state(
         keyed,
         _cdc_fold,
@@ -682,7 +727,7 @@ def cdc_apply_stream_bucketed(
 
 
 def make_ewma_fold_bucketed(alpha: float):
-    """Bucketed form of make_ewma_fold: the fold sorts the bucket's rows
+    """Bucketed form of make_ewma_fold: the fold sorts the group's rows
     by (user_id, ts, event_id) and walks each user's slice with the
     IDENTICAL scalar IEEE recurrence — same arithmetic, same
     within-batch ordering contract (globally sorted is strictly
@@ -719,8 +764,8 @@ def make_ewma_fold_bucketed(alpha: float):
 
 def ewma_stream_bucketed(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
     """Apply the bucketed stateful EWMA to a streaming DataFrame with
-    columns (bucket int, user_id long, ts timestamp, event_id long,
-    value double). Emissions per touched user are ewma_stream's."""
+    columns (user_id long, ts timestamp, event_id long, value double).
+    Emissions per touched user are ewma_stream's."""
     return bucketed_state(
         keyed,
         make_ewma_fold_bucketed(alpha),
@@ -734,7 +779,7 @@ def ewma_stream_bucketed(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
 # every purchase emits its credit the moment it arrives, carrying the
 # state ACROSS micro-batches (the batch twin recomputes the whole
 # window every run; this one never re-reads history). Users share
-# bucketed_state buckets; within a bucket every carry is a C-speed
+# bucketed_state groups; within a group every carry is a C-speed
 # grouped ffill/shift.
 ATTRIB_OUTPUT_SCHEMA = (
     "user_id long, event_id long, last_ch string, first_ch string, "
@@ -743,7 +788,7 @@ ATTRIB_OUTPUT_SCHEMA = (
 
 
 def _attribution_fold(batch: pd.DataFrame, st: pd.DataFrame):
-    """Per-bucket fold: rows sort (user_id, ts, event_id); the
+    """Per-group fold: rows sort (user_id, ts, event_id); the
     last-touch as of each row is the grouped ffill of the non-purchase
     channel shifted one row within the user (exactly the batch twin's
     rowsBetween(unboundedPreceding, -1) frame), the first-touch the
@@ -813,13 +858,11 @@ def _attribution_fold(batch: pd.DataFrame, st: pd.DataFrame):
 def attribution_stream(keyed: DataFrame) -> DataFrame:
     """Apply the stateful attribution fold to a streaming DataFrame
     with columns (user_id long, ts timestamp, event_id long,
-    event_type string, value double). Users hash into STATE_BUCKETS
-    keyed-state buckets (see bucketed_state); the fold keeps users
-    independent inside a bucket."""
-    from pyspark.sql import functions as F
-
+    event_type string, value double). Users share keyed-state groups
+    (see bucketed_state); the fold keeps users independent inside a
+    group."""
     return bucketed_state(
-        keyed.withColumn("bucket", (F.col("user_id") % STATE_BUCKETS).cast("int")),
+        keyed,
         _attribution_fold,
         state_fields="user_id long, first_ch string, last_ch string",
         out_schema=ATTRIB_OUTPUT_SCHEMA,

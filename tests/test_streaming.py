@@ -22,25 +22,25 @@ def _canon(df):
     return sorted(map(tuple, (tuple(r) for r in df.collect())))
 
 
-# Bucket assignments the bucketed folds must be indifferent to: every
-# key in one state bucket, and pmod(hash(key), n) for an n that gives
-# each test key its own bucket.
-BUCKETINGS = ["one_bucket", "hash_separated"]
+# State partition counts the bucketed folds must be indifferent to:
+# every key in one keyed-state group, and an n whose groups give each
+# test key its own group.
+PARTITIONINGS = [pytest.param(1, id="one_bucket"), pytest.param(5, id="hash_separated")]
 
 
-def _with_buckets(spark, stream, key, how, keys):
+def _state_partitions(spark, n, key, keys):
+    """stream_state_partitions(spark, n), after asserting that an n > 1
+    separates the test keys (a key's group is ids[pmod(hash(key), n)])."""
     from pyspark.sql import functions as F
 
-    from projektdataengineering_spark.streaming.stateful import STATE_BUCKETS
+    from projektdataengineering_spark.streaming import stream_state_partitions
 
-    if how == "one_bucket":
-        return stream.withColumn("bucket", F.lit(0))
-    bucket = F.pmod(F.hash(key), F.lit(STATE_BUCKETS))
-    probe = spark.createDataFrame([(k,) for k in keys], [key])
-    assert probe.select(bucket).distinct().count() == len(keys), (
-        "the hash bucketing must separate the test keys"
-    )
-    return stream.withColumn("bucket", bucket)
+    if n > 1:
+        probe = spark.createDataFrame([(k,) for k in keys], [key])
+        assert probe.select(F.pmod(F.hash(key), F.lit(n))).distinct().count() == len(keys), (
+            "the state partition count must separate the test keys"
+        )
+    return stream_state_partitions(spark, n)
 
 
 def _ordered_batches(src, frames):
@@ -581,16 +581,19 @@ def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
     assert not mid["alive"] and mid["gen_events"] == 0 and mid["n_tombstones"] == 1
 
 
-@pytest.mark.parametrize("buckets", BUCKETINGS)
-def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path, buckets):
+@pytest.mark.parametrize("n", PARTITIONINGS)
+def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path, n):
     """The bucketed CDC fold (cdc_apply_stream_bucketed) must emit, batch
     for batch, exactly what the per-key reference cdc_apply_stream emits
     across ordered micro-batches — generation carry-over, tombstone at a
     boundary, post-tombstone re-insert — whether keys share one state
-    bucket or each has its own."""
+    group or each has its own. A caller's ``bucket`` column is replaced:
+    the stored groups are the keys' derived ids, one per partition."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
     from projektdataengineering_spark.streaming.stateful import (
+        _group_ids,
         cdc_apply_stream,
         cdc_apply_stream_bucketed,
     )
@@ -620,22 +623,30 @@ def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path, bucke
         )
 
     per_key = _drain_batches(cdc_apply_stream(read()), tmp_path / "ckpt_ref")
-    bucketed = _drain_batches(
-        cdc_apply_stream_bucketed(_with_buckets(spark, read(), "key", buckets, ["u1", "u2"])),
-        tmp_path / "ckpt_bucketed",
-    )
+    with _state_partitions(spark, n, "key", ["u1", "u2"]):
+        bucketed = _drain_batches(
+            cdc_apply_stream_bucketed(read().withColumn("bucket", F.lit(-1))),
+            tmp_path / "ckpt_bucketed",
+        )
     assert bucketed == per_key
+    parts = spark.createDataFrame([("u1",), ("u2",)], ["key"]).select(
+        F.pmod(F.hash("key"), F.lit(n))
+    )
+    stored = spark.read.format("statestore").load(str(tmp_path / "ckpt_bucketed"))
+    assert sorted(map(tuple, stored.select("key.bucket", "partition_id").collect())) == sorted(
+        {(_group_ids(spark, n)[p], p) for (p,) in parts.collect()}
+    )
     # (key, n_tombstones, alive, last_event_type, gen_events, n_seen):
     # u2 dead at the batch-1 boundary, then a fresh 2-event generation
     assert ("u2", 1, False, "error", 0, 2) in per_key[0]
     assert ("u2", 1, True, "view", 2, 4) in per_key[1]
 
 
-@pytest.mark.parametrize("buckets", BUCKETINGS)
-def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path, buckets):
+@pytest.mark.parametrize("n", PARTITIONINGS)
+def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path, n):
     """The bucketed EWMA fold must carry (s, n) across micro-batches and
     emit, batch for batch, bit-equal rows to the per-key reference
-    operator (bucket co-residence must not mix users' state). User 4's
+    operator (group co-residence must not mix users' state). User 4's
     second-batch rows are all NULL: the per-key fold still emits its
     carried state, so the bucketed fold must too."""
     import pandas as pd
@@ -669,12 +680,10 @@ def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path, buc
         )
 
     per_key = _drain_batches(ewma_stream(read(), alpha=0.25), tmp_path / "ckpt_ref")
-    bucketed = _drain_batches(
-        ewma_stream_bucketed(
-            _with_buckets(spark, read(), "user_id", buckets, [1, 2, 3, 4]), alpha=0.25
-        ),
-        tmp_path / "ckpt_bucketed",
-    )
+    with _state_partitions(spark, n, "user_id", [1, 2, 3, 4]):
+        bucketed = _drain_batches(
+            ewma_stream_bucketed(read(), alpha=0.25), tmp_path / "ckpt_bucketed"
+        )
     assert bucketed == per_key
     assert (1, 3, 0.25 * 3.0 + 0.75 * (0.25 * 7.0 + 0.75 * 10.0)) in per_key[1]
     assert (4, 1, 2.0) in per_key[1]  # the NULL-only batch re-emits state
@@ -825,17 +834,22 @@ def test_drop_duplicates_within_watermark_evicts_and_resurrects(spark, tmp_path)
 
 def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
     """Bucketed dedup twin (round 12 — streaming/stateful.py
-    dedup_stream_first_wins_bucketed): keys sharing a state bucket must
+    dedup_stream_first_wins_bucketed): keys sharing a state group must
     stay fully independent, carry first_ts/n_dropped across
     micro-batches exactly like the per-key operator, and honor the
     EAGER horizon sweep — a key whose (max_ts + horizon) the watermark
-    passed is removed at the bucket's next invocation even when the
+    passed is removed at the group's next invocation even when the
     key itself arrives with data in that same batch, so the re-arrival
-    is a fresh first (stricter than Spark's lazy per-key timeout)."""
+    is a fresh first (stricter than Spark's lazy per-key timeout).
+    Run at two state partition counts: at n=1 every key shares one
+    group, so b3's data invocation sweeps the idle b and c too; at n=5
+    a, b and c each have their own group, so b3 sweeps b and c through
+    their idle groups' event-time timeout."""
     import os
     import time
 
     import pandas as pd
+    from pyspark.sql import functions as F
 
     from projektdataengineering_spark.streaming.stateful import (
         dedup_stream_first_wins_bucketed,
@@ -844,20 +858,19 @@ def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
     src = tmp_path / "bucketed_src"
     src.mkdir()
     batches = [
-        # b1: a (in-batch dup) and b share bucket 0; c sits in bucket 1
+        # b1: a (in-batch dup), b and c
         (["a", "a", "b", "c"],
          ["2024-01-01 00:00:00", "2024-01-01 00:10:00",
           "2024-01-01 00:05:00", "2024-01-01 00:06:00"]),
         # b2: watermark spacer 10 days out (horizon 2 days, watermark
         # 1 second; the watermark visible to a batch is the PREVIOUS
-        # batch's max − delay, so this advances it for b3). Bucket 1's
-        # invocation also sweeps the idle c here.
+        # batch's max − delay, so this advances it for b3).
         (["z"], ["2024-01-11 00:00:00"]),
         # b3: a re-arrives WITH data in the very batch whose sweep
         # removes it (deadline Jan-3 < watermark Jan-10) — the EAGER
         # case: a fresh first, where the per-key lazy timeout would
         # have counted a duplicate (timeouts never fire for a key
-        # that has data). b is swept idle by the same invocation.
+        # that has data). b and c are swept idle in the same batch.
         (["a"], ["2024-01-12 00:00:00"]),
         # b4: b returns after its sweep — fresh first too
         (["b"], ["2024-01-12 06:00:00"]),
@@ -865,58 +878,58 @@ def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
     now = time.time()
     for i, (keys, tss) in enumerate(batches):
         f = src / f"batch{i + 1}.parquet"
-        pd.DataFrame(
-            {
-                "bucket": pd.array(
-                    [0 if k in ("a", "b") else 1 for k in keys], dtype="int32"
-                ),
-                "key": keys,
-                "ts": pd.to_datetime(tss),
-            }
-        ).to_parquet(f, coerce_timestamps="us")
-        # (bucket 0 = {a, b}; bucket 1 = {c, z})
+        pd.DataFrame({"key": keys, "ts": pd.to_datetime(tss)}).to_parquet(
+            f, coerce_timestamps="us"
+        )
         os.utime(f, (now - 80 + 20 * i, now - 80 + 20 * i))
 
-    stream = (
-        spark.readStream.schema("bucket int, key string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withWatermark("ts", "1 second")
-    )
-    out = dedup_stream_first_wins_bucketed(stream, horizon="2 days")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("dedup_bucketed_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_bucketed"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = spark.table("dedup_bucketed_out").collect()
-    by_key = {}
-    for r in rows:
-        by_key.setdefault(r["key"], set()).add(
-            (r["first_ts"], r["n_dropped"])
+    for n in (1, 5):
+        stream = (
+            spark.readStream.schema("key string, ts timestamp")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+            .withWatermark("ts", "1 second")
         )
-    # a: in-batch dup in b1, then the EAGER-sweep fresh first in b3 —
-    # swept and re-seeded in ONE bucket invocation, which the per-key
-    # operator's lazy timeout cannot do
-    assert by_key["a"] == {
-        (pd.Timestamp("2024-01-01 00:00:00"), 1),
-        (pd.Timestamp("2024-01-12 00:00:00"), 0),
-    }, by_key["a"]
-    # b: swept idle during b3's bucket-0 invocation (a's batch — keys
-    # in a bucket are independent but share sweeps) → fresh first in b4
-    assert by_key["b"] == {
-        (pd.Timestamp("2024-01-01 00:05:00"), 0),
-        (pd.Timestamp("2024-01-12 06:00:00"), 0),
-    }, by_key["b"]
-    # c: swept idle during b2's bucket-1 invocation, never returns —
-    # only the b1 first remains; z is b2's fresh first
-    assert by_key["c"] == {(pd.Timestamp("2024-01-01 00:06:00"), 0)}
-    assert by_key["z"] == {(pd.Timestamp("2024-01-11 00:00:00"), 0)}
+        ckpt = tmp_path / f"ckpt_bucketed_{n}"
+        with _state_partitions(spark, n, "key", ["a", "b", "c"]):
+            out = dedup_stream_first_wins_bucketed(stream, horizon="2 days")
+            q = (
+                out.writeStream.outputMode("update")
+                .format("memory")
+                .queryName(f"dedup_bucketed_out_{n}")
+                .option("checkpointLocation", str(ckpt))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+        rows = spark.table(f"dedup_bucketed_out_{n}").collect()
+        by_key = {}
+        for r in rows:
+            by_key.setdefault(r["key"], set()).add(
+                (r["first_ts"], r["n_dropped"])
+            )
+        # a: in-batch dup in b1, then the EAGER-sweep fresh first in b3 —
+        # swept and re-seeded in ONE group invocation, which the per-key
+        # operator's lazy timeout cannot do
+        assert by_key["a"] == {
+            (pd.Timestamp("2024-01-01 00:00:00"), 1),
+            (pd.Timestamp("2024-01-12 00:00:00"), 0),
+        }, (n, by_key["a"])
+        # b: swept idle in b3 (by a's group invocation at n=1, by its
+        # own group's timeout at n=5) → fresh first in b4
+        assert by_key["b"] == {
+            (pd.Timestamp("2024-01-01 00:05:00"), 0),
+            (pd.Timestamp("2024-01-12 06:00:00"), 0),
+        }, (n, by_key["b"])
+        # c: swept idle in b3, never returns — only the b1 first
+        # remains; z is b2's fresh first
+        assert by_key["c"] == {(pd.Timestamp("2024-01-01 00:06:00"), 0)}, n
+        assert by_key["z"] == {(pd.Timestamp("2024-01-11 00:00:00"), 0)}, n
+        # the sweep left c in no group's stored state
+        stored = spark.read.format("statestore").load(str(ckpt))
+        kept = stored.select(F.explode("value.groupState.key")).collect()
+        assert sorted(k for (k,) in kept) == ["a", "b", "z"], n
 
 
 def test_session_window_merges_across_micro_batches(spark, tmp_path):
@@ -1054,8 +1067,8 @@ def test_transform_with_state_running_totals_or_documented_absence(
     assert got == exp
 
 
-@pytest.mark.parametrize("buckets", BUCKETINGS)
-def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path, buckets):
+@pytest.mark.parametrize("n", PARTITIONINGS)
+def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path, n):
     """horizon=None (NoTimeout) on a NON-watermarked stream must work —
     the fold may only read the watermark when a horizon is configured
     (getCurrentWatermarkMs raises without withWatermark) — and, with no
@@ -1090,18 +1103,86 @@ def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path, bucket
         )
 
     per_key = _drain_batches(dedup_stream_first_wins(read()), tmp_path / "ckpt_ref")
-    bucketed = _drain_batches(
-        dedup_stream_first_wins_bucketed(  # no horizon, no watermark
-            _with_buckets(spark, read(), "key", buckets, ["a", "b", "c"])
-        ),
-        tmp_path / "ckpt_bucketed",
-    )
+    with _state_partitions(spark, n, "key", ["a", "b", "c"]):
+        bucketed = _drain_batches(
+            dedup_stream_first_wins_bucketed(read()),  # no horizon, no watermark
+            tmp_path / "ckpt_bucketed",
+        )
     assert bucketed == per_key
     assert per_key[1] == [
         ("a", pd.Timestamp("2024-01-01 00:00:00"), 2),
         ("b", pd.Timestamp("2024-01-01 00:05:00"), 1),
         ("c", pd.Timestamp("2024-01-02 00:01:00"), 0),
     ]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4, 8, 32, 200])
+def test_state_group_ids_land_one_per_partition(spark, n):
+    """Spark's hash partitioner over the n group ids puts exactly one id
+    on each partition: every state task folds one group per batch."""
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.streaming.stateful import _group_ids
+
+    ids = _group_ids(spark, n)
+    got = (
+        spark.createDataFrame([(i,) for i in ids], "bucket int")
+        .repartition(n, "bucket")
+        .select("bucket", F.spark_partition_id().alias("p"))
+        .collect()
+    )
+    assert sorted((r["p"], r["bucket"]) for r in got) == list(enumerate(ids))
+
+
+@pytest.mark.parametrize(
+    "first, restart, residues, match",
+    [
+        # every key again: some group runs on a partition the built
+        # count does not give it
+        pytest.param(4, 8, None, "query built at 8", id="grow_every_key"),
+        # one key on a fresh group (ids 25, 15 at n=8) that the pinned 4
+        # places on another partition
+        pytest.param(4, 8, (4, 5), "runs on state partition", id="grow_one_key_new_group"),
+        # one key on group 12, which both counts place on partition 0 and
+        # which holds state stored at 8
+        pytest.param(8, 4, (4,), "stored at 8 state partitions, query built at 4", id="shrink_one_key_stored_group"),
+    ],
+)
+def test_bucketed_state_refuses_a_changed_partition_count(spark, tmp_path, first, restart, residues, match):
+    """The state partition count is part of a keyed-state checkpoint's
+    identity: Spark keeps the count pinned at first start, so a restart
+    built at another count would re-home keys to other groups. The
+    combinator must fail the batch and name the built count."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.streaming import stream_state_partitions
+    from projektdataengineering_spark.streaming.stateful import (
+        dedup_stream_first_wins_bucketed,
+    )
+
+    src = tmp_path / "src"
+    keys = [f"k{i}" for i in range(40)]
+    p8 = dict(
+        spark.createDataFrame([(k,) for k in keys], ["key"])
+        .select("key", F.pmod(F.hash("key"), F.lit(8)))
+        .collect()
+    )
+    assert {0, 4, 5} <= set(p8.values())
+    # the restart batch: every key, or one key of the given pmod(hash, 8)
+    again = keys if residues is None else [next(k for k in keys if p8[k] in residues)]
+
+    def run(n, batch, batch_keys):
+        frame = pd.DataFrame({"key": batch_keys, "ts": pd.Timestamp("2024-01-01")})
+        frame.to_parquet(src / f"b{batch}.parquet", coerce_timestamps="us")
+        with stream_state_partitions(spark, n):
+            stream = spark.readStream.schema("key string, ts timestamp").parquet(str(src))
+            _drain_batches(dedup_stream_first_wins_bucketed(stream), tmp_path / "ckpt")
+
+    src.mkdir()
+    run(first, 1, keys)
+    with pytest.raises(Exception, match=match):
+        run(restart, 2, again)
 
 
 def test_to_epoch_us_is_unit_independent():
