@@ -137,6 +137,22 @@ def session_file_memo(spark: SparkSession, attr: str, path: str, build):
     return memo[key]
 
 
+def register_data_sources(spark: SparkSession, *sources) -> None:
+    """Register each Python data source class once per session, under
+    :func:`session_file_memo`'s scoping rule: the registered names live
+    ON the session object, so a new session registers its own and a
+    repeat call is free (each re-registration makes Spark log a
+    "replaced a previously registered data source" warning)."""
+    done = getattr(spark, "_pde_data_sources", None)
+    if done is None:
+        done = set()
+        setattr(spark, "_pde_data_sources", done)
+    for source in sources:
+        if source.name() not in done:
+            spark.dataSource.register(source)
+            done.add(source.name())
+
+
 # ---------------------------------------------------------------------------
 # Persisted artifacts: every index, model, ledger and rewritten table a
 # query keeps between calls lives at .scratch/<kind>/<key>, written once

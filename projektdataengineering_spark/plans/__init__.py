@@ -42,6 +42,7 @@ class PlanFacts:
     pushed_filters: list[str] = field(default_factory=list)  # one entry per scan
     partition_filters: list[str] = field(default_factory=list)  # per partitioned scan
     read_schemas: list[list[str]] = field(default_factory=list)  # column names per scan
+    text: str = ""  # the formatted explain the facts were parsed from
 
     def count(self, node_prefix: str) -> int:
         return sum(1 for n in self.nodes if n.startswith(node_prefix))
@@ -50,6 +51,12 @@ class PlanFacts:
         """Exact node-name count — use when a prefix would over-match
         (e.g. count("Window") also counts WindowGroupLimit)."""
         return sum(1 for n in self.nodes if n == node)
+
+    def details(self, node: str) -> list[str]:
+        """The detail block (Input, Keys, Arguments, ...) of every node
+        named exactly ``node``, in plan order."""
+        blocks = re.split(r"^(?=\(\d+\) )", self.text.split("\n\n\n", 1)[-1], flags=re.M)
+        return [b for b in blocks if (m := _NODE_RE.match(b)) and m.group(1).strip() == node]
 
     @property
     def shuffles(self) -> int:
@@ -72,7 +79,7 @@ class PlanFacts:
 
 def plan_facts(df: DataFrame) -> PlanFacts:
     text = explain_string(df, "formatted")
-    facts = PlanFacts(nodes=[m.group(1).strip() for m in _NODE_RE.finditer(text)])
+    facts = PlanFacts(nodes=[m.group(1).strip() for m in _NODE_RE.finditer(text)], text=text)
     facts.pushed_filters = [m.group(1).strip() for m in _PUSHED_RE.finditer(text)]
     facts.partition_filters = [
         m.group(1).strip() for m in _PARTFILTER_RE.finditer(text) if m.group(1).strip()

@@ -101,7 +101,8 @@ _MODULES = (
 #   streaming.stateful.bucketed_state (one keyed-state group per state
 #   partition, derived there), and scan_python_pushdown's conf
 #   gate is streaming.scoped_conf; every query that keeps an artifact
-#   now reads or builds it through catalog.persisted.
+#   now reads or builds it through catalog.persisted;
+#   join_cross_calendar lost a broadcast hint Spark rejected.
 _RECHECK: dict[str, int] = {
     "stream_dedup_stateful": 20,
     "stream_cdc_stateful": 20,
@@ -115,6 +116,7 @@ _RECHECK: dict[str, int] = {
     "dedup_neardup_index_append": 20,
     "dedup_stream_index_append": 20,
     "join_bucketed_colocated": 20,
+    "join_cross_calendar": 20,
     "pipeline_compaction_apply": 20,
     "pipeline_corpus_delta": 20,
     "pipeline_file_skipping": 20,

@@ -600,10 +600,10 @@ def join_cross_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops empty cells). The spine is generated (sequence + explode,
     ~80 rows) and cross-joined with the distinct statuses — both tiny,
     so the cross join is a broadcast nested loop over a few hundred
-    rows, never a shuffle. The actual aggregate is one orders rollup;
-    the left join from grid to actual broadcasts the GRID (small side)
-    while the aggregate stays partitioned. Revenue zero-fill uses
-    0.0 exactly (both engines)."""
+    rows, never a shuffle. The actual aggregate is one orders rollup,
+    left-joined from the grid (the preserved side, which Spark cannot
+    broadcast in a left outer join). Revenue zero-fill uses 0.0
+    exactly (both engines)."""
     orders = load_table(spark, sf_dir, "orders")
     spine = spark.range(1).select(
         F.explode(
@@ -627,7 +627,7 @@ def join_cross_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("a_rev"),
         )
     )
-    grid = F.broadcast(spine.crossJoin(statuses))
+    grid = spine.crossJoin(statuses)
     return (
         grid.join(
             actual,
@@ -1125,9 +1125,10 @@ def join_disjunctive_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_linestatus='O' and the OR of quantity ranges push to the
     lineitem scan, the OR of (brand AND size) branches pushes to the
     part scan — so both scans prune before the join and the full
-    cross-attribute predicate re-applies post-join. PLANS.md pins the
-    PushedFilters lines proving both scans received their derived
-    disjunctions.
+    cross-attribute predicate re-applies post-join.
+    tests/test_plans.py::test_disjunctive_pushdown_reaches_both_scans
+    pins the PushedFilters lines proving both scans received their
+    derived disjunctions.
 
     The declarative form is deliberately the NAIVE one (filter after
     join): extracting the pushable residuals is Catalyst's job, not

@@ -316,8 +316,12 @@ class SyntheticDocsFeedStreamReader(DataSourceStreamReader):
 
 
 def register_synthetic_source(spark) -> None:
-    """Idempotent registration (re-registering the same name is fine —
-    latest wins, matching Spark's own semantics)."""
-    spark.dataSource.register(SyntheticDocsDataSource)
-    spark.dataSource.register(SyntheticDocsFeedDataSource)
-    spark.dataSource.register(SyntheticDocsPushdownDataSource)
+    """Register the three synthetic sources on first use in a session."""
+    from ..catalog import register_data_sources
+
+    register_data_sources(
+        spark,
+        SyntheticDocsDataSource,
+        SyntheticDocsFeedDataSource,
+        SyntheticDocsPushdownDataSource,
+    )

@@ -222,5 +222,7 @@ def vacuum_ledger(path: str, older_than: float) -> dict:
 
 
 def register_ledger_sink(spark) -> None:
-    """Idempotent registration (latest wins, matching Spark)."""
-    spark.dataSource.register(LedgerSinkDataSource)
+    """Register the ledger sink on first use in a session."""
+    from ..catalog import register_data_sources
+
+    register_data_sources(spark, LedgerSinkDataSource)

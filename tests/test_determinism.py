@@ -1,9 +1,7 @@
-"""Determinism of the rows-only (non-oracle) queries: the driver can
-only count rows for these, so run-to-run stability is OUR claim to
-enforce. Every approximate operator is re-executed in the same session
-and must reproduce its result set exactly — the property the fixed
-hash families, seeded-literal planes, and decimal-exact k-means
-updates exist to provide.
+"""Determinism: every result must be a pure function of the DATA.
+
+The conf-invariance half (shuffle width, AQE) is
+tests/test_oracle.py::test_oracle_match_is_conf_invariant.
 """
 
 from __future__ import annotations
@@ -11,24 +9,13 @@ from __future__ import annotations
 import pytest
 
 from projektdataengineering_spark.queries import load_registry
+from projektdataengineering_spark.streaming import scoped_conf
 
 REGISTRY = load_registry()
-
-# Every rows-only query that returns a deterministic relation (i.e. all
-# of them — determinism is the design rule; see module docstrings).
-ROWS_ONLY = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
 
 
 def _canon(df):
     return sorted(map(tuple, (tuple(r) for r in df.collect())))
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_query_is_run_to_run_deterministic(name, spark, sf_dir):
-    qd = REGISTRY[name]
-    first = _canon(qd.fn(spark, sf_dir))
-    second = _canon(qd.fn(spark, sf_dir))
-    assert first == second, f"{name}: result set changed between runs"
 
 
 # Partitioning invariance: every result must be a pure function of the
@@ -52,11 +39,7 @@ _PARTITIONING_SENSITIVE = [
 @pytest.mark.parametrize("name", _PARTITIONING_SENSITIVE)
 def test_result_is_invariant_to_input_split_size(name, spark, sf_dir):
     qd = REGISTRY[name]
-    default = spark.conf.get("spark.sql.files.maxPartitionBytes")
     base = _canon(qd.fn(spark, sf_dir))
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+    with scoped_conf(spark, {"spark.sql.files.maxPartitionBytes": "65536"}):
         resplit = _canon(qd.fn(spark, sf_dir))
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", default)
     assert base == resplit, f"{name}: result depends on input split size"

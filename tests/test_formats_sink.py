@@ -28,6 +28,27 @@ from projektdataengineering_spark.sources.pysink import (
 SCHEMA = "row_id bigint, bucket int, payload string"
 
 
+def test_python_sources_register_once_per_session(spark, monkeypatch):
+    """Both registration helpers register each of their sources once per
+    session: a repeat call re-registers nothing."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    real = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration,
+        "register",
+        lambda self, source: calls.append(source.name()) or real(self, source),
+    )
+    monkeypatch.delattr(spark, "_pde_data_sources", raising=False)
+    for _ in range(2):
+        register_synthetic_source(spark)
+        register_ledger_sink(spark)
+    assert sorted(calls) == sorted(
+        ["synthdocs", "synthdocsfeed", "synthdocspushdown", "ledgersink"]
+    ), calls
+
+
 def test_batch_sink_manifest_visibility_and_orphans(spark, tmp_path):
     """Rows written through the real write.format() path are readable
     back exactly; a part file NO manifest names (failed/speculative

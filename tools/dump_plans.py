@@ -1,505 +1,72 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: the physical plans of the headline queries, as
-Catalyst actually produces them at sf0.1, with the scale property each
-plan is exhibiting. Companion evidence to tests/test_plans.py — the
-tests assert the properties, this file shows the plans they hold on.
+"""Print the physical plans behind the plan claims in tests/test_plans.py.
 
-Run from the repo root:  python tools/dump_plans.py
+Each test there that calls ``facts_of`` states its claim in its
+docstring and names the registry queries it holds on. This tool reads
+that file with ``ast`` and, for each such test, prints the docstring and
+the formatted plan of every named query, as Catalyst produces it at
+``SPARK_GRAFT_SF_DIR`` (default sf0.1; static plans, pre-AQE — AQE can
+only coalesce or convert further at runtime, see plans/__init__.py).
+The tests are the one home of the claims: this tool keeps no list.
+
+Run from the repo root; Spark's log goes to stderr, so save the plans
+with a redirect:
+
+    python tools/dump_plans.py > plans.txt
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TESTS = os.path.join(ROOT, "tests", "test_plans.py")
 
-HEADLINERS: list[tuple[str, str]] = [
-    (
-        "agg_groupby_multi",
-        "TPC-H Q1 shape. The ship-date filter and 7-column pruned schema land "
-        "in the parquet scan; partial→final HashAggregate around one exchange "
-        "that carries ~6 rows of aggregate state per map task.",
-    ),
-    (
-        "join_multiway",
-        "5-way region→nation→customer→orders→lineitem chain: every dimension "
-        "side is a BroadcastHashJoin — the fact table never shuffles; the only "
-        "exchange is the final aggregation's.",
-    ),
-    (
-        "filter_highwater",
-        "The incremental HWM predicate rewritten onto the raw nanosecond long "
-        "so it reaches PushedFilters despite the ns→µs conversion above the "
-        "scan — at rest this is the partition-pruning path.",
-    ),
-    (
-        "sort_limit_asc",
-        "Serving shape S1: TakeOrderedAndProject (per-partition heap + driver "
-        "merge of 200 rows), not a range-partitioned global sort.",
-    ),
-    (
-        "join_asof",
-        "As-of join via union+window: one exchange on the join key, one sort, "
-        "one window — no nested-loop fallback.",
-    ),
-    (
-        "topk_per_group",
-        "Rank-filter window: single shuffle on the partition key, filter on "
-        "row_number pushed against the window output.",
-    ),
-    (
-        "split_train_test",
-        "Deterministic md5 split: pure map-side projection — zero exchanges, "
-        "streams at scan speed.",
-    ),
-    (
-        "subquery_avg_yearly",
-        "TPC-H Q17 shape decorrelated: per-part aggregate joined back on the "
-        "correlation key; lineitem scans pruned to the three referenced "
-        "columns.",
-    ),
-    (
-        "sim_minhash_lsh",
-        "MinHash-LSH: the signature pipeline runs once; candidates come from a "
-        "groupBy on the band key with array-side pair expansion — no band "
-        "self-join, no text through the exchanges (fixed-width sigs + ids).",
-    ),
-    (
-        "agg_histogram",
-        "Fixed-width histogram: partial→final aggregate on a few dozen bucket "
-        "keys — histogramming any input size moves only per-bucket states.",
-    ),
-    (
-        "pipeline_sessionize",
-        "Gap sessionization: lag and the running session counter share one "
-        "(user_id × (ts, event_id)) window sort — a single exchange, a single "
-        "sort, both window functions fused into one Window node pair.",
-    ),
-    (
-        "pipeline_customer_revenue",
-        "TPC-H Q10 shape: returnflag filter pushed into the lineitem scan, "
-        "nation broadcast, revenue through exact decimal, final top-20 as "
-        "TakeOrderedAndProject.",
-    ),
-    (
-        "pipeline_contamination",
-        "Benchmark n-gram contamination: the benchmark gram set broadcasts "
-        "(orders smaller than the corpus); per-doc overlap counting is a "
-        "partial→final aggregate on doc_id.",
-    ),
-    (
-        "sim_ngram_jaccard",
-        "Blocked-exact Jaccard, round-2 key: the join's equi component is "
-        "(source, minhash-band) — block sizes bounded at near-dup-cluster "
-        "scale instead of |source| — planned as a hash/sort-merge join on "
-        "that compound key with the doc_a<doc_b inequality as post-filter.",
-    ),
-    (
-        "join_exists_correlated",
-        "TPC-H Q4 shape: the correlated EXISTS decorrelates to a left-semi "
-        "join — the quantity filter is pushed into the lineitem scan, the "
-        "semi side reduces before the exchange, and the priority count "
-        "partial-aggregates; no row multiplication is possible.",
-    ),
-    (
-        "pipeline_winsorize",
-        "Exact p10/p90 winsorization: the ranked window, the partition "
-        "count, and the two cut-broadcast windows all reuse ONE exchange on "
-        "event_type — order statistics, not interpolated percentiles, so "
-        "the clip values are engine-portable.",
-    ),
-    (
-        "pipeline_chunk_overlap",
-        "RAG chunking: sequence/explode/slice/md5 is a pure map-side "
-        "projection — zero exchanges; chunking any corpus size streams at "
-        "scan speed and partitions embarrassingly.",
-    ),
-    (
-        "join_skew_salted",
-        "Skew-salted equi-join: the probe carries a deterministic "
-        "pmod(xxhash64, 8) salt, the build side explodes 8×, and the join "
-        "keys on (custkey, salt) — every hot key fans over 8 reducers; "
-        "result-identical to the plain join (same oracle).",
-    ),
-    (
-        "pipeline_price_deciles",
-        "Exact global deciles WITHOUT a global sort: range-repartition + "
-        "per-partition row_number (behind the checkpoint scan), partition "
-        "offsets as a broadcast hash join, NTILE rebuilt as integer math "
-        "against a 1-row count broadcast. The only SinglePartition stages "
-        "are partition-count-sized.",
-    ),
-    (
-        "join_min_cost_supplier",
-        "TPC-H Q2 shape. Lineitem is semi-filtered by the part predicate via "
-        "a broadcast semi join BEFORE the (partkey, suppkey) aggregation, so "
-        "the only big shuffle carries eligible rows only; the per-part min "
-        "joins back on (partkey, min_price) reusing the partkey exchange; "
-        "part and supplier dimensions broadcast.",
-    ),
-    (
-        "join_only_late_supplier",
-        "TPC-H Q21 shape. Lineitem collapses to DISTINCT (orderkey, suppkey, "
-        "late) pairs first; the EXISTS/NOT-EXISTS become left-semi and "
-        "left-anti self-joins on the collapsed set, all riding one orderkey "
-        "exchange; supplier broadcasts at the end.",
-    ),
-    (
-        "join_bucketed_colocated",
-        "Round 6: both sides scanned from 8-bucket tables — the join and the "
-        "per-key rollup plan ZERO shuffle exchanges (the dim side broadcasts "
-        "at fixture scale; at fact-x-fact scale both sides ride their "
-        "buckets); the bucketed write paid its shuffle once at ingest.",
-    ),
-    (
-        "join_fuzzy_jaro",
-        "Round 6 entity resolution: the pandas-UDF metric (ArrowEvalPython) "
-        "sits on the tiny distinct-name-pair side; the million-row blocked "
-        "record-pair join is pure JVM equi-join + a BroadcastHashJoin probe "
-        "of the scored verdict table.",
-    ),
-    (
-        "pipeline_zorder_layout",
-        "Round 6: two global rank windows feed a pure-arithmetic Morton "
-        "interleave (whole-stage codegen, no UDF), one curve sort, one "
-        "aggregate — the layout decision is a plan, not a driver loop.",
-    ),
-    (
-        "pipeline_time_gapfill",
-        "Round 6: hourly dedup window, map-side sequence() grid explode, one "
-        "left join and one LOCF window per user — two exchanges total for a "
-        "full resample+impute.",
-    ),
-    (
-        "sim_cosine_exact_pairs",
-        "Hash-checked exact cosine: norms are computed once per vector below "
-        "the label-blocked self-join (no per-pair recomputation); the dot "
-        "product is a fold over zip_with inside codegen — no UDF, no "
-        "cartesian; pair cardinality is bounded by the label block sizes.",
-    ),
-    (
-        "pipeline_compaction_plan",
-        "Round-8 layout maintenance: two chained partial→final hash "
-        "aggregates (rows→simulated files→partitions) with integer-only "
-        "manifest math; at production scale the first aggregate is replaced "
-        "by the table's transaction-log metadata read, so the plan cost is "
-        "the file count, not the data.",
-    ),
-    (
-        "agg_heavy_hitters_mg",
-        "Round-8 mergeable Misra-Gries heavy hitters: mapInPandas folds O(k) "
-        "counters per partition, ONE ids-only groupBy merges them; the exact "
-        "top-10 certification side is a separate partial→final count whose "
-        "1-row corpus total broadcasts onto 10 rows (allowlisted BNLJ).",
-    ),
-    (
-        "graph_pagerank",
-        "Round-7 iterative shape: 8 unrolled power-iteration rounds, each one "
-        "edges⋈ranks hash join + partial→final integer-numerator sum + left "
-        "join back to the node set, with a lazy localCheckpoint lineage cut "
-        "per round so the final plan stays flat instead of 8 stacked joins.",
-    ),
-    (
-        "dedup_substring_spans",
-        "Round-9 substring dedup: window fingerprints are map-side md5 over "
-        "sliced token arrays; only (digest, doc_id, pos) reaches the two "
-        "exchanges (corpus-wide repeat count on fp, island merge on doc_id) — "
-        "repeated-window mass, not corpus², sizes the shuffles.",
-    ),
-    (
-        "join_bloom_prefiltered",
-        "Round-9 runtime-filter shape: the Bloom word bitmap sits in the plan "
-        "as literals, the three bit tests run inside the lineitem scan's "
-        "WholeStageCodegen span (map-side pruning BEFORE any exchange), and "
-        "the surviving ~5% meet the hot orders in a BroadcastHashJoin.",
-    ),
-    (
-        "pipeline_bm25_topk",
-        "Round-9 retrieval: tf aggregation is FILTERED to the 4 query terms "
-        "before its exchange (per-query work ∝ postings, not corpus); the "
-        "term pick and the final top-50 are both TakeOrdered driver merges "
-        "of per-partition heaps — no global sort anywhere.",
-    ),
-    (
-        "pipeline_attribution",
-        "Round-9b analytics: both IGNORE-NULLS touch carries come out of ONE "
-        "exchange + sort + Window pass on user_id; the two attribution "
-        "models fan out MAP-SIDE via Generate (explode) — a union of two "
-        "selects would have re-run the window pipeline per branch — before "
-        "the tiny (model, channel) partial→final aggregate.",
-    ),
-    (
-        "filter_pareto_frontier",
-        "Round-9b skyline: the dominance test is the sort-scan identity — "
-        "per-price max collapse (one aggregate exchange), a shifted running "
-        "max over the distinct-price frame, and a BroadcastHashJoin back on "
-        "price. The definitional O(n²) NOT-EXISTS self-join (what the "
-        "oracle runs) never appears in the plan.",
-    ),
-    (
-        "graph_bfs_hops",
-        "Round-9b BFS: three unrolled frontier levels, each an equi-join on "
-        "node id + distinct + left-anti against the visited set, lineage cut "
-        "per level; the purchase-graph edge list (ids only, one distinct "
-        "over orders⋈lineitem) is checkpointed once and reused.",
-    ),
-    (
-        "agg_quantile_sketch",
-        "Round-10 mergeable quantile sketch: ONE partial→final "
-        "HashAggregate on (event_type, bucket) is the distributed sketch "
-        "merge; the quantile spec fans out map-side via Generate (a "
-        "3-literal explode) — no theta join anywhere; the exact-rank "
-        "window pass exists only for the certification leg.",
-    ),
-    (
-        "graph_jaccard_neighbors",
-        "Round-10 co-purchase link prediction: the pair self-join hashes "
-        "both sides on the customer key (co-located), hub customers are "
-        "degree-capped BEFORE the join, and the result is TakeOrdered — "
-        "pair work is bounded by cap×|edges|, never corpus².",
-    ),
-    (
-        "multimodal_image_phash",
-        "Round-10 image near-dup: one ArrowEvalPython/mapInPandas pass "
-        "decodes PNGs and emits 64-bit hashes; downstream is pure JVM — "
-        "four chunk equi self-joins (banded LSH), Hamming on candidates "
-        "only, one aggregate join-back. The image bytes never shuffle.",
-    ),
-    (
-        "join_semireduced",
-        "Round-11 both-sides semi-join reduction: each side's md5 Bloom "
-        "probe (plan-literal word arrays) filters the OTHER side inside "
-        "its scan stage, so both exchanges ship survivors only; the join "
-        "itself is the hinted SortMergeJoin — the honest big-big shape, "
-        "no broadcast anywhere.",
-    ),
-    (
-        "agg_sketch_overlap",
-        "Round-11 theta/KMV set algebra: two-level exact min-k (shard-"
-        "local k-smallest, then global k-smallest of ≤64k survivors — "
-        "no single-reducer segment sort), a ≤2k-row sketch full-join, "
-        "1-row θ* and exact-twin broadcasts; everything after the "
-        "sketches is O(k).",
-    ),
-    (
-        "pipeline_bigram_kn",
-        "Round-11 Kneser-Ney: bigrams built MAP-SIDE by an indexed array "
-        "lambda (no positional self-join), three aggregates on the pair-"
-        "TYPE table, a 1-row type-count broadcast, and TakeOrdered — "
-        "token text shuffles once, as (w1, w2) pairs.",
-    ),
-    (
-        "pipeline_bpe_train",
-        "Round-12 reshape: ONE job — distributed word-type aggregation "
-        "(partial→final on `w`), a single-partition exchange, and the "
-        "12-merge loop inside one guarded MapInPandas task over the "
-        "vocabulary-bounded type table (the SentencePiece split). The "
-        "12 scheduler round-trips and 12 per-iteration pair-count "
-        "shuffles of the old loop are gone.",
-    ),
-    (
-        "dedup_incremental_neardup",
-        "Round-12 incremental near-dup: the corpus side is a plain "
-        "parquet SCAN of the persisted signature index (no tokenize/md5 "
-        "anywhere above it); only the ~25% batch slice runs the signing "
-        "kernel, once (lazy localCheckpoint fans it to the three "
-        "consumer branches); probe is a 4×32-hex equijoin — ids and "
-        "signatures shuffle, never text.",
-    ),
-    (
-        "pipeline_dsir_select",
-        "Round-12 DSIR selection: two map-side bigram fan-outs (pool "
-        "instances lazily checkpointed — they feed the model build AND "
-        "the scoring join), vocab²-bounded qbits tables broadcast back, "
-        "one doc-keyed aggregate, and TakeOrderedAndProject for the "
-        "top-100 frontier — no global sort, no Python stage, every "
-        "score an exact integer.",
-    ),
-    (
-        "dedup_embedding_incremental",
-        "Round-13 incremental embedding dedup: the corpus side is a "
-        "plain parquet SCAN of the persisted IVF member lists (no "
-        "assignment kernel above it — the quantizer ran once per corpus "
-        "version); only the batch slice runs the broadcast-centroid "
-        "argmax, once (lazy localCheckpoint fans it to the member, "
-        "probe and verdict branches); the quadratic work is confined to "
-        "per-cell applyInPandas BLAS blocks executed exactly ONCE — both "
-        "verdicts (corpus match, earlier-batch match) are conditional "
-        "mins of a single aggregate over the pair stream — and only "
-        "(id, id, src) triples leave the kernel.",
-    ),
-    (
-        "sim_cosine_ivfpq",
-        "Round-14 distributed IVFADC: the code table never touches the "
-        "driver — members are coarse-assigned and PQ-encoded in ONE "
-        "map-side mapInPandas chain, then cell-partitioned by the "
-        "groupBy exchange; probes explode to nprobe cells and meet only "
-        "those cells' codes inside the per-cell applyInPandas ADC "
-        "kernel; the shortlist re-rank is pure JVM fold-cosine column "
-        "math under a per-query window. Driver-side payload = the "
-        "broadcast centroids and codebooks, both k-bounded — the "
-        "distributed form sim_cosine_pq's PQ_CODES_MAX_CELLS guard "
-        "points to past the collect ceiling.",
-    ),
-    (
-        "stream_embedding_delta",
-        "Round-14 vector live loop (read-back side): the certified "
-        "result is a union of epoch-manifest JSONL scans with an "
-        "explicit schema — the verdict work happened inside the "
-        "stream's per-epoch foreachBatch (persisted-index scan + "
-        "shared assignment/threshold kernels, committed atomically "
-        "per epoch), so the steady-state read is pure committed-state "
-        "metadata plus a projection.",
-    ),
-    (
-        "pipeline_merge_evolve",
-        "Round-14 write-side schema evolution: ONE keyed full-outer "
-        "join against the v1 table read from disk; the rewrite plan "
-        "touches only the partial-rollout buckets (copy-on-write "
-        "carries the rest as files, outside the plan entirely); the "
-        "three snapshot reads are partial-aggregated scans — v2's "
-        "under mergeSchema with a COALESCE backfill projection, "
-        "v0/v1 under their own five-column schema.",
-    ),
-    (
-        "sim_cosine_ivfpq_reuse",
-        "Round-15 IVFADC on the PERSISTED code table: the member-code "
-        "leg is now a parquet scan of the cell-partitioned index (one "
-        "file per inverted list; `cell` is the partition column, so "
-        "the groupBy exchange is the only movement the codes ever "
-        "make) instead of a per-call assign+encode chain — the "
-        "encode-once/probe-forever split. Probe/ADC/re-rank legs are "
-        "plan-identical to sim_cosine_ivfpq.",
-    ),
-    (
-        "sim_ivfpq_index_append",
-        "Round-15 code-index append: the v1 leg is a pure parquet "
-        "scan (never recomputed); only the twin batch flows through "
-        "the assign+encode mapInPandas chain; the union writes "
-        "cell-partitioned and the audit is two partial-aggregated "
-        "index scans — nothing driver-side but the k-bounded "
-        "centroid/codebook broadcasts.",
-    ),
-    (
-        "pipeline_merge_vacuum",
-        "Round-15 snapshot expiry (read-back side): the GC itself is "
-        "O(files) driver metadata (manifest difference + unlink); the "
-        "certified plan is two partial-aggregated snapshot reads over "
-        "EXPLICIT manifest file lists (basePath-pinned so the bucket "
-        "partition column survives), v2's under mergeSchema with the "
-        "COALESCE backfill projection.",
-    ),
-    (
-        "agg_custdist_outer",
-        "Round-16 TPC-H Q13 shape: the orders-side NOT LIKE sits in "
-        "the OUTER join condition and is still pushed to the scan — "
-        "PushedFilters shows Not(StringContains(o_orderpriority)) — "
-        "so unmatched customers survive to the c_count=0 bucket while "
-        "the scan prunes. One custkey exchange feeds the per-customer "
-        "count; the distribution aggregate re-shuffles ~50 rows.",
-    ),
-    (
-        "join_disjunctive_pushdown",
-        "Round-16 TPC-H Q19 shape: written filter-after-join, and "
-        "Catalyst's CNF extraction hands EACH scan its derived "
-        "disjunction — lineitem gets the status equality plus the OR "
-        "of quantity ranges, part gets the OR of (brand AND size) "
-        "branches (both in PushedFilters) — with the full "
-        "cross-attribute OR re-applied as the join condition.",
-    ),
-    (
-        "pipeline_index_vacuum",
-        "Round-16 unified index-generation vacuum (read-back side): "
-        "the GC is driver-side directory metadata; the certified plan "
-        "is six partial-aggregated scans — one per retained "
-        "generation per index family — over the post-vacuum parquet, "
-        "proving the sweep deleted only orphans.",
-    ),
-    (
-        "agg_product_profit",
-        "Round-16 TPC-H Q9 shape: the LIKE-filtered part slice, "
-        "supplier and nation all broadcast so the fact table is "
-        "semi-reduced before the orders edge — the only big-big join "
-        "— and one (nation, year) exchange carries two exact decimal "
-        "sums subtracted once as doubles.",
-    ),
-    (
-        "sim_ivfpq_cell_skew",
-        "Round-16 occupancy audit: two counts-only partial-aggregated "
-        "scans of the cell-partitioned code index (codes never move; "
-        "the cell column comes from the partition directory), each "
-        "collapsing to a 1-row verdict with the skew ratio and the "
-        "retrain boolean computed as single IEEE ops.",
-    ),
-    # round 17 (these five were hand-appended to PLANS.md in r17;
-    # folded into the generator in r18 so the tool stays the one
-    # producer of the file)
-    (
-        "sim_ivf_member_skew",
-        "Round-17 member-line occupancy audit: the code-line audit's "
-        "counts-only partial-aggregated scan applied to the embedding "
-        "member index — one scan per generation reading only the cell "
-        "column, a metadata-sized verdict row out.",
-    ),
-    (
-        "pipeline_quality_classifier",
-        "Round-17 learned quality gate: one map-side explode of the "
-        "unigram ∪ bigram feature array, a BROADCAST hash join "
-        "against the weight-table model artifact, and the "
-        "featureless-doc spine unioned in as zero-contribution rows "
-        "so ONE doc-keyed partial→final aggregate is the plan's only "
-        "real exchange — zero join shuffles.",
-    ),
-    (
-        "join_shipping_priority",
-        "Round-17 TPC-H Q3 shape: both date predicates in "
-        "PushedFilters, BUILDING-segment keys broadcast as a LeftSemi "
-        "reduction BEFORE the fact edge, exact-decimal revenue rollup "
-        "on the join key, TakeOrderedAndProject top-10 (per-partition "
-        "heaps — never a global sort).",
-    ),
-    (
-        "join_local_supplier_volume",
-        "Round-17 TPC-H Q5 shape — the sweep's one CYCLIC join graph: "
-        "region→nation→supplier collapsed into one broadcast dim "
-        "before facts move; the date-pruned orders⋈lineitem edge is "
-        "the only big-big join, and the c_nationkey=s_nationkey cycle "
-        "closes in a single compound-condition broadcast join — "
-        "customer never shuffles.",
-    ),
-    (
-        "agg_forecast_revenue",
-        "Round-17 TPC-H Q6 shape: all four predicates reach the "
-        "parquet scan as PushedFilters; the plan is map-side "
-        "filter-project-partial-sum with a 1-row reduce — the purest "
-        "pushdown check in the sweep.",
-    ),
-    # round 18
-    (
-        "pipeline_shuffle_shard",
-        "Round-18 shuffle-to-shards manifest: a distributed prefix "
-        "sum — local rank + running token sum inside 256 ordered "
-        "md5-prefix ranges (one bucket-keyed exchange), plus a "
-        "256-row cumulated bucket-base frame broadcast back. The "
-        "single-partition global window the oracle replays never "
-        "appears in the plan (the tiny base-frame window runs over "
-        "256 rows, not the data).",
-    ),
-    (
-        "sim_ivfpq_gen_serving",
-        "Round-18 retrain-generation serving probe: the shared ADC "
-        "kernel against the gen-1 cell-partitioned code line (coarse "
-        "assign + per-cell ADC + exact JVM re-rank + top-3), the "
-        "exact all-pairs baseline over corpus ∪ twins materialized "
-        "ONCE (lazy localCheckpoint) so neither certification branch "
-        "re-runs the Python all-pairs stage, and the 1-row recall "
-        "verdict broadcast back onto the exact spine.",
-    ),
-]
+
+def _is_facts_of(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "facts_of"
+    )
+
+
+def _query_names(fn: ast.FunctionDef) -> list[str]:
+    """String literals ``fn`` passes to ``facts_of``: directly, or as the
+    first element of each item of a literal tuple a ``for`` loop feeds
+    into it."""
+    args = [n.args[0] for n in ast.walk(fn) if _is_facts_of(n) and n.args]
+    names = [a.value for a in args if isinstance(a, ast.Constant)]
+    loop_vars = {a.id for a in args if isinstance(a, ast.Name)}
+    for loop in ast.walk(fn):
+        if not (isinstance(loop, ast.For) and isinstance(loop.iter, (ast.Tuple, ast.List))):
+            continue
+        target = loop.target.elts[0] if isinstance(loop.target, ast.Tuple) else loop.target
+        if isinstance(target, ast.Name) and target.id in loop_vars:
+            for item in loop.iter.elts:
+                first = item.elts[0] if isinstance(item, ast.Tuple) else item
+                names.append(first.value)
+    return list(dict.fromkeys(names))
+
+
+def plan_claims(path: str = TESTS) -> list[tuple[str, str | None, list[str]]]:
+    """(test name, docstring, query names) of each test in ``path`` that
+    calls ``facts_of``, in file order."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    return [
+        (fn.name, ast.get_docstring(fn), _query_names(fn))
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        and fn.name.startswith("test_")
+        and any(_is_facts_of(n) for n in ast.walk(fn))
+    ]
 
 
 def main() -> int:
+    sys.path.insert(0, ROOT)
     from projektdataengineering_spark.plans import explain_string
     from projektdataengineering_spark.queries import load_registry
     from projektdataengineering_spark.session import get_spark
@@ -507,21 +74,16 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="pde-plans")
     registry = load_registry()
-
-    out = [
-        "# PLANS — physical plans of the headline queries\n",
-        f"Generated by `tools/dump_plans.py` at `{sf_dir}` "
-        "(static plans, pre-AQE; AQE can only coalesce/convert further at "
-        "runtime — see plans/__init__.py). The properties described are "
-        "asserted by tests/test_plans.py.\n",
-    ]
-    for name, why in HEADLINERS:
-        text = explain_string(registry[name].fn(spark, sf_dir)).rstrip()
-        out.append(f"## {name}\n\n{why}\n\n```\n{text}\n```\n")
-
-    with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"PLANS.md written ({len(HEADLINERS)} plans)")
+    claims = plan_claims()
+    print(f"# Plans behind the claims in tests/test_plans.py at {sf_dir}\n")
+    n_plans = 0
+    for test, doc, names in claims:
+        print(f"## {test}\n\n{doc}\n")
+        for name in names:
+            text = explain_string(registry[name].fn(spark, sf_dir)).rstrip()
+            print(f"### {name}\n\n```\n{text}\n```\n", flush=True)
+            n_plans += 1
+    print(f"{len(claims)} tests, {n_plans} plans", file=sys.stderr)
     spark.stop()
     return 0
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Regenerate SCALING.md: measured evidence for the 100-TB design
-claims, complementing PLANS.md (plan shapes) and bench.py (absolute
-times at sf0.1).
+claims, complementing the plan tests (tests/test_plans.py, plan shapes)
+and bench.py (absolute times at sf0.1).
 
 Two experiments:
 
@@ -229,8 +229,8 @@ def main() -> int:
     out = [
         "# SCALING — measured growth-order and skew evidence\n",
         "Generated by `tools/scale_probe.py` on local[%s]. Companion to "
-        "PLANS.md (the plan shapes) and BENCH (absolute times): this file "
-        "shows how the shapes BEHAVE as data grows and keys skew.\n"
+        "tests/test_plans.py (the plan shapes) and BENCH (absolute times): "
+        "this file shows how the shapes BEHAVE as data grows and keys skew.\n"
         % os.environ.get("SPARK_GRAFT_CPUS", "32"),
         "## 1. Wall time vs scale factor (rows ×10 per step)\n",
         "| query | shape | "
