@@ -14,23 +14,29 @@ Reference behaviors reproduced/fixed (SURVEY.md §2.2):
       provide ``dedup_incremental`` (anti-join on the business key) so
       replays are idempotent.
 
-Scale notes: ``high_water_mark`` is a scalar aggregate (parquet footer
-stats make it metadata-mostly; the single row is the only driver-side
-collect in the whole library). ``incremental_filter`` is a plain
-pushdown-able predicate — on a date-partitioned table it prunes
-partitions, which is the 100-TB design: the HWM read touches stats, the
-filter touches only new partitions. ``dedup_incremental``'s anti-join
-shuffles both sides on the key; at scale, feed ``existing`` as only the
-key column (column pruning keeps the shuffle narrow) or a Bloom-filter
-pre-pass.
+Scale notes: the batch pipeline reads the high-water mark with
+``stored_high_water_mark``: from the stored parquet files' footers
+(pyarrow on the driver, no Spark job) when every file is local and holds
+the timestamp as INT64 TIMESTAMP(MILLIS|MICROS, UTC) with row-group
+statistics; otherwise through ``high_water_mark``, a scalar aggregate
+over every stored file (Spark's parquet aggregate pushdown does not
+cover TIMESTAMP, so that path scans the column). ``incremental_filter``
+is a plain pushdown-able predicate. ``dedup_incremental``'s anti-join
+builds on ``existing``'s key column, broadcast when it is small enough;
+the batch pipeline passes the stored keys semi-joined against the
+batch's keys, so that build side holds at most the batch's keys, never
+the key history.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def high_water_mark(df: DataFrame, ts_col: str):
@@ -41,6 +47,68 @@ def high_water_mark(df: DataFrame, ts_col: str):
     """
     row = df.agg(F.max(ts_col).alias("hwm")).first()
     return row["hwm"] if row else None
+
+
+def stored_high_water_mark(stored: DataFrame, ts_col: str):
+    """High-water mark of a parquet table read with an explicit schema
+    (``sources.read_existing``): from the files' footers when they give
+    it exactly, else :func:`high_water_mark`'s aggregate.
+
+    The footer path runs when every file Spark's file index lists is a
+    local ``file:`` URI holding ``ts_col`` as INT64 TIMESTAMP(MILLIS or
+    MICROS, UTC-adjusted) with min/max statistics in every row group
+    that holds a non-NULL value. The mark is the largest row-group
+    maximum, exact to the microsecond, and matches the aggregate's
+    Python value. On that path a file lacking a column of ``stored``'s
+    schema, or holding it with another type, raises. Any other
+    warehouse — s3a or hdfs, INT96 files from a session without
+    ``outputTimestampType=TIMESTAMP_MICROS``, files written with Spark's
+    legacy calendar rebase — runs the aggregate.
+    """
+    marks: list[int] = []
+    for uri in stored.inputFiles():
+        maxima = _footer_maxima(uri, stored.schema, ts_col)
+        if maxima is None:
+            return high_water_mark(stored, ts_col)
+        marks += maxima
+    return T.TimestampType().fromInternal(max(marks)) if marks else None
+
+
+def _footer_maxima(uri: str, schema: T.StructType, ts_col: str) -> list[int] | None:
+    """Row-group maxima of ``ts_col`` (µs since the epoch) in one stored
+    file's footer; None when the footer cannot give them exactly."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    parts = urlsplit(uri)
+    if parts.scheme != "file":
+        return None
+    meta = pq.read_metadata(url2pathname(parts.path))
+    arrow = meta.schema.to_arrow_schema()
+    for field in schema:
+        want = to_arrow_type(field.dataType)
+        got = arrow.field(field.name).type if field.name in arrow.names else None
+        if got is None or (got != want and not (
+                pa.types.is_timestamp(got) and pa.types.is_timestamp(want))):
+            raise ValueError(
+                f"{uri}: column {field.name} is {got}, the table reads "
+                f"{field.dataType.simpleString()}")
+    us_per_unit = {pa.timestamp("ms", "UTC"): 1000, pa.timestamp("us", "UTC"): 1}
+    scale = us_per_unit.get(arrow.field(ts_col).type)
+    col = next(j for j in range(len(meta.schema)) if meta.schema.column(j).path == ts_col)
+    if (scale is None or meta.schema.column(col).physical_type != "INT64"
+            or b"org.apache.spark.legacyDateTime" in (meta.metadata or {})):
+        return None
+    maxima = []
+    for r in range(meta.num_row_groups):
+        rg = meta.row_group(r)
+        stats = rg.column(col).statistics
+        if stats is not None and stats.has_min_max:
+            maxima.append(stats.max_raw * scale)
+        elif stats is None or not stats.has_null_count or stats.null_count != rg.num_rows:
+            return None  # holds a non-NULL value the footer does not bound
+    return maxima
 
 
 def incremental_filter(

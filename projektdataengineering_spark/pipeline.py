@@ -4,18 +4,26 @@ Reproduces /root/reference/spark_tasks/weather_task.py:129-147 (read →
 cast → incremental filter → append → archive) with the four semantic
 fixes SURVEY.md §2.2 calls for:
 
-* O4: a failed high-water-mark read FAILS the batch (the reference
-  swallowed it and appended everything — duplicate risk); idempotence
-  against replays comes from the HWM filter itself plus an optional
-  business-key anti-join.
+* O4: an unreadable warehouse FAILS the batch (the reference swallowed
+  the error and appended everything — duplicate risk); only a warehouse
+  path that does not exist or holds no data files bootstraps.
+  Idempotence against replays comes from the HWM filter itself plus an
+  optional business-key anti-join.
 * O5: ONE action. The reference ran count() and then write — two full
   source scans with a race between them. Here the row count rides the
   write action via ``df.observe`` (an accumulator, not a second scan).
 * Archive after commit (same ordering as the reference, O6 layout);
   re-offered files after a crash are no-ops thanks to the HWM filter.
-* Parquet warehouse partitioned by load date — at 100 TB the HWM read
-  is parquet-footer metadata on the latest partitions and the filter
-  prunes everything older.
+* The idempotence checks cost what the batch costs, not what the
+  warehouse holds. The warehouse is an unpartitioned parquet directory,
+  read with the key and timestamp types the cast layer writes (no
+  schema-inference job). On a local warehouse written with
+  ``outputTimestampType=TIMESTAMP_MICROS`` (``session.get_spark`` pins
+  it) the HWM comes from the files' parquet footers on the driver, so no
+  Spark job runs before the write; elsewhere (s3a/hdfs, INT96 files) it
+  is a MAX aggregate over the stored timestamp column. The anti-join
+  builds on the stored keys that also occur in the batch, and with no
+  row past the HWM AQE skips the stored scan.
 """
 
 from __future__ import annotations
@@ -23,11 +31,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .operators.incremental import high_water_mark, incremental_filter
-from .sources import read_csv_with_casts
+from .operators.incremental import dedup_incremental, incremental_filter, stored_high_water_mark
+from .sources import cast_layer, read_csv_with_casts, read_existing
 from .sources.archive import archive_files
 
 
@@ -60,18 +69,17 @@ def run_incremental_batch(
     it identifies the load event and plays no part in idempotence.
     """
     df = read_csv_with_casts(spark, landing_path, casts=casts, schema=schema)
+    cols = dict.fromkeys(c for c in (key_col, ts_col) if c is not None)
+    stored = read_existing(
+        spark, warehouse_path, T.StructType([T.StructField(c, df.schema[c].dataType) for c in cols])
+    )  # None: first run, no warehouse yet (O3 bootstrap)
 
-    try:
-        existing: DataFrame | None = spark.read.parquet(warehouse_path)
-    except Exception:  # first run: no warehouse yet (O3 bootstrap)
-        existing = None
-
-    hwm = high_water_mark(existing, ts_col) if existing is not None else None
+    hwm = stored_high_water_mark(stored, ts_col) if stored is not None else None
     fresh = incremental_filter(df, ts_col, hwm)
-    if key_col is not None and existing is not None:
-        from .operators.incremental import dedup_incremental
-
-        fresh = dedup_incremental(fresh, existing, key_col)
+    if key_col is not None and stored is not None:
+        # a stored key the batch does not hold cannot drop a batch row
+        seen = stored.select(key_col).join(fresh.select(key_col), on=key_col, how="left_semi")
+        fresh = dedup_incremental(fresh, seen, key_col)
 
     if surrogate_key is not None:
         from .sources import with_surrogate_key
@@ -119,11 +127,8 @@ def run_streaming_ingest(
         .option("sourceArchiveDir", archive_root)
         .csv(landing_path)
     )
-    for col_name, dtype in casts.items():
-        raw = raw.withColumn(col_name, F.expr(f"try_cast({col_name} AS {dtype})"))
-
     q = (
-        raw.writeStream.outputMode("append")
+        cast_layer(raw, casts).writeStream.outputMode("append")
         .format("parquet")
         .option("path", warehouse_path)
         .option("checkpointLocation", checkpoint_path)

@@ -243,9 +243,11 @@ def agg_scalar_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The reference pushes this into Postgres by hand-writing a subquery as
     the JDBC table (weather_task.py:72-76). Engine-native form: a scalar
-    aggregate over the columnar source — parquet min/max footer stats make
-    this a metadata-mostly scan, and the single-row result is the only
-    thing that ever reaches the driver.
+    aggregate over the columnar source; it scans the ts column of every
+    file (Spark's parquet aggregate pushdown does not cover TIMESTAMP), and
+    the single-row result is the only thing that reaches the driver. The
+    batch pipeline reads its own mark from parquet footers instead
+    (``operators.incremental.stored_high_water_mark``).
     """
     ev = load_table(spark, sf_dir, "events")
     return ev.agg(F.max("ts").alias("max_ts"))

@@ -88,10 +88,37 @@ def read_csv_with_casts(
     """
     casts = WEATHER_CASTS if casts is None else casts
     schema = weather_raw_schema() if schema is None else schema
-    df = spark.read.option("header", True).schema(schema).csv(path)
-    for col_name, dtype in casts.items():
-        df = df.withColumn(col_name, F.expr(f"try_cast({col_name} AS {dtype})"))
-    return df
+    return cast_layer(spark.read.option("header", True).schema(schema).csv(path), casts)
+
+
+def cast_layer(df: DataFrame, casts: dict[str, str]) -> DataFrame:
+    """``try_cast`` each column named in ``casts`` to its type, in place
+    and in one projection (a ``withColumn`` chain adds one projection per
+    column to the analyzed plan)."""
+    return df.withColumns(
+        {c: F.expr(f"try_cast({c} AS {dtype})") for c, dtype in casts.items()}
+    )
+
+
+def read_existing(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
+    """Stored parquet table at ``path``, or None ONLY when the path does
+    not exist or, read with ``schema``, holds no data files (O3
+    bootstrap). Bootstrap is detected via a Hadoop-FS existence probe and
+    Spark's own file listing, NOT by catching the read error: a transient
+    or corrupt-footer failure on an EXISTING table must propagate —
+    swallowing it would re-append a replayed batch, or route a merge into
+    its overwrite bootstrap and replace the whole warehouse with one
+    batch. With ``schema`` the read infers nothing (no footer job)."""
+    sc = spark.sparkContext  # the archive.py py4j boundary
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    if not hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath):  # noqa: SLF001
+        return None
+    if schema is None:
+        return spark.read.parquet(path)
+    stored = spark.read.schema(schema).parquet(path)
+    return stored if stored.inputFiles() else None
 
 
 def read_json_lines(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

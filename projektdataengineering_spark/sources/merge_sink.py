@@ -43,6 +43,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import read_existing
+
 
 def _hadoop_fs(spark: SparkSession, path: str):
     """(jvm, Path, FileSystem) for ``path`` — the archive.py py4j boundary."""
@@ -57,19 +59,6 @@ def _rename(fs, src, dst) -> bool:
     inject a failure at an arbitrary point of the partition swap and
     assert the rollback restores the complete pre-merge table."""
     return fs.rename(src, dst)
-
-
-def _read_existing(spark: SparkSession, path: str) -> DataFrame | None:
-    """Existing warehouse table, or None ONLY when the path does not
-    exist (O3 bootstrap). Bootstrap is detected via a Hadoop-FS
-    existence probe, NOT by catching the read error: a transient or
-    corrupt-footer failure on an EXISTING table must propagate —
-    swallowing it would route merge_upsert into mode("overwrite")
-    bootstrap and silently replace the whole warehouse with one batch."""
-    _, hpath, fs = _hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        return None
-    return spark.read.parquet(path)
 
 
 def _dedup_batch(batch: DataFrame, keys: list[str], order_col: str) -> DataFrame:
@@ -102,7 +91,7 @@ def append_once(
     serialized (that needs the table-format upgrade). At scale the
     existing side is a key-column-only scan — combine with a partition
     predicate pushed by the caller when keys cluster by partition."""
-    existing = _read_existing(spark, path)
+    existing = read_existing(spark, path)
     fresh = batch.dropDuplicates(keys)
     if existing is not None:
         fresh = fresh.join(existing.select(*keys), on=keys, how="left_anti")
@@ -145,7 +134,7 @@ def merge_upsert(
     jvm, hpath, fs = _hadoop_fs(spark, path)
 
     fresh = _dedup_batch(batch, keys, order_col)
-    existing = _read_existing(spark, path)
+    existing = read_existing(spark, path)
 
     if existing is None:
         writer = fresh.write.mode("overwrite")

@@ -1,20 +1,28 @@
 """End-to-end batch pipeline tests: the reference's weather_task main()
 re-expressed Spark-first (pipeline.run_incremental_batch), over real
 temp directories — bootstrap, incremental second batch, replay
-idempotence, archive layout (O6), and the single-action row count (O5).
+idempotence, archive layout (O6), the single-action row count (O5), an
+unreadable warehouse failing the batch (O4), and the footer high-water
+mark, job count and anti-join shape of the idempotence checks.
 """
 
 from __future__ import annotations
 
 import os
 import pathlib
+import re
 import textwrap
 from datetime import datetime, timezone
 
 import pytest
+from pyspark.sql import types as T
+from pyspark.sql.readwriter import DataFrameWriter
 
+from projektdataengineering_spark.operators import incremental
 from projektdataengineering_spark.pipeline import run_incremental_batch
-from projektdataengineering_spark.sources import WEATHER_CASTS, weather_raw_schema
+from projektdataengineering_spark.plans import explain_string
+from projektdataengineering_spark.sources import WEATHER_CASTS, read_existing, weather_raw_schema
+from projektdataengineering_spark.streaming import scoped_conf
 
 BATCH1 = textwrap.dedent(
     """\
@@ -47,7 +55,7 @@ def dirs(tmp_path):
     }
 
 
-def _run(spark, dirs, when):
+def _run(spark, dirs, when, **kw):
     return run_incremental_batch(
         spark,
         landing_path=str(dirs["landing"]),
@@ -58,7 +66,39 @@ def _run(spark, dirs, when):
         casts=WEATHER_CASTS,
         schema=weather_raw_schema(),
         now=when,
+        **kw,
     )
+
+
+@pytest.fixture()
+def aggregate_calls(monkeypatch):
+    """Arguments of every call the high-water mark makes to the MAX
+    aggregate (``incremental.high_water_mark``): empty on the footer path."""
+    calls = []
+    real = incremental.high_water_mark
+
+    def counted(df, ts_col):
+        calls.append(ts_col)
+        return real(df, ts_col)
+
+    monkeypatch.setattr(incremental, "high_water_mark", counted)
+    return calls
+
+
+def _at_write(monkeypatch, spark, group):
+    """Patch the parquet writer to record, at each call, the DataFrame it
+    writes and the Spark jobs job group ``group`` has started so far."""
+    seen = []
+    real = DataFrameWriter.parquet
+    sc = spark.sparkContext
+
+    def record(writer, *a, **kw):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+        seen.append((writer._df, len(sc.statusTracker().getJobIdsForGroup(group))))
+        return real(writer, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    return seen
 
 
 def test_bootstrap_then_incremental_then_replay(spark, dirs):
@@ -89,6 +129,180 @@ def test_bootstrap_then_incremental_then_replay(spark, dirs):
     r3 = _run(spark, dirs, datetime(2022, 1, 15, 13, 0, 0, tzinfo=timezone.utc))
     assert r3.rows_written == 0
     assert spark.read.parquet(dirs["warehouse"]).count() == 3
+
+
+def test_unreadable_warehouse_fails_the_batch_o4(spark, dirs):
+    """O4: a warehouse whose stored files cannot be read fails the batch:
+    nothing is written, nothing is archived. Treating the read error as
+    an empty warehouse would bootstrap and append the replayed rows
+    again."""
+    (dirs["landing"] / "b1.csv").write_text(BATCH1)
+    _run(spark, dirs, datetime(2022, 1, 8, tzinfo=timezone.utc))
+    (dirs["landing"] / "b2.csv").write_text(BATCH2)
+    _run(spark, dirs, datetime(2022, 1, 15, tzinfo=timezone.utc))
+    stored = sorted(pathlib.Path(dirs["warehouse"]).glob("*.parquet"))
+    for f in stored:  # cut every footer off
+        f.write_bytes(f.read_bytes()[: f.stat().st_size // 2])
+    before = {f.name: f.stat().st_size for f in pathlib.Path(dirs["warehouse"]).iterdir()}
+
+    (dirs["landing"] / "b1_replay.csv").write_text(BATCH1)
+    (dirs["landing"] / "b2_replay.csv").write_text(BATCH2)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        _run(spark, dirs, datetime(2022, 1, 22, tzinfo=timezone.utc), key_col="EventId")
+    after = {f.name: f.stat().st_size for f in pathlib.Path(dirs["warehouse"]).iterdir()}
+    assert after == before
+    assert sorted(f.name for f in dirs["landing"].iterdir()) == ["b1_replay.csv", "b2_replay.csv"]
+
+
+def _stored(spark, path):
+    return read_existing(spark, path, T.StructType([T.StructField("ts", T.TimestampType())]))
+
+
+def _rows(spark, *ts):
+    return spark.createDataFrame([(t,) for t in ts], "ts string").selectExpr(
+        "CAST(ts AS TIMESTAMP) AS ts"
+    )
+
+
+@pytest.mark.parametrize(
+    "case", ["multi_file", "empty_append", "null_only_file", "micros", "millis"]
+)
+def test_footer_mark_equals_the_aggregate(spark, tmp_path, aggregate_calls, case):
+    """The high-water mark read from parquet footers equals the MAX
+    aggregate over the same files, exact to the unit the files store, and
+    runs no aggregate: over several files, beside a 0-row append file,
+    beside a file whose timestamps are all NULL, at µs precision, and in
+    TIMESTAMP_MILLIS files."""
+    wh = str(tmp_path / "wh")
+    unit = "TIMESTAMP_MILLIS" if case == "millis" else "TIMESTAMP_MICROS"
+    appends = {
+        "multi_file": [("2022-01-01 00:00:00", "2022-03-01 10:00:00"), ("2022-02-01 00:00:00",)],
+        "empty_append": [("2022-01-01 00:00:00", "2022-01-02 00:00:00"), ()],
+        "null_only_file": [("2022-01-01 00:00:00",), (None, None)],
+        "micros": [("2022-01-01 00:00:00.123456", "2022-01-01 00:00:00.123455")],
+        "millis": [("2022-01-01 00:00:00.123", "2021-01-01 00:00:00.999")],
+    }[case]
+    with scoped_conf(spark, {"spark.sql.parquet.outputTimestampType": unit}):
+        for ts in appends:
+            _rows(spark, *ts).coalesce(1).write.mode("append").parquet(wh)
+    mark = incremental.stored_high_water_mark(_stored(spark, wh), "ts")
+    assert aggregate_calls == []
+    assert mark == incremental.high_water_mark(spark.read.parquet(wh), "ts")
+    assert mark is not None
+
+
+@pytest.mark.parametrize(
+    "confs, ts",
+    [
+        ({"spark.sql.parquet.outputTimestampType": "INT96"}, ("2022-01-01 00:00:00.5", "2022-01-03")),
+        ({"spark.sql.parquet.datetimeRebaseModeInWrite": "LEGACY"}, ("1000-01-01", "1000-01-03")),
+    ],
+    ids=["int96", "legacy_rebase"],
+)
+def test_warehouse_without_exact_footers_takes_the_aggregate_path(
+    spark, tmp_path, aggregate_calls, confs, ts
+):
+    """A warehouse whose footers cannot give the mark exactly — INT96
+    timestamps (a session without the ``outputTimestampType`` pin) carry
+    no statistics, and Spark's legacy calendar rebase stores other values
+    than it reads back — gets the MAX aggregate's mark."""
+    wh = str(tmp_path / "wh")
+    with scoped_conf(spark, confs):
+        _rows(spark, *ts).write.parquet(wh)
+    mark = incremental.stored_high_water_mark(_stored(spark, wh), "ts")
+    assert aggregate_calls == ["ts"]
+    assert mark == incremental.high_water_mark(spark.read.parquet(wh), "ts")
+
+
+def test_footer_path_fails_on_a_file_with_another_type(spark, tmp_path):
+    """On the footer path a stored file that lacks a column of the read
+    schema, or holds it with another type, fails instead of reading as
+    NULLs."""
+    wh = str(tmp_path / "wh")
+    _rows(spark, "2022-01-01 00:00:00").write.parquet(wh)
+    spark.createDataFrame([("x",)], "ts string").write.mode("append").parquet(wh)
+    with pytest.raises(ValueError, match="column ts is string"):
+        incremental.stored_high_water_mark(_stored(spark, wh), "ts")
+    other = str(tmp_path / "other")
+    spark.createDataFrame([("x",)], "k string").write.parquet(other)
+    with pytest.raises(ValueError, match="column ts is None"):
+        incremental.stored_high_water_mark(_stored(spark, other), "ts")
+
+
+def test_row_at_a_microsecond_mark_is_dropped(spark, dirs, aggregate_calls):
+    """O1 at µs precision: a stored mark of ...00.123456 drops a new row
+    at exactly that instant and keeps one 1 µs later."""
+    head = BATCH1.splitlines()[0]
+    row = "{},Rain,Light,2022-01-01 00:00:00.{},,0.03,US/Eastern,KJFK,40.6,-73.7,A,B,NY,1"
+    (dirs["landing"] / "b1.csv").write_text("\n".join([head, row.format("U-1", "123456")]) + "\n")
+    _run(spark, dirs, datetime(2022, 1, 8, tzinfo=timezone.utc), key_col="EventId")
+    (dirs["landing"] / "b2.csv").write_text(
+        "\n".join([head, row.format("U-2", "123456"), row.format("U-3", "123457")]) + "\n"
+    )
+    r = _run(spark, dirs, datetime(2022, 1, 9, tzinfo=timezone.utc), key_col="EventId")
+    assert aggregate_calls == []
+    assert r.high_water_mark == datetime(2022, 1, 1, 0, 0, 0, 123456)
+    assert r.rows_written == 1
+    ids = {x["EventId"] for x in spark.read.parquet(dirs["warehouse"]).collect()}
+    assert ids == {"U-1", "U-3"}
+
+
+def test_batch_starts_no_job_before_its_write(spark, dirs, monkeypatch):
+    """With a stored warehouse, the batch reads no schema, runs no
+    high-water-mark aggregate and broadcasts no key column before its
+    write: the job group has started no Spark job when the writer is
+    called."""
+    (dirs["landing"] / "b1.csv").write_text(BATCH1)
+    _run(spark, dirs, datetime(2022, 1, 8, tzinfo=timezone.utc))
+    (dirs["landing"] / "b2.csv").write_text(BATCH2)
+    seen = _at_write(monkeypatch, spark, "batch_jobs")
+    sc = spark.sparkContext
+    sc.setJobGroup("batch_jobs", "batch")
+    try:
+        r = _run(spark, dirs, datetime(2022, 1, 15, tzinfo=timezone.utc), key_col="EventId")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert r.rows_written == 1
+    assert [jobs for _, jobs in seen] == [0]
+
+
+def _tree(df):
+    """The indented operator tree of ``df``'s formatted physical plan."""
+    return explain_string(df).split("\n\n")[0].splitlines()[2:]
+
+
+def _build_side(tree, line):
+    """Lines of the subtree under the last (BuildRight) child of the
+    node on ``tree[line]``."""
+    depth = [re.search(r"[A-Z]", t).start() for t in tree]
+    end = next((k for k in range(line + 1, len(tree)) if depth[k] <= depth[line]), len(tree))
+    last = max(k for k in range(line + 1, end) if depth[k] == depth[line] + 3)
+    return tree[last:end]
+
+
+def test_anti_join_builds_on_the_batch_keys(spark, dirs, monkeypatch):
+    """The key dedup's plan: a LeftSemi join builds on the batch's keys
+    (a CSV scan) and streams the stored key column; the LeftAnti join
+    builds on that semi-join's output. No join builds on the stored key
+    column itself, and no hint forces the shape. (Once the stored key
+    column outgrows the broadcast threshold, the static anti-join is a
+    SortMergeJoin; AQE turns it into this broadcast when it measures the
+    semi-join's output.)"""
+    (dirs["landing"] / "b1.csv").write_text(BATCH1)
+    _run(spark, dirs, datetime(2022, 1, 8, tzinfo=timezone.utc))
+    (dirs["landing"] / "b2.csv").write_text(BATCH2)
+    seen = _at_write(monkeypatch, spark, "anti_join_plan")
+    _run(spark, dirs, datetime(2022, 1, 15, tzinfo=timezone.utc), key_col="EventId")
+    tree = _tree(seen[0][0])
+    joins = [k for k, t in enumerate(tree) if "Join" in t]
+    assert [tree[k].split("- ", 1)[-1].rsplit(" (", 1)[0] for k in joins] == [
+        "BroadcastHashJoin LeftAnti BuildRight",
+        "BroadcastHashJoin LeftSemi BuildRight",
+    ], tree
+    anti, semi = (_build_side(tree, k) for k in joins)
+    assert "BroadcastHashJoin LeftSemi" in anti[1], anti
+    assert any("Scan csv" in t for t in semi) and not any("Scan parquet" in t for t in semi)
+    assert "strategy=" not in explain_string(seen[0][0], "extended")  # no join hint
 
 
 def test_archive_layout_is_dated_o6(spark, dirs):

@@ -44,6 +44,17 @@ def test_cast_layer_types_and_null_on_unparseable(weather):
     assert bad["EndTimeUTC"] is not None
 
 
+def test_cast_layer_is_one_projection_in_raw_column_order(spark, weather):
+    """The cast layer keeps the raw column order and casts the five typed
+    columns in place, in one projection over the CSV relation."""
+    from projektdataengineering_spark.sources import WEATHER_CASTS, WEATHER_COLUMNS
+
+    ddl = ", ".join(f"{c} {WEATHER_CASTS.get(c, 'string')}" for c in WEATHER_COLUMNS)
+    assert weather.schema == spark.createDataFrame([], ddl).schema
+    analyzed = weather._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
+    assert analyzed.count("Project [") == 1, analyzed
+
+
 def test_hwm_boundary_strict_greater(weather):
     # O1: a row exactly AT the high-water mark must be dropped
     out = incremental_filter(weather, "StartTimeUTC", "2022-01-01 00:00:00")
