@@ -85,10 +85,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.ts`` is normalized to a µs TIMESTAMP whatever the file's
     physical timestamp unit and the session's reader confs — see
-    :func:`normalize_event_ts`. (``nanosAsLong`` is still set
-    defensively for sessions whose Spark honors it; pyspark 4.1.x
-    ignores it and surfaces a timestamp type, which the dtype branch
-    handles.)
+    :func:`normalize_event_ts`. (``nanosAsLong`` is set because a
+    TIMESTAMP(NANOS) file needs it: under it Spark 4.1 reads the column
+    as LONG raw nanos, UTC-adjusted or not, and without it the read
+    fails with ``PARQUET_TYPE_ILLEGAL``. A µs file reads as a
+    timestamp type either way.)
 
     The returned frame is a per-session MEMO of the lazy scan, keyed on
     the file's identity (realpath, mtime_ns, size) — metadata reuse,

@@ -25,7 +25,6 @@ independent, no state, no shuffle of its own.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
@@ -102,7 +101,3 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         ],
         dtype="float64",
     )
-
-
-def jw(col_a: Column, col_b: Column) -> Column:
-    return jaro_winkler_udf(col_a, col_b)

@@ -2,23 +2,18 @@
 
 Spark's ``F.xxhash64`` (catalyst ``XxHash64``) chains XXH64 over its
 arguments: ``hash = hashLong(field, hash)`` starting from seed 42, with
-the per-type single-block forms ``hashLong`` (8-byte) and ``hashInt``
-(4-byte).  Both are closed-form uint64 arithmetic, so they vectorize
-exactly in numpy — verified bit-for-bit against the JVM in
-tests/test_operators.py.  This lets Arrow kernels (pandas_udf) compute
-hash-derived signatures (MinHash lanes, SimHash votes) over whole
-batches with BLAS-shaped array math while producing values IDENTICAL to
-the JVM expression ``F.xxhash64(...)`` — the kernel is a drop-in
-physical strategy swap, not a semantic change.
+the 8-byte single-block form ``hashLong`` for a long.  It is closed-form
+uint64 arithmetic, so it vectorizes exactly in numpy — verified
+bit-for-bit against the JVM in tests/test_operators.py.  This lets an
+Arrow kernel (pandas_udf) compute hash-derived values over whole batches
+with array math while producing values IDENTICAL to the JVM expression
+``F.xxhash64(...)`` — the exact shingle hashes of
+``queries/similarity.py:_shingle_hashes`` chain it over token hashes.
 
 Why a kernel at all: higher-order column expressions
-(``transform``/``aggregate``/``zip_with``) are interpreted per element
-— a 16-lane MinHash over every shingle of every document costs seconds
-of expression interpretation at ANY data size (measured: 1.8 s at
-sf0.1), while the identical arithmetic over one Arrow batch is a few
-milliseconds of numpy.  At 100 TB the kernel shape also wins: fixed-
-width long arrays transfer densely over Arrow and the per-row cost is a
-handful of vector ops.
+(``transform``/``aggregate``/``zip_with``) are interpreted per element,
+while the identical arithmetic over one Arrow batch is a few
+milliseconds of numpy.
 """
 
 from __future__ import annotations
@@ -63,29 +58,6 @@ def hash_long(inp: np.ndarray, seed) -> np.ndarray:
         return _fmix(h)
 
 
-def hash_int(inp: np.ndarray, seed) -> np.ndarray:
-    """XXH64 of one 4-byte block — Spark ``XxHash64.hashInt``
-    (how an IntegerType literal argument is folded in)."""
-    with np.errstate(over="ignore"):
-        inp = np.asarray(inp).astype(np.uint64) & np.uint64(0xFFFFFFFF)
-        seed = np.asarray(seed).astype(np.uint64)
-        h = seed + _P5 + np.uint64(4)
-        h = h ^ (inp * _P1)
-        h = _rotl(h, 23) * _P2 + _P3
-        return _fmix(h)
-
-
 def xxhash64_long(inp: np.ndarray) -> np.ndarray:
     """= Spark ``F.xxhash64(long_col)``; returns int64."""
     return hash_long(inp, _SEED).view(np.int64)
-
-
-def xxhash64_long_intlit(inp: np.ndarray, lit: int) -> np.ndarray:
-    """= Spark ``F.xxhash64(long_col, F.lit(int))``; returns int64.
-
-    Chaining order per XxHash64.eval: the long column folds in first
-    (seed 42), then the int literal with the running hash as seed.
-    """
-    return hash_int(np.full(len(inp), lit, dtype=np.int64), hash_long(inp, _SEED)).view(
-        np.int64
-    )

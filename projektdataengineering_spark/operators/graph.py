@@ -38,8 +38,9 @@ def connected_components(
 
     Deterministic: output is a pure function of the edge set. Converges
     in diameter(G) rounds; raises if `max_iter` rounds don't reach the
-    fixpoint (a symptom of an adversarial graph that needs the
-    large-star variant, not silent wrong answers)."""
+    fixpoint (a symptom of an adversarial graph that needs an
+    O(log n)-round algorithm such as large-star/small-star, not silent
+    wrong answers)."""
     # Symmetrize with ONE pass over `edges` (explode both directions
     # per row). The union-of-two-selects formulation read `edges` twice
     # — and `edges` is typically an expensive LSH candidate pipeline,
@@ -91,102 +92,7 @@ def connected_components(
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
-        "graph diameter exceeds the bound — use connected_components_star"
-    )
-
-
-def _edge_fingerprint(edges: DataFrame) -> tuple[int, int]:
-    """(count, order-independent xxhash64 fold) of an edge set — an
-    O(|E|) fixpoint detector with no exceptAll/join. bit_xor is
-    commutative/associative, so the fold is partitioning-independent."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-    ).first()
-    return row["n"], row["h"]
-
-
-def connected_components_star(
-    edges: DataFrame, src: str, dst: str, max_iter: int = 30
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the adversarial-diameter scale path. Returns
-    (node, component-min) exactly like `connected_components`.
-
-    Min-label propagation needs diameter(G) rounds — fine for near-dup
-    clumps, fatal for chain-shaped graphs (a 1000-node path is 1000
-    rounds). The star operations instead hang every node under its
-    neighborhood minimum:
-
-    * large-star: per node u, connect every LARGER neighbor to
-      m = min(N(u) ∪ {u});
-    * small-star: per node u, connect every neighbor ≤ u (and u) to m.
-
-    Each round halves tree heights roughly geometrically → O(log² n)
-    rounds regardless of diameter; at the fixpoint the edge set IS the
-    star {(v, min of v's component)}. Each phase is one scalar-min
-    groupBy + one join-back over the current edge set — deliberately
-    NOT collect_set (a giant component's hub would materialize its
-    whole neighborhood in one executor's memory; the min+join form
-    keeps every row fixed-width at any degree). Every round's output
-    passes through localCheckpoint to cut lineage; fixpoint detection
-    is an O(|E|) count+hash fold, not a set difference.
-
-    Deterministic: a pure function of the edge set. Self-loops and the
-    (u, u) degenerate edges the star steps synthesize are dropped at
-    each round's end."""
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = _edge_fingerprint(e)
-    for _ in range(max_iter):
-        # large-star: over the symmetrized adjacency, attach every
-        # strictly-larger neighbor of u to m(u) = min(N(u) ∪ {u}).
-        sym = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u").alias("a"), F.col("v").alias("b")),
-                    F.struct(F.col("v").alias("a"), F.col("u").alias("b")),
-                )
-            ).alias("p")
-        ).select(F.col("p.a").alias("u"), F.col("p.b").alias("v"))
-        mu = sym.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
-        large = (
-            sym.join(mu, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        # small-star: orient edges toward the larger endpoint; attach u
-        # and all its (smaller) neighbors to the group minimum.
-        directed = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mu2 = directed.groupBy("u").agg(F.min("v").alias("m"))  # all v < u
-        small = (
-            directed.join(mu2, "u")
-            .select(F.col("v").alias("w"), "m")
-            .unionByName(mu2.select(F.col("u").alias("w"), "m"))
-            .filter(F.col("w") != F.col("m"))
-            .select(F.col("w").alias("u"), F.col("m").alias("v"))
-        )
-        e = small.distinct().localCheckpoint()
-        cur = _edge_fingerprint(e)
-        if cur == prev:
-            # fixpoint: e is the star edge set (node → component min)
-            mins = e.select(F.col("v").alias("node")).distinct().select(
-                "node", F.col("node").alias("comp")
-            )
-            return e.select(F.col("u").alias("node"), F.col("v").alias("comp")).unionByName(
-                mins
-            )
-        prev = cur
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds"
+        "graph diameter exceeds the bound"
     )
 
 

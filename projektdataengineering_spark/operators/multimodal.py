@@ -9,14 +9,13 @@ would pickle each blob individually).
 The codec step is REAL for all three modalities: ``decode_media``
 dispatches to the vendored pure-Python PNG/WAV/uncompressed-AVI codecs
 (operators/codecs.py — stdlib zlib/struct/wave, implemented from the
-public specs), so ``extract_features(fake=False)`` computes features
-from actually-decoded pixels/samples/frames and
-``sample_frames(fake=False)`` strides real decoded video frames.
-COMPRESSED video (H.26x/VP9) stays a documented NotImplementedError —
-those genuinely need native codec libraries this container lacks
-(production: pyav keyframe striding behind the same dispatch). The
-deterministic fake featurizer is kept for plumbing tests and as the
-any-modality fallback (tests/test_multimodal.py covers both paths).
+public specs), so ``extract_features`` computes features from
+actually-decoded pixels/samples/frames and ``sample_frames`` strides
+real decoded video frames. COMPRESSED video (H.26x/VP9) stays a
+documented NotImplementedError — those genuinely need native codec
+libraries this container lacks (production: pyav keyframe striding
+behind the same dispatch). A payload of a modality without a decoder
+fails its batch.
 
 Scale notes: blobs dominate partition size — repartition so
 ``rows_per_partition × avg_blob`` stays ≪ executor memory, and always
@@ -30,26 +29,11 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 FEATURE_SCHEMA = (
     "doc_id long, modality string, n_bytes long, "
     "checksum string, feat_mean double, feat_argmax int"
 )
-
-
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Test-fixture adapter: materialize an opaque binary column (UTF-8
-    bytes of the text) + typed metadata, standing in for real media
-    ingested from object storage."""
-    payload = F.encode(F.col(text_col), "UTF-8")
-    return df.select(
-        "doc_id",
-        payload.alias("payload"),
-        F.lit("image/fake").alias("modality"),
-        F.length(payload).cast("long").alias("n_bytes"),
-        F.sha2(payload, 256).alias("checksum"),
-    )
 
 
 def attach_png_payload(df: DataFrame, text_col: str = "text", width: int = 32) -> DataFrame:
@@ -174,19 +158,6 @@ def decode_media(payload: bytes, modality: str):
     )
 
 
-def _fake_features(payload: bytes) -> tuple[float, int]:
-    """Deterministic featurizer over raw bytes (stands in for a model
-    forward pass): mean byte value + argmax of a 16-bin byte histogram."""
-    if not payload:
-        return 0.0, 0
-    hist = [0] * 16
-    total = 0
-    for b in payload:
-        hist[b >> 4] += 1
-        total += b
-    return total / len(payload), max(range(16), key=lambda i: (hist[i], -i))
-
-
 def _intensity_features(vals) -> tuple[float, int]:
     """(mean, 16-bin histogram argmax) over an array of 0..255
     intensities — the one featurizer body shared by the decode path
@@ -198,7 +169,7 @@ def _intensity_features(vals) -> tuple[float, int]:
         return 0.0, 0
     vals = vals.reshape(-1).astype(np.int64)
     hist = np.bincount(vals >> 4, minlength=16)[:16]
-    # ties toward the smaller bin, matching _fake_features' key order
+    # np.argmax breaks ties toward the smaller bin
     argmax = int(np.argmax(hist))
     return float(vals.mean()), argmax
 
@@ -220,24 +191,21 @@ def _decoded_features(payload: bytes, modality: str) -> tuple[float, int]:
     return _intensity_features(vals)
 
 
-def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Feature extraction over binary payloads via mapInPandas.
 
     Arrow streams column batches into Python; each batch yields one
     output frame — constant memory per worker regardless of table size.
-    ``fake=False`` runs the REAL decode (PNG/WAV via operators/codecs)
-    and featurizes the decoded values.
+    Each payload is decoded by its modality (PNG/WAV/AVI via
+    operators/codecs) and the decoded values are featurized.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if fake:
-                feats = [_fake_features(p) for p in pdf["payload"]]
-            else:
-                feats = [
-                    _decoded_features(p, m)
-                    for p, m in zip(pdf["payload"], pdf["modality"])
-                ]
+            feats = [
+                _decoded_features(p, m)
+                for p, m in zip(pdf["payload"], pdf["modality"])
+            ]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -252,100 +220,16 @@ def extract_features(df: DataFrame, fake: bool = True) -> DataFrame:
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-RESIZE_SCHEMA = (
-    "doc_id long, modality string, width int, height int, "
-    "payload binary, n_bytes long, checksum string"
-)
-
-
-def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for an image resample: width×height bytes
-    sampled from the payload at evenly-spaced offsets (nearest-neighbor
-    over the byte stream). Preserves the real op's contract — output
-    size is a pure function of (width, height), content a pure function
-    of the input bytes — so partitioning/memory behavior is faithful."""
-    n = width * height
-    if not payload:
-        return bytes(n)
-    step = len(payload) / n
-    return bytes(payload[int(i * step)] for i in range(n))
-
-
-def resize_media(df: DataFrame, width: int, height: int, fake: bool = True) -> DataFrame:
-    """Image resize over binary payloads via mapInPandas — the second
-    stage of the media pipeline (decode → RESIZE → featurize).
-    Production swaps _fake_resize for PIL `Image.resize` after
-    decode_media; the stub boundary is the same one extract_features
-    documents. Output payloads are width×height bytes with refreshed
-    n_bytes/sha256 metadata (the checksum change is how lineage tells
-    a derived asset from its source — reference R11's checksum idea).
-
-    Scale: output partition bytes ≈ rows × width × height — resize
-    SHRINKS partitions for thumbnailing (the common case); repartition
-    AFTER enlarging resizes, before is wasted shuffle."""
-    import hashlib
-
-    def _real_resize(payload: bytes, modality: str) -> bytes:
-        """Decode → nearest-neighbor resample → re-encode (PNG)."""
-        import numpy as np
-
-        from .codecs import png_encode
-
-        img = decode_media(payload, modality)
-        img = np.asarray(img)
-        h0, w0 = img.shape[:2]
-        ys = (np.arange(height) * h0) // height
-        xs = (np.arange(width) * w0) // width
-        return png_encode(img[ys][:, xs])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if fake:
-                out = [_fake_resize(p, width, height) for p in pdf["payload"]]
-            else:
-                out = [
-                    _real_resize(p, m)
-                    for p, m in zip(pdf["payload"], pdf["modality"])
-                ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "width": width,
-                    "height": height,
-                    "payload": out,
-                    "n_bytes": [len(b) for b in out],
-                    "checksum": [hashlib.sha256(b).hexdigest() for b in out],
-                }
-            )
-
-    return df.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
 FRAME_SCHEMA = (
     "doc_id long, modality string, frame_idx int, "
     "payload binary, n_bytes long, checksum string"
 )
 
 
-def _fake_frames(payload: bytes, n_frames: int, frame_bytes: int = 64) -> list[bytes]:
-    """Deterministic stand-in for video frame sampling: n_frames
-    evenly-spaced fixed-size byte slices (zero-padded at the tail) —
-    the uniform-stride sampling policy every video curriculum uses."""
-    if not payload:
-        return [bytes(frame_bytes)] * n_frames
-    out = []
-    for k in range(n_frames):
-        start = (k * len(payload)) // n_frames
-        chunk = payload[start : start + frame_bytes]
-        out.append(chunk + bytes(frame_bytes - len(chunk)))
-    return out
-
-
-def _real_frames(
+def _sampled_frames(
     payload: bytes, modality: str, n_frames: int
 ) -> "list[tuple[bytes, object]]":
-    """REAL frame sampler: decode the video, pick n_frames at a uniform
+    """Frame sampler: decode the video, pick n_frames at a uniform
     stride (repeating the last frame when the clip is shorter), and
     re-encode each sampled frame as a standalone PNG — the decoded-video
     → image-corpus expansion, every byte passing through real codecs.
@@ -362,18 +246,15 @@ def _real_frames(
 FRAME_FEATURES_SCHEMA = FRAME_SCHEMA + ", feat_mean double, feat_argmax int"
 
 
-def sample_frames(
-    df: DataFrame, n_frames: int, fake: bool = True, features: bool = False
-) -> DataFrame:
+def sample_frames(df: DataFrame, n_frames: int, features: bool = False) -> DataFrame:
     """Video frame sampling via mapInPandas: each input blob expands to
     n_frames rows (doc_id, frame_idx, frame payload) — the 1→N
     expansion that turns a video corpus into an image corpus for
-    training. ``fake=False`` runs the REAL path: uncompressed-AVI
-    decode + uniform-stride sampling + per-frame PNG re-encode
-    (production swaps the decode for pyav keyframe striding behind the
-    same decode_media dispatch).
+    training: AVI decode + uniform-stride sampling + per-frame PNG
+    re-encode (production swaps the decode for pyav keyframe striding
+    behind the same decode_media dispatch).
 
-    ``features=True`` (real path only) additionally emits
+    ``features=True`` additionally emits
     (feat_mean, feat_argmax) computed from the DECODED frame pixels
     while they are in memory — the guide §4.2 fusion (r19): a separate
     extract_features pass would re-decode every frame PNG row-by-row in
@@ -381,7 +262,7 @@ def sample_frames(
     encode→decode roundtrip is lossless and unit-pinned
     (tests/test_multimodal.py), and the featurizer body is the SAME
     _intensity_features the decode path runs, so the fused columns are
-    bit-identical to extract_features(fake=False) over the emitted
+    bit-identical to extract_features over the emitted
     payloads — asserted by test_sample_frames_fused_features_match.
 
     Scale: output rows = input rows × n_frames and output bytes can
@@ -391,9 +272,6 @@ def sample_frames(
     import hashlib
 
     import numpy as np
-
-    if features and fake:
-        raise ValueError("features=True requires the real path (fake=False)")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -407,16 +285,11 @@ def sample_frames(
             for doc_id, modality, payload in zip(
                 pdf["doc_id"], pdf["modality"], pdf["payload"]
             ):
-                frames = (
-                    [(fr, None) for fr in _fake_frames(payload, n_frames)]
-                    if fake
-                    else _real_frames(payload, modality, n_frames)
-                )
-                for k, (fr, arr) in enumerate(frames):
+                for k, (fr, arr) in enumerate(_sampled_frames(payload, modality, n_frames)):
                     rows["doc_id"].append(doc_id)
-                    # the real path re-encodes sampled frames as PNGs —
-                    # the output modality reflects the frame container
-                    rows["modality"].append(modality if fake else "image/png")
+                    # sampled frames are re-encoded as PNGs — the output
+                    # modality reflects the frame container
+                    rows["modality"].append("image/png")
                     rows["frame_idx"].append(k)
                     rows["payload"].append(fr)
                     rows["n_bytes"].append(len(fr))
@@ -480,7 +353,7 @@ def extract_audio_features(df: DataFrame) -> DataFrame:
     """Arrow-batched audio featurization over DECODED samples: peak
     amplitude, integer sum of squares (energy — exact, no float fold),
     zero-crossing count, duration. The audio analogue of
-    extract_features(fake=False): every value is a deterministic
+    extract_features: every value is a deterministic
     integer function of the decoded PCM, so tests can pin them against
     a pure-python recompute of the same waveform."""
 

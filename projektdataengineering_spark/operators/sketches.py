@@ -29,7 +29,6 @@ __all__ = [
     "hll_partial",
     "hll_union",
     "hll_estimate",
-    "distinct_over_groups",
     "misra_gries_summary",
 ]
 
@@ -50,32 +49,6 @@ def hll_union(sketch_col: str | Column) -> Column:
 def hll_estimate(sketch_col: str | Column) -> Column:
     """Scalar expression: distinct-count estimate from a sketch."""
     return F.hll_sketch_estimate(sketch_col)
-
-
-def distinct_over_groups(
-    df: DataFrame, group_col: str, value_col: str, lg_k: int = _LG_K
-) -> DataFrame:
-    """Per-group sketches PLUS the global rollup from the same
-    partials: returns (group, is_total=false, est_distinct) rows and
-    one (NULL, is_total=true, est_distinct) global row — computed by
-    unioning the group sketches, NOT by re-scanning, which is the
-    whole point.  ``is_total`` is an explicit marker (not a NULL
-    sentinel) so a genuine NULL group value in the data stays
-    distinguishable from the rollup row."""
-    per_group = df.groupBy(group_col).agg(
-        hll_partial(value_col, lg_k).alias("sk")
-    )
-    groups = per_group.select(
-        F.col(group_col).cast("string").alias("grp"),
-        F.lit(False).alias("is_total"),
-        hll_estimate("sk").alias("est_distinct"),
-    )
-    total = per_group.agg(hll_union("sk").alias("m")).select(
-        F.lit(None).cast("string").alias("grp"),
-        F.lit(True).alias("is_total"),
-        hll_estimate("m").alias("est_distinct"),
-    )
-    return groups.unionAll(total)
 
 
 def misra_gries_summary(df: DataFrame, term_col: str, k: int = 400) -> DataFrame:
@@ -241,19 +214,6 @@ def bloom_filter_words(
     )
 
 
-def bloom_dense_words(df, key_col: str, m_bits: int, k_hashes: int) -> list[int]:
-    """Materialize a side's Bloom filter as the dense word list a probe
-    plants into its plan (bounded collect: ≤ m_bits/63 + 1 rows — the
-    documented scalar-read pattern of the runtime-filter family)."""
-    words = {
-        r["w"]: r["bits"]
-        for r in bloom_filter_words(
-            df, key_col, m_bits=m_bits, k_hashes=k_hashes
-        ).collect()
-    }
-    return [int(words.get(w, 0)) for w in range(m_bits // 63 + 1)]
-
-
 # ---------------------------------------------------------------------------
 # Fast (engine-internal) Bloom lane family — xxhash64 positions
 # ---------------------------------------------------------------------------
@@ -277,7 +237,7 @@ def bloom_dense_words(df, key_col: str, m_bits: int, k_hashes: int) -> list[int]
 
 def bloom_fast_words(df, key_sql: str, m_bits: int, k_hashes: int) -> list[int]:
     """Dense Bloom word list (63-bit words, same layout as
-    bloom_dense_words) with bit positions pmod(xxhash64(key, j), m)
+    bloom_filter_words) with bit positions pmod(xxhash64(key, j), m)
     for lane j — build-side twin of bloom_fast_probe_condition.
 
     Type contract (r18 ADVICE, hardened r19): xxhash64 hashes the TYPED

@@ -103,6 +103,8 @@ _MODULES = (
 #   gate is streaming.scoped_conf; every query that keeps an artifact
 #   now reads or builds it through catalog.persisted;
 #   join_cross_calendar lost a broadcast hint Spark rejected.
+# * round 21 — extract_features and sample_frames lost their fake
+#   featurizer, so the two media queries call them without fake=False.
 _RECHECK: dict[str, int] = {
     "stream_dedup_stateful": 20,
     "stream_cdc_stateful": 20,
@@ -150,6 +152,8 @@ _RECHECK: dict[str, int] = {
     "sink_python_datasource": 20,
     "sink_python_stream": 20,
     "stream_embedding_delta": 20,
+    "multimodal_features": 21,
+    "multimodal_video_frames": 21,
 }
 
 # The driver's per-round correctness records live in the repo root.

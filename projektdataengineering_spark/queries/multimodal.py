@@ -90,7 +90,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image pipeline end-to-end: each document rendered as an
     actual PNG (attach_png_payload — signature, zlib, scanlines), then
     Arrow-batched decode + featurization over the DECODED pixels
-    (extract_features(fake=False) → operators/codecs.png_decode). Both
+    (extract_features → operators/codecs.png_decode). Both
     directions of the codec run distributed, deterministically; see
     operators/multimodal.py for the 100-TB partition-sizing notes.
 
@@ -109,7 +109,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the extra exchange costs more than it buys (A/B'd at sf0.1:
     # 0.80 s plain vs 0.94 s spread) — contrast the video leg below
     docs = load_table(spark, sf_dir, "documents")
-    feats = extract_features(attach_png_payload(docs), fake=False)
+    feats = extract_features(attach_png_payload(docs))
     # n_pixels from the raw byte length (integer math mirrored by the
     # oracle); the decode path determines feat_mean/feat_argmax
     meta = docs.select(
@@ -213,12 +213,12 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     Motion-JPEG whose frames are baseline JPEGs from the pure-Python
     T.81 codec (operators/jpeg.py, round 7) — then the 1→N
     video→image expansion a training curriculum runs:
-    sample_frames(fake=False, features=True) decodes the container
+    sample_frames(features=True) decodes the container
     (RIFF walk + DIB un-flip or full JPEG entropy-decode/IDCT per
     frame), strides 2 frames per clip (source frames 0 and 2 of 4),
     re-encodes each as a standalone PNG, and featurizes the DECODED
     pixels of every sampled frame in the same kernel (r19 fusion —
-    bit-identical to the extract_features(fake=False) composition it
+    bit-identical to the extract_features composition it
     replaced; the PNG roundtrip stays unit-pinned in
     tests/test_multimodal.py and the fused-vs-recomposed equality is
     asserted there too).
@@ -258,12 +258,12 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass re-decoding every frame PNG row-by-row in Python. The PNG
     # roundtrip is lossless and the featurizer body is shared
     # (_intensity_features), so the columns are bit-identical to the
-    # previous extract_features(fake=False) composition — asserted in
+    # previous extract_features composition — asserted in
     # tests/test_multimodal.py and re-proved by the oracle hash. Plan:
     # one Python stage fewer (BatchEvalPython/MapInPandas 3 → 2 on the
     # feature path); per-frame PNG *decode* work leaves the query.
     feats = sample_frames(
-        clips, n_frames=_VID_SAMPLED, fake=False, features=True
+        clips, n_frames=_VID_SAMPLED, features=True
     ).select("doc_id", "frame_idx", "feat_mean", "feat_argmax")
 
     def src_stats(batches):

@@ -30,7 +30,10 @@ own. Round 2 therefore hashes tokens once JVM-side and moves shingle
 combination + all 16 lanes into one numpy kernel using an exact
 reimplementation of Spark's xxhash64 on longs (functions/xxh64.py,
 bit-identical, JVM-verified) — signature stage ~0.3 s, nothing
-string-shaped past the tokenizer.
+string-shaped past the tokenizer. The registered estimator has since
+moved to the portable md5 lanes (``_portable_mh_bands``), which DuckDB
+replays bit-for-bit; the numpy xxhash64 now serves only the exact
+shingle hashes (``_shingle_hashes``).
 """
 
 from __future__ import annotations
@@ -42,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import artifact, artifact_kind, load_table, spread_small_input
 from ..functions import token_ngrams
-from ..functions.xxh64 import hash_int, hash_long
+from ..functions.xxh64 import hash_long
 from . import query
 
 # ---- shared embedding helpers (pure column expressions) ----------------
@@ -1609,10 +1612,6 @@ def _bucket_pairs(
     )
 
 
-_N_MINHASH = 16
-_BAND_SIZE = 4  # → 4 bands of 4 hashes
-
-
 # Promoted to catalog.spread_small_input in round 7 (the multimodal
 # codec queries hit the same single-input-split serialization); this
 # alias keeps the established call sites.
@@ -1629,34 +1628,11 @@ def _token_hashes(docs: DataFrame) -> DataFrame:
     )
 
 
-def _chained_shingle_hashes(ths_mat: "np.ndarray", lens: "np.ndarray", n: int):
-    """Flat chained-XXH64 n-gram hashes over a flattened token-hash
-    array: shingle hash = xxhash64(t_i, .., t_{i+n-1}) exactly as
-    Spark's multi-argument xxhash64 folds longs (seed 42 → chain).
-    Collision-equivalent to hashing the shingle *string* (the round-1
-    formulation) without ever materializing shingle strings.
-
-    ``ths_mat`` is the concatenation of per-doc token-hash arrays;
-    ``lens`` the per-doc lengths (all ≥ n). Returns (flat shingle
-    hashes, per-doc shingle lengths)."""
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    # chain across n consecutive positions, then drop the (n-1) window
-    # tails that straddle document boundaries
-    h = hash_long(ths_mat, 42)
-    for j in range(1, n):
-        h = hash_long(ths_mat[j:], h[: len(ths_mat) - j])
-    keep = np.ones(len(h), dtype=bool)
-    for d_start, d_len in zip(starts, lens):
-        keep[d_start + d_len - (n - 1) : d_start + d_len] = False
-    # per-doc shingle counts: len - (n-1)
-    return h[keep[: len(h)]].view(np.int64), lens - (n - 1)
-
-
 def _shingle_hashes(docs: DataFrame, n: int = 3) -> DataFrame:
     """doc_id + distinct chained-xxhash64 per n-token shingle — the
     exact-Jaccard ground truth the minhash sketch is calibrated against
-    (tests/test_operators.py). Same shingle-hash definition as the
-    signature kernel: xxhash64 chained over the n token hashes."""
+    (tests/test_operators.py): xxhash64 chained over the n token hashes,
+    exactly as Spark's multi-argument xxhash64 folds longs."""
     toked = _token_hashes(docs)
 
     @F.pandas_udf("array<long>")
@@ -1676,109 +1652,12 @@ def _shingle_hashes(docs: DataFrame, n: int = 3) -> DataFrame:
     return toked.select("doc_id", shingles("ths").alias("hs"))
 
 
-def _minhash_signature_kernel():
-    """Arrow kernel: per-doc token hashes → 16-lane MinHash signature.
-
-    Lane j of the signature is min over shingles of
-    ``xxhash64(shingle_hash, lit(j))`` — bit-identical to the round-1
-    column-expression formulation (array_min over transform), but the
-    whole batch is computed as a handful of numpy passes instead of
-    16 interpreted higher-order folds per row.  Measured at sf0.1 the
-    expression form spent 2.4 s building shingle strings + lanes; the
-    kernel path (token-hash transfer + chained-hash + lanes) is ~0.3 s.
-    Dedup before the min is skipped on purpose: duplicate shingles
-    cannot change a minimum."""
-
-    @F.pandas_udf("array<long>")
-    def sig(ths: pd.Series) -> pd.Series:
-        lens = np.array([len(v) for v in ths], dtype=np.int64)
-        if len(lens) == 0:
-            return pd.Series([], dtype=object)
-        # contract with the caller's JVM-side filter(size >= 3): a short
-        # doc here would silently corrupt the reduceat segmentation
-        assert lens.min() >= 3, "minhash signature kernel requires >= 3 tokens/doc"
-        flat = np.concatenate([np.asarray(v, dtype=np.int64) for v in ths])
-        sh, sh_lens = _chained_shingle_hashes(flat, lens, 3)
-        starts = np.concatenate(([0], np.cumsum(sh_lens)[:-1]))
-        h1 = hash_long(sh, 42)  # shared first fold of xxhash64(h, lane)
-        lanes = np.arange(_N_MINHASH, dtype=np.int64)[:, None]
-        lane_h = hash_int(np.broadcast_to(lanes, (_N_MINHASH, len(sh))), h1).view(np.int64)
-        mins = np.minimum.reduceat(lane_h, starts, axis=1)  # (_N_MINHASH, ndocs)
-        return pd.Series(list(mins.T))
-
-    return sig
-
-
-def minhash_band_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    include_sig: bool = True,
-    star_cap: int | None = None,
-    mark_capped: bool = False,
-    project=None,
-) -> DataFrame:
-    """MinHash-LSH candidate pairs over documents: 3-token shingles →
-    16 minhashes → 4 bands of 4 → candidates share any full band.
-    Returns (a, b) member structs; ``include_sig=False`` drops the
-    signatures from the shuffled member structs — consumers that only
-    need the EDGES (connected components) then shuffle and distinct()
-    bare doc_ids instead of 16-long signatures, a ~17× lighter exchange
-    (Catalyst cannot prune inside collect_list(struct(...)), so the
-    pruning has to happen here, at plan-construction time).
-
-    Scale shape: signatures are fixed-width regardless of document size
-    (the shuffle ships at most 16 longs + ids, never text). Candidate
-    generation is a single groupBy on (band_idx, band_hash) with
-    array-side pair expansion inside each bucket — the signature
-    pipeline runs ONCE (a band self-join would execute it twice, once
-    per side) and only buckets with ≥2 members survive. Per-bucket cost
-    is quadratic in bucket size, which LSH keeps at near-dup-cluster
-    scale; ``star_cap`` is the pathological-hot-bucket handle — a
-    bucket past it emits min-member star edges instead of the full
-    clique (see _bucket_pairs), which connectivity-only consumers
-    (connected components) can enable with IDENTICAL results, since a
-    star and a clique induce the same components."""
-    docs = _spread_small_input(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    sig = (
-        _token_hashes(docs)
-        .filter(F.size("ths") >= 3)  # <3-token docs have no shingles
-        .select("doc_id", _minhash_signature_kernel()("ths").alias("sig"))
-    )
-
-    member_cols = ["doc_id", "sig"] if include_sig else ["doc_id"]
-    bands = sig.select(
-        "doc_id",
-        *(["sig"] if include_sig else []),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.xxhash64(
-                            F.concat_ws(",", *[F.element_at("sig", b * _BAND_SIZE + j + 1) for j in range(_BAND_SIZE)])
-                        ).alias("band_hash"),
-                    )
-                    for b in range(_N_MINHASH // _BAND_SIZE)
-                ]
-            )
-        ).alias("band"),
-    ).select(*member_cols, "band.band_idx", "band.band_hash")
-
-    return _bucket_pairs(
-        bands, ["band_idx", "band_hash"], member_cols,
-        star_cap=star_cap, mark_capped=mark_capped, project=project,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Portable 16-lane MinHash — the SQL-replayable production estimator
 # ---------------------------------------------------------------------------
 #
-# The xxh64 kernel above stays as the compact-lane (8-byte) variant for
-# connectivity-only consumers and the calibration tests; the REGISTERED
-# estimator must be DuckDB-replayable, so its randomness comes from md5.
+# The REGISTERED estimator must be DuckDB-replayable, so its randomness
+# comes from md5 (the round-2 xxh64 lane kernel had no SQL twin).
 # Round-9 perf fix: the round-8 form computed SIXTEEN md5s per shingle
 # (lane j = min md5(digest || '#j')), which regressed the query 3.8×
 # warm at sf0.1 — ~17 string hashes per (doc, gram) dominated the whole
@@ -1791,7 +1670,7 @@ def minhash_band_pairs(
 # bit-for-bit and the 16 lane passes are integer folds, not hashes.
 
 _N_PORTABLE_MH = 16  # lanes; est_jaccard resolution = 1/16
-_PORTABLE_MH_BANDS = 4  # 4 bands × 4 lanes → same s-curve as the xxh64 path
+_PORTABLE_MH_BANDS = 4  # 4 bands × 4 lanes
 _PORTABLE_MH_BAND_SIZE = _N_PORTABLE_MH // _PORTABLE_MH_BANDS
 _PORTABLE_MH_MOD = 1 << 32  # lane modulus; (h1 + i·h2) stays < 2^36
 

@@ -108,9 +108,8 @@ def read_existing(
     bootstrap). Bootstrap is detected via a Hadoop-FS existence probe and
     Spark's own file listing, NOT by catching the read error: a transient
     or corrupt-footer failure on an EXISTING table must propagate —
-    swallowing it would re-append a replayed batch, or route a merge into
-    its overwrite bootstrap and replace the whole warehouse with one
-    batch. With ``schema`` the read infers nothing (no footer job)."""
+    swallowing it would re-append a replayed batch as a bootstrap load.
+    With ``schema`` the read infers nothing (no footer job)."""
     sc = spark.sparkContext  # the archive.py py4j boundary
     hpath = sc._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
     if not hpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(hpath):  # noqa: SLF001
@@ -367,8 +366,8 @@ def read_binary_dir(
     the reference's R11 checksum idea applied to blobs).
 
     This is the REAL ingest seam for operators/multimodal.py (whose
-    fixture adapter fakes payloads from text): downstream
-    ``extract_features`` runs unchanged on either. Scale notes: the
+    fixture adapters render text as PNG/WAV/AVI payloads): downstream
+    ``extract_features`` decodes either by its modality. Scale notes: the
     source parallelizes per file and prunes the ``content`` column when
     a plan only touches metadata — keep metadata queries off the blob
     column and they never read the bytes. Files over

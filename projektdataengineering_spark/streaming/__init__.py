@@ -276,15 +276,3 @@ def write_stream_idempotent(
         .start()
     )
     q.awaitTermination()
-
-
-def rocksdb_state_store(spark):
-    """Temporarily select the RocksDB state store provider —
-    transformWithState (the Spark 4 arbitrary-state API) REQUIRES it
-    (the default HDFS-backed in-memory provider does not implement the
-    multi-column-family state it needs). Scoped like
-    stream_state_partitions: the provider class is pinned into a
-    query's checkpoint at first start, so it must be a per-query
-    choice, not a session constant the batch suite inherits."""
-    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    return scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": provider})

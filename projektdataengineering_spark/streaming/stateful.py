@@ -372,80 +372,6 @@ def dedup_stream_first_wins_bucketed(
     )
 
 
-# Stateful sessionizer: custom session windows with carry-over state.
-SESSION_OUTPUT_SCHEMA = (
-    "key string, session_start timestamp, session_last timestamp, "
-    "n_events long, sum_value double, is_open boolean"
-)
-SESSION_STATE_SCHEMA = (
-    "session_start timestamp, session_last timestamp, n_events long, sum_value double"
-)
-
-_GAP = pd.Timedelta(minutes=30)
-
-
-def _sessionize_stateful(key, pdf_iter, state: GroupState):
-    """Per-key gap sessionization with cross-batch carry-over: the open
-    session lives in keyed state; a batch's rows (sorted by event time)
-    either extend it or close it and start the next. Closed sessions
-    emit with is_open=false; the still-open session re-emits every
-    batch with is_open=true (update mode — the sink's latest row per
-    (key, session_start) is the session's current truth).
-
-    This is the applyInPandasWithState twin of the built-in
-    session_window aggregate (streaming/__init__.py) — the shape to
-    copy when session semantics outgrow the built-in (per-session
-    custom accumulators, dynamic gaps, emit-on-close side effects)."""
-    rows = [pdf[["ts", "value"]] for pdf in pdf_iter if len(pdf)]
-    if not rows:
-        return iter(())
-    batch = pd.concat(rows).sort_values("ts")
-
-    if state.exists:
-        start, last, n, vsum = state.get
-    else:
-        start = last = None
-        n, vsum = 0, 0.0
-
-    out: list[tuple] = []
-    for ts, value in zip(batch["ts"], batch["value"]):
-        v = 0.0 if pd.isna(value) else float(value)
-        if start is None:
-            start, last, n, vsum = ts, ts, 1, v
-        elif ts - last > _GAP:
-            out.append((key[0], start, last, n, vsum, False))
-            start, last, n, vsum = ts, ts, 1, v
-        else:
-            last, n, vsum = ts, n + 1, vsum + v
-    state.update((start, last, n, vsum))
-    out.append((key[0], start, last, n, vsum, True))
-    return iter(
-        (
-            pd.DataFrame(
-                out,
-                columns=[
-                    "key", "session_start", "session_last",
-                    "n_events", "sum_value", "is_open",
-                ],
-            ),
-        )
-    )
-
-
-def sessionize_stream(keyed: DataFrame) -> DataFrame:
-    """Apply the stateful sessionizer to a streaming DataFrame with
-    columns (key string, ts timestamp, value double). Output mode:
-    update. State is one open session per key — bounded; production
-    adds an event-time timeout to flush keys that go quiet forever."""
-    return keyed.groupBy("key").applyInPandasWithState(
-        _sessionize_stateful,
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=SESSION_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 # Stateful streaming EWMA: the cross-batch twin of the batch
 # pipeline_ewma_smooth recurrence (queries/timeseries.py).
 EWMA_OUTPUT_SCHEMA = "user_id long, n_events long, last_ewma double"
@@ -867,69 +793,4 @@ def attribution_stream(keyed: DataFrame) -> DataFrame:
         state_fields="user_id long, first_ch string, last_ch string",
         out_schema=ATTRIB_OUTPUT_SCHEMA,
         output_mode="append",
-    )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4's arbitrary-state API): the
-# successor to applyInPandasWithState — typed, NAMED state variables on
-# a StatefulProcessor lifecycle (init/handleInputRows/close), backed by
-# the RocksDB state store. Covered here so the engine exercises BOTH
-# stateful APIs: the processor below is the running per-user totals
-# fold (the simplest correct exemplar of the lifecycle). NOT a
-# registered query: the TWS Python runner needs google.protobuf,
-# which this sandbox lacks — the documented boundary (SURVEY.md §2.3);
-# tests/test_streaming.py carries the full totals-vs-batch parity
-# check and self-skips when protobuf is absent.
-# ---------------------------------------------------------------------------
-
-TWS_OUTPUT_SCHEMA = "user_id long, n_events long, cents long"
-
-
-def make_running_totals_processor():
-    """Factory returning a StatefulProcessor that keeps one ValueState
-    ('totals' = running row count + money cents) per user and emits the
-    updated totals each micro-batch. Import-deferred so the module
-    stays loadable on deployments whose pyspark predates the API."""
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, cents BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, cents = (
-                self._totals.get() if self._totals.exists() else (0, 0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                vals = pdf["value"].dropna()
-                # floor(v*100 + 0.5) on the raw double — the engine's
-                # cents convention (matches the SQL oracle bit-for-bit)
-                cents += int(
-                    sum(int(math.floor(float(x) * 100 + 0.5)) for x in vals)
-                )
-            self._totals.update((int(n), int(cents)))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningTotalsProcessor()
-
-
-def running_totals_stream(keyed: DataFrame) -> DataFrame:
-    """Apply the transformWithState running-totals processor to a
-    streaming DataFrame with columns (user_id long, ts timestamp,
-    value double). Requires the RocksDB state store provider (see
-    streaming.rocksdb_state_store). Output mode: update."""
-    return keyed.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=make_running_totals_processor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

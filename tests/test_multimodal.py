@@ -8,35 +8,52 @@ import pytest
 
 from projektdataengineering_spark.catalog import load_table
 from projektdataengineering_spark.operators.multimodal import (
-    _fake_features,
-    attach_binary_payload,
+    attach_png_payload,
     decode_media,
     extract_features,
 )
 
 
+def _png_fixture_features(text: str, width: int = 32) -> tuple[float, int]:
+    """(mean, 16-bin histogram argmax, ties to the smaller bin) of the
+    pixels attach_png_payload renders: the text's UTF-8 bytes
+    zero-padded to a multiple of ``width``."""
+    raw = text.encode("utf-8") or b"\x00"
+    n_pix = -(-len(raw) // width) * width
+    hist = [0] * 16
+    hist[0] = n_pix - len(raw)
+    for b in raw:
+        hist[b >> 4] += 1
+    return sum(raw) / n_pix, max(range(16), key=lambda i: (hist[i], -i))
+
+
 def test_feature_schema_and_values(spark, sf_dir):
+    import hashlib
+
     docs = load_table(spark, sf_dir, "documents").limit(20)
-    out = extract_features(attach_binary_payload(docs), fake=True)
+    src = attach_png_payload(docs)
+    out = extract_features(src)
     assert out.columns == [
         "doc_id", "modality", "n_bytes", "checksum", "feat_mean", "feat_argmax",
     ]
     rows = {r["doc_id"]: r for r in out.collect()}
-    src = {r["doc_id"]: r["text"] for r in docs.collect()}
-    assert rows.keys() == src.keys()
-    for doc_id, text in src.items():
-        payload = text.encode("utf-8")
-        mean, argmax = _fake_features(payload)
+    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
+    payloads = {r["doc_id"]: bytes(r["payload"]) for r in src.collect()}
+    assert rows.keys() == texts.keys()
+    for doc_id, text in texts.items():
+        mean, argmax = _png_fixture_features(text)
         r = rows[doc_id]
-        assert r["n_bytes"] == len(payload)
+        assert r["modality"] == "image/png"
+        assert r["n_bytes"] == len(payloads[doc_id])
+        assert r["checksum"] == hashlib.sha256(payloads[doc_id]).hexdigest()
         assert r["feat_mean"] == pytest.approx(mean)
         assert r["feat_argmax"] == argmax
 
 
 def test_rerun_is_deterministic(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(50)
-    a = sorted(map(tuple, extract_features(attach_binary_payload(docs)).collect()))
-    b = sorted(map(tuple, extract_features(attach_binary_payload(docs)).collect()))
+    a = sorted(map(tuple, extract_features(attach_png_payload(docs)).collect()))
+    b = sorted(map(tuple, extract_features(attach_png_payload(docs)).collect()))
     assert a == b
 
 
@@ -75,8 +92,8 @@ def test_avi_codec_roundtrip():
 
 def test_real_video_pipeline_decodes_and_samples(spark, sf_dir):
     """End-to-end real video path: attach_avi_payload packs the text
-    into an actual AVI; extract_features(fake=False) must see the text
-    bytes as pixel values, and sample_frames(fake=False) must emit
+    into an actual AVI; extract_features must see the text
+    bytes as pixel values, and sample_frames must emit
     PNG-decodable frames whose pixels round-trip the AVI frames."""
     import numpy as np
 
@@ -90,7 +107,7 @@ def test_real_video_pipeline_decodes_and_samples(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(8)
     src = attach_avi_payload(docs, width=16, n_frames=4)
 
-    feats = extract_features(src, fake=False)
+    feats = extract_features(src)
     texts = {r["doc_id"]: r["text"] for r in docs.select("doc_id", "text").collect()}
     for r in feats.collect():
         raw = texts[r["doc_id"]].encode("utf-8") or b"\x00"
@@ -98,7 +115,7 @@ def test_real_video_pipeline_decodes_and_samples(spark, sf_dir):
         buf[: min(len(raw), buf.size)] = np.frombuffer(raw[: buf.size], np.uint8)
         assert abs(r["feat_mean"] - float(buf.mean())) < 1e-9
 
-    out = sample_frames(src, n_frames=2, fake=False)
+    out = sample_frames(src, n_frames=2)
     rows = out.collect()
     assert {r["frame_idx"] for r in rows} == {0, 1}
     one = next(r for r in rows if r["frame_idx"] == 0)
@@ -110,7 +127,7 @@ def test_real_video_pipeline_decodes_and_samples(spark, sf_dir):
 def test_sample_frames_fused_features_match(spark, sf_dir):
     """The r19 fused frame featurizer (sample_frames features=True)
     must be BIT-identical to the two-pass composition it replaced:
-    extract_features(fake=False) re-decoding the emitted frame PNGs.
+    extract_features re-decoding the emitted frame PNGs.
     Mixed codec so both the lossless DIB path and the lossy MJPG path
     are covered (the fusion must not change either — PNG roundtrip is
     lossless, so featurizing pre-encode pixels equals featurizing the
@@ -126,11 +143,11 @@ def test_sample_frames_fused_features_match(spark, sf_dir):
 
     fused = {
         (r["doc_id"], r["frame_idx"]): (r["feat_mean"], r["feat_argmax"])
-        for r in sample_frames(src, n_frames=2, fake=False, features=True)
+        for r in sample_frames(src, n_frames=2, features=True)
         .select("doc_id", "frame_idx", "feat_mean", "feat_argmax")
         .collect()
     }
-    frames = sample_frames(src, n_frames=2, fake=False)
+    frames = sample_frames(src, n_frames=2)
     recomposed = {
         (r["doc_id"] // 10, r["doc_id"] % 10): (r["feat_mean"], r["feat_argmax"])
         for r in extract_features(
@@ -138,7 +155,6 @@ def test_sample_frames_fused_features_match(spark, sf_dir):
                 "doc_id * 10 + frame_idx AS doc_id",
                 "modality", "payload", "n_bytes", "checksum",
             ),
-            fake=False,
         ).collect()
     }
     assert fused == recomposed and len(fused) == 20
@@ -224,7 +240,7 @@ def test_wav_codec_roundtrip():
 
 def test_real_png_pipeline_decodes_to_text_bytes(spark, sf_dir):
     """End-to-end real path: attach_png_payload renders the text as an
-    actual PNG; extract_features(fake=False) decodes it and must see
+    actual PNG; extract_features decodes it and must see
     EXACTLY the document's UTF-8 bytes (plus zero padding) as pixels —
     proving the feature ran on decoded output, not container bytes."""
     import numpy as np
@@ -246,7 +262,7 @@ def test_real_png_pipeline_decodes_to_text_bytes(spark, sf_dir):
         assert bytes(flat[: len(raw)]) == raw
         assert not flat[len(raw):].any()  # zero-padded tail
 
-    out = extract_features(src, fake=False)
+    out = extract_features(src)
     rows = {r["doc_id"]: r for r in out.collect()}
     assert rows.keys() == texts.keys()
     some = next(iter(rows))
@@ -256,45 +272,25 @@ def test_real_png_pipeline_decodes_to_text_bytes(spark, sf_dir):
     assert rows[some]["feat_argmax"] == argmax
 
 
-def test_real_resize_via_codec(spark, sf_dir):
-    """resize_media(fake=False): output is a valid PNG of exactly
-    (height × width) whose pixels equal the nearest-neighbor resample
-    of the decoded source image."""
-    import numpy as np
-
-    from projektdataengineering_spark.operators.codecs import png_decode
-    from projektdataengineering_spark.operators.multimodal import (
-        attach_png_payload,
-        resize_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").limit(10)
-    src = attach_png_payload(docs)
-    originals = {r["doc_id"]: bytes(r["payload"]) for r in src.collect()}
-    out = resize_media(src, 8, 4, fake=False).collect()
-    assert len(out) == 10
-    for r in out:
-        resized = png_decode(bytes(r["payload"]))
-        assert resized.shape == (4, 8)
-        img = png_decode(originals[r["doc_id"]])
-        h0, w0 = img.shape[:2]
-        ys = (np.arange(4) * h0) // 4
-        xs = (np.arange(8) * w0) // 8
-        assert np.array_equal(resized, img[ys][:, xs])
-
-
 def test_binary_dir_ingest_feeds_feature_extraction(spark, tmp_path):
     """read_binary_dir (the REAL binaryFile ingest seam) must produce
     the payload+metadata shape extract_features consumes, with sha256
-    checksums and modality mapping matching a pure-Python recompute."""
+    checksums and modality mapping matching a pure-Python recompute;
+    the featurizer decodes the ingested PNG and WAV, and refuses a
+    modality it has no decoder for."""
     import hashlib
 
-    from projektdataengineering_spark.operators.multimodal import extract_features
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.operators.codecs import png_encode, wav_encode
     from projektdataengineering_spark.sources import read_binary_dir
 
+    pixels = np.arange(48, dtype=np.uint8).reshape(6, 8) * 5
+    samples = np.array([0, 1000, -2000, 32767, -32768, 7], dtype=np.int16)
     blobs = {
-        "a.jpg": b"\xff\xd8\xff fake jpeg bytes",
-        "b.wav": b"RIFF fake wav payload \x00\x01\x02",
+        "a.png": png_encode(pixels),
+        "b.wav": wav_encode(samples, rate=8000),
         "c.weird": b"unknown extension bytes",
     }
     for name, data in blobs.items():
@@ -308,26 +304,32 @@ def test_binary_dir_ingest_feeds_feature_extraction(spark, tmp_path):
         assert bytes(r["payload"]) == data
         assert r["n_bytes"] == len(data)
         assert r["checksum"] == hashlib.sha256(data).hexdigest()
-    assert rows["a.jpg"]["modality"] == "image/jpeg"
+    assert rows["a.png"]["modality"] == "image/png"
     assert rows["b.wav"]["modality"] == "audio/wav"
     assert rows["c.weird"]["modality"] == "application/octet-stream"
 
     # the downstream featurizer runs unchanged on the ingested frame
     # (it keys on doc_id + payload/modality/n_bytes/checksum)
-    from pyspark.sql import functions as F
-
-    feat = extract_features(
-        df.select(
-            F.xxhash64("path").alias("doc_id"),
-            "payload",
-            "modality",
-            "n_bytes",
-            "checksum",
-        ),
-        fake=True,
+    ingested = df.select(
+        F.element_at(F.split("path", "/"), -1).alias("name"),
+        F.xxhash64("path").alias("doc_id"),
+        "payload",
+        "modality",
+        "n_bytes",
+        "checksum",
     )
-    out = feat.collect()
-    assert len(out) == 3 and all(r["feat_mean"] > 0 for r in out)
+    names = {r["doc_id"]: r["name"] for r in ingested.collect()}
+    feats = {
+        names[r["doc_id"]]: (r["feat_mean"], r["feat_argmax"])
+        for r in extract_features(ingested.filter("name != 'c.weird'").drop("name")).collect()
+    }
+    amp = np.minimum(np.abs(samples.astype(np.int64)), 32767) * 255 // 32767
+    assert feats == {
+        "a.png": (pytest.approx(float(pixels.mean())), int(np.argmax(np.bincount(pixels.reshape(-1) >> 4)))),
+        "b.wav": (pytest.approx(float(amp.mean())), int(np.argmax(np.bincount(amp >> 4)))),
+    }
+    with pytest.raises(Exception, match="no decoder"):
+        extract_features(ingested.filter("name = 'c.weird'").drop("name")).collect()
 
     # metadata-only projection must NOT read the content column
     meta_plan = (
@@ -340,50 +342,37 @@ def test_binary_dir_ingest_feeds_feature_extraction(spark, tmp_path):
     assert "content" not in meta_plan
 
 
-def test_resize_media_plumbing(spark, sf_dir):
-    """resize_media: output payloads are exactly w×h bytes, metadata is
-    refreshed (checksum = sha256 of the RESIZED bytes), and the resample
-    matches the pure-Python featurizer contract."""
+def test_sample_frames_expansion(spark, sf_dir):
+    """sample_frames: 1→N expansion with per-frame metadata; frame k is
+    the source frame at the uniform stride, re-encoded as a PNG."""
     import hashlib
 
+    import numpy as np
+
+    from projektdataengineering_spark.operators.codecs import avi_decode, png_decode
     from projektdataengineering_spark.operators.multimodal import (
-        _fake_resize,
-        attach_binary_payload,
-        resize_media,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    src = attach_binary_payload(docs)
-    out = resize_media(src, 8, 4).collect()
-    assert len(out) == 20
-    originals = {r["doc_id"]: bytes(r["payload"]) for r in src.collect()}
-    for r in out:
-        b = bytes(r["payload"])
-        assert len(b) == 8 * 4 == r["n_bytes"]
-        assert r["checksum"] == hashlib.sha256(b).hexdigest()
-        assert b == _fake_resize(originals[r["doc_id"]], 8, 4)
-
-
-def test_sample_frames_expansion(spark, sf_dir):
-    """sample_frames: 1→N expansion with per-frame metadata; frames are
-    the deterministic evenly-spaced slices of the source payload."""
-    from projektdataengineering_spark.operators.multimodal import (
-        _fake_frames,
-        attach_binary_payload,
+        attach_avi_payload,
         sample_frames,
     )
 
     docs = load_table(spark, sf_dir, "documents").limit(10)
-    src = attach_binary_payload(docs)
+    src = attach_avi_payload(docs, width=16, n_frames=4)
     out = sample_frames(src, 3).collect()
     assert len(out) == 30
     originals = {r["doc_id"]: bytes(r["payload"]) for r in src.collect()}
     by_doc: dict = {}
     for r in out:
-        by_doc.setdefault(r["doc_id"], {})[r["frame_idx"]] = bytes(r["payload"])
+        fr = bytes(r["payload"])
+        assert r["modality"] == "image/png"
+        assert r["n_bytes"] == len(fr)
+        assert r["checksum"] == hashlib.sha256(fr).hexdigest()
+        by_doc.setdefault(r["doc_id"], {})[r["frame_idx"]] = fr
+    assert by_doc.keys() == originals.keys()
     for doc_id, frames in by_doc.items():
-        want = _fake_frames(originals[doc_id], 3)
-        assert [frames[i] for i in range(3)] == want
+        assert sorted(frames) == [0, 1, 2]
+        source, _ = avi_decode(originals[doc_id])
+        for k in range(3):
+            assert np.array_equal(png_decode(frames[k]), source[(k * 4) // 3])
 
 
 def test_audio_features_match_python_recompute(spark, sf_dir):
@@ -576,7 +565,7 @@ def test_mixed_codec_video_pipeline(spark, sf_dir):
         tag = b"00dc" if doc_id % 2 else b"00db"
         assert tag in bytes(r["payload"]), doc_id
 
-    sampled = sample_frames(clips, n_frames=2, fake=False).collect()
+    sampled = sample_frames(clips, n_frames=2).collect()
     per_doc = {}
     for r in sampled:
         per_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])

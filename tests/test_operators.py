@@ -378,44 +378,17 @@ def test_connected_components_synthetic_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 10: 10, 11: 10, 12: 10}
 
 
-def test_star_cc_matches_union_find_and_min_label(spark, sf_dir):
-    """connected_components_star (large-star/small-star) must produce
-    exactly the same labeling as serial union-find AND the min-label
-    operator on the real MinHash edge list."""
-    from pyspark.sql import functions as F
-
-    from projektdataengineering_spark.operators.graph import connected_components_star
-    from projektdataengineering_spark.queries.similarity import minhash_band_pairs
-
-    pairs = minhash_band_pairs(spark, sf_dir, include_sig=False).select(
-        F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst")
-    )
-    edge_list = [(r["src"], r["dst"]) for r in pairs.collect()]
-    expected = _union_find_components(edge_list)
-    got = {
-        r["node"]: r["comp"]
-        for r in connected_components_star(pairs, "src", "dst").collect()
-    }
-    assert got == expected
-
-
-def test_star_cc_survives_path_graph_where_min_label_cannot(spark):
+def test_min_label_cc_raises_on_a_path_longer_than_its_rounds(spark):
     """A 200-node path has diameter 199: min-label propagation cannot
-    finish in 10 rounds (it raises, refusing silent wrong answers);
-    the star algorithm converges in O(log n) rounds and labels the
-    whole path with its minimum."""
+    finish in 10 rounds, so it raises instead of returning a wrong
+    labelling."""
     import pytest as _pytest
 
-    from projektdataengineering_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from projektdataengineering_spark.operators.graph import connected_components
 
     df = spark.createDataFrame([(i, i + 1) for i in range(199)], "src long, dst long")
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, "src", "dst", max_iter=10)
-    got = {r["node"]: r["comp"] for r in connected_components_star(df, "src", "dst").collect()}
-    assert len(got) == 200 and set(got.values()) == {0}
 
 
 def test_approx_quantiles_within_rank_error(spark, sf_dir):
@@ -552,15 +525,13 @@ def test_agg_state_merge_is_batching_independent(spark, sf_dir):
 
 def test_numpy_xxh64_matches_jvm(spark):
     """The numpy XXH64 reimplementation (functions/xxh64.py) must be
-    bit-identical to Spark's xxhash64 for both forms the signature
-    kernels use: xxhash64(long) and xxhash64(long, int-literal), plus
-    the multi-long chain used for shingle hashing."""
+    bit-identical to Spark's xxhash64(long), and to its multi-long chain
+    used for shingle hashing."""
     from pyspark.sql import functions as F
 
     from projektdataengineering_spark.functions.xxh64 import (
         hash_long,
         xxhash64_long,
-        xxhash64_long_intlit,
     )
 
     vals = np.array(
@@ -574,17 +545,15 @@ def test_numpy_xxh64_matches_jvm(spark):
     )
     jvm = df.select(
         F.xxhash64("v").alias("h1"),
-        F.xxhash64("v", F.lit(7)).alias("h2"),
         F.xxhash64("v", "v1", "v2").alias("h3"),
     ).collect()
     assert [r.h1 for r in jvm] == xxhash64_long(vals).tolist()
-    assert [r.h2 for r in jvm] == xxhash64_long_intlit(vals, 7).tolist()
     chain = hash_long(v2, hash_long(v1, hash_long(vals, 42))).view(np.int64)
     assert [r.h3 for r in jvm] == chain.tolist()
 
 
 def test_chained_shingle_hashes_match_string_trigrams(spark, sf_dir):
-    """The kernel's chained-hash shingle sets must be an injective image
+    """The chained-hash shingle sets must be an injective image
     of the string trigram sets (up to 64-bit collisions): per-doc
     distinct counts equal, and pairwise intersection sizes equal — the
     quantities every Jaccard downstream depends on. Ground truth is
@@ -1190,22 +1159,6 @@ def test_hll_sketch_union_is_batching_independent(spark, sf_dir):
     )
     assert one == batched  # union of partials == one-shot, exactly
     assert abs(one - exact) <= max(2, 0.05 * exact), (one, exact)
-
-
-def test_hll_distinct_over_groups_shapes(spark, sf_dir):
-    from projektdataengineering_spark.catalog import load_table
-    from projektdataengineering_spark.operators.sketches import distinct_over_groups
-
-    ev = load_table(spark, sf_dir, "events")
-    out = distinct_over_groups(ev, "event_type", "user_id").collect()
-    types = {r["grp"] for r in out}
-    assert None in types and len(types) >= 3
-    # the rollup row is marked explicitly, not by the NULL sentinel
-    glob = next(r for r in out if r["is_total"])
-    assert glob["grp"] is None
-    per = [r["est_distinct"] for r in out if not r["is_total"]]
-    # global union can't exceed the sum of group estimates (loosely)
-    assert glob["est_distinct"] <= sum(per) + 2
 
 
 def test_pagerank_matches_python_power_iteration(spark):

@@ -117,3 +117,45 @@ def test_ntz_normalization_requires_utc_session(spark, tmp_path):
         assert out.schema["ts"].dataType.typeName() == "timestamp"
     finally:
         spark.conf.set(tz_key, old)
+
+
+@pytest.mark.parametrize("tz", ["UTC", None], ids=["utc_adjusted", "local"])
+def test_nanos_events_take_the_long_branch(spark, tmp_path, tz):
+    """A TIMESTAMP(NANOS) events file reads as LONG raw nanos under
+    ``nanosAsLong``, UTC-adjusted or not: ``load_table`` turns each into
+    the µs timestamp floor(ns/1000), and ``load_events_since(H)`` keeps
+    exactly the rows with ns > H·1000+999 through a predicate pushed to
+    the parquet scan."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.catalog import load_events_since, load_table
+    from projektdataengineering_spark.plans import explain_string
+
+    hwm = datetime(2024, 1, 15, tzinfo=timezone.utc)
+    h_us = int(hwm.timestamp()) * 1_000_000
+    offsets = [-1, 0, 1, 999, 1000, 1001, 5_000_123]  # ns around H·1000
+    ns = [h_us * 1000 + d for d in offsets]
+    table = pa.table({
+        "event_id": pa.array(range(len(ns)), pa.int64()),
+        "ts": pa.array(ns, pa.timestamp("ns", tz=tz)),
+    })
+    pq.write_table(table, tmp_path / "events.parquet")
+    ts_field = pq.read_schema(tmp_path / "events.parquet").field("ts").type
+    assert ts_field.unit == "ns" and (ts_field.tz is not None) == (tz is not None)
+
+    events = load_table(spark, str(tmp_path), "events")
+    raw = spark.read.parquet(str(tmp_path / "events.parquet")).schema["ts"].dataType
+    assert raw.typeName() == "long"
+    assert events.schema["ts"].dataType.typeName() == "timestamp"
+    got = {r["event_id"]: r["us"] for r in events.select("event_id", F.unix_micros("ts").alias("us")).collect()}
+    assert got == {i: v // 1000 for i, v in enumerate(ns)}
+
+    since = load_events_since(spark, str(tmp_path), hwm)
+    assert sorted(r["event_id"] for r in since.collect()) == [
+        i for i, v in enumerate(ns) if v > h_us * 1000 + 999
+    ] == [4, 5, 6]
+    assert f"GreaterThan(ts,{h_us * 1000 + 999})" in explain_string(since)

@@ -198,91 +198,6 @@ def test_foreachbatch_sink_is_idempotent(spark, sf_dir, tmp_path):
     assert n1 == n_batch
 
 
-def test_stateful_sessionizer_carries_sessions_across_batches(spark, sf_dir, tmp_path):
-    """Custom stateful sessionizer: a session straddling two
-    micro-batches must continue (state carry-over), an in-batch gap
-    must close a session, and the final session set must equal the
-    BATCH gaps-and-islands sessionization of the same rows."""
-    import os
-    import time
-
-    import pandas as pd
-
-    from projektdataengineering_spark.streaming.stateful import sessionize_stream
-
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    # user u: 3 events bridging the batch split (10-min gaps, < 30min),
-    #         then a >30min gap inside batch 2 → second session
-    # user v: one event per batch, 2h apart → two singleton sessions
-    b1 = pd.DataFrame(
-        {
-            "key": ["u", "u", "v"],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00:00", "2024-01-01 00:10:00", "2024-01-01 00:00:00"]
-            ),
-            "value": [1.0, 2.0, 10.0],
-        }
-    )
-    b2 = pd.DataFrame(
-        {
-            "key": ["u", "u", "v"],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:20:00", "2024-01-01 01:30:00", "2024-01-01 02:00:00"]
-            ),
-            "value": [4.0, 8.0, 20.0],
-        }
-    )
-    b1.to_parquet(src / "b1.parquet", coerce_timestamps="us")
-    b2.to_parquet(src / "b2.parquet", coerce_timestamps="us")
-    now = time.time()
-    os.utime(src / "b1.parquet", (now - 60, now - 60))
-    os.utime(src / "b2.parquet", (now, now))
-
-    stream = (
-        spark.readStream.schema("key string, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        sessionize_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sess_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    # latest emission per (key, session_start) is the session's truth:
-    # higher n_events is newer; at equal counts closed beats open (a
-    # session only transitions open → closed without gaining events)
-    final = {}
-    for r in spark.table("sess_out").collect():
-        k = (r["key"], r["session_start"])
-        if (
-            k not in final
-            or r["n_events"] > final[k]["n_events"]
-            or (r["n_events"] == final[k]["n_events"] and not r["is_open"])
-        ):
-            final[k] = r
-    sessions = {
-        k: (r["n_events"], r["session_last"], r["sum_value"], r["is_open"])
-        for k, r in final.items()
-    }
-    T = pd.Timestamp
-    assert sessions == {
-        # u session 1: 00:00→00:20 spans BOTH batches (3 events, carried)
-        ("u", T("2024-01-01 00:00:00")): (3, T("2024-01-01 00:20:00"), 7.0, False),
-        # u session 2: opened by the 01:30 event after the >30min gap
-        ("u", T("2024-01-01 01:30:00")): (1, T("2024-01-01 01:30:00"), 8.0, True),
-        # v: two singleton sessions 2h apart
-        ("v", T("2024-01-01 00:00:00")): (1, T("2024-01-01 00:00:00"), 10.0, False),
-        ("v", T("2024-01-01 02:00:00")): (1, T("2024-01-01 02:00:00"), 20.0, True),
-    }, sessions
-
-
 def test_stream_ewma_equals_batch_ewma(spark, sf_dir):
     """The stateful streaming EWMA must reproduce the batch operator's
     fold bit-for-bit on a bounded in-order fixture (same alpha, same
@@ -1001,70 +916,6 @@ def test_session_window_merges_across_micro_batches(spark, tmp_path):
         (2, pd.Timestamp("2024-01-01 00:05:00"),
          pd.Timestamp("2024-01-01 00:35:00"), 1),
     }, rows
-
-
-def test_transform_with_state_running_totals_or_documented_absence(
-    spark, sf_dir, tmp_path
-):
-    """transformWithState (Spark 4's arbitrary-state API,
-    streaming/stateful.py running_totals_stream) — availability-gated
-    like the Avro/JDBC boundaries: its Python runner initializes a
-    protobuf-based state channel, and this sandbox ships no usable
-    google.protobuf, so the query cannot execute here
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE). On a deployment
-    with protobuf this runs the full check: RocksDB-backed ValueState
-    running totals under availableNow must equal the batch aggregate.
-    The boundary is documented in SURVEY.md §2.3."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip(
-            "google.protobuf not importable — transformWithState's "
-            "Python runner cannot initialize in this sandbox; boundary "
-            "documented in SURVEY.md §2.3 (the spark-avro discipline)"
-        )
-
-    import math
-
-    from pyspark.sql import functions as F
-
-    from projektdataengineering_spark.streaming import (
-        open_event_stream,
-        rocksdb_state_store,
-        run_to_memory_sink,
-        stream_state_partitions,
-    )
-    from projektdataengineering_spark.streaming.stateful import (
-        running_totals_stream,
-    )
-
-    keyed = open_event_stream(spark, sf_dir).select("user_id", "ts", "value")
-    with stream_state_partitions(spark), rocksdb_state_store(spark):
-        run_to_memory_sink(
-            running_totals_stream(keyed), "tws_totals_out", output_mode="update"
-        )
-    got = {
-        r["user_id"]: (r["n_events"], r["cents"])
-        for r in spark.table("tws_totals_out")
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("cents", "n_events").alias("cents"),
-        )
-        .collect()
-    }
-    from projektdataengineering_spark.catalog import load_table
-
-    exp = {}
-    for r in load_table(spark, sf_dir, "events").select("user_id", "value").collect():
-        n, c = exp.get(r["user_id"], (0, 0))
-        exp[r["user_id"]] = (
-            n + 1,
-            c + (0 if r["value"] is None else int(math.floor(r["value"] * 100 + 0.5))),
-        )
-    assert got == exp
 
 
 @pytest.mark.parametrize("n", PARTITIONINGS)
