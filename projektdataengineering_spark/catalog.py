@@ -8,8 +8,11 @@ named-table loader over a directory of parquet files. Explicit behaviors:
   inference — mirroring SURVEY.md §1.2's "explicit schemas" rule;
 * loads are lazy DataFrames; registering temp views gives the SQL surface;
 * at 100 TB these would be partitioned/bucketed catalog tables — the
-  loader is the single seam where that swap happens (one `spark.read`
-  call site for the whole engine).
+  loader is the seam where that swap happens for full-table reads.  It
+  is not the only ``spark.read`` of a fixture: ``load_events_since``
+  reads events with its high-water-mark predicate pushed to the scan,
+  ``streaming.open_event_stream`` reads them as a stream, and every
+  persisted artifact is read back from its ``.scratch`` path.
 """
 
 from __future__ import annotations
@@ -47,8 +50,9 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     the caller's session config, so the branch is on the OBSERVED
     dtype, not on a conf:
 
-    * LONG → floor-divide nanos to µs (bit-identical to DuckDB's own
-      ns→µs truncation) and ``timestamp_micros``;
+    * LONG → floor-divide nanos to µs and ``timestamp_micros`` (DuckDB
+      truncates toward zero instead, so the two agree on every value
+      from 1970 on, and pre-1970 sub-µs values differ by 1 µs);
     * TIMESTAMP_NTZ → reinterpret the wall-clock as a session-tz
       instant (sessions are pinned UTC; DuckDB reads the same file as
       a naive TIMESTAMP, so canonical values agree);
@@ -56,7 +60,9 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     """
     dt = df.schema["ts"].dataType
     if isinstance(dt, LongType):
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        # exact BIGINT floor: `div` truncates toward zero, which would
+        # round pre-1970 nanos up (a double divide loses precision)
+        return df.withColumn("ts", F.timestamp_micros(F.expr("(ts - pmod(ts, 1000)) div 1000")))
     if isinstance(dt, TimestampNTZType):
         _require_utc_session(df.sparkSession, "normalize_event_ts NTZ cast")
         return df.withColumn("ts", F.col("ts").cast("timestamp"))

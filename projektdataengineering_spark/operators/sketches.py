@@ -84,16 +84,7 @@ def misra_gries_summary(df: DataFrame, term_col: str, k: int = 400) -> DataFrame
     def part(batches):
         counters: dict = {}
         for pdf in batches:
-            vc = pdf[term_col].value_counts()
-            for t, c in vc.items():
-                counters[t] = counters.get(t, 0) + int(c)
-            if len(counters) > k:
-                vals = np.fromiter(counters.values(), dtype=np.int64)
-                # (k+1)-th largest value — the PODS'12 reduce offset
-                off = int(np.partition(vals, -(k + 1))[-(k + 1)])
-                counters = {
-                    t: c - off for t, c in counters.items() if c - off > 0
-                }
+            counters = mg_add(counters, pdf[term_col], k)
         if counters:
             yield pd.DataFrame(
                 {"term": list(counters.keys()),
@@ -104,6 +95,22 @@ def misra_gries_summary(df: DataFrame, term_col: str, k: int = 400) -> DataFrame
         part, schema="term string, est long"
     )
     return partials.groupBy("term").agg(F.sum("est").alias("est"))
+
+
+def mg_add(counters: dict, terms, k: int) -> dict:
+    """Fold one batch of ``terms`` (a pandas Series) into Misra-Gries
+    counters: an exact batch reduce (value_counts) added in, then the
+    PODS'12 reduce to k counters by subtracting the (k+1)-th largest
+    value and dropping non-positives."""
+    import numpy as np
+
+    for t, c in terms.value_counts().items():
+        counters[t] = counters.get(t, 0) + int(c)
+    if len(counters) > k:
+        vals = np.fromiter(counters.values(), dtype=np.int64)
+        off = int(np.partition(vals, -(k + 1))[-(k + 1)])
+        counters = {t: c - off for t, c in counters.items() if c - off > 0}
+    return counters
 
 
 def count_min_cells(
@@ -142,8 +149,21 @@ def count_min_cells(
     in, and no per-term state ever materializes (that
     full-vocabulary aggregate is exactly what a sketch exists to
     avoid)."""
-    h = F.md5(F.concat(F.col("t"), F.lit("#cms")))
-    j = F.explode(F.array(*[F.lit(i) for i in range(depth)])).alias("j")
+    return (
+        _md5_lanes(df, term_col, "#cms", depth, width)
+        .select("j", F.col("pos").alias("b"))
+        .groupBy("j", "b")
+        .agg(F.count(F.lit(1)).alias("cell"))
+    )
+
+
+def _md5_lanes(df: DataFrame, term_col: str, salt: str, lanes: int, width: int) -> DataFrame:
+    """(j, pos) for each term and lane j < ``lanes``: ONE md5 of the
+    salted term split into two 32-bit halves h1/h2, and
+    pos = ((h1 + j·h2) mod 2³²) mod width, the affine lane family
+    shared by the Count-Min and Bloom sketches."""
+    h = F.md5(F.concat(F.col("t"), F.lit(salt)))
+    j = F.explode(F.array(*[F.lit(i) for i in range(lanes)])).alias("j")
     return (
         df.select(F.col(term_col).cast("string").alias("t"))
         .select(
@@ -153,13 +173,8 @@ def count_min_cells(
         .select("h1", "h2", j)
         .select(
             "j",
-            (
-                (F.col("h1") + F.col("j") * F.col("h2")) % F.lit(1 << 32)
-                % width
-            ).alias("b"),
+            ((F.col("h1") + F.col("j") * F.col("h2")) % F.lit(1 << 32) % width).alias("pos"),
         )
-        .groupBy("j", "b")
-        .agg(F.count(F.lit(1)).alias("cell"))
     )
 
 
@@ -192,19 +207,8 @@ def bloom_filter_words(
     fanout map-side, then one groupBy(w) whose partial aggregation
     collapses every partition to ≤ m_bits/64 words before a tiny
     exchange."""
-    h = F.md5(F.concat(F.col("t"), F.lit("#bloom")))
-    j = F.explode(F.array(*[F.lit(i) for i in range(k_hashes)])).alias("j")
     return (
-        df.select(F.col(term_col).cast("string").alias("t"))
-        .select(
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(h, 9, 8), 16, 10).cast("long").alias("h2"),
-        )
-        .select("h1", "h2", j)
-        .select(
-            ((F.col("h1") + F.col("j") * F.col("h2")) % F.lit(1 << 32) % m_bits)
-            .alias("pos")
-        )
+        _md5_lanes(df, term_col, "#bloom", k_hashes, m_bits)
         .select(
             F.expr("pos div 63").alias("w"),
             F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))").alias("bit"),

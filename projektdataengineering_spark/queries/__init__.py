@@ -104,35 +104,41 @@ _MODULES = (
 #   now reads or builds it through catalog.persisted;
 #   join_cross_calendar lost a broadcast hint Spark rejected.
 # * round 21 — extract_features and sample_frames lost their fake
-#   featurizer, so the two media queries call them without fake=False.
+#   featurizer, so the two media queries call them without fake=False;
+#   copied fragments became shared definitions: the merge generations'
+#   copy-on-write step and snapshot rollups, the Z-order builder, the
+#   index-append audits, the cell-probe matches and the keepers CTE
+#   moved the round-20 names that run them, and the Misra-Gries batch
+#   reduce (sketches.mg_add) changed the Python bodies of the two
+#   heavy-hitter queries.
 _RECHECK: dict[str, int] = {
     "stream_dedup_stateful": 20,
     "stream_cdc_stateful": 20,
     "stream_ewma_stateful": 20,
     "stream_attribution": 20,
-    "stream_corpus_delta": 20,
+    "stream_corpus_delta": 21,
     "scan_python_pushdown": 20,
-    "dedup_embedding_incremental": 20,
-    "dedup_embedding_index_append": 20,
+    "dedup_embedding_incremental": 21,
+    "dedup_embedding_index_append": 21,
     "dedup_incremental_neardup": 20,
     "dedup_neardup_index_append": 20,
-    "dedup_stream_index_append": 20,
+    "dedup_stream_index_append": 21,
     "join_bucketed_colocated": 20,
     "join_cross_calendar": 20,
     "pipeline_compaction_apply": 20,
     "pipeline_corpus_delta": 20,
-    "pipeline_file_skipping": 20,
+    "pipeline_file_skipping": 21,
     "pipeline_gdpr_erasure": 20,
     "pipeline_index_vacuum": 20,
     "pipeline_kanon_apply": 20,
-    "pipeline_merge_apply": 20,
-    "pipeline_merge_evolve": 20,
-    "pipeline_merge_timetravel": 20,
-    "pipeline_merge_vacuum": 20,
+    "pipeline_merge_apply": 21,
+    "pipeline_merge_evolve": 21,
+    "pipeline_merge_timetravel": 21,
+    "pipeline_merge_vacuum": 21,
     "pipeline_neardup_apply": 20,
     "pipeline_quality_classifier": 20,
     "pipeline_vacuum": 20,
-    "pipeline_zorder_apply": 20,
+    "pipeline_zorder_apply": 21,
     "scan_binary_files": 20,
     "scan_csv_roundtrip": 20,
     "scan_gzip_roundtrip": 20,
@@ -148,12 +154,14 @@ _RECHECK: dict[str, int] = {
     "sim_ivf_member_skew": 20,
     "sim_ivfpq_cell_skew": 20,
     "sim_ivfpq_gen_serving": 20,
-    "sim_ivfpq_index_append": 20,
+    "sim_ivfpq_index_append": 21,
     "sink_python_datasource": 20,
     "sink_python_stream": 20,
-    "stream_embedding_delta": 20,
+    "stream_embedding_delta": 21,
     "multimodal_features": 21,
     "multimodal_video_frames": 21,
+    "agg_heavy_hitters_mg": 21,
+    "stream_heavy_hitters": 21,
 }
 
 # The driver's per-round correctness records live in the repo root.

@@ -288,15 +288,19 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SUBSTR_W = 8  # window width in tokens
 
-_SUBSTR_SPANS_SQL = f"""
-    WITH toks AS (
+# Both substring oracles' token arrays and window fingerprints.
+_SUBSTR_WIN_CTES = f"""
+    toks AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ),
     win AS (
       SELECT doc_id, i AS pos,
              md5(array_to_string(t[i + 1 : i + {_SUBSTR_W}], ' ')) AS fp
       FROM toks, UNNEST(range(0, len(t) - {_SUBSTR_W} + 1)) AS u(i)
-    ),
+    )"""
+
+_SUBSTR_SPANS_SQL = f"""
+    WITH {_SUBSTR_WIN_CTES},
     rep AS (
       SELECT doc_id, pos, fp,
              COUNT(*) OVER (PARTITION BY fp) AS c
@@ -314,6 +318,33 @@ _SUBSTR_SPANS_SQL = f"""
            MIN(fp) AS span_key
     FROM isl GROUP BY doc_id, g
 """
+
+
+def _substr_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, t): each document's token array, repartitioned by
+    doc_id to the cluster's parallelism (see dedup_substring_spans)."""
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    )
+    return docs.select("doc_id", F.split("text", " ").alias("t"))
+
+
+def _substr_windows(toked: DataFrame) -> DataFrame:
+    """(doc_id, pos, fp): the md5 fingerprint of every
+    ``_SUBSTR_W``-token window of every document long enough to have one."""
+    return toked.filter(F.size("t") >= _SUBSTR_W).select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.size("t") - _SUBSTR_W),
+                lambda i: F.md5(
+                    F.concat_ws(" ", F.slice("t", i + 1, _SUBSTR_W))
+                ),
+            )
+        ).alias("pos", "fp"),
+    )
 
 
 @query("dedup_substring_spans", oracle=_SUBSTR_SPANS_SQL)
@@ -352,26 +383,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-op cost-wise — the point is that the plan's width is set by the
     engine, not by however many files the upstream writer happened to
     emit."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    toked = docs.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= _SUBSTR_W
-    )
-    wins = toked.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - _SUBSTR_W),
-                lambda i: F.md5(
-                    F.concat_ws(" ", F.slice("t", i + 1, _SUBSTR_W))
-                ),
-            )
-        ).alias("pos", "fp"),
-    )
-    rep = wins.withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("fp")))
+    rep = _substr_windows(_substr_tokens(spark, sf_dir)).withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("fp")))
     isl = rep.filter(F.col("c") >= 2).withColumn(
         "g",
         F.col("pos")
@@ -386,14 +398,7 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SUBSTR_CUT_SQL = f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(text, ' ') AS t FROM documents
-    ),
-    win AS (
-      SELECT doc_id, i AS pos,
-             md5(array_to_string(t[i + 1 : i + {_SUBSTR_W}], ' ')) AS fp
-      FROM toks, UNNEST(range(0, len(t) - {_SUBSTR_W} + 1)) AS u(i)
-    ),
+    WITH {_SUBSTR_WIN_CTES},
     rep AS (
       SELECT doc_id, pos, fp,
              COUNT(*) OVER (PARTITION BY fp) AS c,
@@ -459,26 +464,9 @@ def pipeline_substring_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition decouples the md5/rebuild stages' width from the doc
     table's input-split count (see dedup_substring_spans — the
     round-11 slope fix; both hot branches read the same exchange)."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    )
-    toked = docs.select("doc_id", F.split("text", " ").alias("t"))
-    eligible = toked.filter(F.size("t") >= _SUBSTR_W)
-    wins = eligible.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - _SUBSTR_W),
-                lambda i: F.md5(
-                    F.concat_ws(" ", F.slice("t", i + 1, _SUBSTR_W))
-                ),
-            )
-        ).alias("pos", "fp"),
-    )
+    toked = _substr_tokens(spark, sf_dir)
     wfp = Window.partitionBy("fp")
-    rep = wins.select(
+    rep = _substr_windows(toked).select(
         "doc_id",
         "pos",
         F.count(F.lit(1)).over(wfp).alias("c"),

@@ -420,14 +420,22 @@ def scan_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel firehose implements DataSourceStreamReader.partitions()
     instead, same DataSource class, and the sink/agg side here is
     unchanged. (sf_dir is unused — the source IS the data.)"""
+    return _drain_pystream(spark, "synthdocs", "scan_python_stream_sink")
+
+
+def _drain_pystream(spark: SparkSession, fmt: str, sink: str, **options) -> DataFrame:
+    """Drain the synthetic Python stream source ``fmt`` (with any extra
+    reader ``options``) through the per-bucket complete-mode aggregate
+    into the memory sink ``sink``, and return that sink's table."""
     from ..sources.pydatasource import register_synthetic_source
     from ..streaming import stream_state_partitions
 
     register_synthetic_source(spark)
     stream = (
-        spark.readStream.format("synthdocs")
+        spark.readStream.format(fmt)
         .option("rows", _PYSTREAM_ROWS)
         .option("batchrows", _PYSTREAM_BATCH)
+        .options(**options)
         .load()
     )
     agg = stream.groupBy("bucket").agg(
@@ -440,7 +448,7 @@ def scan_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
-            .queryName("scan_python_stream_sink")
+            .queryName(sink)
             .start()
         )
         try:
@@ -448,7 +456,7 @@ def scan_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
         q.awaitTermination()
-    return spark.table("scan_python_stream_sink")
+    return spark.table(sink)
 
 
 @query("scan_python_stream_parallel", oracle=_PYSTREAM_SQL)
@@ -470,36 +478,9 @@ def scan_python_stream_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset log and read(partition) regenerates its slice
     deterministically — idempotence by determinism, the O4
     discipline. (sf_dir is unused — the source IS the data.)"""
-    from ..sources.pydatasource import register_synthetic_source
-    from ..streaming import stream_state_partitions
-
-    register_synthetic_source(spark)
-    stream = (
-        spark.readStream.format("synthdocsfeed")
-        .option("rows", _PYSTREAM_ROWS)
-        .option("batchrows", _PYSTREAM_BATCH)
-        .option("partitions", 4)
-        .load()
+    return _drain_pystream(
+        spark, "synthdocsfeed", "scan_python_stream_parallel_sink", partitions=4
     )
-    agg = stream.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum("row_id").cast("long").alias("id_checksum"),
-        F.min("payload").alias("min_payload"),
-        F.max("payload").alias("max_payload"),
-    )
-    with stream_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("scan_python_stream_parallel_sink")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        q.awaitTermination()
-    return spark.table("scan_python_stream_parallel_sink")
 
 
 # ---------------------------------------------------------------------------

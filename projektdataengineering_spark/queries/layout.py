@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import artifact, artifact_kind, load_table
@@ -66,7 +66,9 @@ def _sql_interleave(xcol: str, ycol: str) -> str:
 # code space. Integer arithmetic only — ((rank-1) * 65536) / n  with
 # BIGINT division — so there is no float in the whole pipeline and
 # the oracle hash can't ulp-flake.
-_ZORDER_SQL = f"""
+# The Z-order oracles' file assignment (CTE `filed`) and the per-file
+# envelope the manifests select from it.
+_ZORDER_FILED_CTES = f"""
     WITH coded AS (
       SELECT event_id, user_id, value,
              ((RANK() OVER (ORDER BY user_id) - 1) * {1 << _BITS}) // COUNT(*) OVER ()
@@ -79,14 +81,55 @@ _ZORDER_SQL = f"""
     ), filed AS (
       SELECT *, NTILE({_N_FILES}) OVER (ORDER BY zvalue, event_id) AS file_id
       FROM curved
-    )
+    )"""
+_ZORDER_ENVELOPE_SQL = """
     SELECT CAST(file_id AS INT) AS file_id,
            COUNT(*) AS n_rows,
            MIN(user_id) AS min_user, MAX(user_id) AS max_user,
            MIN(value) AS min_value, MAX(value) AS max_value,
-           MIN(zvalue) AS z_lo, MAX(zvalue) AS z_hi
+           MIN(zvalue) AS z_lo, MAX(zvalue) AS z_hi"""
+
+_ZORDER_SQL = f"""{_ZORDER_FILED_CTES}{_ZORDER_ENVELOPE_SQL}
     FROM filed GROUP BY file_id
 """
+
+
+def _zorder_filed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events (event_id, user_id, value) with its rank codes, Morton
+    value ``zvalue`` and NTILE ``file_id`` — the DataFrame twin of
+    ``_ZORDER_FILED_CTES``."""
+    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    # `div` = integer division on BIGINT in BOTH Spark SQL and the
+    # oracle's `//` — no float anywhere, so no ulp risk in the codes
+    coded = e.selectExpr(
+        "event_id",
+        "user_id",
+        "value",
+        # CAST the rank to BIGINT before the multiply: Spark's RANK()
+        # is INT and ANSI mode faults (rank-1)*65536 past ~32k rows
+        f"((CAST(RANK() OVER (ORDER BY user_id) AS BIGINT) - 1) * {1 << _BITS})"
+        " div (COUNT(*) OVER ()) AS xcode",
+        f"((CAST(RANK() OVER (ORDER BY value, event_id) AS BIGINT) - 1) * {1 << _BITS})"
+        " div (COUNT(*) OVER ()) AS ycode",
+    )
+    curved = coded.withColumn("zvalue", _spark_interleave("xcode", "ycode"))
+    return curved.withColumn(
+        "file_id", F.ntile(_N_FILES).over(Window.orderBy("zvalue", "event_id"))
+    )
+
+
+def _zorder_envelope() -> list:
+    """Per-file row count and (user_id, value, zvalue) envelope: the
+    aggregates of ``_ZORDER_ENVELOPE_SQL``."""
+    return [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.min("user_id").alias("min_user"),
+        F.max("user_id").alias("max_user"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+        F.min("zvalue").alias("z_lo"),
+        F.max("zvalue").alias("z_hi"),
+    ]
 
 
 @query("pipeline_zorder_layout", oracle=_ZORDER_SQL)
@@ -105,33 +148,9 @@ def pipeline_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed once per rewrite; both keep the plan at O(n log n) with
     NO driver materialization. The envelope report is what the file
     catalog stores for pruning."""
-    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    # `div` = integer division on BIGINT in BOTH Spark SQL and the
-    # oracle's `//` — no float anywhere, so no ulp risk in the codes
-    coded = e.selectExpr(
-        "event_id",
-        "user_id",
-        "value",
-        # CAST the rank to BIGINT before the multiply: Spark's RANK()
-        # is INT and ANSI mode faults (rank-1)*65536 past ~32k rows
-        f"((CAST(RANK() OVER (ORDER BY user_id) AS BIGINT) - 1) * {1 << _BITS})"
-        " div (COUNT(*) OVER ()) AS xcode",
-        f"((CAST(RANK() OVER (ORDER BY value, event_id) AS BIGINT) - 1) * {1 << _BITS})"
-        " div (COUNT(*) OVER ()) AS ycode",
-    )
-    curved = coded.withColumn("zvalue", _spark_interleave("xcode", "ycode"))
-    filed = curved.withColumn(
-        "file_id", F.ntile(_N_FILES).over(Window.orderBy("zvalue", "event_id"))
-    )
-    return filed.groupBy(F.col("file_id").cast("int").alias("file_id")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("user_id").alias("min_user"),
-        F.max("user_id").alias("max_user"),
-        F.min("value").alias("min_value"),
-        F.max("value").alias("max_value"),
-        F.min("zvalue").alias("z_lo"),
-        F.max("zvalue").alias("z_hi"),
-    )
+    return _zorder_filed(spark, sf_dir).groupBy(
+        F.col("file_id").cast("int").alias("file_id")
+    ).agg(*_zorder_envelope())
 
 
 # ---------------------------------------------------------------------------
@@ -447,25 +466,7 @@ def pipeline_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # plans, written to disk for real and certified from the files
 # ---------------------------------------------------------------------------
 
-_ZORDER_APPLY_SQL = f"""
-    WITH coded AS (
-      SELECT event_id, user_id, value,
-             ((RANK() OVER (ORDER BY user_id) - 1) * {1 << _BITS}) // COUNT(*) OVER ()
-               AS xcode,
-             ((RANK() OVER (ORDER BY value, event_id) - 1) * {1 << _BITS}) // COUNT(*) OVER ()
-               AS ycode
-      FROM events
-    ), curved AS (
-      SELECT *, {_sql_interleave("xcode", "ycode")} AS zvalue FROM coded
-    ), filed AS (
-      SELECT *, NTILE({_N_FILES}) OVER (ORDER BY zvalue, event_id) AS file_id
-      FROM curved
-    )
-    SELECT CAST(file_id AS INT) AS file_id,
-           COUNT(*) AS n_rows,
-           MIN(user_id) AS min_user, MAX(user_id) AS max_user,
-           MIN(value) AS min_value, MAX(value) AS max_value,
-           MIN(zvalue) AS z_lo, MAX(zvalue) AS z_hi,
+_ZORDER_APPLY_SQL = f"""{_ZORDER_FILED_CTES}{_ZORDER_ENVELOPE_SQL},
            CAST(1 AS BIGINT) AS n_files
     FROM filed GROUP BY file_id
 """
@@ -480,20 +481,9 @@ def _zorder_table(spark: SparkSession, sf_dir: str) -> str:
     repartitioned on it, so each planned file is exactly one file."""
 
     def write(p: str) -> None:
-        e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-        coded = e.selectExpr(
-            "event_id",
-            "user_id",
-            "value",
-            f"((CAST(RANK() OVER (ORDER BY user_id) AS BIGINT) - 1) * {1 << _BITS})"
-            " div (COUNT(*) OVER ()) AS xcode",
-            f"((CAST(RANK() OVER (ORDER BY value, event_id) AS BIGINT) - 1) * {1 << _BITS})"
-            " div (COUNT(*) OVER ()) AS ycode",
+        filed = _zorder_filed(spark, sf_dir).select(
+            "event_id", "user_id", "value", "zvalue", "file_id"
         )
-        curved = coded.withColumn("zvalue", _spark_interleave("xcode", "ycode"))
-        filed = curved.withColumn(
-            "file_id", F.ntile(_N_FILES).over(Window.orderBy("zvalue", "event_id"))
-        ).select("event_id", "user_id", "value", "zvalue", "file_id")
         filed.repartition("file_id").sortWithinPartitions(
             "zvalue", "event_id"
         ).write.partitionBy("file_id").parquet(p)
@@ -530,13 +520,7 @@ def pipeline_zorder_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_manifest(out: str) -> None:
         d = spark.read.parquet(_zorder_table(spark, sf_dir))
         d.groupBy(F.col("file_id").cast("int").alias("file_id")).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("user_id").alias("min_user"),
-            F.max("user_id").alias("max_user"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.min("zvalue").alias("z_lo"),
-            F.max("zvalue").alias("z_hi"),
+            *_zorder_envelope(),
             F.countDistinct(F.col("_metadata.file_path")).cast("long").alias("n_files"),
         ).coalesce(1).write.parquet(out)
 
@@ -548,20 +532,7 @@ def pipeline_zorder_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline_file_skipping — zone-map pruning over the installed z-order table
 # ---------------------------------------------------------------------------
 
-_SKIP_SQL = f"""
-    WITH coded AS (
-      SELECT event_id, user_id, value,
-             ((RANK() OVER (ORDER BY user_id) - 1) * {1 << _BITS}) // COUNT(*) OVER ()
-               AS xcode,
-             ((RANK() OVER (ORDER BY value, event_id) - 1) * {1 << _BITS}) // COUNT(*) OVER ()
-               AS ycode
-      FROM events
-    ), curved AS (
-      SELECT *, {_sql_interleave("xcode", "ycode")} AS zvalue FROM coded
-    ), filed AS (
-      SELECT *, NTILE({_N_FILES}) OVER (ORDER BY zvalue, event_id) AS file_id
-      FROM curved
-    ), bounds AS (
+_SKIP_SQL = f"""{_ZORDER_FILED_CTES}, bounds AS (
       SELECT MIN(user_id) AS u_min,
              MIN(user_id) + (MAX(user_id) - MIN(user_id)) // 4 AS u_hi,
              MIN(value) AS v_min,
@@ -726,6 +697,29 @@ _MERGE_DELTA_DAYS = 1
 _MERGE_BUCKETS = 8
 
 
+def _ranked_events_sql(where: str) -> str:
+    """The events rows matching ``where`` with their cents and their
+    recency rank per user (rn = 1 is the last event)."""
+    return f"""
+      SELECT user_id, event_type, ts,
+             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
+             ROW_NUMBER() OVER (PARTITION BY user_id
+                                ORDER BY ts DESC, event_id DESC) AS rn
+      FROM events WHERE {where}
+    """
+
+
+def _changelog_sql(ranked: str) -> str:
+    """Per-key changelog summary of the ranked CTE ``ranked``."""
+    return f"""
+      SELECT user_id,
+             CAST(COUNT(*) AS BIGINT) AS d_events,
+             CAST(COALESCE(SUM(cents), 0) AS BIGINT) AS d_cents,
+             MAX(CASE WHEN rn = 1 THEN event_type END) AS new_type
+      FROM {ranked} GROUP BY user_id
+    """
+
+
 def _merge_cte() -> str:
     """The shared base/changelog CTE chain (b0 → base → c0 → chg),
     composed verbatim by _merge_sql (the merge audit) and the
@@ -733,33 +727,16 @@ def _merge_cte() -> str:
     table versions' semantics."""
     from . import HWM_LITERAL
 
-    return f"""b0 AS (
-      SELECT user_id, event_type, ts,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events WHERE ts <= TIMESTAMP '{HWM_LITERAL}'
-    ), base AS (
+    return f"""b0 AS ({_ranked_events_sql(f"ts <= TIMESTAMP '{HWM_LITERAL}'")}), base AS (
       SELECT user_id,
              CAST(COUNT(*) AS BIGINT) AS n_events,
              CAST(COALESCE(SUM(cents), 0) AS BIGINT) AS cents
       FROM b0 GROUP BY user_id
       HAVING MAX(CASE WHEN rn = 1 THEN event_type END) <> 'error'
-    ), c0 AS (
-      SELECT user_id, event_type, ts,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-      WHERE ts > TIMESTAMP '{HWM_LITERAL}'
-        AND ts <= TIMESTAMP '{HWM_LITERAL}' + INTERVAL {_MERGE_DELTA_DAYS} DAY
-    ), chg AS (
-      SELECT user_id,
-             CAST(COUNT(*) AS BIGINT) AS d_events,
-             CAST(COALESCE(SUM(cents), 0) AS BIGINT) AS d_cents,
-             MAX(CASE WHEN rn = 1 THEN event_type END) AS new_type
-      FROM c0 GROUP BY user_id
-    )"""
+    ), c0 AS ({_ranked_events_sql(
+        f"ts > TIMESTAMP '{HWM_LITERAL}'"
+        f" AND ts <= TIMESTAMP '{HWM_LITERAL}' + INTERVAL {_MERGE_DELTA_DAYS} DAY"
+    )}), chg AS ({_changelog_sql("c0")})"""
 
 
 def _merge_sql() -> str:
@@ -806,8 +783,9 @@ artifact_kind(
 
 
 def _merge_state_frames(spark: SparkSession, sf_dir: str):
-    """(base, chg): the keyed target-table state as of the HWM and the
-    per-key changelog summary of the (HWM, HWM+delta] slice."""
+    """(base, chg, chg2): the keyed target-table state as of the HWM and
+    the per-key changelog summaries of the two generations' slices,
+    (HWM, HWM+delta] and (HWM+delta, HWM+2·delta]."""
     from . import HWM_LITERAL
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -816,31 +794,92 @@ def _merge_state_frames(spark: SparkSession, sf_dir: str):
     key = F.struct(F.col("ts"), F.col("event_id"))
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     hwm = F.lit(HWM_LITERAL).cast("timestamp")
-    base = (
-        ev.filter(F.col("ts") <= hwm)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.coalesce(F.sum(cents), F.lit(0)).cast("long").alias("cents"),
-            F.max_by("event_type", key).alias("last_type"),
+    lo = hwm + F.expr(f"INTERVAL {_MERGE_DELTA_DAYS} DAYS")
+    hi = hwm + F.expr(f"INTERVAL {2 * _MERGE_DELTA_DAYS} DAYS")
+
+    def rollup(where: Column, n="d_events", c="d_cents", last="new_type") -> DataFrame:
+        return ev.filter(where).groupBy("user_id").agg(
+            F.count(F.lit(1)).cast("long").alias(n),
+            F.coalesce(F.sum(cents), F.lit(0)).cast("long").alias(c),
+            F.max_by("event_type", key).alias(last),
         )
+
+    base = (
+        rollup(F.col("ts") <= hwm, "n_events", "cents", "last_type")
         .filter(F.col("last_type") != "error")
         .drop("last_type")
         .withColumn("bucket", (F.col("user_id") % _MERGE_BUCKETS).cast("long"))
     )
-    chg = (
-        ev.filter(
-            (F.col("ts") > hwm)
-            & (F.col("ts") <= hwm + F.expr(f"INTERVAL {_MERGE_DELTA_DAYS} DAYS"))
-        )
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("d_events"),
-            F.coalesce(F.sum(cents), F.lit(0)).cast("long").alias("d_cents"),
-            F.max_by("event_type", key).alias("new_type"),
+    chg = rollup((F.col("ts") > hwm) & (F.col("ts") <= lo))
+    # generation 2 is a PARTIAL rollout: its feed covers two of the
+    # four key shards (the region-by-region migration shape), so
+    # untouched buckets exist at every SF and the copied files
+    # genuinely carry the pre-column schema
+    chg2 = rollup((F.col("ts") > lo) & (F.col("ts") <= hi) & (F.col("user_id") % 4 < 2))
+    return base, chg, chg2
+
+
+def _cow_merge(spark: SparkSession, tgt_path: str, chg: DataFrame, out: str, *extra: Column) -> None:
+    """Write the table at ``tgt_path`` MERGEd with the changelog ``chg``
+    to ``out``, copy-on-write: the target is read FROM DISK (the
+    installed table version, not a recomputation), only the buckets the
+    changelog touches are rewritten (with the ``extra`` columns after
+    cents), and every untouched bucket's files are copied over, so they
+    keep the target's schema."""
+    import os
+    import shutil
+
+    tgt = spark.read.parquet(tgt_path).select("user_id", "n_events", "cents")
+    j = tgt.alias("b").join(chg.alias("c"), "user_id", "full_outer")
+    is_del = F.col("c.new_type") == "error"
+    matched = F.col("b.n_events").isNotNull()
+    has_chg = F.col("c.d_events").isNotNull()
+    merged = (
+        j.filter(~has_chg | (matched & ~is_del) | (~matched & ~is_del))
+        .select(
+            "user_id",
+            (
+                F.coalesce(F.col("b.n_events"), F.lit(0))
+                + F.coalesce(F.col("c.d_events"), F.lit(0))
+            ).cast("long").alias("n_events"),
+            (
+                F.coalesce(F.col("b.cents"), F.lit(0))
+                + F.coalesce(F.col("c.d_cents"), F.lit(0))
+            ).cast("long").alias("cents"),
+            *extra,
+            (F.col("user_id") % _MERGE_BUCKETS).cast("long").alias("bucket"),
         )
     )
-    return base, chg
+    # buckets the changelog actually touches (tombstone-only churn
+    # on absent keys touches nothing); ≤ _MERGE_BUCKETS rows — the
+    # bounded scalar-collect pattern
+    touched = sorted(
+        r["bucket"]
+        for r in chg.alias("c")
+        .join(tgt.select("user_id").alias("b"), "user_id", "left")
+        .filter((F.col("c.new_type") != "error") | F.col("b.user_id").isNotNull())
+        .select(
+            (F.col("user_id") % _MERGE_BUCKETS).cast("long").alias("bucket")
+        )
+        .distinct()
+        .collect()
+    )
+
+    if touched:
+        (
+            merged.filter(F.col("bucket").isin(touched))
+            .repartition("bucket")
+            .write.partitionBy("bucket")
+            .parquet(out)
+        )
+    else:
+        os.makedirs(out, exist_ok=True)
+    for name in os.listdir(tgt_path):
+        if not name.startswith("bucket="):
+            continue
+        b = int(name.split("=", 1)[1])
+        if b not in touched:
+            shutil.copytree(os.path.join(tgt_path, name), os.path.join(out, name))
 
 
 def _file_names_by_bucket(df: DataFrame) -> DataFrame:
@@ -861,74 +900,16 @@ def _merge_versions(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Read-or-build the executed MERGE's two table versions: v0 (the
     keyed target as of the HWM) and v1 (v0 MERGEd with the delta slice,
     copy-on-write: untouched buckets carry over as the same files)."""
-    import os
-    import shutil
 
     def write_base(p: str) -> None:
-        base, _ = _merge_state_frames(spark, sf_dir)
+        base, _, _ = _merge_state_frames(spark, sf_dir)
         base.repartition("bucket").write.partitionBy("bucket").parquet(p)
 
     base_path = artifact("merge", sf_dir, write_base, part="base")
 
     def write_merged_version(out: str) -> None:
-        _, chg = _merge_state_frames(spark, sf_dir)
-        # MERGE source ⋈ target: the target is read FROM DISK — the
-        # installed table version, not a recomputation
-        tgt = spark.read.parquet(base_path).select(
-            "user_id", "n_events", "cents"
-        )
-        j = tgt.alias("b").join(chg.alias("c"), "user_id", "full_outer")
-        is_del = F.col("c.new_type") == "error"
-        matched = F.col("b.n_events").isNotNull()
-        has_chg = F.col("c.d_events").isNotNull()
-        merged = (
-            j.filter(~has_chg | (matched & ~is_del) | (~matched & ~is_del))
-            .select(
-                "user_id",
-                (
-                    F.coalesce(F.col("b.n_events"), F.lit(0))
-                    + F.coalesce(F.col("c.d_events"), F.lit(0))
-                ).cast("long").alias("n_events"),
-                (
-                    F.coalesce(F.col("b.cents"), F.lit(0))
-                    + F.coalesce(F.col("c.d_cents"), F.lit(0))
-                ).cast("long").alias("cents"),
-                (F.col("user_id") % _MERGE_BUCKETS).cast("long").alias("bucket"),
-            )
-        )
-        # buckets the changelog actually touches (tombstone-only churn
-        # on absent keys touches nothing); ≤ _MERGE_BUCKETS rows — the
-        # bounded scalar-collect pattern
-        touched = sorted(
-            r["bucket"]
-            for r in chg.alias("c")
-            .join(tgt.select("user_id").alias("b"), "user_id", "left")
-            .filter((F.col("c.new_type") != "error") | F.col("b.user_id").isNotNull())
-            .select(
-                (F.col("user_id") % _MERGE_BUCKETS).cast("long").alias("bucket")
-            )
-            .distinct()
-            .collect()
-        )
-
-        if touched:
-            (
-                merged.filter(F.col("bucket").isin(touched))
-                .repartition("bucket")
-                .write.partitionBy("bucket")
-                .parquet(out)
-            )
-        else:
-            os.makedirs(out, exist_ok=True)
-        # copy-on-write: untouched buckets carry over as files
-        for name in os.listdir(base_path):
-            if not name.startswith("bucket="):
-                continue
-            b = int(name.split("=", 1)[1])
-            if b not in touched:
-                shutil.copytree(
-                    os.path.join(base_path, name), os.path.join(out, name)
-                )
+        _, chg, _ = _merge_state_frames(spark, sf_dir)
+        _cow_merge(spark, base_path, chg, out)
 
     merged_path = artifact(
         "merge", sf_dir, write_merged_version, part="merged", inputs=(base_path,)
@@ -1038,26 +1019,59 @@ def pipeline_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over the executed-merge table versions
 # ---------------------------------------------------------------------------
 
-_TIMETRAVEL_SQL = f"""
-    WITH {{cte}}, merged AS (
+# v1 rows: v0 (base) MERGEd with the first changelog (chg).
+_MERGED_CTE = """merged AS (
       SELECT COALESCE(b.user_id, c.user_id) AS user_id,
              COALESCE(b.n_events, 0) + COALESCE(c.d_events, 0) AS n_events,
              COALESCE(b.cents, 0) + COALESCE(c.d_cents, 0) AS cents
       FROM base b FULL JOIN chg c USING (user_id)
       WHERE c.user_id IS NULL OR c.new_type <> 'error'
-    ), versions AS (
-      SELECT 0 AS version, user_id, n_events, cents FROM base
-      UNION ALL
-      SELECT 1 AS version, user_id, n_events, cents FROM merged
-    )
+    )"""
+
+# The per-(version, bucket) snapshot rollup of the CTE `versions`.
+_ROLLUP_SQL = f"""
     SELECT CAST(version AS BIGINT) AS version,
            CAST(user_id % {_MERGE_BUCKETS} AS BIGINT) AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_keys,
            CAST(SUM(n_events) AS BIGINT) AS sum_events,
-           CAST(SUM(cents) AS BIGINT) AS sum_cents
+           CAST(SUM(cents) AS BIGINT) AS sum_cents"""
+
+_TIMETRAVEL_SQL = f"""
+    WITH {{cte}}, {_MERGED_CTE}, versions AS (
+      SELECT 0 AS version, user_id, n_events, cents FROM base
+      UNION ALL
+      SELECT 1 AS version, user_id, n_events, cents FROM merged
+    ){_ROLLUP_SQL}
     FROM versions
     GROUP BY 1, 2
 """
+
+
+def _snapshot(version: int, df: DataFrame, *extra: Column) -> DataFrame:
+    """The per-bucket snapshot rollup of one table version read as
+    ``df``: version, bucket, n_keys, sum_events, sum_cents, then the
+    ``extra`` aggregates."""
+    return (
+        df.groupBy(F.col("bucket").cast("long").alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_keys"),
+            F.sum("n_events").cast("long").alias("sum_events"),
+            F.sum("cents").cast("long").alias("sum_cents"),
+            *extra,
+        )
+        .select(F.lit(version).cast("long").alias("version"), "*")
+    )
+
+
+def _evolved_snapshot(version: int, df: DataFrame) -> DataFrame:
+    """``_snapshot`` plus sum_d2_events. A version read without the
+    d2_events column predates it and sums the declared default 0; one
+    read with it backfills the rows of its copied pre-column files."""
+    if "d2_events" in df.columns:
+        d2 = F.coalesce(F.col("d2_events"), F.lit(0))
+    else:
+        d2 = F.lit(0)
+    return _snapshot(version, df, F.sum(d2).cast("long").alias("sum_d2_events"))
 
 
 @query(
@@ -1092,25 +1106,9 @@ def pipeline_merge_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     age out by retention policy — the read path is unchanged."""
     base_path, merged_path = _merge_versions(spark, sf_dir)
 
-    def snapshot(version: int, path: str) -> DataFrame:
-        return (
-            spark.read.parquet(path)
-            .groupBy(F.col("bucket").cast("long").alias("bucket"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_keys"),
-                F.sum("n_events").cast("long").alias("sum_events"),
-                F.sum("cents").cast("long").alias("sum_cents"),
-            )
-            .select(
-                F.lit(version).cast("long").alias("version"),
-                "bucket",
-                "n_keys",
-                "sum_events",
-                "sum_cents",
-            )
-        )
-
-    return snapshot(0, base_path).unionByName(snapshot(1, merged_path))
+    return _snapshot(0, spark.read.parquet(base_path)).unionByName(
+        _snapshot(1, spark.read.parquet(merged_path))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1119,29 +1117,16 @@ def pipeline_merge_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the old schema; version-pinned reads backfill
 # ---------------------------------------------------------------------------
 
-_EVOLVE_SQL = f"""
-    WITH {{cte}}, merged AS (
-      SELECT COALESCE(b.user_id, c.user_id) AS user_id,
-             COALESCE(b.n_events, 0) + COALESCE(c.d_events, 0) AS n_events,
-             COALESCE(b.cents, 0) + COALESCE(c.d_cents, 0) AS cents
-      FROM base b FULL JOIN chg c USING (user_id)
-      WHERE c.user_id IS NULL OR c.new_type <> 'error'
-    ), c20 AS (
-      SELECT user_id, event_type, ts,
-             CAST(FLOOR(value * 100 + 0.5) AS BIGINT) AS cents,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-      WHERE ts > TIMESTAMP '{{hwm}}' + INTERVAL {_MERGE_DELTA_DAYS} DAY
-        AND ts <= TIMESTAMP '{{hwm}}' + INTERVAL {2 * _MERGE_DELTA_DAYS} DAY
-        AND user_id % 4 < 2
-    ), chg2 AS (
-      SELECT user_id,
-             CAST(COUNT(*) AS BIGINT) AS d_events,
-             CAST(COALESCE(SUM(cents), 0) AS BIGINT) AS d_cents,
-             MAX(CASE WHEN rn = 1 THEN event_type END) AS new_type
-      FROM c20 GROUP BY user_id
-    ), merged2 AS (
+def _evolve_oracle() -> str:
+    from . import HWM_LITERAL
+
+    hwm = f"TIMESTAMP '{HWM_LITERAL}'"
+    return f"""
+    WITH {_merge_cte()}, {_MERGED_CTE}, c20 AS ({_ranked_events_sql(
+        f"ts > {hwm} + INTERVAL {_MERGE_DELTA_DAYS} DAY"
+        f" AND ts <= {hwm} + INTERVAL {2 * _MERGE_DELTA_DAYS} DAY"
+        " AND user_id % 4 < 2"
+    )}), chg2 AS ({_changelog_sql("c20")}), merged2 AS (
       SELECT COALESCE(m.user_id, c.user_id) AS user_id,
              COALESCE(m.n_events, 0) + COALESCE(c.d_events, 0) AS n_events,
              COALESCE(m.cents, 0) + COALESCE(c.d_cents, 0) AS cents,
@@ -1155,119 +1140,27 @@ _EVOLVE_SQL = f"""
       SELECT 1 AS version, user_id, n_events, cents, 0 FROM merged
       UNION ALL
       SELECT 2 AS version, user_id, n_events, cents, d2_events FROM merged2
-    )
-    SELECT CAST(version AS BIGINT) AS version,
-           CAST(user_id % {_MERGE_BUCKETS} AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_keys,
-           CAST(SUM(n_events) AS BIGINT) AS sum_events,
-           CAST(SUM(cents) AS BIGINT) AS sum_cents,
+    ){_ROLLUP_SQL},
            CAST(SUM(d2) AS BIGINT) AS sum_d2_events
     FROM versions
     GROUP BY 1, 2
 """
 
 
-def _evolve_oracle() -> str:
-    from . import HWM_LITERAL
-
-    return _EVOLVE_SQL.format(cte=_merge_cte(), hwm=HWM_LITERAL)
-
-
 def _merge_generations(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Read-or-build all three executed-merge generations: v0 and v1
     (_merge_versions) plus v2, v1 MERGEd with the second changelog
     window, which adds the d2_events column to the buckets it rewrites
-    and copies the rest from v1 as files."""
-    import os
-    import shutil
-
-    from . import HWM_LITERAL
-
+    and copies the rest from v1 as files (keeping the OLD schema — that
+    is what makes this table "evolved")."""
     base_path, merged_path = _merge_versions(spark, sf_dir)
 
     def write_evolved_version(out: str) -> None:
-        ev = load_table(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "ts", "value"
-        )
-        key = F.struct(F.col("ts"), F.col("event_id"))
-        cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-        hwm = F.lit(HWM_LITERAL).cast("timestamp")
-        lo = hwm + F.expr(f"INTERVAL {_MERGE_DELTA_DAYS} DAYS")
-        hi = hwm + F.expr(f"INTERVAL {2 * _MERGE_DELTA_DAYS} DAYS")
-        chg2 = (
-            # generation 2 is a PARTIAL rollout: its feed covers two of
-            # the four key shards (the region-by-region migration
-            # shape), so untouched buckets exist at every SF and the
-            # copied files genuinely carry the pre-column schema
-            ev.filter(
-                (F.col("ts") > lo)
-                & (F.col("ts") <= hi)
-                & (F.col("user_id") % 4 < 2)
-            )
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("d_events"),
-                F.coalesce(F.sum(cents), F.lit(0)).cast("long").alias("d_cents"),
-                F.max_by("event_type", key).alias("new_type"),
-            )
-        )
-        tgt = spark.read.parquet(merged_path).select(
-            "user_id", "n_events", "cents"
-        )
-        j = tgt.alias("b").join(chg2.alias("c"), "user_id", "full_outer")
-        is_del = F.col("c.new_type") == "error"
-        matched = F.col("b.n_events").isNotNull()
-        has_chg = F.col("c.d_events").isNotNull()
-        merged2 = (
-            j.filter(~has_chg | (matched & ~is_del) | (~matched & ~is_del))
-            .select(
-                "user_id",
-                (
-                    F.coalesce(F.col("b.n_events"), F.lit(0))
-                    + F.coalesce(F.col("c.d_events"), F.lit(0))
-                ).cast("long").alias("n_events"),
-                (
-                    F.coalesce(F.col("b.cents"), F.lit(0))
-                    + F.coalesce(F.col("c.d_cents"), F.lit(0))
-                ).cast("long").alias("cents"),
-                # THE evolved column: generation-2 provenance, written
-                # only by this generation's rewrite
-                F.coalesce(F.col("c.d_events"), F.lit(0))
-                .cast("long").alias("d2_events"),
-                (F.col("user_id") % _MERGE_BUCKETS).cast("long").alias("bucket"),
-            )
-        )
-        touched = sorted(
-            r["bucket"]
-            for r in chg2.alias("c")
-            .join(tgt.select("user_id").alias("b"), "user_id", "left")
-            .filter((F.col("c.new_type") != "error") | F.col("b.user_id").isNotNull())
-            .select(
-                (F.col("user_id") % _MERGE_BUCKETS).cast("long").alias("bucket")
-            )
-            .distinct()
-            .collect()
-        )
-
-        if touched:
-            (
-                merged2.filter(F.col("bucket").isin(touched))
-                .repartition("bucket")
-                .write.partitionBy("bucket")
-                .parquet(out)
-            )
-        else:
-            os.makedirs(out, exist_ok=True)
-        # copy-on-write from v1: untouched buckets keep the OLD
-        # schema — that is what makes this table "evolved"
-        for name in os.listdir(merged_path):
-            if not name.startswith("bucket="):
-                continue
-            b = int(name.split("=", 1)[1])
-            if b not in touched:
-                shutil.copytree(
-                    os.path.join(merged_path, name), os.path.join(out, name)
-                )
+        _, _, chg2 = _merge_state_frames(spark, sf_dir)
+        # THE evolved column: generation-2 provenance, written only by
+        # this generation's rewrite
+        d2 = F.coalesce(F.col("c.d_events"), F.lit(0)).cast("long").alias("d2_events")
+        _cow_merge(spark, merged_path, chg2, out, d2)
 
     merged2_path = artifact(
         "merge", sf_dir, write_evolved_version, part="merged2",
@@ -1312,32 +1205,11 @@ def pipeline_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables stay cheap at 100 TB."""
     base_path, merged_path, merged2_path = _merge_generations(spark, sf_dir)
 
-    def snapshot(version: int, path: str, evolved: bool) -> DataFrame:
-        if evolved:
-            df = spark.read.option("mergeSchema", "true").parquet(path)
-            d2 = F.coalesce(F.col("d2_events"), F.lit(0))  # backfill
-        else:
-            df = spark.read.parquet(path)  # its own (pre-column) schema
-            d2 = F.lit(0)
-        return (
-            df.groupBy(F.col("bucket").cast("long").alias("bucket"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_keys"),
-                F.sum("n_events").cast("long").alias("sum_events"),
-                F.sum("cents").cast("long").alias("sum_cents"),
-                F.sum(d2).cast("long").alias("sum_d2_events"),
-            )
-            .select(
-                F.lit(version).cast("long").alias("version"),
-                "bucket", "n_keys", "sum_events", "sum_cents",
-                "sum_d2_events",
-            )
-        )
-
+    read = spark.read.option("mergeSchema", "true").parquet
     return (
-        snapshot(0, base_path, evolved=False)
-        .unionByName(snapshot(1, merged_path, evolved=False))
-        .unionByName(snapshot(2, merged2_path, evolved=True))
+        _evolved_snapshot(0, read(base_path))
+        .unionByName(_evolved_snapshot(1, read(merged_path)))
+        .unionByName(_evolved_snapshot(2, read(merged2_path)))
     )
 
 
@@ -1516,29 +1388,10 @@ def pipeline_merge_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     _vacuum_expired_versions(root)  # executed GC; no-op on replay
     pool = os.path.join(root, "files")
 
-    def snapshot(version: int, evolved: bool) -> DataFrame:
+    def snapshot(version: int) -> DataFrame:
         with open(_vtable_manifest(root, version)) as fh:
             paths = [os.path.join(pool, rel) for rel in json.load(fh)]
-        reader = spark.read.option("basePath", pool)
-        if evolved:
-            df = reader.option("mergeSchema", "true").parquet(*paths)
-            d2 = F.coalesce(F.col("d2_events"), F.lit(0))  # backfill
-        else:
-            df = reader.parquet(*paths)  # its own (pre-column) schema
-            d2 = F.lit(0)
-        return (
-            df.groupBy(F.col("bucket").cast("long").alias("bucket"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_keys"),
-                F.sum("n_events").cast("long").alias("sum_events"),
-                F.sum("cents").cast("long").alias("sum_cents"),
-                F.sum(d2).cast("long").alias("sum_d2_events"),
-            )
-            .select(
-                F.lit(version).cast("long").alias("version"),
-                "bucket", "n_keys", "sum_events", "sum_cents",
-                "sum_d2_events",
-            )
-        )
+        df = spark.read.option("basePath", pool).option("mergeSchema", "true").parquet(*paths)
+        return _evolved_snapshot(version, df)
 
-    return snapshot(1, evolved=False).unionByName(snapshot(2, evolved=True))
+    return snapshot(1).unionByName(snapshot(2))

@@ -26,7 +26,7 @@ so the driver's 50-entry correctness window verifies the whole module.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import artifact, artifact_kind, load_table
@@ -333,18 +333,38 @@ def pipeline_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "pipeline_token_budget",
-    oracle="""
-    SELECT doc_id, source, n_toks, cum_toks
-    FROM (
+# Each document's token count and its source's running token count
+# in doc_id order (the SQL of ``_source_token_runs``).
+_SOURCE_TOKENS_SQL = """
       SELECT doc_id, source,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
              CAST(SUM(len(string_split(text, ' ')))
                   OVER (PARTITION BY source ORDER BY doc_id
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                   AS BIGINT) AS cum_toks
-      FROM documents
+      FROM documents"""
+
+
+def _source_token_runs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """(doc_id, source, n_toks) per document, and the running sum of
+    n_toks per source in doc_id order."""
+    docs = load_table(spark, sf_dir, "documents")
+    toked = docs.select(
+        "doc_id", "source", F.size(F.split("text", " ")).cast("bigint").alias("n_toks")
+    )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return toked, F.sum("n_toks").over(w)
+
+
+@query(
+    "pipeline_token_budget",
+    oracle=f"""
+    SELECT doc_id, source, n_toks, cum_toks
+    FROM ({_SOURCE_TOKENS_SQL}
     ) t
     WHERE cum_toks <= 5000
     """,
@@ -355,17 +375,9 @@ def pipeline_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     5000 — the greedy budget cut every mixture recipe applies per
     source. One shuffle on source; the running sum and the admit filter
     share the sort."""
-    docs = load_table(spark, sf_dir, "documents")
-    toked = docs.select(
-        "doc_id", "source", F.size(F.split("text", " ")).cast("bigint").alias("n_toks")
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    toked, running = _source_token_runs(spark, sf_dir)
     return (
-        toked.withColumn("cum_toks", F.sum("n_toks").over(w).cast("bigint"))
+        toked.withColumn("cum_toks", running.cast("bigint"))
         .filter(F.col("cum_toks") <= 5000)
     )
 
@@ -1103,15 +1115,8 @@ def pipeline_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_sequence_pack",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, source,
-             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks,
-             CAST(SUM(len(string_split(text, ' ')))
-                  OVER (PARTITION BY source ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS BIGINT) AS cum_toks
-      FROM documents
+    oracle=f"""
+    WITH t AS ({_SOURCE_TOKENS_SQL}
     )
     SELECT doc_id, source, n_toks,
            (cum_toks - n_toks) // 2048 AS pack_id,
@@ -1128,16 +1133,8 @@ def pipeline_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing). One running-sum window per source (same single-exchange
     shape as pipeline_token_budget), then pure integer math; floor-div
     and mod on exact BIGINT token counts are engine-portable."""
-    docs = load_table(spark, sf_dir, "documents")
-    toked = docs.select(
-        "doc_id", "source", F.size(F.split("text", " ")).cast("bigint").alias("n_toks")
-    )
-    w = (
-        Window.partitionBy("source")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    start = F.sum("n_toks").over(w) - F.col("n_toks")
+    toked, running = _source_token_runs(spark, sf_dir)
+    start = running - F.col("n_toks")
     return toked.select(
         "doc_id",
         "source",
@@ -1876,10 +1873,8 @@ def _kanon_assigned(docs: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "pipeline_kanon_generalize",
-    oracle=f"""
-    WITH d AS (
+# The k-anonymity oracles' ladder: each document's level and band label.
+_KANON_CTES = f"""d AS (
       SELECT doc_id, lang, source,
              (n_chars // 100) * 100 AS b100,
              (n_chars // 1000) * 1000 AS b1000
@@ -1903,7 +1898,13 @@ def _kanon_assigned(docs: DataFrame) -> DataFrame:
                   WHEN c2 >= {_KANON_K} THEN '*'
                   ELSE 'suppressed' END AS band_label
       FROM sized
-    )
+    )"""
+
+
+@query(
+    "pipeline_kanon_generalize",
+    oracle=f"""
+    WITH {_KANON_CTES}
     SELECT CAST(level AS BIGINT) AS level, lang, source, band_label,
            CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM assigned
@@ -1946,31 +1947,6 @@ def pipeline_kanon_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # generalization ladder)
 # ---------------------------------------------------------------------------
 
-_KANON_CTES = f"""d AS (
-      SELECT doc_id, lang, source,
-             (n_chars // 100) * 100 AS b100,
-             (n_chars // 1000) * 1000 AS b1000
-      FROM documents
-    ),
-    sized AS (
-      SELECT doc_id, lang, source, b100, b1000,
-             COUNT(*) OVER (PARTITION BY lang, source, b100) AS c0,
-             COUNT(*) OVER (PARTITION BY lang, source, b1000) AS c1,
-             COUNT(*) OVER (PARTITION BY lang, source) AS c2
-      FROM d
-    ),
-    assigned AS (
-      SELECT lang, source,
-             CASE WHEN c0 >= {_KANON_K} THEN 0
-                  WHEN c1 >= {_KANON_K} THEN 1
-                  WHEN c2 >= {_KANON_K} THEN 2
-                  ELSE 3 END AS level,
-             CASE WHEN c0 >= {_KANON_K} THEN 'c' || b100
-                  WHEN c1 >= {_KANON_K} THEN 'c' || b1000
-                  WHEN c2 >= {_KANON_K} THEN '*'
-                  ELSE 'suppressed' END AS band_label
-      FROM sized
-    )"""
 
 _KANON_APPLY_SQL = f"""
     WITH {_KANON_CTES},
@@ -2854,8 +2830,9 @@ def pipeline_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # through the custom Python streaming source AND sink
 # ---------------------------------------------------------------------------
 
-_STREAM_DELTA_SQL = f"""
-    WITH {_INCR_CTES},
+# The live loop's keepers: batch-split docs that are neither a corpus
+# duplicate nor a later batch duplicate.
+_KEEPERS_CTES = f"""{_INCR_CTES},
     keepers AS (
       SELECT sp.doc_id
       FROM split sp
@@ -2866,7 +2843,10 @@ _STREAM_DELTA_SQL = f"""
       WHERE sp.is_batch
         AND cm.dup_of_corpus IS NULL
         AND (bm.first_in_batch IS NULL OR bm.first_in_batch = sp.doc_id)
-    )
+    )"""
+
+_STREAM_DELTA_SQL = f"""
+    WITH {_KEEPERS_CTES}
     SELECT d.lang, d.source,
            CAST(COUNT(*) AS BIGINT) AS n_admitted,
            CAST(SUM(len(string_split(d.text, ' '))) AS BIGINT) AS tok_sum
@@ -3063,18 +3043,7 @@ def stream_corpus_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _STREAM_APPEND_SQL = f"""
-    WITH {_INCR_CTES},
-    keepers AS (
-      SELECT sp.doc_id
-      FROM split sp
-      LEFT JOIN bsig b ON b.doc_id = sp.doc_id
-      LEFT JOIN cm ON cm.doc_id = sp.doc_id
-      LEFT JOIN bm ON bm.m0 = b.m0 AND bm.m1 = b.m1
-                  AND bm.m2 = b.m2 AND bm.m3 = b.m3
-      WHERE sp.is_batch
-        AND cm.dup_of_corpus IS NULL
-        AND (bm.first_in_batch IS NULL OR bm.first_in_batch = sp.doc_id)
-    ),
+    WITH {_KEEPERS_CTES},
     admitted AS (
       SELECT k.doc_id FROM keepers k JOIN documents d ON d.doc_id = k.doc_id
       WHERE len(d.text) BETWEEN 150 AND 500

@@ -437,21 +437,23 @@ def ann_lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LSH_RECALL_BOUND = 0.10
 _IVF_RECALL_BOUND = 0.15
 
-_EXACT_TOP3_ORACLE = """
-    WITH e AS (
-      SELECT vec_id, embedding,
+def _exact_top3_ctes(src: str, col: str) -> str:
+    """CTEs e → pairs → ranked: every vector of ``src`` (vec_id, ``col``)
+    ranked against all others by exact left-fold cosine, the all-pairs
+    fold of the exact top-3 oracles."""
+    return f"""e AS (
+      SELECT vec_id, {col},
              sqrt(list_reduce(
-               list_transform(embedding,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
+               list_transform({col}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
                (p, q) -> p + q)) AS nrm
-      FROM embeddings
+      FROM {src}
     ),
     pairs AS (
       SELECT a.vec_id AS id_q, b.vec_id AS id_n_exact,
              list_reduce(
-               list_transform(range(1, len(a.embedding) + 1),
-                              i -> CAST(a.embedding[i] AS DOUBLE)
-                                   * CAST(b.embedding[i] AS DOUBLE)),
+               list_transform(range(1, len(a.{col}) + 1),
+                              i -> CAST(a.{col}[i] AS DOUBLE)
+                                   * CAST(b.{col}[i] AS DOUBLE)),
                (p, q) -> p + q) / (a.nrm * b.nrm) AS cos_sim
       FROM e a JOIN e b ON a.vec_id <> b.vec_id
     ),
@@ -460,7 +462,11 @@ _EXACT_TOP3_ORACLE = """
              ROW_NUMBER() OVER (PARTITION BY id_q
                                 ORDER BY cos_sim DESC, id_n_exact) AS rk
       FROM pairs
-    )
+    )"""
+
+
+_EXACT_TOP3_ORACLE = f"""
+    WITH {_exact_top3_ctes("embeddings", "embedding")}
     SELECT id_q, CAST(rk AS BIGINT) AS rk, id_n_exact, TRUE AS recall_ok
     FROM ranked WHERE rk <= 3
 """
@@ -2456,21 +2462,7 @@ def dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the member lists are the partition layout (cell-partitioned
     parquet), so a batch probe prunes to nprobe/K of the corpus by
     partition pruning alone."""
-    batch, matches = _einc_probe_frames(spark, sf_dir)
-    return (
-        batch.select("vec_id")
-        .join(matches, "vec_id", "left")
-        .select(
-            "vec_id",
-            "dup_of_corpus",
-            F.when(F.col("dup_of_corpus").isNull(), F.col("batch_min"))
-            .cast("long")
-            .alias("dup_of_batch"),
-            (
-                F.col("dup_of_corpus").isNull() & F.col("batch_min").isNull()
-            ).alias("keep"),
-        )
-    )
+    return _einc_verdict(*_einc_probe_frames(spark, sf_dir))
 
 
 def _einc_arrival_frame(e: DataFrame) -> DataFrame:
@@ -2482,6 +2474,33 @@ def _einc_arrival_frame(e: DataFrame) -> DataFrame:
     from .dedup import _planted_twins
 
     return e.filter(F.expr(_EINC_SPLIT_SPARK)).unionByName(_planted_twins(e))
+
+
+# Per-version entry count, id sum and id range of the CTE `versions`:
+# the index-append audit oracles' result (``_index_audit`` on disk).
+_ID_AUDIT_SQL = """
+    SELECT CAST(version AS BIGINT) AS version,
+           CAST(COUNT(*) AS BIGINT) AS n_entries,
+           CAST(SUM(vec_id) AS BIGINT) AS id_sum,
+           CAST(MIN(vec_id) AS BIGINT) AS min_id,
+           CAST(MAX(vec_id) AS BIGINT) AS max_id
+    FROM versions GROUP BY 1"""
+
+
+def _index_audit(spark: SparkSession, v1_path: str, v2_path: str) -> DataFrame:
+    """The audit of an index append measured from both on-disk
+    versions: per version, entries, id sum and id range."""
+
+    def audit(version: int, path: str) -> DataFrame:
+        return spark.read.parquet(path).agg(
+            F.lit(version).cast("long").alias("version"),
+            F.count(F.lit(1)).cast("long").alias("n_entries"),
+            F.sum("vec_id").cast("long").alias("id_sum"),
+            F.min("vec_id").cast("long").alias("min_id"),
+            F.max("vec_id").cast("long").alias("max_id"),
+        )
+
+    return audit(1, v1_path).unionByName(audit(2, v2_path))
 
 
 def _ivfpq_append_oracle() -> str:
@@ -2496,13 +2515,7 @@ def _ivfpq_append_oracle() -> str:
       UNION ALL SELECT 2 AS version, vec_id FROM embeddings
       UNION ALL SELECT 2 AS version, vec_id + {_TWIN_OFFSET} AS vec_id
       FROM embeddings WHERE vec_id % {_TWIN_EVERY} = 0
-    )
-    SELECT CAST(version AS BIGINT) AS version,
-           CAST(COUNT(*) AS BIGINT) AS n_entries,
-           CAST(SUM(vec_id) AS BIGINT) AS id_sum,
-           CAST(MIN(vec_id) AS BIGINT) AS min_id,
-           CAST(MAX(vec_id) AS BIGINT) AS max_id
-    FROM versions GROUP BY 1
+    ){_ID_AUDIT_SQL}
     """
 
 
@@ -2563,17 +2576,7 @@ def sim_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1_path = artifact("ivfpq_codes", sf_dir)
     v2_path = artifact("ivfpq_codes", sf_dir, write_v2, gen="v2")
 
-    def audit(version: int, path: str) -> DataFrame:
-        idx = spark.read.parquet(path)
-        return idx.agg(
-            F.lit(version).cast("long").alias("version"),
-            F.count(F.lit(1)).cast("long").alias("n_entries"),
-            F.sum("vec_id").cast("long").alias("id_sum"),
-            F.min("vec_id").cast("long").alias("min_id"),
-            F.max("vec_id").cast("long").alias("max_id"),
-        )
-
-    return audit(1, v1_path).unionByName(audit(2, v2_path))
+    return _index_audit(spark, v1_path, v2_path)
 
 
 def _cell_threshold_matches(tau: float):
@@ -2629,8 +2632,6 @@ def _einc_probe_frames(spark: SparkSession, sf_dir: str):
     first cut computed corpus and batch matches as separate aggregates
     — the plan dump showed the whole Union→shuffle→kernel subtree
     duplicated per branch)."""
-    from .dedup import EMBEDDING_DUP_THRESHOLD
-
     e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
     cents = _ivf_centroids(
         spark, sf_dir, e.localCheckpoint(eager=False)
@@ -2642,10 +2643,23 @@ def _einc_probe_frames(spark: SparkSession, sf_dir: str):
         eager=False
     )  # three consumers: batch members, probes, verdict spine
 
+    return batch, _cell_probe_matches(members_c, batch, batch)
+
+
+def _cell_probe_matches(members_c: DataFrame, arrived: DataFrame, batch: DataFrame) -> DataFrame:
+    """(vec_id, dup_of_corpus, batch_min) for the assigned ``batch``:
+    each batch vector's probed cells are scanned by the per-cell BLAS
+    threshold kernel against the corpus members ``members_c`` (src 0)
+    and the assigned arrivals so far ``arrived`` (src 1, the batch
+    included). Both min-id verdicts are conditional mins of ONE
+    aggregate over the pair stream, so the kernel and its exchange
+    run once."""
+    from .dedup import EMBEDDING_DUP_THRESHOLD
+
     members = members_c.select(
         "cell", F.lit(0).alias("role"), F.lit(0).alias("src"), "vec_id", "vec"
     ).unionByName(
-        batch.select(
+        arrived.select(
             "cell", F.lit(0).alias("role"), F.lit(1).alias("src"), "vec_id", "vec"
         )
     )
@@ -2662,7 +2676,7 @@ def _einc_probe_frames(spark: SparkSession, sf_dir: str):
         _cell_threshold_matches(EMBEDDING_DUP_THRESHOLD),
         "id_q long, id_n long, src int",
     )
-    matches = pairs.groupBy(F.col("id_q").alias("vec_id")).agg(
+    return pairs.groupBy(F.col("id_q").alias("vec_id")).agg(
         F.min(F.when(F.col("src") == 0, F.col("id_n")))
         .cast("long")
         .alias("dup_of_corpus"),
@@ -2675,7 +2689,25 @@ def _einc_probe_frames(spark: SparkSession, sf_dir: str):
         .cast("long")
         .alias("batch_min"),
     )
-    return batch, matches
+
+
+def _einc_verdict(batch: DataFrame, matches: DataFrame) -> DataFrame:
+    """Per batch vector: dup_of_corpus, dup_of_batch (only when not a
+    corpus dup) and keep (neither)."""
+    return (
+        batch.select("vec_id")
+        .join(matches, "vec_id", "left")
+        .select(
+            "vec_id",
+            "dup_of_corpus",
+            F.when(F.col("dup_of_corpus").isNull(), F.col("batch_min"))
+            .cast("long")
+            .alias("dup_of_batch"),
+            (
+                F.col("dup_of_corpus").isNull() & F.col("batch_min").isNull()
+            ).alias("keep"),
+        )
+    )
 
 
 def _einc_append_oracle() -> str:
@@ -2697,13 +2729,7 @@ def _einc_append_oracle() -> str:
       SELECT 1 AS version, vec_id FROM corpus
       UNION ALL SELECT 2 AS version, vec_id FROM corpus
       UNION ALL SELECT 2 AS version, vec_id FROM keepers
-    )
-    SELECT CAST(version AS BIGINT) AS version,
-           CAST(COUNT(*) AS BIGINT) AS n_entries,
-           CAST(SUM(vec_id) AS BIGINT) AS id_sum,
-           CAST(MIN(vec_id) AS BIGINT) AS min_id,
-           CAST(MAX(vec_id) AS BIGINT) AS max_id
-    FROM versions GROUP BY 1
+    ){_ID_AUDIT_SQL}
     """
 
 
@@ -2759,17 +2785,7 @@ def dedup_embedding_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1_path = artifact("embed_ivf_index", sf_dir)
     v2_path = artifact("embed_ivf_index", sf_dir, write_v2, gen="v2")
 
-    def audit(version: int, path: str) -> DataFrame:
-        idx = spark.read.parquet(path)
-        return idx.agg(
-            F.lit(version).cast("long").alias("version"),
-            F.count(F.lit(1)).cast("long").alias("n_entries"),
-            F.sum("vec_id").cast("long").alias("id_sum"),
-            F.min("vec_id").cast("long").alias("min_id"),
-            F.max("vec_id").cast("long").alias("max_id"),
-        )
-
-    return audit(1, v1_path).unionByName(audit(2, v2_path))
+    return _index_audit(spark, v1_path, v2_path)
 
 
 # ---------------------------------------------------------------------------
@@ -2834,7 +2850,7 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.pysink import read_ledger, register_ledger_sink
     from ..streaming import epoch_file_feed, stream_state_partitions
-    from .dedup import EMBEDDING_DUP_THRESHOLD, _TWIN_OFFSET
+    from .dedup import _TWIN_OFFSET
 
     def run_stream(base: str) -> None:
         ledger = os.path.join(base, "ledger")
@@ -2871,60 +2887,8 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         def publish_epoch(df, batch_id: int) -> None:
             batch_e = _ivf_assign(df.select("vec_id", "vec"), bc).localCheckpoint()
             seen = acc["seen"]  # prior epochs' assigned arrivals
-            batch_leg = batch_e.select(
-                "cell", F.lit(0).alias("role"), F.lit(1).alias("src"),
-                "vec_id", "vec",
-            )
-            members = members_c.select(
-                "cell", F.lit(0).alias("role"), F.lit(0).alias("src"),
-                "vec_id", "vec",
-            ).unionByName(
-                batch_leg
-                if seen is None
-                else seen.select(
-                    "cell", F.lit(0).alias("role"), F.lit(1).alias("src"),
-                    "vec_id", "vec",
-                ).unionByName(batch_leg)
-            )
-            probes = batch_e.select(
-                F.explode("probes").alias("cell"),
-                F.lit(1).alias("role"),
-                F.lit(-1).alias("src"),
-                "vec_id",
-                "vec",
-            )
-            pairs = members.unionByName(probes).groupBy("cell").applyInPandas(
-                _cell_threshold_matches(EMBEDDING_DUP_THRESHOLD),
-                "id_q long, id_n long, src int",
-            )
-            matches = pairs.groupBy(F.col("id_q").alias("vec_id")).agg(
-                F.min(F.when(F.col("src") == 0, F.col("id_n")))
-                .cast("long")
-                .alias("dup_of_corpus"),
-                F.min(
-                    F.when(
-                        (F.col("src") == 1) & (F.col("id_n") < F.col("id_q")),
-                        F.col("id_n"),
-                    )
-                )
-                .cast("long")
-                .alias("batch_min"),
-            )
-            verdict = (
-                batch_e.select("vec_id")
-                .join(matches, "vec_id", "left")
-                .select(
-                    "vec_id",
-                    "dup_of_corpus",
-                    F.when(F.col("dup_of_corpus").isNull(), F.col("batch_min"))
-                    .cast("long")
-                    .alias("dup_of_batch"),
-                    (
-                        F.col("dup_of_corpus").isNull()
-                        & F.col("batch_min").isNull()
-                    ).alias("keep"),
-                )
-            )
+            arrived = batch_e if seen is None else seen.unionByName(batch_e)
+            verdict = _einc_verdict(batch_e, _cell_probe_matches(members_c, arrived, batch_e))
             (
                 verdict.write.format("ledgersink")
                 .option("path", ledger)
@@ -2932,11 +2896,7 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .mode("append")
                 .save()
             )
-            acc["seen"] = (
-                batch_e
-                if acc["seen"] is None
-                else acc["seen"].unionByName(batch_e)
-            )
+            acc["seen"] = arrived
 
         with stream_state_partitions(spark):
             q = (
@@ -3474,28 +3434,7 @@ def _gen_serving_oracle() -> str:
       SELECT vec_id, emb FROM base
       UNION ALL SELECT vec_id, emb FROM twins
     ),
-    e AS (
-      SELECT vec_id, emb,
-             sqrt(list_reduce(
-               list_transform(emb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-               (p, q) -> p + q)) AS nrm
-      FROM serving
-    ),
-    pairs AS (
-      SELECT a.vec_id AS id_q, b.vec_id AS id_n_exact,
-             list_reduce(
-               list_transform(range(1, len(a.emb) + 1),
-                              i -> CAST(a.emb[i] AS DOUBLE)
-                                   * CAST(b.emb[i] AS DOUBLE)),
-               (p, q) -> p + q) / (a.nrm * b.nrm) AS cos_sim
-      FROM e a JOIN e b ON a.vec_id <> b.vec_id
-    ),
-    ranked AS (
-      SELECT id_q, id_n_exact,
-             ROW_NUMBER() OVER (PARTITION BY id_q
-                                ORDER BY cos_sim DESC, id_n_exact) AS rk
-      FROM pairs
-    )
+    {_exact_top3_ctes("serving", "emb")}
     SELECT id_q, CAST(rk AS BIGINT) AS rk, id_n_exact,
            CAST(1 AS BIGINT) AS generation, TRUE AS recall_ok
     FROM ranked WHERE rk <= 3

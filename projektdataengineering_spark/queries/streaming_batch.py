@@ -8,6 +8,8 @@ tests/test_streaming.py for the streaming-mode mirrors.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -65,9 +67,9 @@ def stream_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_avg(load_table(spark, sf_dir, "events"), "1 hour", "15 minutes")
 
 
-@query(
-    "stream_session_windows",
-    oracle="""
+# 30-minute-gap sessions as gaps-and-islands: the oracle of both
+# session-window queries.
+_SESSION_SQL = """
     WITH marked AS (
       SELECT user_id, ts, value,
              CASE WHEN LAG(ts) OVER w IS NULL
@@ -88,8 +90,10 @@ def stream_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
     FROM sessions
     GROUP BY user_id, sid
-    """,
-)
+"""
+
+
+@query("stream_session_windows", oracle=_SESSION_SQL)
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap sessions per user via session_window — the batch
     call of the exact operator the streaming mirror uses. Oracle is the
@@ -244,6 +248,68 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _view_click_pairs(spark: SparkSession, sf_dir: str, how: str, sink: str) -> DataFrame:
+    """Views and clicks of the events feed as two readStream sources
+    with 1-hour watermarks, ``how``-joined on user_id with the click in
+    (view.ts, view.ts+10min], drained to the append-mode memory sink
+    ``sink``; returns that sink's table. An inner join scopes the
+    no-data batch off (r19): its matches are emitted as data arrives
+    and the final watermark-advance batch only evicts state (profiled
+    sf0.1: rows=0, numRowsUpdated=0, ~5 s of pure store-commit across
+    the 16 join stores). Outer joins keep it — there eviction IS the
+    emission path."""
+    from ..streaming import (
+        open_event_stream,
+        run_to_memory_sink,
+        stream_no_data_batches,
+        stream_state_partitions,
+    )
+
+    views = (
+        open_event_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "view")
+        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts"))
+        .withWatermark("v_ts", "1 hour")
+    )
+    clicks = (
+        open_event_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
+        .withWatermark("c_ts", "1 hour")
+    )
+    pairs = views.join(
+        clicks,
+        (F.col("c_user") == F.col("v_user"))
+        & (F.col("c_ts") > F.col("v_ts"))
+        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
+        how,
+    )
+    no_data = stream_no_data_batches(spark) if how == "inner" else contextlib.nullcontext()
+    with stream_state_partitions(spark), no_data:
+        run_to_memory_sink(pairs, sink, output_mode="append")
+    return spark.table(sink)
+
+
+def _wm_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row, wm_cut = min(max view ts, max click ts) − 2h − 10min:
+    the outer joins' data-derived orphan cutoff."""
+    ev = load_table(spark, sf_dir, "events")
+    return (
+        ev.filter(F.col("event_type").isin("view", "click"))
+        .groupBy()
+        .agg(
+            (
+                F.least(
+                    F.max(F.when(F.col("event_type") == "view", F.col("ts"))),
+                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+                )
+                - F.expr("INTERVAL 2 HOURS")
+                - F.expr("INTERVAL 10 MINUTES")
+            ).alias("wm_cut")
+        )
+    )
+
+
 @query(
     "stream_stream_join",
     oracle="""
@@ -273,42 +339,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark−10min (the interval condition gives the range pruning);
     without the time bound the state would grow without limit. Gap
     sums are exact integer µs, immune to emission order."""
-    from ..streaming import (
-        open_event_stream,
-        run_to_memory_sink,
-        stream_state_partitions,
-    )
-
-    views = (
-        open_event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts"))
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        open_event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-    )
-    pairs = views.join(
-        clicks,
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "inner",
-    )
-    # no-data batch scoped off (r19): INNER join matches are emitted as
-    # data arrives; the final watermark-advance batch only evicts state
-    # (profiled sf0.1: rows=0, numRowsUpdated=0, ~5 s of pure
-    # store-commit across the 16 join stores). The outer-join twins
-    # keep the default — there eviction IS the emission path.
-    from ..streaming import stream_no_data_batches
-
-    with stream_state_partitions(spark), stream_no_data_batches(spark):
-        run_to_memory_sink(pairs, "stream_stream_join_sink", output_mode="append")
     return (
-        spark.table("stream_stream_join_sink")
+        _view_click_pairs(spark, sf_dir, "inner", "stream_stream_join_sink")
         .groupBy(F.col("v_user").alias("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
@@ -554,9 +586,14 @@ def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_ohlc_native",
-    oracle="""
+# OHLC downsampling: exact-order open/close via arg-min/max on the
+# unique (ts, event_id) key; volume-sum via the engine's float
+# discipline (1e6-quantized integer numerators, DECIMAL(38,0) sums).
+# The oracle and bar aggregates of stream_ohlc_native and its batch
+# twin timeseries.pipeline_resample_ohlc.
+_OHLC_Q = 10**6
+
+_OHLC_SQL = f"""
     WITH ranked AS (
       SELECT event_type, date_trunc('hour', ts) AS bucket, value,
              ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
@@ -572,12 +609,33 @@ def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
            MIN(value) AS low,
            MAX(CASE WHEN rn_z = 1 THEN value END) AS close,
            CAST(COUNT(*) AS BIGINT) AS volume,
-           CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS DECIMAL(38,0)))
+           CAST(SUM(CAST(floor(value * {_OHLC_Q} + 0.5) AS DECIMAL(38,0)))
                 AS BIGINT) AS vsum_q6
     FROM ranked
     GROUP BY event_type, bucket
-    """,
-)
+"""
+
+
+def _ohlc_aggs(key) -> list:
+    """open/high/low/close/volume/vsum_q6 of ``value`` per bar, with
+    open/close picked by min_by/max_by over the unique ``key``."""
+    return [
+        F.min_by("value", key).alias("open"),
+        F.max("value").alias("high"),
+        F.min("value").alias("low"),
+        F.max_by("value", key).alias("close"),
+        F.count(F.lit(1)).cast("long").alias("volume"),
+        F.sum(
+            F.floor(F.col("value") * _OHLC_Q + F.lit(0.5)).cast(
+                "decimal(38,0)"
+            )
+        )
+        .cast("long")
+        .alias("vsum_q6"),
+    ]
+
+
+@query("stream_ohlc_native", oracle=_OHLC_SQL)
 def stream_ohlc_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC bar downsampling executed as an ACTUAL Structured
     Streaming query — the streaming twin of pipeline_resample_ohlc,
@@ -602,20 +660,7 @@ def stream_ohlc_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.struct(F.col("ts"), F.col("event_id"))
     bars = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.min_by("value", key).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", key).alias("close"),
-            F.count(F.lit(1)).cast("long").alias("volume"),
-            F.sum(
-                F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast(
-                    "decimal(38,0)"
-                )
-            )
-            .cast("long")
-            .alias("vsum_q6"),
-        )
+        .agg(*_ohlc_aggs(key))
         .select(
             "event_type",
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("bucket_start"),
@@ -627,18 +672,22 @@ def stream_ohlc_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table("stream_ohlc_native_sink")
 
 
-_SSLJ_SQL = """
-    WITH views AS (
-      SELECT user_id AS v_user, ts AS v_ts, event_id AS v_id
-      FROM events WHERE event_type = 'view'
-    ), clicks AS (
+# The outer-join oracles' click side and their data-derived orphan
+# cutoff (the SQL of ``_wm_cut``), after their `views` CTE.
+_CLICKS_CUT_CTES = """clicks AS (
       SELECT user_id AS c_user, ts AS c_ts FROM events
       WHERE event_type = 'click'
     ), cut AS (
       SELECT least((SELECT max(v_ts) FROM views),
                    (SELECT max(c_ts) FROM clicks))
              - INTERVAL 2 HOUR - INTERVAL 10 MINUTE AS wm_cut
-    ), joined AS (
+    )"""
+
+_SSLJ_SQL = f"""
+    WITH views AS (
+      SELECT user_id AS v_user, ts AS v_ts, event_id AS v_id
+      FROM events WHERE event_type = 'view'
+    ), {_CLICKS_CUT_CTES}, joined AS (
       SELECT v.v_user, v.v_ts, c.c_ts
       FROM views v LEFT JOIN clicks c
         ON c.c_user = v.v_user
@@ -683,55 +732,8 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inner join). The 1-row cutoff broadcast is the allowlisted
     scalar pattern.
     """
-    from ..streaming import (
-        open_event_stream,
-        run_to_memory_sink,
-        stream_state_partitions,
-    )
-
-    views = (
-        open_event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        open_event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-    )
-    pairs = views.join(
-        clicks,
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "left_outer",
-    )
-    with stream_state_partitions(spark):
-        run_to_memory_sink(
-            pairs, "stream_stream_left_join_sink", output_mode="append"
-        )
-    emitted = spark.table("stream_stream_left_join_sink")
-    ev = load_table(spark, sf_dir, "events")
-    cut = (
-        ev.filter(F.col("event_type").isin("view", "click"))
-        .groupBy()
-        .agg(
-            (
-                F.least(
-                    F.max(F.when(F.col("event_type") == "view", F.col("ts"))),
-                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                )
-                - F.expr("INTERVAL 2 HOURS")
-                - F.expr("INTERVAL 10 MINUTES")
-            ).alias("wm_cut")
-        )
-    )
-    kept = emitted.crossJoin(F.broadcast(cut)).filter(
+    emitted = _view_click_pairs(spark, sf_dir, "left_outer", "stream_stream_left_join_sink")
+    kept = emitted.crossJoin(F.broadcast(_wm_cut(spark, sf_dir))).filter(
         F.col("c_ts").isNotNull() | (F.col("v_ts") <= F.col("wm_cut"))
     )
     return kept.groupBy(F.col("v_user").alias("user_id")).agg(
@@ -753,18 +755,11 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SSFJ_SQL = """
+_SSFJ_SQL = f"""
     WITH views AS (
       SELECT user_id AS v_user, ts AS v_ts FROM events
       WHERE event_type = 'view'
-    ), clicks AS (
-      SELECT user_id AS c_user, ts AS c_ts FROM events
-      WHERE event_type = 'click'
-    ), cut AS (
-      SELECT least((SELECT max(v_ts) FROM views),
-                   (SELECT max(c_ts) FROM clicks))
-             - INTERVAL 2 HOUR - INTERVAL 10 MINUTE AS wm_cut
-    ), joined AS (
+    ), {_CLICKS_CUT_CTES}, joined AS (
       SELECT v.v_user, v.v_ts, c.c_user, c.c_ts
       FROM views v FULL JOIN clicks c
         ON c.c_user = v.v_user
@@ -813,53 +808,9 @@ def stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     only addition is the click-side eviction emitting its own
     residuals, which costs nothing beyond what the store already
     tracked."""
-    from ..streaming import (
-        open_event_stream,
-        run_to_memory_sink,
-        stream_state_partitions,
-    )
-
-    views = (
-        open_event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("v_ts"))
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        open_event_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-    )
-    pairs = views.join(
-        clicks,
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("c_ts") > F.col("v_ts"))
-        & (F.col("c_ts") <= F.col("v_ts") + F.expr("INTERVAL 10 MINUTES")),
-        "full_outer",
-    )
-    with stream_state_partitions(spark):
-        run_to_memory_sink(
-            pairs, "stream_stream_full_outer_sink", output_mode="append"
-        )
-    emitted = spark.table("stream_stream_full_outer_sink")
-    ev = load_table(spark, sf_dir, "events")
-    cut = (
-        ev.filter(F.col("event_type").isin("view", "click"))
-        .groupBy()
-        .agg(
-            (
-                F.least(
-                    F.max(F.when(F.col("event_type") == "view", F.col("ts"))),
-                    F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                )
-                - F.expr("INTERVAL 2 HOURS")
-                - F.expr("INTERVAL 10 MINUTES")
-            ).alias("wm_cut")
-        )
-    )
+    emitted = _view_click_pairs(spark, sf_dir, "full_outer", "stream_stream_full_outer_sink")
     matched = F.col("v_ts").isNotNull() & F.col("c_ts").isNotNull()
-    kept = emitted.crossJoin(F.broadcast(cut)).filter(
+    kept = emitted.crossJoin(F.broadcast(_wm_cut(spark, sf_dir))).filter(
         matched
         | (F.col("c_ts").isNull() & (F.col("v_ts") <= F.col("wm_cut")))
         | (F.col("v_ts").isNull() & (F.col("c_ts") <= F.col("wm_cut")))
@@ -975,31 +926,9 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
 # readStream: the one stateful window class whose state MERGES
 # ---------------------------------------------------------------------------
 
-_SESSION_NATIVE_SQL = """
-    WITH marked AS (
-      SELECT user_id, ts, value,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                       OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-    ),
-    sessions AS (
-      SELECT *, SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts
-                                  ROWS UNBOUNDED PRECEDING) AS sid
-      FROM marked
-    )
-    SELECT user_id,
-           MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM sessions
-    GROUP BY user_id, sid
-"""
 
 
-@query("stream_session_native", oracle=_SESSION_NATIVE_SQL)
+@query("stream_session_native", oracle=_SESSION_SQL)
 def stream_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-minute-gap sessions per user executed as a REAL streaming
     query — readStream file source → the SAME session_windows

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from . import query
+from .streaming_batch import _OHLC_SQL, _ohlc_aggs
 
 _ALPHA = 0.25
 
@@ -180,34 +181,6 @@ def pipeline_time_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# OHLC downsampling: exact-order open/close via arg-min/max on the
-# unique (ts, event_id) key; volume-sum via the engine's float
-# discipline (1e6-quantized integer numerators, DECIMAL(38,0) sums).
-_OHLC_Q = 10**6
-
-_OHLC_SQL = f"""
-    WITH ranked AS (
-      SELECT event_type, date_trunc('hour', ts) AS bucket, value,
-             ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                                ORDER BY ts, event_id) AS rn_a,
-             ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-                                ORDER BY ts DESC, event_id DESC) AS rn_z
-      FROM events WHERE value IS NOT NULL
-    )
-    SELECT event_type,
-           CAST(bucket AS VARCHAR) AS bucket_start,
-           MAX(CASE WHEN rn_a = 1 THEN value END) AS open,
-           MAX(value) AS high,
-           MIN(value) AS low,
-           MAX(CASE WHEN rn_z = 1 THEN value END) AS close,
-           CAST(COUNT(*) AS BIGINT) AS volume,
-           CAST(SUM(CAST(floor(value * {_OHLC_Q} + 0.5) AS DECIMAL(38,0)))
-                AS BIGINT) AS vsum_q6
-    FROM ranked
-    GROUP BY event_type, bucket
-"""
-
-
 @query("pipeline_resample_ohlc", oracle=_OHLC_SQL)
 def pipeline_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC bar downsampling — the classic time-series resample: per
@@ -236,20 +209,7 @@ def pipeline_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             key.alias("k"),
         )
         .groupBy("event_type", "bucket")
-        .agg(
-            F.min_by("value", "k").alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", "k").alias("close"),
-            F.count(F.lit(1)).cast("long").alias("volume"),
-            F.sum(
-                F.floor(F.col("value") * _OHLC_Q + F.lit(0.5)).cast(
-                    "decimal(38,0)"
-                )
-            )
-            .cast("long")
-            .alias("vsum_q6"),
-        )
+        .agg(*_ohlc_aggs("k"))
         .select(
             "event_type",
             F.date_format("bucket", "yyyy-MM-dd HH:mm:ss").alias("bucket_start"),

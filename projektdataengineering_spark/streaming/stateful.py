@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.sketches import mg_add
+
 # ---------------------------------------------------------------------------
 # bucketed_state: keyed state at STATE-PARTITION granularity
 # ---------------------------------------------------------------------------
@@ -451,23 +453,13 @@ def make_mg_fold(k: int):
     rows (update-mode memory sinks accumulate every emission)."""
 
     def _fold(key, pdf_iter, state: GroupState):
-        import numpy as np
-
         if state.exists:
             bno, terms, counts = state.get
             counters = dict(zip(terms, (int(c) for c in counts)))
         else:
             bno, counters = 0, {}
         for pdf in pdf_iter:
-            vc = pdf["term"].value_counts()
-            for t, c in vc.items():
-                counters[t] = counters.get(t, 0) + int(c)
-            if len(counters) > k:
-                vals = np.fromiter(counters.values(), dtype=np.int64)
-                off = int(np.partition(vals, -(k + 1))[-(k + 1)])
-                counters = {
-                    t: c - off for t, c in counters.items() if c - off > 0
-                }
+            counters = mg_add(counters, pdf["term"], k)
         bno += 1
         state.update((bno, list(counters.keys()),
                       [int(c) for c in counters.values()]))

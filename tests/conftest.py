@@ -71,16 +71,23 @@ def _canon_frame(df: pd.DataFrame) -> tuple[list[str], list[tuple]]:
     return cols, rows
 
 
-def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str):
-    assert len(spark_pdf) == len(oracle_pdf), (
-        f"{name}: row count {len(spark_pdf)} (spark) != {len(oracle_pdf)} (oracle)"
-    )
+def frame_mismatch(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> str | None:
+    """Why a Spark result differs from its oracle's — row count, then
+    canonical columns, then exact canonical rows — or None if it does not."""
+    if len(spark_pdf) != len(oracle_pdf):
+        return f"row count {len(spark_pdf)} (spark) != {len(oracle_pdf)} (oracle)"
     scols, srows = _canon_frame(spark_pdf)
     ocols, orows = _canon_frame(oracle_pdf)
-    assert scols == ocols, f"{name}: columns {scols} != {ocols}"
+    if scols != ocols:
+        return f"columns {scols} != {ocols}"
     mismatches = [
         (i, a, b) for i, (a, b) in enumerate(zip(srows, orows)) if a != b
     ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} mismatching rows; first 3: {mismatches[:3]}"
-    )
+    if mismatches:
+        return f"{len(mismatches)} mismatching rows; first 3: {mismatches[:3]}"
+    return None
+
+
+def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str):
+    why = frame_mismatch(spark_pdf, oracle_pdf)
+    assert why is None, f"{name}: {why}"

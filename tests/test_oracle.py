@@ -11,7 +11,7 @@ import pytest
 from projektdataengineering_spark.queries import load_registry
 from projektdataengineering_spark.streaming import scoped_conf
 
-from conftest import assert_frames_match
+from conftest import assert_frames_match, frame_mismatch
 
 REGISTRY = load_registry()
 
@@ -34,6 +34,18 @@ NON_DEFAULT_CONFS = {
     "spark.sql.shuffle.partitions": "3",
     "spark.sql.adaptive.enabled": "false",
 }
+
+
+def test_frame_mismatch_reports_each_kind():
+    """The one comparison behind the oracle tests and
+    tools/verify_driver.py: exact match is None (column and row order
+    aside); a row-count, a column and a value mismatch are each named."""
+    ref = pd.DataFrame({"k": [1, 2], "v": [0.5, 1.5]})
+    assert frame_mismatch(ref[["v", "k"]].iloc[::-1], ref) is None
+    assert frame_mismatch(ref.iloc[:1], ref) == "row count 1 (spark) != 2 (oracle)"
+    assert frame_mismatch(ref.rename(columns={"v": "w"}), ref) == "columns ['k', 'w'] != ['k', 'v']"
+    why = frame_mismatch(ref.assign(v=[0.5, 1.5000000000000002]), ref)
+    assert why is not None and why.startswith("1 mismatching rows; first 3: [(1, ")
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)

@@ -123,10 +123,11 @@ def test_ntz_normalization_requires_utc_session(spark, tmp_path):
 def test_nanos_events_take_the_long_branch(spark, tmp_path, tz):
     """A TIMESTAMP(NANOS) events file reads as LONG raw nanos under
     ``nanosAsLong``, UTC-adjusted or not: ``load_table`` turns each into
-    the µs timestamp floor(ns/1000), and ``load_events_since(H)`` keeps
-    exactly the rows with ns > H·1000+999 through a predicate pushed to
-    the parquet scan."""
-    from datetime import datetime, timezone
+    the µs timestamp floor(ns/1000), before 1970 too, and
+    ``load_events_since(H)`` keeps exactly the rows with ns > H·1000+999
+    through a predicate pushed to the parquet scan — the same rows as
+    filtering ``load_table`` at ts > H."""
+    from datetime import datetime, timedelta, timezone
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -135,27 +136,33 @@ def test_nanos_events_take_the_long_branch(spark, tmp_path, tz):
     from projektdataengineering_spark.catalog import load_events_since, load_table
     from projektdataengineering_spark.plans import explain_string
 
-    hwm = datetime(2024, 1, 15, tzinfo=timezone.utc)
-    h_us = int(hwm.timestamp()) * 1_000_000
-    offsets = [-1, 0, 1, 999, 1000, 1001, 5_000_123]  # ns around H·1000
-    ns = [h_us * 1000 + d for d in offsets]
-    table = pa.table({
-        "event_id": pa.array(range(len(ns)), pa.int64()),
-        "ts": pa.array(ns, pa.timestamp("ns", tz=tz)),
-    })
-    pq.write_table(table, tmp_path / "events.parquet")
-    ts_field = pq.read_schema(tmp_path / "events.parquet").field("ts").type
-    assert ts_field.unit == "ns" and (ts_field.tz is not None) == (tz is not None)
+    epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+    offsets = [-1500, -1001, -1000, -999, -500, -1, 0, 1, 999, 1000, 1001, 5_000_123]
+    # at H = -1 µs, ns = -999 and -1 floor to -1 µs (not after H), where
+    # truncation toward zero would give 0 µs
+    for hwm in [datetime(2024, 1, 15, tzinfo=timezone.utc), epoch - timedelta(microseconds=1)]:
+        h_us = (hwm - epoch) // timedelta(microseconds=1)
+        ns = [h_us * 1000 + d for d in offsets]  # ns around H·1000
+        sf = tmp_path / str(h_us)
+        sf.mkdir()
+        table = pa.table({
+            "event_id": pa.array(range(len(ns)), pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns", tz=tz)),
+        })
+        pq.write_table(table, sf / "events.parquet")
+        ts_field = pq.read_schema(sf / "events.parquet").field("ts").type
+        assert ts_field.unit == "ns" and (ts_field.tz is not None) == (tz is not None)
 
-    events = load_table(spark, str(tmp_path), "events")
-    raw = spark.read.parquet(str(tmp_path / "events.parquet")).schema["ts"].dataType
-    assert raw.typeName() == "long"
-    assert events.schema["ts"].dataType.typeName() == "timestamp"
-    got = {r["event_id"]: r["us"] for r in events.select("event_id", F.unix_micros("ts").alias("us")).collect()}
-    assert got == {i: v // 1000 for i, v in enumerate(ns)}
+        events = load_table(spark, str(sf), "events")
+        raw = spark.read.parquet(str(sf / "events.parquet")).schema["ts"].dataType
+        assert raw.typeName() == "long"
+        assert events.schema["ts"].dataType.typeName() == "timestamp"
+        got = {r["event_id"]: r["us"] for r in events.select("event_id", F.unix_micros("ts").alias("us")).collect()}
+        assert got == {i: v // 1000 for i, v in enumerate(ns)}
 
-    since = load_events_since(spark, str(tmp_path), hwm)
-    assert sorted(r["event_id"] for r in since.collect()) == [
-        i for i, v in enumerate(ns) if v > h_us * 1000 + 999
-    ] == [4, 5, 6]
-    assert f"GreaterThan(ts,{h_us * 1000 + 999})" in explain_string(since)
+        since = load_events_since(spark, str(sf), hwm)
+        later = events.filter(F.unix_micros("ts") > h_us)
+        assert sorted(r["event_id"] for r in since.collect()) == sorted(
+            r["event_id"] for r in later.collect()
+        ) == [i for i, v in enumerate(ns) if v // 1000 > h_us] == [9, 10, 11]
+        assert f"GreaterThan(ts,{h_us * 1000 + 999})" in explain_string(since)

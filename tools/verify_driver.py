@@ -8,9 +8,9 @@ bugs like the ns-timestamp events table):
 1. smoke: ``entry(spark)`` at sf0.001 returns >0 rows;
 2. every ``queries()`` entry (or only the named ones) runs at sf0.01 and,
    when ``oracle_sql()`` has a matching key, compares against DuckDB with
-   the pytest oracle harness's canonicalizer (tests/conftest.py
-   ``_canon_frame``: sorted columns, sorted rows of type-tagged exact
-   cells), requiring exact identity.
+   the pytest oracle harness's comparison (tests/conftest.py
+   ``frame_mismatch``: row count, sorted columns, sorted rows of
+   type-tagged exact cells), requiring exact identity.
 
 Exit 0 = all green.  Run from the repo root:
     python tools/verify_driver.py [name ...] [--sf DIR]
@@ -33,7 +33,7 @@ def main() -> int:
     ap.add_argument("--sf", help="fixture dir (default: sf0.01 beside the smoke's sf0.001)")
     ns = ap.parse_args()
     import duckdb
-    from conftest import _canon_frame
+    from conftest import frame_mismatch
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as e
@@ -79,20 +79,12 @@ def main() -> int:
             fails.append((name, f"oracle error: {ex}"))
             print(f"[{i+1}/{len(qs)}] {name}: ORACLE ERROR {ex}", flush=True)
             continue
-        sc, srows = _canon_frame(spdf)
-        oc, orows = _canon_frame(odf)
-        if sc != oc:
-            fails.append((name, f"schema {sc} != {oc}"))
-            status = "SCHEMA MISMATCH"
-        elif len(srows) != len(orows):
-            fails.append((name, f"rows {len(srows)} != {len(orows)}"))
-            status = "ROWCOUNT MISMATCH"
-        elif srows != orows:
-            diff = next((a, b) for a, b in zip(srows, orows) if a != b)
-            fails.append((name, f"values differ, e.g. {diff[0]} vs {diff[1]}"))
-            status = "VALUE MISMATCH"
+        why = frame_mismatch(spdf, odf)
+        if why:
+            fails.append((name, why))
+            status = f"MISMATCH {why}"
         else:
-            status = f"match {len(srows)} rows"
+            status = f"match {len(spdf)} rows"
         print(f"[{i+1}/{len(qs)}] {name}: {status}", flush=True)
 
     print(f"\n{len(qs)} queries, {len(fails)} failures")
