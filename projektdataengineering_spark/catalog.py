@@ -12,7 +12,12 @@ named-table loader over a directory of parquet files. Explicit behaviors:
   is not the only ``spark.read`` of a fixture: ``load_events_since``
   reads events with its high-water-mark predicate pushed to the scan,
   ``streaming.open_event_stream`` reads them as a stream, and every
-  persisted artifact is read back from its ``.scratch`` path.
+  persisted artifact is read back from its ``.scratch`` path;
+* those three events readers make the engine's one intended session
+  change: they set ``spark.sql.legacy.parquet.nanosAsLong=true`` on the
+  caller's session and leave it set. A TIMESTAMP(NANOS) file still
+  needs it when the executors read it, after the query has returned,
+  so it cannot be scoped (tests/test_semantics.py pins the contract).
 """
 
 from __future__ import annotations

@@ -131,32 +131,41 @@ def subquery_scalar_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sql_recursive_month_spine",
-    oracle=f"""
+# The month spine in one text for both engines: Spark passes its orders
+# scan as a spark.sql DataFrame argument, and each engine writes the
+# 12-month expansion of a year in its own dialect.
+_MONTH_SPINE_SQL = f"""
     WITH RECURSIVE years AS (
       SELECT (SELECT CAST(EXTRACT(year FROM MIN(o_orderdate)) AS BIGINT)
-              FROM orders) AS y
+              FROM {{orders}}) AS y
       UNION ALL
       SELECT y + 1 FROM years
       WHERE y < (SELECT CAST(EXTRACT(year FROM MAX(o_orderdate)) AS BIGINT)
-                 FROM orders)
+                 FROM {{orders}})
     ),
     spine AS (
-      SELECT make_timestamp(y, t.m, 1, 0, 0, 0.0) AS month
-      FROM years, UNNEST(range(1, 13)) AS t(m)
+      SELECT {{months}}
     ),
     bounded AS (
       SELECT month FROM spine
-      WHERE month >= (SELECT MIN(DATE_TRUNC('month', o_orderdate)) FROM orders)
-        AND month <= (SELECT MAX(DATE_TRUNC('month', o_orderdate)) FROM orders)
+      WHERE month >= (SELECT MIN(DATE_TRUNC('month', o_orderdate)) FROM {{orders}})
+        AND month <= (SELECT MAX(DATE_TRUNC('month', o_orderdate)) FROM {{orders}})
     )
     SELECT s.month, COUNT(o.o_orderkey) AS n_orders,
            COALESCE({SQL_DSUM.format(x="o.o_totalprice")}, 0.0) AS revenue
-    FROM bounded s LEFT JOIN orders o
+    FROM bounded s LEFT JOIN {{orders}} o
       ON DATE_TRUNC('month', o.o_orderdate) = s.month
     GROUP BY s.month
-    """,
+    """
+
+
+@query(
+    "sql_recursive_month_spine",
+    oracle=_MONTH_SPINE_SQL.format(
+        orders="orders",
+        months="make_timestamp(y, t.m, 1, 0, 0, 0.0) AS month "
+        "FROM years, UNNEST(range(1, 13)) AS t(m)",
+    ),
 )
 def sql_recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-filled monthly revenue via a RECURSIVE CTE (Spark 4 WITH
@@ -172,33 +181,12 @@ def sql_recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1/10 the cost. Batch each recursion level as wide as the semantics
     allow. The spine is tiny and broadcasts into the left join; the
     fact side shuffles only for its monthly aggregation."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_rx")
-    return spark.sql(
-        f"""
-        WITH RECURSIVE years AS (
-          SELECT (SELECT CAST(EXTRACT(year FROM MIN(o_orderdate)) AS BIGINT)
-                  FROM orders_rx) AS y
-          UNION ALL
-          SELECT y + 1 FROM years
-          WHERE y < (SELECT CAST(EXTRACT(year FROM MAX(o_orderdate)) AS BIGINT)
-                     FROM orders_rx)
-        ),
-        spine AS (
-          SELECT make_timestamp(y, m, 1, 0, 0, 0) AS month
-          FROM years LATERAL VIEW explode(sequence(1, 12)) t AS m
-        ),
-        bounded AS (
-          SELECT month FROM spine
-          WHERE month >= (SELECT MIN(DATE_TRUNC('month', o_orderdate)) FROM orders_rx)
-            AND month <= (SELECT MAX(DATE_TRUNC('month', o_orderdate)) FROM orders_rx)
-        )
-        SELECT s.month, COUNT(o.o_orderkey) AS n_orders,
-               COALESCE({SQL_DSUM.format(x="o.o_totalprice")}, 0.0) AS revenue
-        FROM bounded s LEFT JOIN orders_rx o
-          ON DATE_TRUNC('month', o.o_orderdate) = s.month
-        GROUP BY s.month
-        """
+    text = _MONTH_SPINE_SQL.format(
+        orders="{orders}",
+        months="make_timestamp(y, m, 1, 0, 0, 0) AS month "
+        "FROM years LATERAL VIEW explode(sequence(1, 12)) t AS m",
     )
+    return spark.sql(text, orders=load_table(spark, sf_dir, "orders"))
 
 
 # ---------------------------------------------------------------------------
@@ -578,11 +566,13 @@ _REACH_MAX_HOPS = 3
 # at sf0.1 on path volume alone, the hot subgraph 4 s.
 _REACH_PRICE_THRESH = 450_000.0
 
-_REACH_CORE = """
+# One text for both engines: the oracle names the tables, Spark passes
+# its scans as spark.sql DataFrame arguments.
+_REACH_SQL = f"""WITH RECURSIVE
     bip AS (
       SELECT DISTINCT o.o_custkey * 2 AS src, l.l_partkey * 2 + 1 AS dst
-      FROM {orders} o JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
-      WHERE o.o_totalprice > {thresh}
+      FROM {{orders}} o JOIN {{lineitem}} l ON l.l_orderkey = o.o_orderkey
+      WHERE o.o_totalprice > {_REACH_PRICE_THRESH}
     ),
     und AS (
       SELECT src, dst FROM bip
@@ -597,7 +587,7 @@ _REACH_CORE = """
       UNION ALL
       SELECT e.dst AS node, w.hop + 1 AS hop
       FROM walk w JOIN und e ON e.src = w.node
-      WHERE w.hop < {max_hops}
+      WHERE w.hop < {_REACH_MAX_HOPS}
     ),
     dist AS (SELECT node, MIN(hop) AS hop FROM walk GROUP BY node)
     SELECT CAST(hop AS BIGINT) AS hop,
@@ -608,11 +598,7 @@ _REACH_CORE = """
 
 @query(
     "sql_recursive_reachability",
-    oracle="WITH RECURSIVE "
-    + _REACH_CORE.format(
-        orders="orders", lineitem="lineitem", max_hops=_REACH_MAX_HOPS,
-        thresh=_REACH_PRICE_THRESH,
-    ),
+    oracle=_REACH_SQL.format(orders="orders", lineitem="lineitem"),
 )
 def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded transitive closure as a NATIVE recursive CTE (Spark 4
@@ -636,16 +622,8 @@ def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     level, graph_bfs_hops) or the large-star/small-star rewrite
     (operators/graph.py docstring). The walk never carries text —
     (node, hop) pairs only.""".format(h=_REACH_MAX_HOPS)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_rxr")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem_rxr"
-    )
     return spark.sql(
-        "WITH RECURSIVE "
-        + _REACH_CORE.format(
-            orders="orders_rxr",
-            lineitem="lineitem_rxr",
-            max_hops=_REACH_MAX_HOPS,
-            thresh=_REACH_PRICE_THRESH,
-        )
+        _REACH_SQL,
+        orders=load_table(spark, sf_dir, "orders"),
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )

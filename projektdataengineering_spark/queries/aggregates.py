@@ -253,32 +253,24 @@ def agg_scalar_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.agg(F.max("ts").alias("max_ts"))
 
 
-@query(
-    "agg_grouping_sets",
-    oracle=f"""
+_GROUPING_SETS_SQL = f"""
     SELECT l_returnflag, l_linestatus,
            {SQL_DSUM.format(x="l_quantity")} AS sum_qty,
            COUNT(*) AS n_rows
-    FROM lineitem
+    FROM {{lineitem}}
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """,
-)
+    """
+
+
+@query("agg_grouping_sets", oracle=_GROUPING_SETS_SQL.format(lineitem="lineitem"))
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary GROUPING SETS (neither rollup- nor cube-shaped),
-    expressed through the engine's SQL surface over a registered view —
+    expressed through the engine's SQL surface in the oracle's own text,
+    with the lineitem scan passed as a ``spark.sql`` DataFrame argument —
     the DataFrame API has no grouping-sets verb, and SQL text is itself
     a first-class entry point of this engine (the reference's serving
     client is raw SQL; SURVEY §3.3)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-               COUNT(*) AS n_rows
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
+    return spark.sql(_GROUPING_SETS_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 # Final-projection formulas for agg_stats_moments, shared TEXTUALLY

@@ -401,12 +401,11 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", "event_type", "value"
     )
     with stream_state_partitions(spark):
-        run_to_memory_sink(
+        sink = run_to_memory_sink(
             attribution_stream(keyed),
             "stream_attribution_sink",
             output_mode="append",
         )
-    sink = spark.table("stream_attribution_sink")
     both = sink.select(
         F.explode(
             F.array(

@@ -426,7 +426,9 @@ def scan_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _drain_pystream(spark: SparkSession, fmt: str, sink: str, **options) -> DataFrame:
     """Drain the synthetic Python stream source ``fmt`` (with any extra
     reader ``options``) through the per-bucket complete-mode aggregate
-    into the memory sink ``sink``, and return that sink's table."""
+    into the memory sink ``sink``, and return the sink's rows. As in
+    ``streaming.run_to_memory_sink``, the sink's view is dropped before
+    the return; only the drain differs (processAllAvailable + stop)."""
     from ..sources.pydatasource import register_synthetic_source
     from ..streaming import stream_state_partitions
 
@@ -453,10 +455,12 @@ def _drain_pystream(spark: SparkSession, fmt: str, sink: str, **options) -> Data
         )
         try:
             q.processAllAvailable()
+            rows = spark.table(sink)
         finally:
             q.stop()
+            spark.catalog.dropTempView(sink)
         q.awaitTermination()
-    return spark.table(sink)
+    return rows
 
 
 @query("scan_python_stream_parallel", oracle=_PYSTREAM_SQL)

@@ -767,10 +767,12 @@ def join_bloom_prefiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# One text for both engines: the oracle names the tables, Spark passes
+# its scans as spark.sql DataFrame arguments.
 _LATERAL_TOPN_SQL = """
     SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-    FROM customer c, LATERAL (
-      SELECT o_orderkey, o_totalprice FROM orders o
+    FROM {customer} c, LATERAL (
+      SELECT o_orderkey, o_totalprice FROM {orders} o
       WHERE o.o_custkey = c.c_custkey
       ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
     ) t
@@ -778,7 +780,10 @@ _LATERAL_TOPN_SQL = """
 """
 
 
-@query("join_lateral_topn", oracle=_LATERAL_TOPN_SQL)
+@query(
+    "join_lateral_topn",
+    oracle=_LATERAL_TOPN_SQL.format(customer="customer", orders="orders"),
+)
 def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL join — each BUILDING-segment customer joined
     to its OWN top-2 orders by price, expressed as SQL
@@ -795,20 +800,10 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one equi-join exchange + per-key rank, never a
     re-scan per outer row; the segment filter pushes into the customer
     scan."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer_lat_v"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_lat_v")
     return spark.sql(
-        """
-        SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        FROM customer_lat_v c, LATERAL (
-          SELECT o_orderkey, o_totalprice FROM orders_lat_v o
-          WHERE o.o_custkey = c.c_custkey
-          ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
-        ) t
-        WHERE c.c_mktsegment = 'BUILDING'
-        """
+        _LATERAL_TOPN_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

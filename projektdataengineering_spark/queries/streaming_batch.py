@@ -150,7 +150,7 @@ def stream_native_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling-window aggregate executed as an ACTUAL Structured
     Streaming query — readStream file source over the events parquet,
     availableNow trigger, complete-mode memory sink — then returned as
-    the sink table. Same transformation function, same oracle as
+    the sink's rows. Same transformation function, same oracle as
     `stream_tumbling_counts`: the driver hash-check therefore proves
     the unified-API claim (batch plan ≡ streaming plan results) on real
     streaming execution, not just on the batch twin.
@@ -170,10 +170,9 @@ def stream_native_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = tumbling_counts(open_event_stream(spark, sf_dir))
     with stream_state_partitions(spark):
-        run_to_memory_sink(
+        return run_to_memory_sink(
             stream, "stream_native_tumbling_sink", output_mode="complete"
         )
-    return spark.table("stream_native_tumbling_sink")
 
 
 @query(
@@ -233,14 +232,13 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # timeouts inside the fixture span — the final watermark-advance
     # batch re-commits unchanged state and emits nothing
     with stream_state_partitions(spark), stream_no_data_batches(spark):
-        run_to_memory_sink(
+        sink = run_to_memory_sink(
             dedup_stream_first_wins_bucketed(keyed, horizon="365 days"),
             "stream_dedup_stateful_sink",
             output_mode="update",
         )
     return (
-        spark.table("stream_dedup_stateful_sink")
-        .groupBy("key")
+        sink.groupBy("key")
         .agg(
             F.min("first_ts").alias("first_ts"),
             F.max("n_dropped").alias("n_dropped"),
@@ -252,7 +250,7 @@ def _view_click_pairs(spark: SparkSession, sf_dir: str, how: str, sink: str) -> 
     """Views and clicks of the events feed as two readStream sources
     with 1-hour watermarks, ``how``-joined on user_id with the click in
     (view.ts, view.ts+10min], drained to the append-mode memory sink
-    ``sink``; returns that sink's table. An inner join scopes the
+    ``sink``; returns the sink's rows. An inner join scopes the
     no-data batch off (r19): its matches are emitted as data arrives
     and the final watermark-advance batch only evicts state (profiled
     sf0.1: rows=0, numRowsUpdated=0, ~5 s of pure store-commit across
@@ -286,8 +284,7 @@ def _view_click_pairs(spark: SparkSession, sf_dir: str, how: str, sink: str) -> 
     )
     no_data = stream_no_data_batches(spark) if how == "inner" else contextlib.nullcontext()
     with stream_state_partitions(spark), no_data:
-        run_to_memory_sink(pairs, sink, output_mode="append")
-    return spark.table(sink)
+        return run_to_memory_sink(pairs, sink, output_mode="append")
 
 
 def _wm_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,14 +389,13 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold runs ewma_stream's identical scalar IEEE recurrence per user
     keyed = open_event_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
     with stream_state_partitions(spark):
-        run_to_memory_sink(
+        sink = run_to_memory_sink(
             ewma_stream_bucketed(keyed, alpha=0.25),
             "stream_ewma_stateful_sink",
             output_mode="update",
         )
     return (
-        spark.table("stream_ewma_stateful_sink")
-        .groupBy("user_id")
+        sink.groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
             F.expr("max_by(last_ewma, n_events)").alias("last_ewma"),
@@ -459,12 +455,11 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("string").alias("term"),
     )
     with stream_state_partitions(spark):
-        run_to_memory_sink(
+        sink = run_to_memory_sink(
             heavy_hitters_stream(keyed, k=_STREAM_MG_K),
             "stream_heavy_hitters_sink",
             output_mode="update",
         )
-    sink = spark.table("stream_heavy_hitters_sink")
     w = Window.partitionBy("bucket")
     summary = (
         sink.withColumn("mx", F.max("batch_no").over(w))
@@ -568,14 +563,13 @@ def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "1 minute")
     )
     with stream_state_partitions(spark), stream_no_data_batches(spark):
-        run_to_memory_sink(
+        sink = run_to_memory_sink(
             cdc_apply_stream_bucketed(keyed, horizon="365 days"),
             "stream_cdc_stateful_sink",
             output_mode="update",
         )
     return (
-        spark.table("stream_cdc_stateful_sink")
-        .groupBy("key")
+        sink.groupBy("key")
         .agg(
             F.expr("max_by(n_tombstones, n_seen)").alias("n_tombstones"),
             F.expr("max_by(alive, n_seen)").alias("alive"),
@@ -668,8 +662,7 @@ def stream_ohlc_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     with stream_state_partitions(spark):
-        run_to_memory_sink(bars, "stream_ohlc_native_sink", output_mode="complete")
-    return spark.table("stream_ohlc_native_sink")
+        return run_to_memory_sink(bars, "stream_ohlc_native_sink", output_mode="complete")
 
 
 # The outer-join oracles' click side and their data-derived orphan
@@ -900,10 +893,9 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..streaming import stream_no_data_batches
 
     with stream_state_partitions(spark), stream_no_data_batches(spark):
-        run_to_memory_sink(
+        kept = run_to_memory_sink(
             keyed, "stream_dedup_within_watermark_sink", output_mode="append"
         )
-    kept = spark.table("stream_dedup_within_watermark_sink")
     per_group_keys = kept.groupBy(
         "event_type", F.col("h").cast("date").cast("string").alias("day")
     ).agg(F.count(F.lit(1)).cast("long").alias("n_keys"))
@@ -967,7 +959,6 @@ def stream_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured warm: sf0.1 1.8→1.3 s, sf1 5.5→3.9 s at 4→8; the
     # per-deployment sizing rule lives on stream_state_partitions)
     with stream_state_partitions(spark, 8):
-        run_to_memory_sink(
+        return run_to_memory_sink(
             stream, "stream_session_native_sink", output_mode="complete"
         )
-    return spark.table("stream_session_native_sink")

@@ -158,9 +158,7 @@ def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, k // width, " ".join(piece), len(piece)
 
     spark.udtf.register("chunk_doc_udtf", ChunkDoc)
-    load_table(spark, sf_dir, "documents").select("doc_id", "text") \
-        .createOrReplaceTempView("docs_for_udtf")
     return spark.sql(
-        "SELECT c.* FROM docs_for_udtf d, "
-        "LATERAL chunk_doc_udtf(d.doc_id, d.text, 10) c"
+        "SELECT c.* FROM {docs} d, LATERAL chunk_doc_udtf(d.doc_id, d.text, 10) c",
+        docs=load_table(spark, sf_dir, "documents").select("doc_id", "text"),
     )

@@ -2,6 +2,10 @@
 hygiene between queries, and the timed ``noop`` write. ``bench.py`` and
 the tools all run queries through these three, so their numbers measure
 the same thing.
+
+The hygiene clears what a query's plan may still pin (the cache and
+``localCheckpoint`` blocks) and, every 8th call, runs the two GCs. It
+touches no catalog state: a query registers no view it does not drop.
 """
 
 from __future__ import annotations
@@ -41,11 +45,14 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
 class Hygiene:
     """The sweep between two timed queries, so that one query's leftovers
     do not tax a later one (without it pipeline_bpe_train read 11-16 s
-    mid-suite against ~5 s in a clean session). Each call is timed into
-    ``seconds``; ``n`` counts calls. The listTables scan and the full
-    Python and JVM GC run on every 8th call, or on every call with
-    ``full=True`` (a JVM GC per query costs ~0.6 s; every 8th keeps the
-    per-query noise under ~1 s at an eighth of that)."""
+    mid-suite against ~5 s in a clean session). Every call clears the
+    cache and unpersists orphaned RDD blocks. Queries leave no temp view
+    or active stream behind (tests/test_oracle.py checks each one), so
+    there is no catalog sweep. Each call is timed into ``seconds``; ``n``
+    counts calls. The every-8th block, or every call with ``full=True``,
+    gates only the full Python and JVM GC (a JVM GC per query costs
+    ~0.6 s; every 8th keeps the per-query noise under ~1 s at an eighth
+    of that)."""
 
     def __init__(self, spark: SparkSession):
         self.spark, self.n, self.seconds = spark, 0, 0.0
@@ -68,13 +75,6 @@ class Hygiene:
             # orphan.
             for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
                 jrdd.unpersist(False)
-            # streaming queries leave their memory-sink views registered;
-            # listTables is ~135 ms, the largest hygiene cost when run per
-            # query, so the drop rides the full sweep
-            if full:
-                for tbl in spark.catalog.listTables():
-                    if tbl.tableType == "TEMPORARY" and tbl.name.endswith(("_sink", "_out")):
-                        spark.catalog.dropTempView(tbl.name)
         except Exception as exc:
             # never fail the run, but a dead sweep must not go unseen
             print(f"hygiene sweep failed: {type(exc).__name__}: {exc}", file=sys.stderr)

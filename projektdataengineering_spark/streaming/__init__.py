@@ -7,8 +7,8 @@ Spark's unified API makes the same ``window``/``session_window`` code
 path valid under ``readStream``. The batch registry queries
 (queries/streaming_batch.py) call these on a batch scan (deterministic,
 oracle-checkable); ``open_event_stream`` + ``run_to_memory_sink`` drive
-the identical transforms under a real streaming query for the
-streaming-mode tests.
+the identical transforms under a real streaming query, and the drain
+returns the sink's rows without leaving its view registered.
 
 The reference's late-data behavior (O2: silently dropped below the
 high-water mark, weather_task.py:82) maps to ``withWatermark`` — late
@@ -108,6 +108,11 @@ def open_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     nanosAsLong; µs fixtures → a timestamp type), so it is taken from a
     zero-cost batch footer read and the ts column normalized with the
     same dtype branch as the batch path (catalog.normalize_event_ts).
+
+    Setting ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's
+    session, and leaving it set, is the engine's one intended session
+    change (catalog.py docstring): the stream's executors read a NANOS
+    file after this function has returned.
     """
     from ..catalog import normalize_event_ts, session_file_memo
 
@@ -227,10 +232,14 @@ def stream_no_data_batches(spark, enabled: bool = False):
     )
 
 
-def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "complete"):
-    """Drive a (bounded) streaming DataFrame to completion into an
-    in-memory table; returns the stopped query. Test/demo helper — a
-    production sink would be a checkpointed parquet/Kafka writer."""
+def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "complete") -> DataFrame:
+    """Drive a (bounded) streaming DataFrame to completion into the
+    in-memory sink ``name`` and return the sink's rows. The returned
+    frame is the sink's own plan, not a view: the sink's temp view is
+    dropped before the return (also when the stream fails), so no view
+    outlives the call. Test/demo helper — a production sink would be a
+    checkpointed parquet/Kafka writer."""
+    spark = df.sparkSession
     q = (
         df.writeStream.outputMode(output_mode)
         .format("memory")
@@ -238,8 +247,11 @@ def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "complete"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    return q
+    try:
+        q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def write_stream_idempotent(

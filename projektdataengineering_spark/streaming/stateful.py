@@ -31,7 +31,7 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -105,10 +105,13 @@ def _key_runs(batch: pd.DataFrame, key: str):
 
 
 @functools.cache
-def _group_ids(spark, n: int) -> tuple[int, ...]:
+def _group_ids(n: int) -> tuple[int, ...]:
     """ids[j]: the smallest non-negative int that Spark's hash partitioner
-    sends to partition j, from its own pmod(hash(i), n) over an inline
-    table (evaluated on the driver, no job)."""
+    sends to partition j, from its own fixed-seed pmod(hash(i), n) over
+    an inline table on the active session (evaluated on the driver, no
+    job). The ids depend on n alone, so the memo is keyed on n and holds
+    no session."""
+    spark = SparkSession.active()
     k = 8 * n
     while True:
         values = ", ".join(f"({i})" for i in range(k))
@@ -160,9 +163,8 @@ def bucketed_state(
     key, carried = names[0], names[1:]
     dtypes = {n: _PANDAS_DTYPES[t] for n, t in fields}
     horizon_us = None if horizon is None else pd.Timedelta(horizon).value // 1_000
-    spark = keyed.sparkSession
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    group_ids = _group_ids(spark, parts)
+    parts = int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    group_ids = _group_ids(parts)
     ids = F.array(*(F.lit(i) for i in group_ids))
 
     def _run(group, pdf_iter, state: GroupState):

@@ -6,7 +6,11 @@ tests/test_oracle.py::test_oracle_match_is_conf_invariant.
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
+
+from conftest import _canon_frame
 
 from projektdataengineering_spark.queries import load_registry
 from projektdataengineering_spark.streaming import scoped_conf
@@ -43,3 +47,30 @@ def test_result_is_invariant_to_input_split_size(name, spark, sf_dir):
     with scoped_conf(spark, {"spark.sql.files.maxPartitionBytes": "65536"}):
         resplit = _canon(qd.fn(spark, sf_dir))
     assert base == resplit, f"{name}: result depends on input split size"
+
+
+# Order independence: a result must not depend on memo state, that is on
+# what ran before it in the session (session memos, persisted artifacts,
+# registered sources). Selection rule: the registry sorted by name, every
+# 20th name starting with the first — 14 of the 265. Frozen here so the
+# set does not drift as queries are added; a listed name that leaves the
+# registry fails the test.
+_ORDER_SUBSET = [
+    "agg_approx_distinct", "agg_product_profit", "dedup_stream_index_append",
+    "join_fuzzy_levenshtein", "multimodal_features", "pipeline_corpus_delta",
+    "pipeline_file_skipping", "pipeline_minhash_pairs_portable",
+    "pipeline_snapshot_diff", "scalar_bitwise", "set_union_all",
+    "sort_limit_desc", "stream_stream_left_join", "window_lag_lead",
+]
+
+
+def _result_hash(df) -> str:
+    return hashlib.sha256(repr(_canon_frame(df.toPandas())).encode()).hexdigest()
+
+
+def test_results_do_not_depend_on_query_order(spark, sf_dir):
+    """The subset run forward and then reversed in one session gives every
+    query the same canonical result hash in both orders."""
+    forward = {n: _result_hash(REGISTRY[n].fn(spark, sf_dir)) for n in _ORDER_SUBSET}
+    backward = {n: _result_hash(REGISTRY[n].fn(spark, sf_dir)) for n in reversed(_ORDER_SUBSET)}
+    assert [n for n in _ORDER_SUBSET if backward[n] != forward[n]] == []

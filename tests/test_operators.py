@@ -993,7 +993,24 @@ def test_python_datasource_partition_contract(spark):
     assert probe["payload"] == hashlib.md5(b"123").hexdigest()
 
 
-def test_python_stream_reader_offset_progression(spark):
+def _assert_drains_once(spark, tmp_path, fmt, **options):
+    """Drain a 500-row synthetic stream source ``fmt`` in 300-row batches
+    through the scan_python_stream drain: every row arrives exactly once,
+    over at least two committed micro-batches."""
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.queries.formats import _drain_pystream
+    from projektdataengineering_spark.streaming import scoped_conf
+
+    sink = f"{fmt}_test_sink"
+    with scoped_conf(spark, {"spark.sql.streaming.checkpointLocation": str(tmp_path)}):
+        got = _drain_pystream(spark, fmt, sink, rows=500, batchrows=300, **options)
+    assert tuple(got.agg(F.sum("n_rows"), F.sum("id_checksum")).first()) == (500, sum(range(500)))
+    commits = [f for f in (tmp_path / sink / "commits").iterdir() if f.name.isdigit()]
+    assert len(commits) >= 2  # genuinely micro-batched
+
+
+def test_python_stream_reader_offset_progression(spark, tmp_path):
     """The streaming reader's offset contract, driven directly (the
     unit of the scan_python_stream query) and through a real two-batch
     streaming run: [start, end) ranges tile the table with no overlap,
@@ -1001,9 +1018,7 @@ def test_python_stream_reader_offset_progression(spark):
     replays a committed range byte-identically (the crash-replay
     contract)."""
     import hashlib
-    from pyspark.sql import functions as F
-    from projektdataengineering_spark.sources.pydatasource import (
-        SyntheticDocsStreamReader, register_synthetic_source)
+    from projektdataengineering_spark.sources.pydatasource import SyntheticDocsStreamReader
 
     r = SyntheticDocsStreamReader({"rows": "500", "batchrows": "300"})
     o0 = r.initialOffset()
@@ -1022,21 +1037,7 @@ def test_python_stream_reader_offset_progression(spark):
     assert replay[0][2] == hashlib.md5(b"300").hexdigest()
 
     # end-to-end: two micro-batches through the real streaming engine
-    register_synthetic_source(spark)
-    stream = (spark.readStream.format("synthdocs")
-              .option("rows", 500).option("batchrows", 300).load())
-    agg = stream.agg(F.count(F.lit(1)).alias("n"),
-                     F.sum("row_id").alias("checksum"))
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("pystream_test_sink").start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    q.awaitTermination()
-    got = spark.table("pystream_test_sink").collect()[0]
-    assert (got["n"], got["checksum"]) == (500, sum(range(500)))
-    assert len(q.recentProgress) >= 2  # genuinely micro-batched
+    _assert_drains_once(spark, tmp_path, "synthdocs")
 
 
 def test_python_pushdown_reader_contract(spark):
@@ -1088,7 +1089,7 @@ def test_python_pushdown_reader_contract(spark):
     assert len(pushed) == 50
 
 
-def test_python_stream_parallel_partition_contract(spark):
+def test_python_stream_parallel_partition_contract(spark, tmp_path):
     """The partition-parallel streaming reader (the firehose twin):
     latestOffset advances the HWM batch by batch and stops at the row
     cap; partitions() tiles each planned [start, end) range exactly
@@ -1096,9 +1097,7 @@ def test_python_stream_parallel_partition_contract(spark):
     its slice deterministically; and the end-to-end run delivers every
     row exactly once across batches AND tasks."""
     import hashlib
-    from pyspark.sql import functions as F
-    from projektdataengineering_spark.sources.pydatasource import (
-        SyntheticDocsFeedStreamReader, register_synthetic_source)
+    from projektdataengineering_spark.sources.pydatasource import SyntheticDocsFeedStreamReader
 
     r = SyntheticDocsFeedStreamReader(
         {"rows": "500", "batchrows": "300", "partitions": "4"})
@@ -1118,22 +1117,7 @@ def test_python_stream_parallel_partition_contract(spark):
     assert [(p.lo, p.hi) for p in tail] == [
         (300, 350), (350, 400), (400, 450), (450, 500)]
 
-    register_synthetic_source(spark)
-    stream = (spark.readStream.format("synthdocsfeed")
-              .option("rows", 500).option("batchrows", 300)
-              .option("partitions", 4).load())
-    agg = stream.agg(F.count(F.lit(1)).alias("n"),
-                     F.sum("row_id").alias("checksum"))
-    q = (agg.writeStream.outputMode("complete").format("memory")
-         .queryName("pystream_par_test_sink").start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    q.awaitTermination()
-    got = spark.table("pystream_par_test_sink").collect()[0]
-    assert (got["n"], got["checksum"]) == (500, sum(range(500)))
-    assert len(q.recentProgress) >= 2  # genuinely micro-batched
+    _assert_drains_once(spark, tmp_path, "synthdocsfeed", partitions=4)
 
 
 def test_hll_sketch_union_is_batching_independent(spark, sf_dir):

@@ -48,12 +48,29 @@ def test_frame_mismatch_reports_each_kind():
     assert why is not None and why.startswith("1 mismatching rows; first 3: [(1, ")
 
 
+def _session_state(spark):
+    """What a query must leave as it found it: the temp view names (from
+    SHOW TABLES, not the much slower catalog.listTables), the session
+    confs and the active streams."""
+    return {
+        "temp views": {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary},
+        "confs": set(spark.conf.getAll.items()),
+        "active streams": {str(q.id) for q in spark.streams.active},
+    }
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_match(name, spark, duck, sf_dir):
+    """Spark's result equals the oracle's, and running the query leaves
+    the session as it found it."""
     qd = REGISTRY[name]
+    before = _session_state(spark)
     spark_pdf = qd.fn(spark, sf_dir).toPandas()
+    after = _session_state(spark)
     oracle_pdf = duck.execute(qd.oracle).df()
     assert_frames_match(spark_pdf, oracle_pdf, name)
+    for part, was in before.items():
+        assert after[part] == was, f"{name} changed the session's {part}: {sorted(was ^ after[part])}"
 
 
 @pytest.mark.parametrize("name", CONF_INVARIANT_QUERIES)

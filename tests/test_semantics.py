@@ -166,3 +166,23 @@ def test_nanos_events_take_the_long_branch(spark, tmp_path, tz):
             r["event_id"] for r in later.collect()
         ) == [i for i, v in enumerate(ns) if v // 1000 > h_us] == [9, 10, 11]
         assert f"GreaterThan(ts,{h_us * 1000 + 999})" in explain_string(since)
+
+
+def test_events_readers_leave_nanos_as_long_set(spark, sf_dir):
+    """The engine's one intended session change (catalog.py docstring):
+    each events reader sets ``spark.sql.legacy.parquet.nanosAsLong=true``
+    on the caller's session and leaves it set, since the executors of a
+    TIMESTAMP(NANOS) scan read the file after the reader has returned."""
+    from projektdataengineering_spark.catalog import load_events_since, load_table
+    from projektdataengineering_spark.streaming import open_event_stream, scoped_conf
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    readers = {
+        "load_table": lambda: load_table(spark, sf_dir, "events"),
+        "load_events_since": lambda: load_events_since(spark, sf_dir, None),
+        "open_event_stream": lambda: open_event_stream(spark, sf_dir),
+    }
+    for name, read in readers.items():
+        with scoped_conf(spark, {key: "false"}):
+            read()
+            assert spark.conf.get(key) == "true", name

@@ -12,6 +12,7 @@ from projektdataengineering_spark.catalog import load_table
 from projektdataengineering_spark.streaming import (
     open_event_stream,
     run_to_memory_sink,
+    scoped_conf,
     session_windows,
     sliding_avg,
     tumbling_counts,
@@ -41,6 +42,12 @@ def _state_partitions(spark, n, key, keys):
             "the state partition count must separate the test keys"
         )
     return stream_state_partitions(spark, n)
+
+
+def _checkpoint_root(spark, root):
+    """Scope the session's root checkpoint location to ``root``: a drained
+    stream named ``q`` then keeps its checkpoint at ``root / q``."""
+    return scoped_conf(spark, {"spark.sql.streaming.checkpointLocation": str(root)})
 
 
 def _ordered_batches(src, frames):
@@ -75,15 +82,13 @@ def _drain_batches(df, checkpoint):
 def test_stream_tumbling_matches_batch(spark, sf_dir):
     batch = tumbling_counts(load_table(spark, sf_dir, "events"))
     stream = tumbling_counts(open_event_stream(spark, sf_dir))
-    run_to_memory_sink(stream, "tumbling_out", output_mode="complete")
-    assert _canon(spark.table("tumbling_out")) == _canon(batch)
+    assert _canon(run_to_memory_sink(stream, "tumbling_out", output_mode="complete")) == _canon(batch)
 
 
 def test_stream_sliding_matches_batch(spark, sf_dir):
     batch = sliding_avg(load_table(spark, sf_dir, "events"))
     stream = sliding_avg(open_event_stream(spark, sf_dir))
-    run_to_memory_sink(stream, "sliding_out", output_mode="complete")
-    assert _canon(spark.table("sliding_out")) == _canon(batch)
+    assert _canon(run_to_memory_sink(stream, "sliding_out", output_mode="complete")) == _canon(batch)
 
 
 def test_stream_session_windows_with_watermark(spark, sf_dir):
@@ -94,8 +99,7 @@ def test_stream_session_windows_with_watermark(spark, sf_dir):
     stream = session_windows(
         open_event_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     )
-    run_to_memory_sink(stream, "session_out", output_mode="append")
-    emitted = set(_canon(spark.table("session_out")))
+    emitted = set(_canon(run_to_memory_sink(stream, "session_out", output_mode="append")))
     assert emitted, "watermarked session stream emitted nothing"
     assert emitted <= batch, "streaming emitted a session batch mode doesn't have"
 
@@ -143,19 +147,9 @@ def test_stateful_dedup_first_wins(spark, sf_dir, tmp_path):
         .parquet(str(src))
     )
     out = dedup_stream_first_wins(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
     # update-mode memory sink appends each micro-batch's emissions; the
     # final state per key is the row with the highest drop count
-    rows = spark.table("dedup_out").collect()
+    rows = run_to_memory_sink(out, "dedup_out", output_mode="update").collect()
     assert len(rows) == 4, rows  # (a,b) emitted in both micro-batches
     final = {}
     for r in rows:
@@ -225,8 +219,8 @@ def test_stateful_dedup_horizon_evicts_and_reemits(spark, sf_dir, tmp_path):
     the key has no data), and its next occurrence re-emits as a fresh
     first (n_dropped restarts at 0). Keys active within the horizon
     keep their state across the same boundary. The state-store row
-    counts come straight from the stateful operator's progress
-    metrics — the MEASURED state bound."""
+    counts are read back from the checkpoint's state store after each
+    committed micro-batch — the MEASURED state bound."""
     import os
     import time
 
@@ -264,18 +258,15 @@ def test_stateful_dedup_horizon_evicts_and_reemits(spark, sf_dir, tmp_path):
         .withWatermark("ts", "1 second")
     )
     out = dedup_stream_first_wins(stream, horizon="2 days")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("dedup_horizon_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with _checkpoint_root(spark, tmp_path):
+        rows = run_to_memory_sink(out, "dedup_horizon_out", output_mode="update").collect()
 
+    # the state store's row count after each committed micro-batch
+    ckpt = tmp_path / "dedup_horizon_out"
+    committed = sorted(int(f.name) for f in (ckpt / "commits").iterdir() if f.name.isdigit())
     state_rows = [
-        p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress
+        spark.read.format("statestore").option("batchId", b).load(str(ckpt)).count()
+        for b in committed
     ]
     # 5 state creations happen over the run (a, b, c, d, b-again) but
     # they never all coexist: b is evicted in batch 3, so the store
@@ -283,7 +274,6 @@ def test_stateful_dedup_horizon_evicts_and_reemits(spark, sf_dir, tmp_path):
     # may append a trailing empty batch) and peaks at 4.
     assert state_rows[:4] == [2, 3, 3, 4] and max(state_rows) == 4, state_rows
 
-    rows = spark.table("dedup_horizon_out").collect()
     b_rows = {(r["first_ts"], r["n_dropped"]) for r in rows if r["key"] == "b"}
     # re-emission as a FIRST after eviction: the post-horizon arrival
     # carries its own ts and n_dropped=0 (surviving state would have
@@ -330,18 +320,9 @@ def test_stream_heavy_hitters_mg_reduce_across_batches(spark, tmp_path):
         .parquet(str(src))
         .selectExpr("CAST(bucket AS INT) AS bucket", "term")
     )
-    q = (
-        heavy_hitters_stream(stream, k=k)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("mg_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_mg"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = spark.table("mg_stream_out").collect()
+    rows = run_to_memory_sink(
+        heavy_hitters_stream(stream, k=k), "mg_stream_out", output_mode="update"
+    ).collect()
     max_bno = max(r["batch_no"] for r in rows)
     assert max_bno == 2, sorted({r["batch_no"] for r in rows})
     final = {r["term"]: r["est"] for r in rows if r["batch_no"] == max_bno}
@@ -404,17 +385,7 @@ def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path):
         .withWatermark("ts", "30 days")
     )
     out = dedup_stream_first_wins(stream, horizon="2 days")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("dedup_clamp_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_clamp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = spark.table("dedup_clamp_out").collect()
+    rows = run_to_memory_sink(out, "dedup_clamp_out", output_mode="update").collect()
     a_rows = {(r["first_ts"], r["n_dropped"]) for r in rows if r["key"] == "a"}
     # every a-emission keeps the original first; the b5 arrival counts
     # as the 2nd dropped duplicate — an eviction bug would surface as a
@@ -467,18 +438,9 @@ def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        cdc_apply_stream(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("cdc_stream_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_cdc"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    out = spark.table("cdc_stream_out").toPandas()
+    out = run_to_memory_sink(
+        cdc_apply_stream(stream), "cdc_stream_out", output_mode="update"
+    ).toPandas()
     final = {
         r["key"]: r
         for _, r in out.sort_values("n_seen").iterrows()  # last update wins
@@ -549,7 +511,7 @@ def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path, n):
     )
     stored = spark.read.format("statestore").load(str(tmp_path / "ckpt_bucketed"))
     assert sorted(map(tuple, stored.select("key.bucket", "partition_id").collect())) == sorted(
-        {(_group_ids(spark, n)[p], p) for (p,) in parts.collect()}
+        {(_group_ids(n)[p], p) for (p,) in parts.collect()}
     )
     # (key, n_tombstones, alive, last_event_type, gen_events, n_seen):
     # u2 dead at the batch-1 boundary, then a fresh 2-event generation
@@ -657,18 +619,8 @@ def test_attribution_stream_carries_touch_state_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        attribution_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("attrib_out")
-        .option("checkpointLocation", str(tmp_path / "attrib_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = {r["event_id"]: r for r in spark.table("attrib_out").collect()}
+    sink = run_to_memory_sink(attribution_stream(stream), "attrib_out", output_mode="append")
+    rows = {r["event_id"]: r for r in sink.collect()}
     assert set(rows) == {12, 20, 22}  # one credit per purchase, exactly once
     # user 2 purchased with no prior touch → direct, cents rounds half-up
     assert rows[12]["last_ch"] == "direct" and rows[12]["first_ch"] == "direct"
@@ -729,17 +681,7 @@ def test_drop_duplicates_within_watermark_evicts_and_resurrects(spark, tmp_path)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["key"])
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ddww_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = spark.table("ddww_out").collect()
+    rows = run_to_memory_sink(stream, "ddww_out", output_mode="append").collect()
     k_ts = sorted(str(r["ts"]) for r in rows if r["key"] == "k")
     # exactly two emissions of k: the original first, and the
     # post-eviction resurrection — the 00:10 and 00:20 duplicates died
@@ -805,20 +747,12 @@ def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
             .parquet(str(src))
             .withWatermark("ts", "1 second")
         )
-        ckpt = tmp_path / f"ckpt_bucketed_{n}"
-        with _state_partitions(spark, n, "key", ["a", "b", "c"]):
+        name = f"dedup_bucketed_out_{n}"
+        with _state_partitions(spark, n, "key", ["a", "b", "c"]), _checkpoint_root(spark, tmp_path):
             out = dedup_stream_first_wins_bucketed(stream, horizon="2 days")
-            q = (
-                out.writeStream.outputMode("update")
-                .format("memory")
-                .queryName(f"dedup_bucketed_out_{n}")
-                .option("checkpointLocation", str(ckpt))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            rows = run_to_memory_sink(out, name, output_mode="update").collect()
 
-        rows = spark.table(f"dedup_bucketed_out_{n}").collect()
+        ckpt = tmp_path / name
         by_key = {}
         for r in rows:
             by_key.setdefault(r["key"], set()).add(
@@ -893,20 +827,11 @@ def test_session_window_merges_across_micro_batches(spark, tmp_path):
         .parquet(str(src))
     )
     with stream_state_partitions(spark):
-        q = (
-            session_windows(stream, "30 minutes")
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("sess_merge_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        sink = run_to_memory_sink(session_windows(stream, "30 minutes"), "sess_merge_out")
     # complete mode: the table is the final state
     rows = {
         (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.table("sess_merge_out").collect()
+        for r in sink.collect()
     }
     assert rows == {
         (1, pd.Timestamp("2024-01-01 00:00:00"),
@@ -970,12 +895,17 @@ def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path, n):
 @pytest.mark.parametrize("n", [1, 2, 3, 4, 8, 32, 200])
 def test_state_group_ids_land_one_per_partition(spark, n):
     """Spark's hash partitioner over the n group ids puts exactly one id
-    on each partition: every state task folds one group per batch."""
+    on each partition: every state task folds one group per batch. The
+    ids depend on n alone, and functools.cache keys a memo on exactly the
+    call's arguments, so the memo holds no session."""
+    import inspect
+
     from pyspark.sql import functions as F
 
     from projektdataengineering_spark.streaming.stateful import _group_ids
 
-    ids = _group_ids(spark, n)
+    assert list(inspect.signature(_group_ids).parameters) == ["n"]
+    ids = _group_ids(n)
     got = (
         spark.createDataFrame([(i,) for i in ids], "bucket int")
         .repartition(n, "bucket")
@@ -1059,8 +989,6 @@ def test_scoped_conf_restores_or_unsets(spark):
     """scoped_conf: inside the block every conf holds its scoped value;
     on exit — also when the block raises — a key that had a value gets
     it back and a key that had none is unset again."""
-    from projektdataengineering_spark.streaming import scoped_conf
-
     had, fresh = "spark.pde.test.scopedHad", "spark.pde.test.scopedFresh"
     spark.conf.set(had, "7")
     try:
