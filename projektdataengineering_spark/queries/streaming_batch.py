@@ -213,8 +213,9 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Keyed state is one group of users per state partition
     (streaming/stateful.py bucketed_state: round-trip economics, eager
-    horizon sweep); tests/test_streaming.py pins its parity with the
-    per-key reference operator."""
+    horizon sweep). tests/test_streaming.py checks the fold after every
+    micro-batch of an ordered multi-file stream against this oracle
+    over the rows up to that batch."""
     from ..streaming import (
         open_event_stream,
         run_to_memory_sink,
@@ -375,9 +376,12 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver proves, not just runs). The sink's last update per key is
     extracted with max_by(n_events).
 
-    Ordering bound documented at streaming/stateful.py:make_ewma_fold:
-    within-batch order is pinned by sort; cross-batch order is arrival
-    order — correct for time-ordered landing zones, and exact here."""
+    Ordering bound documented at
+    streaming/stateful.py:make_ewma_fold_bucketed: within-batch order is
+    pinned by sort; cross-batch order is arrival order — correct for
+    time-ordered landing zones, and exact here. tests/test_streaming.py
+    checks the fold after every micro-batch of an ordered multi-file
+    stream against this oracle over the rows up to that batch."""
     from ..streaming import (
         open_event_stream,
         run_to_memory_sink,
@@ -386,7 +390,7 @@ def stream_ewma_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import ewma_stream_bucketed
 
     # one state group per state partition (stateful.bucketed_state); the
-    # fold runs ewma_stream's identical scalar IEEE recurrence per user
+    # fold runs the batch operator's scalar IEEE recurrence per user
     keyed = open_event_stream(spark, sf_dir).select("user_id", "ts", "event_id", "value")
     with stream_state_partitions(spark):
         sink = run_to_memory_sink(
@@ -521,7 +525,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog apply as a REAL streaming query with a custom
-    per-key state machine (streaming/stateful.py:cdc_apply_stream):
+    per-key state machine (streaming/stateful.py:cdc_apply_stream_bucketed):
     'error' tombstones close a generation, upserts extend it, and the
     keyed state carries O(1) scalars per key — the continuous form of
     the batch pipeline_cdc_apply (same tombstone convention, same
@@ -537,8 +541,10 @@ def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality holds under ordered replay (availableNow over the
     bounded fixture — one batch, rows sorted in the fold); the
     multi-batch state-machine path (generation counts carried across
-    ordered batches, tombstone-at-boundary) is pinned in
-    tests/test_streaming.py with a file-split ordered stream.
+    ordered batches, tombstone-at-boundary) is checked in
+    tests/test_streaming.py after every micro-batch of an ordered
+    multi-file stream against this oracle over the rows up to that
+    batch.
     Production shape: watermarked input + 365-day idle horizon so
     state stays ∝ active keys (the dedup-horizon contract, max-ts
     anchored monotone eviction)."""
@@ -550,11 +556,11 @@ def stream_cdc_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..streaming.stateful import cdc_apply_stream_bucketed
 
-    # One state group per state partition (stateful.bucketed_state;
-    # cdc_apply_stream is the per-key reference). The final no-data
-    # batch is scoped off: the 365-day horizon can fire zero timeouts
-    # inside the fixture span, so that batch re-commits unchanged state
-    # and emits nothing (profiled: rows=0, ~1.9 s of plan+store-commit).
+    # One state group per state partition (stateful.bucketed_state).
+    # The final no-data batch is scoped off: the 365-day horizon can
+    # fire zero timeouts inside the fixture span, so that batch
+    # re-commits unchanged state and emits nothing (profiled: rows=0,
+    # ~1.9 s of plan+store-commit).
     keyed = (
         open_event_stream(spark, sf_dir)
         .select(

@@ -146,7 +146,11 @@ def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     but row-oriented output; the oracle-equivalent built-in
     (posexplode over slice) is what production uses on the hot path
     (see pipeline_chunk_overlap). Output is deterministic per row, so
-    partitioning cannot reorder semantics."""
+    partitioning cannot reorder semantics.
+
+    The temporary function lives only while ``spark.sql`` resolves the
+    query: it is dropped before the return, and the returned frame
+    still runs, so no function outlives the call."""
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="doc_id bigint, chunk_idx int, chunk string, n_tokens int")
@@ -158,7 +162,11 @@ def udtf_python_native(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield doc_id, k // width, " ".join(piece), len(piece)
 
     spark.udtf.register("chunk_doc_udtf", ChunkDoc)
-    return spark.sql(
-        "SELECT c.* FROM {docs} d, LATERAL chunk_doc_udtf(d.doc_id, d.text, 10) c",
-        docs=load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-    )
+    try:
+        return spark.sql(
+            "SELECT c.* FROM {docs} d, LATERAL chunk_doc_udtf(d.doc_id, d.text, 10) c",
+            docs=load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        )
+    finally:
+        # the returned plan holds the resolved UDTF; the name may go
+        spark.sql("DROP TEMPORARY FUNCTION chunk_doc_udtf")

@@ -1,26 +1,25 @@
-"""Custom stateful streaming operator via applyInPandasWithState —
-the engine's pattern for semantics Structured Streaming's built-in
-windows can't express.
+"""Keyed stateful streaming folds via applyInPandasWithState — the
+engine's pattern for semantics Structured Streaming's built-in
+operators can't express.
 
-The operator here is *stateful cross-batch dedup with first-wins
-semantics*: emit each key's FIRST-seen row, remember seen keys, drop
-every later duplicate (optionally with a state TTL so the key set
-doesn't grow unboundedly). This is the streaming form of the batch
-``dedup_incremental`` anti-join (operators/incremental.py O4 fix):
-instead of re-joining each batch against an ever-growing warehouse,
-the "existing keys" side lives in Spark's keyed state store.
+Every high-cardinality keyed fold runs through ONE combinator,
+:func:`bucketed_state`, and supplies only its vectorized fold body:
+cross-batch first-wins dedup (the streaming form of the batch
+``dedup_incremental`` anti-join, operators/incremental.py O4 fix: the
+"existing keys" side lives in Spark's keyed state store instead of
+being re-joined from the warehouse every batch), CDC apply, EWMA,
+conversion attribution and the corpus-delta first-wins kernel. The
+streaming Misra-Gries summary keeps one fixed-width state per term
+bucket instead (:func:`heavy_hitters_stream`).
 
 Scale notes: state is partitioned by key across executors exactly like
-a shuffle — no single-node key set. State size is bounded by the TTL
-(processing-time here, to keep the operator deterministic under replay
-give keys an event-time watermark instead). Arrow batches flow per key
-group; the per-group pandas work is O(rows in batch).
+a shuffle — no single-node key set. With a horizon, state is bounded by
+the keys active inside one horizon: the eager event-time sweep below
+removes a key idle past it, deterministically under replay.
 
-Every high-cardinality keyed fold (dedup, CDC, EWMA, attribution and
-the corpus-delta first-wins kernel) runs through ONE combinator,
-:func:`bucketed_state`; each operator supplies only its vectorized fold
-body. The per-key operators stay as the semantics references the tests
-compare against.
+tests/test_streaming.py checks each registered fold after every
+micro-batch of an ordered multi-file stream against its query's DuckDB
+oracle over the rows up to that batch.
 """
 
 from __future__ import annotations
@@ -60,14 +59,15 @@ from ..operators.sketches import mg_add
 # scales with n. (The per-TASK Python worker cost is the worker daemon's,
 # worker_daemon.py.)
 #
-# Horizon semantics are the EAGER form of the per-key operators' lazy
-# Spark timeout: expired keys (max_us + horizon < watermark) are swept
-# at the START of every group invocation, before the new rows fold, so a
-# re-arrival after expiry is ALWAYS a fresh history. (Spark's per-key
-# timeout fires only in a batch where the key has no data; the eager
-# sweep is deterministic under replay, the stricter contract.) Idle
-# groups are swept by a group-level event-time timeout armed at the
-# group's earliest key deadline.
+# Horizon semantics: a key expires once the watermark passes its max_us
+# + horizon, max_us being the largest event time EVER seen for the key
+# (a late, within-watermark batch of older rows never moves a deadline
+# backward). Expired keys are swept EAGERLY at the START of every group
+# invocation, before the new rows fold, so a re-arrival after expiry is
+# ALWAYS a fresh history, also in the very batch whose watermark expired
+# it. The sweep reads only the watermark and the stored state, so it is
+# deterministic under replay. Idle groups are swept by a group-level
+# event-time timeout armed at the group's earliest key deadline.
 
 # Kept only because perfbench/etl.py imports it to build a bucket column
 # (which bucketed_state replaces); remove with the next benchmark change.
@@ -237,105 +237,11 @@ def bucketed_state(
     )
 
 
-# Output/state schemas for the dedup operator over (key, ts, payload).
-# max_ts = the largest event time EVER seen for the key: the eviction
-# deadline anchors to it, not to the current batch's max, so an
-# out-of-order (within-watermark) batch of older rows can never move
-# the timeout backward and evict a key before last-occurrence+horizon.
+# First-wins dedup over (key, ts): each key's first-seen event time and
+# the count of every later row.
 DEDUP_OUTPUT_SCHEMA = "key string, first_ts timestamp, n_dropped long"
-DEDUP_STATE_SCHEMA = (
-    "seen boolean, first_ts timestamp, n_dropped long, max_ts timestamp"
-)
 
 
-def _make_dedup_first_wins(horizon: "pd.Timedelta | None"):
-    """Factory for the first-wins fold. With a ``horizon`` the key's
-    state carries an event-time timeout of (last-seen ts + horizon):
-    once the stream's watermark passes it, Spark calls the fold with
-    ``hasTimedOut`` and the state is REMOVED — the eviction that keeps
-    the seen-key set bounded by the keys active inside one horizon
-    instead of growing forever (the 100-TB contract: state size ∝
-    active keys × horizon, not corpus lifetime).
-
-    Dedup-horizon semantics (document to consumers): a duplicate is
-    suppressed only while its key stays warm — i.e. arrives within
-    ``horizon`` of the key's LAST occurrence (idle-anchored, so an
-    active key never expires mid-activity). A re-arrival after the
-    horizon is re-emitted as a fresh first — the standard bounded-
-    horizon dedup contract (exact-once only within the horizon)."""
-
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            # watermark passed last_seen + horizon with no new rows:
-            # evict — the key's next occurrence starts a fresh "first"
-            state.remove()
-            return iter(())
-        n_new = 0
-        first_ts = None
-        last_ts = None
-        for pdf in pdf_iter:
-            if len(pdf) == 0:
-                continue
-            batch_min = pdf["ts"].min()
-            batch_max = pdf["ts"].max()
-            first_ts = batch_min if first_ts is None else min(first_ts, batch_min)
-            last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-            n_new += len(pdf)
-        if n_new == 0:
-            return iter(())
-
-        if state.exists:
-            seen, prev_first, dropped, prev_max = state.get
-            # idle-anchor on the max event time ever seen: late
-            # (within-watermark) batches of older rows must not shrink
-            # the eviction horizon
-            max_ts = max(pd.Timestamp(prev_max), last_ts)
-            state.update((True, prev_first, dropped + n_new, max_ts))
-            out = pd.DataFrame(
-                {"key": [key[0]], "first_ts": [prev_first], "n_dropped": [dropped + n_new]}
-            )
-        else:
-            max_ts = last_ts
-            state.update((True, first_ts, n_new - 1, max_ts))
-            out = pd.DataFrame(
-                {"key": [key[0]], "first_ts": [first_ts], "n_dropped": [n_new - 1]}
-            )
-        if horizon is not None:
-            state.setTimeoutTimestamp(int((max_ts + horizon).value // 1_000_000))
-        return iter((out,))
-
-    return _fold
-
-
-def dedup_stream_first_wins(keyed: DataFrame, horizon: str | None = None) -> DataFrame:
-    """Apply the stateful first-wins dedup to a streaming DataFrame with
-    columns (key string, ts timestamp, ...). Output mode: update.
-
-    ``horizon`` (e.g. "30 days", pandas-Timedelta syntax) bounds state:
-    keys idle past it are evicted at the watermark (the input stream
-    MUST carry ``withWatermark`` on ts) and a later re-arrival is
-    re-emitted as a fresh first — see _make_dedup_first_wins for the
-    exact dedup-horizon contract. Without it state never expires
-    (bounded-replay / test use only — never run an unbounded production
-    stream without a horizon)."""
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_dedup_first_wins(pd.Timedelta(horizon) if horizon else None),
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=DEDUP_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if horizon
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-# Bucketed first-wins dedup: identical emissions to
-# dedup_stream_first_wins while no horizon expiry fires (always, when
-# horizon=None). Where a deadline passes, bucketed_state's eager sweep
-# makes a key re-arriving in the batch its deadline expired a fresh
-# first, where the per-key operator's lazy timeout counts a duplicate.
 def _dedup_fold(batch: pd.DataFrame, st: pd.DataFrame):
     g = pd.Series(to_epoch_us(batch["ts"])).groupby(batch["key"])
     first = g.min()
@@ -360,13 +266,25 @@ def _dedup_fold(batch: pd.DataFrame, st: pd.DataFrame):
 def dedup_stream_first_wins_bucketed(
     keyed: DataFrame, horizon: str | None = None
 ) -> DataFrame:
-    """Bucketed form of dedup_stream_first_wins for high-cardinality
-    key spaces: input carries (key string, ts timestamp); state
-    granularity is one group per state partition (see bucketed_state
-    for the round-trip economics and the eager-sweep horizon contract).
-    Output schema and update-mode emissions are those of the per-key
-    operator — one (key, first_ts, n_dropped) row per touched key per
-    micro-batch."""
+    """Stateful first-wins dedup of a streaming DataFrame with columns
+    (key string, ts timestamp), one keyed-state group per state
+    partition (see bucketed_state). Output mode update: every key the
+    micro-batch touched emits one (key, first_ts, n_dropped) row, its
+    first-seen event time and the count of every later row. A key's
+    first is the minimum ts of the first batch it arrives in, so it is
+    the global MIN(ts) when batches arrive in event-time order.
+
+    ``horizon`` (pandas-Timedelta syntax, e.g. "30 days") bounds state;
+    the input must then carry ``withWatermark`` on ts. Dedup-horizon
+    contract: a duplicate is suppressed only while its key stays warm,
+    i.e. arrives within ``horizon`` of the key's LAST occurrence
+    (idle-anchored, so an active key never expires mid-activity). Once
+    the watermark passes last occurrence + horizon the key is swept
+    (bucketed_state's eager sweep), and its next arrival, also in that same micro-batch,
+    is re-emitted as a fresh first: exactly-once only within the
+    horizon, and state ∝ keys active within one horizon, not corpus
+    lifetime. Without a horizon state never expires (bounded replay
+    only)."""
     return bucketed_state(
         keyed,
         _dedup_fold,
@@ -379,58 +297,6 @@ def dedup_stream_first_wins_bucketed(
 # Stateful streaming EWMA: the cross-batch twin of the batch
 # pipeline_ewma_smooth recurrence (queries/timeseries.py).
 EWMA_OUTPUT_SCHEMA = "user_id long, n_events long, last_ewma double"
-EWMA_STATE_SCHEMA = "s double, n long"
-
-
-def make_ewma_fold(alpha: float):
-    """Factory for the per-key EWMA state function: state carries
-    (current smoothed value, rows seen); each micro-batch sorts its
-    rows by (ts, event_id) and folds them onto the carried state —
-    identical arithmetic to the batch operator, so on an in-order
-    stream the final state equals the batch fold exactly.
-
-    Ordering bound (same class as dedup_stream_first_wins's): WITHIN a
-    micro-batch the fold order is pinned by the sort; ACROSS batches
-    it is arrival order, correct for the append-in-time-order landing
-    zones the file source models (and exactly the batch result under
-    availableNow replay of a bounded fixture, where everything is one
-    batch). An out-of-order production stream would buffer rows per
-    watermark interval before folding."""
-
-    def _fold(key, pdf_iter, state: GroupState):
-        s, n = state.get if state.exists else (None, 0)
-        for pdf in pdf_iter:
-            # NULL values must not fold NaN into the state (it would
-            # poison every later EWMA step); dropping them keeps the
-            # fold aligned with the batch twin and the oracle's
-            # `WHERE value IS NOT NULL` (ADVICE r6).
-            pdf = pdf.dropna(subset=["value"])
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for x in pdf["value"]:
-                s = x if s is None else alpha * x + (1.0 - alpha) * s
-            n += len(pdf)
-        if s is None:
-            return iter(())
-        state.update((float(s), int(n)))
-        return iter(
-            (pd.DataFrame({"user_id": [key[0]], "n_events": [n], "last_ewma": [s]}),)
-        )
-
-    return _fold
-
-
-def ewma_stream(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
-    """Apply the stateful EWMA to a streaming DataFrame with columns
-    (user_id long, ts timestamp, event_id long, value double)."""
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        make_ewma_fold(alpha),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 # Streaming Misra-Gries heavy hitters: SKETCHES AS KEYED STATE. The
@@ -499,103 +365,10 @@ CDC_OUTPUT_SCHEMA = (
     "key string, n_tombstones long, alive boolean, "
     "last_event_type string, gen_events long, n_seen long"
 )
-CDC_STATE_SCHEMA = (
-    "n_tombstones long, gen_events long, last_event_type string, "
-    "alive boolean, n_seen long, max_ts timestamp"
-)
 
 
-def _make_cdc_apply(horizon: "pd.Timedelta | None"):
-    """Factory for the per-key CDC state machine
-    (the streaming form of queries/pipeline_ops.pipeline_cdc_apply):
-    'error' rows are DELETE tombstones that close the key's current
-    generation; every other row upserts into it. State carries
-    (tombstone count, live events in the open generation, last op,
-    alive, rows seen) — O(1) per key regardless of history length.
-
-    Ordering contract: rows WITHIN a micro-batch are sorted by
-    (ts, event_id) before folding (applyInPandasWithState gives no
-    intra-batch order); ACROSS batches the fold is a state machine,
-    so correctness requires batches to arrive in event order — the
-    replay/backfill situation (availableNow over a bounded landing
-    zone) where CDC apply must be deterministic, and the situation
-    the oracle equality certifies. A live out-of-order stream needs
-    the watermark small enough that reordering stays intra-batch.
-
-    Eviction mirrors the dedup horizon contract: a key idle past
-    ``horizon`` (anchored to the max event time ever seen — the
-    monotone clamp, never moved backward by late batches) is evicted
-    at the watermark; a later re-arrival restarts its history (fresh
-    generation/tombstone counts) — the bounded-horizon CDC contract:
-    state ∝ keys active within one horizon."""
-
-    def _fold(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return iter(())
-        parts = [pdf for pdf in pdf_iter if len(pdf)]
-        if not parts:
-            return iter(())
-        batch = pd.concat(parts).sort_values(["ts", "event_id"])
-        is_del = (batch["event_type"] == "error").to_numpy()
-        b_dels = int(is_del.sum())
-        if state.exists:
-            n_tomb, gen_events, last_et, alive, n_seen, prev_max = state.get
-            max_ts = max(pd.Timestamp(prev_max), batch["ts"].max())
-        else:
-            n_tomb, gen_events, n_seen = 0, 0, 0
-            max_ts = batch["ts"].max()
-        if b_dels:
-            # live rows after the batch's last tombstone open the new
-            # generation; everything before belongs to closed ones
-            last_del_pos = int(is_del.nonzero()[0][-1])
-            gen_events = int((~is_del[last_del_pos + 1 :]).sum())
-        else:
-            gen_events = gen_events + len(batch)
-        n_tomb += b_dels
-        n_seen += len(batch)
-        last_et = str(batch["event_type"].iloc[-1])
-        alive = not bool(is_del[-1])
-        state.update((n_tomb, gen_events, last_et, alive, n_seen, max_ts))
-        if horizon is not None:
-            state.setTimeoutTimestamp(int((max_ts + horizon).value // 1_000_000))
-        out = pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_tombstones": [n_tomb],
-                "alive": [alive],
-                "last_event_type": [last_et],
-                "gen_events": [gen_events],
-                "n_seen": [n_seen],
-            }
-        )
-        return iter((out,))
-
-    return _fold
-
-
-def cdc_apply_stream(keyed: DataFrame, horizon: str | None = None) -> DataFrame:
-    """Apply the stateful CDC fold to a streaming DataFrame with columns
-    (key string, ts timestamp, event_id long, event_type string).
-    Output mode: update — the sink's last update per key is the final
-    materialized state (n_seen is monotone, so max_by(·, n_seen)
-    extracts it deterministically)."""
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_cdc_apply(pd.Timedelta(horizon) if horizon else None),
-        outputStructType=CDC_OUTPUT_SCHEMA,
-        stateStructType=CDC_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if horizon
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-# Bucketed CDC apply: the per-key state machine of cdc_apply_stream —
-# tombstones close generations, upserts extend them, O(1) scalars per
-# key — run through bucketed_state (the sf0.1 profile put the per-key
+# Tombstones close generations, upserts extend them, O(1) scalars per
+# key, run through bucketed_state (the sf0.1 profile put a group-per-key
 # form's whole cost in 1500 per-group Arrow round-trips).
 def _cdc_fold(batch: pd.DataFrame, st: pd.DataFrame):
     keys, order, bounds = _key_runs(batch, "key")
@@ -627,13 +400,29 @@ def _cdc_fold(batch: pd.DataFrame, st: pd.DataFrame):
 def cdc_apply_stream_bucketed(
     keyed: DataFrame, horizon: str | None = None
 ) -> DataFrame:
-    """Bucketed form of cdc_apply_stream for high-cardinality key
-    spaces: input carries (key string, ts timestamp, event_id long,
-    event_type string); state granularity is one group per state
-    partition (see bucketed_state for the round-trip economics and the
-    eager-sweep horizon contract). Output schema and update-mode
-    emissions are those of the per-key operator — one row per touched
-    key per micro-batch, same state-machine values."""
+    """CDC changelog apply (the streaming form of
+    queries/pipeline_ops.pipeline_cdc_apply) over a streaming DataFrame
+    with columns (key string, ts timestamp, event_id long, event_type
+    string), one keyed-state group per state partition (see
+    bucketed_state). 'error' rows are DELETE tombstones that close the
+    key's current generation; every other row upserts into it. State
+    per key is O(1) whatever its history: (tombstone count, live events
+    in the open generation, last op, alive, rows seen). Output mode
+    update: every key the micro-batch touched emits one row of its
+    current state; n_seen is monotone, so max_by(·, n_seen) over the
+    sink extracts the final state.
+
+    Ordering contract: rows WITHIN a micro-batch fold in (ts, event_id)
+    order; ACROSS batches the fold is a state machine, so correctness
+    requires batches to arrive in event order — the replay/backfill
+    situation (availableNow over a bounded landing zone) where CDC
+    apply must be deterministic. A live out-of-order stream needs the
+    watermark small enough that reordering stays intra-batch.
+
+    ``horizon`` follows the dedup-horizon contract
+    (dedup_stream_first_wins_bucketed): a key idle past it is swept and
+    a later re-arrival restarts its history, with fresh generation and
+    tombstone counts."""
     return bucketed_state(
         keyed,
         _cdc_fold,
@@ -647,17 +436,23 @@ def cdc_apply_stream_bucketed(
 
 
 def make_ewma_fold_bucketed(alpha: float):
-    """Bucketed form of make_ewma_fold: the fold sorts the group's rows
-    by (user_id, ts, event_id) and walks each user's slice with the
-    IDENTICAL scalar IEEE recurrence — same arithmetic, same
-    within-batch ordering contract (globally sorted is strictly
-    stronger than the per-key fold's per-chunk sort), so the state per
-    user is bit-equal to the per-key operator's. Like the per-key fold,
-    every user with rows in the batch emits its carried state, even
-    when all of those rows are NULL."""
+    """The EWMA fold: state carries each user's (smoothed value s, rows
+    folded n). The fold sorts the group's rows by (user_id, ts,
+    event_id) and walks each user's slice with the batch operator's
+    scalar IEEE recurrence s = alpha·x + (1 − alpha)·s, so on an
+    in-order stream the state equals the batch fold exactly. NULL
+    values never fold: a NaN would poison every later step, and the
+    oracle reads ``WHERE value IS NOT NULL``.
+
+    Ordering contract: WITHIN a micro-batch the fold order is pinned by
+    the sort; ACROSS batches it is arrival order, correct for the
+    append-in-time-order landing zones the file source models (and
+    exactly the batch result under availableNow replay of a bounded
+    fixture). An out-of-order production stream would buffer rows per
+    watermark interval before folding."""
 
     def _fold(batch: pd.DataFrame, st: pd.DataFrame):
-        # NULL values never fold (the per-key fold's rule, ADVICE r6)
+        # NULL values never fold (ADVICE r6)
         live = batch[batch["value"].notna()]
         users, order, bounds = _key_runs(live, "user_id")
         vals = live["value"].to_numpy()[order]
@@ -683,9 +478,13 @@ def make_ewma_fold_bucketed(alpha: float):
 
 
 def ewma_stream_bucketed(keyed: DataFrame, alpha: float = 0.25) -> DataFrame:
-    """Apply the bucketed stateful EWMA to a streaming DataFrame with
-    columns (user_id long, ts timestamp, event_id long, value double).
-    Emissions per touched user are ewma_stream's."""
+    """Apply the stateful EWMA (make_ewma_fold_bucketed) to a streaming
+    DataFrame with columns (user_id long, ts timestamp, event_id long,
+    value double), one keyed-state group per state partition (see
+    bucketed_state). Output mode update: every user with rows in the
+    micro-batch emits (user_id, n_events, last_ewma) from its state.
+    A user whose rows in the batch are all NULL re-emits its carried
+    state unchanged; a user with no non-NULL value yet emits nothing."""
     return bucketed_state(
         keyed,
         make_ewma_fold_bucketed(alpha),
@@ -719,8 +518,8 @@ def _attribution_fold(batch: pd.DataFrame, st: pd.DataFrame):
     column → Arrow null), so the sink's SUM skips it exactly as SQL
     does.
 
-    Ordering bound: the make_ewma_fold contract — within-batch order
-    pinned by the sort, cross-batch order is arrival order; exact
+    Ordering bound: the make_ewma_fold_bucketed contract — within-batch
+    order pinned by the sort, cross-batch order is arrival order; exact
     under availableNow on the bounded fixture (one in-order batch)."""
     pdf = batch.sort_values(["user_id", "ts", "event_id"], ignore_index=True)
     et = pdf["event_type"]

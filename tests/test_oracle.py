@@ -50,10 +50,12 @@ def test_frame_mismatch_reports_each_kind():
 
 def _session_state(spark):
     """What a query must leave as it found it: the temp view names (from
-    SHOW TABLES, not the much slower catalog.listTables), the session
-    confs and the active streams."""
+    SHOW TABLES, not the much slower catalog.listTables), the temporary
+    functions (SHOW USER FUNCTIONS, not catalog.listFunctions), the
+    session confs and the active streams."""
     return {
         "temp views": {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.isTemporary},
+        "temp functions": {r.function for r in spark.sql("SHOW USER FUNCTIONS").collect()},
         "confs": set(spark.conf.getAll.items()),
         "active streams": {str(q.id) for q in spark.streams.active},
     }

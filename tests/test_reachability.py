@@ -30,10 +30,6 @@ SERVING = [
 
 # Definitions no serving path reaches that stay, each with its reason.
 KEPT: dict[str, str] = {
-    # per-key references the bucketed stream folds are compared against
-    "dedup_stream_first_wins": "reference the bucketed first-wins fold is compared against",
-    "cdc_apply_stream": "reference the bucketed CDC fold is compared against",
-    "ewma_stream": "reference the bucketed EWMA fold is compared against",
     # exact ground truths the tests check against
     "_shingle_hashes": "exact-Jaccard ground truth of the MinHash estimate test",
     "xxhash64_long": "numpy xxhash64 of a long column, checked against Spark's",

@@ -66,17 +66,105 @@ def _ordered_batches(src, frames):
 
 def _drain_batches(df, checkpoint):
     """Run a bounded update-mode stream (one file per trigger upstream);
-    return each micro-batch's emitted rows, sorted, in batch order."""
+    return each micro-batch's emitted rows as a pandas frame, in batch
+    order."""
     got = {}
     q = (
         df.writeStream.outputMode("update")
-        .foreachBatch(lambda b, i: got.__setitem__(i, sorted(map(tuple, b.collect()))))
+        .foreachBatch(lambda b, i: got.__setitem__(i, b.toPandas()))
         .option("checkpointLocation", str(checkpoint))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     return [got[i] for i in sorted(got)]
+
+
+def _rows(pdf):
+    """A frame's rows as sorted tuples."""
+    return sorted(pdf.itertuples(index=False, name=None))
+
+
+def _events(day, spec):
+    """One micro-batch of the events feed: ``spec`` rows are (event_id,
+    user_id, seconds after ``day``, event_type, value)."""
+    import pandas as pd
+
+    eid, uid, sec, et, val = zip(*spec)
+    return pd.DataFrame({
+        "user_id": pd.array(uid, dtype="int64"),
+        "ts": pd.Timestamp(day) + pd.to_timedelta(sec, unit="s"),
+        "event_id": pd.array(eid, dtype="int64"),
+        "event_type": list(et),
+        "value": pd.array(val, dtype="float64"),
+    })
+
+
+EVENTS_SCHEMA = "user_id long, ts timestamp, event_id long, event_type string, value double"
+
+# Ordered micro-batches of the events feed, one file each. Event time
+# rises from batch to batch: the registered dedup oracle is a global
+# MIN(ts), which is first-wins only for in-order arrival. Inside a batch,
+# rows are written out of (ts, event_id) order.
+FOLD_FIXTURES = {
+    # users 2, 4, 7, 10 and 15 land in separate state groups at n=5,
+    # keyed by user_id and by its string cast
+    "events": [
+        _events("2024-01-01", [
+            (1, 4, 0, "view", 10.0),
+            (3, 2, 1, "click", 1.0),
+            (6, 7, 5, "view", 4.0),  # same ts as event 5: event_id orders
+            (5, 7, 5, "click", 2.0),
+            (4, 4, 3, "view", 5.0),
+            (2, 2, 4, "view", None),
+            (7, 2, 6, "error", None),  # 2 is dead at the batch boundary
+        ]),
+        _events("2024-01-02", [
+            (10, 2, 0, "purchase", 3.0),  # 2 re-inserted: a new generation
+            (12, 4, 2, "click", None),
+            (11, 4, 1, "error", None),  # 4 closed and reopened in one batch
+            (13, 7, 3, "view", None),  # 7's rows are all NULL: EWMA re-emits its state
+            (15, 7, 4, "view", None),
+            (14, 10, 4, "view", 4.0),
+        ]),
+        _events("2024-01-03", [
+            (21, 15, 0, "error", None),  # a tombstone first, and never a value
+            (20, 4, 0, "view", 1.5),
+            (22, 2, 1, "view", 2.0),
+            (23, 2, 2, "error", None),
+            (25, 7, 5, "click", 6.0),
+            (24, 10, 3, "click", None),
+        ]),
+    ],
+    # an in-batch duplicate (user 2) and cross-batch duplicates (2 and 4)
+    "first_wins": [
+        _events("2024-01-01", [(1, 2, 0, "view", None), (2, 2, 600, "view", None), (3, 4, 300, "view", None)]),
+        _events("2024-01-02", [(4, 2, 0, "view", None), (5, 4, 60, "view", None), (6, 4, 120, "view", None)]),
+    ],
+}
+
+
+def _registry_fold(name, events):
+    """The bucketed fold of the registered stream query ``name`` over the
+    raw events stream, fed through the query's own projection, watermark
+    and horizon (queries/streaming_batch.py)."""
+    from pyspark.sql import functions as F
+
+    from projektdataengineering_spark.streaming.stateful import (
+        cdc_apply_stream_bucketed,
+        dedup_stream_first_wins_bucketed,
+        ewma_stream_bucketed,
+    )
+
+    key = F.col("user_id").cast("string").alias("key")
+    if name == "stream_dedup_stateful":
+        keyed = events.select(key, "ts").withWatermark("ts", "1 minute")
+        return dedup_stream_first_wins_bucketed(keyed, horizon="365 days")
+    if name == "stream_cdc_stateful":
+        keyed = events.select(key, "ts", "event_id", "event_type").withWatermark("ts", "1 minute")
+        return cdc_apply_stream_bucketed(keyed, horizon="365 days")
+    assert name == "stream_ewma_stateful", name
+    return ewma_stream_bucketed(events.select("user_id", "ts", "event_id", "value"), alpha=0.25)
 
 
 def test_stream_tumbling_matches_batch(spark, sf_dir):
@@ -102,64 +190,6 @@ def test_stream_session_windows_with_watermark(spark, sf_dir):
     emitted = set(_canon(run_to_memory_sink(stream, "session_out", output_mode="append")))
     assert emitted, "watermarked session stream emitted nothing"
     assert emitted <= batch, "streaming emitted a session batch mode doesn't have"
-
-
-def test_stateful_dedup_first_wins(spark, sf_dir, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): cross-batch
-    first-wins dedup. Two files + maxFilesPerTrigger=1 force two
-    micro-batches through one query; keyed state must carry the
-    first-seen timestamp across them and count every later duplicate."""
-    import os
-    import time
-
-    import pandas as pd
-
-    from projektdataengineering_spark.streaming.stateful import dedup_stream_first_wins
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    b1 = pd.DataFrame(
-        {
-            "key": ["a", "a", "b"],
-            "ts": pd.to_datetime(
-                ["2024-01-01 00:00:00", "2024-01-01 00:10:00", "2024-01-01 00:05:00"]
-            ),
-        }
-    )
-    b1.to_parquet(src / "batch1.parquet", coerce_timestamps="us")
-    b2 = pd.DataFrame(
-        {
-            "key": ["a", "b", "b"],
-            "ts": pd.to_datetime(
-                ["2024-01-02 00:00:00", "2024-01-02 00:01:00", "2024-01-02 00:02:00"]
-            ),
-        }
-    )
-    b2.to_parquet(src / "batch2.parquet", coerce_timestamps="us")
-    # file source orders micro-batches by modification time — pin it
-    now = time.time()
-    os.utime(src / "batch1.parquet", (now - 60, now - 60))
-    os.utime(src / "batch2.parquet", (now, now))
-
-    stream = (
-        spark.readStream.schema("key string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    out = dedup_stream_first_wins(stream)
-    # update-mode memory sink appends each micro-batch's emissions; the
-    # final state per key is the row with the highest drop count
-    rows = run_to_memory_sink(out, "dedup_out", output_mode="update").collect()
-    assert len(rows) == 4, rows  # (a,b) emitted in both micro-batches
-    final = {}
-    for r in rows:
-        if r["key"] not in final or r["n_dropped"] > final[r["key"]]["n_dropped"]:
-            final[r["key"]] = r
-    assert final["a"]["n_dropped"] == 2  # 1 in-batch dup + 1 cross-batch
-    assert final["b"]["n_dropped"] == 2  # 2 cross-batch dups
-    # first-seen timestamps survive across micro-batches in keyed state
-    assert final["a"]["first_ts"] == pd.Timestamp("2024-01-01 00:00:00")
-    assert final["b"]["first_ts"] == pd.Timestamp("2024-01-01 00:05:00")
 
 
 def test_foreachbatch_sink_is_idempotent(spark, sf_dir, tmp_path):
@@ -210,82 +240,6 @@ def test_stream_ewma_equals_batch_ewma(spark, sf_dir):
         for r in stream_ewma_stateful(spark, sf_dir).collect()
     }
     assert batch == stream
-
-
-def test_stateful_dedup_horizon_evicts_and_reemits(spark, sf_dir, tmp_path):
-    """Bounded dedup horizon (round-7): a key idle past the horizon is
-    EVICTED from keyed state once the watermark passes last_seen +
-    horizon (Spark fires the timeout at the next micro-batch in which
-    the key has no data), and its next occurrence re-emits as a fresh
-    first (n_dropped restarts at 0). Keys active within the horizon
-    keep their state across the same boundary. The state-store row
-    counts are read back from the checkpoint's state store after each
-    committed micro-batch — the MEASURED state bound."""
-    import os
-    import time
-
-    import pandas as pd
-
-    from projektdataengineering_spark.streaming.stateful import dedup_stream_first_wins
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    batches = [
-        # b1: keys a (dup in batch) and b
-        (["a", "a", "b"],
-         ["2024-01-01 00:00:00", "2024-01-01 00:10:00", "2024-01-01 00:05:00"]),
-        # b2: 10 days later (horizon = 2 days) — a returns (stays warm),
-        # c is new; advances the watermark past b's expiry
-        (["a", "c"], ["2024-01-11 00:00:00", "2024-01-11 00:01:00"]),
-        # b3: unrelated key d — the batch where b has NO data and its
-        # expired timeout actually fires (Spark evicts lazily)
-        (["d"], ["2024-01-11 00:02:00"]),
-        # b4: b returns after eviction — must re-emit as a fresh FIRST
-        (["b"], ["2024-01-12 00:00:00"]),
-    ]
-    now = time.time()
-    for i, (keys, tss) in enumerate(batches):
-        f = src / f"batch{i + 1}.parquet"
-        pd.DataFrame({"key": keys, "ts": pd.to_datetime(tss)}).to_parquet(
-            f, coerce_timestamps="us"
-        )
-        os.utime(f, (now - 80 + 20 * i, now - 80 + 20 * i))
-
-    stream = (
-        spark.readStream.schema("key string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withWatermark("ts", "1 second")
-    )
-    out = dedup_stream_first_wins(stream, horizon="2 days")
-    with _checkpoint_root(spark, tmp_path):
-        rows = run_to_memory_sink(out, "dedup_horizon_out", output_mode="update").collect()
-
-    # the state store's row count after each committed micro-batch
-    ckpt = tmp_path / "dedup_horizon_out"
-    committed = sorted(int(f.name) for f in (ckpt / "commits").iterdir() if f.name.isdigit())
-    state_rows = [
-        spark.read.format("statestore").option("batchId", b).load(str(ckpt)).count()
-        for b in committed
-    ]
-    # 5 state creations happen over the run (a, b, c, d, b-again) but
-    # they never all coexist: b is evicted in batch 3, so the store
-    # holds exactly [2, 3, 3, 4] over the data batches (availableNow
-    # may append a trailing empty batch) and peaks at 4.
-    assert state_rows[:4] == [2, 3, 3, 4] and max(state_rows) == 4, state_rows
-
-    b_rows = {(r["first_ts"], r["n_dropped"]) for r in rows if r["key"] == "b"}
-    # re-emission as a FIRST after eviction: the post-horizon arrival
-    # carries its own ts and n_dropped=0 (surviving state would have
-    # emitted (2024-01-01 00:05, 1) instead)
-    assert b_rows == {
-        (pd.Timestamp("2024-01-01 00:05:00"), 0),
-        (pd.Timestamp("2024-01-12 00:00:00"), 0),
-    }, b_rows
-    # a stayed warm across the same boundary: cross-batch dup counted
-    a_final = max((r for r in rows if r["key"] == "a"), key=lambda r: r["n_dropped"])
-    assert a_final["n_dropped"] == 2
-    assert a_final["first_ts"] == pd.Timestamp("2024-01-01 00:00:00")
 
 
 def test_stream_heavy_hitters_mg_reduce_across_batches(spark, tmp_path):
@@ -340,43 +294,37 @@ def test_stream_heavy_hitters_mg_reduce_across_batches(spark, tmp_path):
     assert final["hot"] == max(final.values())
 
 
-def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path):
-    """Round-8 ADVICE regression: the eviction deadline anchors to the
-    max event time EVER seen for the key, not the current batch's max.
-    A later out-of-order (within-watermark) batch with OLDER rows must
-    not move the timeout backward — otherwise the key evicts before
-    last-occurrence + horizon and a within-horizon duplicate re-emits
-    as a fresh first."""
-    import os
-    import time
-
+@pytest.mark.parametrize("n", PARTITIONINGS)
+def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path, n):
+    """Round-8 ADVICE regression: a key's eviction deadline anchors to
+    the max event time EVER seen for it, not the current batch's max. A
+    later out-of-order (within-watermark) batch with OLDER rows must not
+    move the deadline backward — otherwise the sweep removes the key
+    before last-occurrence + horizon and a within-horizon duplicate
+    re-emits as a fresh first. At n=1 the spacer z's data invocation
+    would sweep a; at n=5 a's idle group's timeout would."""
     import pandas as pd
 
-    from projektdataengineering_spark.streaming.stateful import dedup_stream_first_wins
+    from projektdataengineering_spark.streaming.stateful import (
+        dedup_stream_first_wins_bucketed,
+    )
 
     src = tmp_path / "late_src"
-    src.mkdir()
     batches = [
         # b1: a @ Jan-20 → deadline Jan-22 (horizon 2 days)
         (["a"], ["2024-01-20 00:00:00"]),
         # b2: a again, 10 days OLDER but inside the 30-day watermark.
         # Unclamped, this would drag the deadline back to Jan-12.
         (["a"], ["2024-01-10 00:00:00"]),
-        # b3: watermark advances to Jan-16 — past the buggy Jan-12
-        # deadline, NOT past the correct Jan-22 one
+        # b3: advances the watermark for b4 to Jan-16 — past the buggy
+        # Jan-12 deadline, NOT past the correct Jan-22 one
         (["z"], ["2024-02-15 00:00:00"]),
-        # b4: a has no data; a buggy timeout would fire here and evict
+        # b4: a has no data; a buggy deadline would sweep it here
         (["z"], ["2024-02-15 00:01:00"]),
         # b5: a returns within wm — must still be a DUPLICATE of Jan-20
         (["a"], ["2024-02-16 00:00:00"]),
     ]
-    now = time.time()
-    for i, (keys, tss) in enumerate(batches):
-        f = src / f"batch{i + 1}.parquet"
-        pd.DataFrame({"key": keys, "ts": pd.to_datetime(tss)}).to_parquet(
-            f, coerce_timestamps="us"
-        )
-        os.utime(f, (now - 100 + 20 * i, now - 100 + 20 * i))
+    _ordered_batches(src, [pd.DataFrame({"key": k, "ts": pd.to_datetime(t)}) for k, t in batches])
 
     stream = (
         spark.readStream.schema("key string, ts timestamp")
@@ -384,8 +332,9 @@ def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path):
         .parquet(str(src))
         .withWatermark("ts", "30 days")
     )
-    out = dedup_stream_first_wins(stream, horizon="2 days")
-    rows = run_to_memory_sink(out, "dedup_clamp_out", output_mode="update").collect()
+    with _state_partitions(spark, n, "key", ["a", "z"]):
+        out = dedup_stream_first_wins_bucketed(stream, horizon="2 days")
+        rows = run_to_memory_sink(out, "dedup_clamp_out", output_mode="update").collect()
     a_rows = {(r["first_ts"], r["n_dropped"]) for r in rows if r["key"] == "a"}
     # every a-emission keeps the original first; the b5 arrival counts
     # as the 2nd dropped duplicate — an eviction bug would surface as a
@@ -394,20 +343,25 @@ def test_stateful_dedup_late_batch_cannot_shrink_horizon(spark, tmp_path):
         (pd.Timestamp("2024-01-20 00:00:00"), 0),
         (pd.Timestamp("2024-01-20 00:00:00"), 1),
         (pd.Timestamp("2024-01-20 00:00:00"), 2),
-    }, a_rows
+    }, (n, a_rows)
 
 
-def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
-    """Streaming CDC fold (streaming/stateful.py:cdc_apply_stream) across
-    ordered micro-batches: generation counts must carry over a batch
-    boundary, a tombstone at a boundary must close the generation, and
-    a post-tombstone re-insert in a LATER batch must open a fresh one."""
-    import os
-    import time
-
+@pytest.mark.parametrize("n", PARTITIONINGS)
+def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path, n):
+    """The bucketed CDC fold (cdc_apply_stream_bucketed) across ordered
+    micro-batches, whether keys share one state group or each has its
+    own: generation counts carry over a batch boundary, a tombstone at
+    a boundary closes the generation (the key is dead between the
+    batches), and a post-tombstone re-insert in a LATER batch opens a
+    fresh one. A caller's ``bucket`` column is replaced: the stored
+    groups are the keys' derived ids, one per partition."""
     import pandas as pd
+    from pyspark.sql import functions as F
 
-    from projektdataengineering_spark.streaming.stateful import cdc_apply_stream
+    from projektdataengineering_spark.streaming.stateful import (
+        _group_ids,
+        cdc_apply_stream_bucketed,
+    )
 
     def rows(eid0, ts0, spec):
         # spec: list of (key, event_type); timestamps strictly increasing
@@ -420,92 +374,31 @@ def test_stream_cdc_state_machine_across_batches(spark, tmp_path):
             }
         )
 
-    # batch 1: u1 upserts twice; u2 upsert then tombstone (dead at boundary)
-    b1 = rows(0, 0, [("u1", "click"), ("u2", "view"), ("u1", "view"), ("u2", "error")])
-    # batch 2: u1 tombstone then re-insert (fresh generation);
-    #          u2 re-inserts after its batch-1 tombstone
-    b2 = rows(10, 100, [("u1", "error"), ("u1", "purchase"), ("u2", "click"), ("u2", "view")])
-    src = tmp_path / "cdc_src"
-    src.mkdir()
-    now = time.time()
-    for i, b in enumerate([b1, b2]):
-        f = src / f"batch{i + 1}.parquet"
-        b.astype({"ts": "datetime64[us]"}).to_parquet(f)
-        os.utime(f, (now - 40 + 20 * i, now - 40 + 20 * i))
-
+    src = tmp_path / "cdc_bucketed_src"
+    _ordered_batches(src, [
+        # u1 upserts twice; u2 upserts, then a tombstone at the boundary
+        rows(0, 0, [("u1", "click"), ("u2", "view"), ("u1", "view"), ("u2", "error")]),
+        # u1: tombstone then re-insert; u2 re-inserts after its tombstone
+        rows(10, 100, [("u1", "error"), ("u1", "purchase"), ("u2", "click"), ("u2", "view")]),
+    ])
     stream = (
         spark.readStream.schema("key string, ts timestamp, event_id long, event_type string")
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    out = run_to_memory_sink(
-        cdc_apply_stream(stream), "cdc_stream_out", output_mode="update"
-    ).toPandas()
-    final = {
-        r["key"]: r
-        for _, r in out.sort_values("n_seen").iterrows()  # last update wins
-    }
-    u1, u2 = final["u1"], final["u2"]
-    # u1: 2 upserts | tombstone + re-insert -> 1 tombstone, alive,
-    # open generation has exactly the re-inserted row
-    assert (u1["n_tombstones"], u1["alive"], u1["gen_events"], u1["n_seen"]) == (1, True, 1, 4)
-    assert u1["last_event_type"] == "purchase"
-    # u2: upsert+tombstone | 2 re-inserts -> dead at the boundary, then
-    # a fresh 2-event generation
-    assert (u2["n_tombstones"], u2["alive"], u2["gen_events"], u2["n_seen"]) == (1, True, 2, 4)
-    # and the mid-stream state after batch 1 must have shown u2 dead
-    mid = out[(out["key"] == "u2") & (out["n_seen"] == 2)].iloc[0]
-    assert not mid["alive"] and mid["gen_events"] == 0 and mid["n_tombstones"] == 1
-
-
-@pytest.mark.parametrize("n", PARTITIONINGS)
-def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path, n):
-    """The bucketed CDC fold (cdc_apply_stream_bucketed) must emit, batch
-    for batch, exactly what the per-key reference cdc_apply_stream emits
-    across ordered micro-batches — generation carry-over, tombstone at a
-    boundary, post-tombstone re-insert — whether keys share one state
-    group or each has its own. A caller's ``bucket`` column is replaced:
-    the stored groups are the keys' derived ids, one per partition."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from projektdataengineering_spark.streaming.stateful import (
-        _group_ids,
-        cdc_apply_stream,
-        cdc_apply_stream_bucketed,
-    )
-
-    def rows(eid0, ts0, spec):
-        return pd.DataFrame(
-            {
-                "key": [k for k, _ in spec],
-                "ts": [pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=ts0 + i) for i in range(len(spec))],
-                "event_id": [eid0 + i for i in range(len(spec))],
-                "event_type": [t for _, t in spec],
-            }
-        )
-
-    # the per-key test's fixture
-    src = tmp_path / "cdc_bucketed_src"
-    _ordered_batches(src, [
-        rows(0, 0, [("u1", "click"), ("u2", "view"), ("u1", "view"), ("u2", "error")]),
-        rows(10, 100, [("u1", "error"), ("u1", "purchase"), ("u2", "click"), ("u2", "view")]),
-    ])
-
-    def read():
-        return (
-            spark.readStream.schema("key string, ts timestamp, event_id long, event_type string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-
-    per_key = _drain_batches(cdc_apply_stream(read()), tmp_path / "ckpt_ref")
     with _state_partitions(spark, n, "key", ["u1", "u2"]):
-        bucketed = _drain_batches(
-            cdc_apply_stream_bucketed(read().withColumn("bucket", F.lit(-1))),
+        batches = _drain_batches(
+            cdc_apply_stream_bucketed(stream.withColumn("bucket", F.lit(-1))),
             tmp_path / "ckpt_bucketed",
         )
-    assert bucketed == per_key
+    # (key, n_tombstones, alive, last_event_type, gen_events, n_seen)
+    assert [_rows(b) for b in batches] == [
+        # u2 dead at the batch-1 boundary
+        [("u1", 0, True, "view", 2, 2), ("u2", 1, False, "error", 0, 2)],
+        # u1: one tombstone, alive, the open generation holds exactly the
+        # re-inserted row; u2: a fresh 2-event generation
+        [("u1", 1, True, "purchase", 1, 4), ("u2", 1, True, "view", 2, 4)],
+    ]
     parts = spark.createDataFrame([("u1",), ("u2",)], ["key"]).select(
         F.pmod(F.hash("key"), F.lit(n))
     )
@@ -513,57 +406,56 @@ def test_stream_cdc_bucketed_state_machine_across_batches(spark, tmp_path, n):
     assert sorted(map(tuple, stored.select("key.bucket", "partition_id").collect())) == sorted(
         {(_group_ids(n)[p], p) for (p,) in parts.collect()}
     )
-    # (key, n_tombstones, alive, last_event_type, gen_events, n_seen):
-    # u2 dead at the batch-1 boundary, then a fresh 2-event generation
-    assert ("u2", 1, False, "error", 0, 2) in per_key[0]
-    assert ("u2", 1, True, "view", 2, 4) in per_key[1]
 
 
 @pytest.mark.parametrize("n", PARTITIONINGS)
-def test_stream_ewma_bucketed_equals_per_key_across_batches(spark, tmp_path, n):
-    """The bucketed EWMA fold must carry (s, n) across micro-batches and
-    emit, batch for batch, bit-equal rows to the per-key reference
-    operator (group co-residence must not mix users' state). User 4's
-    second-batch rows are all NULL: the per-key fold still emits its
-    carried state, so the bucketed fold must too."""
+@pytest.mark.parametrize(
+    "name, fixture",
+    [
+        ("stream_dedup_stateful", "events"),
+        ("stream_dedup_stateful", "first_wins"),
+        ("stream_cdc_stateful", "events"),
+        ("stream_ewma_stateful", "events"),
+    ],
+)
+def test_bucketed_fold_matches_its_oracle_after_every_micro_batch(spark, tmp_path, name, fixture, n):
+    """Spark runs a micro-batch as an incremental plan, so after batch i a
+    keyed fold's answer for a key is the relational answer over batches
+    1..i. Each registered bucketed stream fold, fed as its query feeds
+    it, must emit after every micro-batch exactly the rows of the query's
+    registered oracle SQL, which DuckDB runs on its own connection over
+    the files of batches 1..i, for the keys that batch touched."""
+    import duckdb
     import pandas as pd
+    from conftest import frame_mismatch
 
-    from projektdataengineering_spark.streaming.stateful import (
-        ewma_stream,
-        ewma_stream_bucketed,
-    )
+    from projektdataengineering_spark.queries import load_registry
+    from projektdataengineering_spark.streaming import stream_no_data_batches
 
-    def rows(eid0, ts0, spec):
-        return pd.DataFrame(
-            {
-                "user_id": [u for u, _ in spec],
-                "ts": [pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=ts0 + i) for i in range(len(spec))],
-                "event_id": [eid0 + i for i in range(len(spec))],
-                "value": [v for _, v in spec],
-            }
-        )
+    oracle = load_registry()[name].oracle
+    batches = FOLD_FIXTURES[fixture]
+    src = tmp_path / "src"
+    _ordered_batches(src, batches)
+    events = spark.readStream.schema(EVENTS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src))
+    key = "user_id" if name == "stream_ewma_stateful" else "key"
+    as_key = int if key == "user_id" else str
+    users = sorted(set(pd.concat(batches)["user_id"]))
+    # the no-data batch scoped off as the registered queries scope it
+    with _state_partitions(spark, n, key, [as_key(u) for u in users]), stream_no_data_batches(spark):
+        emitted = _drain_batches(_registry_fold(name, events), tmp_path / "ckpt")
+    assert len(emitted) == len(batches), [len(e) for e in emitted]
 
-    src = tmp_path / "ewma_bucketed_src"
-    _ordered_batches(src, [
-        rows(0, 0, [(1, 10.0), (2, 5.0), (1, None), (1, 7.0), (4, 2.0)]),
-        rows(10, 100, [(2, 1.0), (1, 3.0), (3, 2.5), (2, None), (4, None), (4, None)]),
-    ])
-
-    def read():
-        return (
-            spark.readStream.schema("user_id long, ts timestamp, event_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-
-    per_key = _drain_batches(ewma_stream(read(), alpha=0.25), tmp_path / "ckpt_ref")
-    with _state_partitions(spark, n, "user_id", [1, 2, 3, 4]):
-        bucketed = _drain_batches(
-            ewma_stream_bucketed(read(), alpha=0.25), tmp_path / "ckpt_bucketed"
-        )
-    assert bucketed == per_key
-    assert (1, 3, 0.25 * 3.0 + 0.75 * (0.25 * 7.0 + 0.75 * 10.0)) in per_key[1]
-    assert (4, 1, 2.0) in per_key[1]  # the NULL-only batch re-emits state
+    con = duckdb.connect()
+    try:
+        for i, (batch, got) in enumerate(zip(batches, emitted), 1):
+            files = [str(src / f"batch{j}.parquet") for j in range(1, i + 1)]
+            con.execute(f"CREATE OR REPLACE VIEW events AS SELECT * FROM read_parquet({files})")
+            want = con.execute(oracle).df()
+            want = want[want[key].isin({as_key(u) for u in batch["user_id"]})]
+            why = frame_mismatch(got, want)
+            assert why is None, f"{name} after micro-batch {i}: {why}"
+    finally:
+        con.close()
 
 
 def test_attribution_stream_carries_touch_state_across_batches(spark, tmp_path):
@@ -690,21 +582,19 @@ def test_drop_duplicates_within_watermark_evicts_and_resurrects(spark, tmp_path)
 
 
 def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
-    """Bucketed dedup twin (round 12 — streaming/stateful.py
+    """Bucketed first-wins dedup (streaming/stateful.py
     dedup_stream_first_wins_bucketed): keys sharing a state group must
     stay fully independent, carry first_ts/n_dropped across
-    micro-batches exactly like the per-key operator, and honor the
-    EAGER horizon sweep — a key whose (max_ts + horizon) the watermark
-    passed is removed at the group's next invocation even when the
-    key itself arrives with data in that same batch, so the re-arrival
-    is a fresh first (stricter than Spark's lazy per-key timeout).
-    Run at two state partition counts: at n=1 every key shares one
-    group, so b3's data invocation sweeps the idle b and c too; at n=5
-    a, b and c each have their own group, so b3 sweeps b and c through
-    their idle groups' event-time timeout."""
-    import os
-    import time
-
+    micro-batches, and honor the EAGER horizon sweep — a key whose
+    (max_ts + horizon) the watermark passed is removed at the group's
+    next invocation even when the key itself arrives with data in that
+    same batch, so the re-arrival is a fresh first. The stored state
+    after each committed micro-batch is the MEASURED state bound: it
+    holds only the keys active within one horizon. Run at two state
+    partition counts: at n=1 every key shares one group, so b3's data
+    invocation sweeps the idle b and c too; at n=5 a, b and c each have
+    their own group, so b3 sweeps b and c through their idle groups'
+    event-time timeout."""
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -713,7 +603,6 @@ def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
     )
 
     src = tmp_path / "bucketed_src"
-    src.mkdir()
     batches = [
         # b1: a (in-batch dup), b and c
         (["a", "a", "b", "c"],
@@ -725,20 +614,13 @@ def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
         (["z"], ["2024-01-11 00:00:00"]),
         # b3: a re-arrives WITH data in the very batch whose sweep
         # removes it (deadline Jan-3 < watermark Jan-10) — the EAGER
-        # case: a fresh first, where the per-key lazy timeout would
-        # have counted a duplicate (timeouts never fire for a key
-        # that has data). b and c are swept idle in the same batch.
+        # case: a fresh first, not a duplicate. b and c are swept idle
+        # in the same batch.
         (["a"], ["2024-01-12 00:00:00"]),
         # b4: b returns after its sweep — fresh first too
         (["b"], ["2024-01-12 06:00:00"]),
     ]
-    now = time.time()
-    for i, (keys, tss) in enumerate(batches):
-        f = src / f"batch{i + 1}.parquet"
-        pd.DataFrame({"key": keys, "ts": pd.to_datetime(tss)}).to_parquet(
-            f, coerce_timestamps="us"
-        )
-        os.utime(f, (now - 80 + 20 * i, now - 80 + 20 * i))
+    _ordered_batches(src, [pd.DataFrame({"key": k, "ts": pd.to_datetime(t)}) for k, t in batches])
 
     for n in (1, 5):
         stream = (
@@ -759,8 +641,7 @@ def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
                 (r["first_ts"], r["n_dropped"])
             )
         # a: in-batch dup in b1, then the EAGER-sweep fresh first in b3 —
-        # swept and re-seeded in ONE group invocation, which the per-key
-        # operator's lazy timeout cannot do
+        # swept and re-seeded in ONE group invocation
         assert by_key["a"] == {
             (pd.Timestamp("2024-01-01 00:00:00"), 1),
             (pd.Timestamp("2024-01-12 00:00:00"), 0),
@@ -779,6 +660,17 @@ def test_stateful_dedup_bucketed_carry_and_eager_sweep(spark, tmp_path):
         stored = spark.read.format("statestore").load(str(ckpt))
         kept = stored.select(F.explode("value.groupState.key")).collect()
         assert sorted(k for (k,) in kept) == ["a", "b", "z"], n
+        # keys held after each committed micro-batch: six key arrivals
+        # (a, b, c, z, then a and b again) but never more than 4 keys —
+        # b3 sweeps a, b and c and re-seeds a, b4 re-seeds b. availableNow
+        # may append a trailing no-data batch, which changes nothing.
+        committed = sorted(int(f.name) for f in (ckpt / "commits").iterdir() if f.name.isdigit())
+        held = [
+            spark.read.format("statestore").option("batchId", b).load(str(ckpt))
+            .select(F.explode("value.groupState.key")).count()
+            for b in committed
+        ]
+        assert held[:4] == [3, 4, 2, 3] and set(held[4:]) <= {3}, (n, held)
 
 
 def test_session_window_merges_across_micro_batches(spark, tmp_path):
@@ -847,13 +739,11 @@ def test_session_window_merges_across_micro_batches(spark, tmp_path):
 def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path, n):
     """horizon=None (NoTimeout) on a NON-watermarked stream must work —
     the fold may only read the watermark when a horizon is configured
-    (getCurrentWatermarkMs raises without withWatermark) — and, with no
-    expiry to diverge on, emit batch for batch what the per-key
-    reference dedup_stream_first_wins emits."""
+    (getCurrentWatermarkMs raises without withWatermark) — and carry
+    each key's first ts and drop count across micro-batches."""
     import pandas as pd
 
     from projektdataengineering_spark.streaming.stateful import (
-        dedup_stream_first_wins,
         dedup_stream_first_wins_bucketed,
     )
 
@@ -870,25 +760,26 @@ def test_stateful_dedup_bucketed_no_horizon_no_watermark(spark, tmp_path, n):
                                   "2024-01-02 00:02:00"]),
         }),
     ])
-
-    def read():
-        return (
-            spark.readStream.schema("key string, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-
-    per_key = _drain_batches(dedup_stream_first_wins(read()), tmp_path / "ckpt_ref")
+    stream = (
+        spark.readStream.schema("key string, ts timestamp")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
     with _state_partitions(spark, n, "key", ["a", "b", "c"]):
-        bucketed = _drain_batches(
-            dedup_stream_first_wins_bucketed(read()),  # no horizon, no watermark
+        batches = _drain_batches(
+            dedup_stream_first_wins_bucketed(stream),  # no horizon, no watermark
             tmp_path / "ckpt_bucketed",
         )
-    assert bucketed == per_key
-    assert per_key[1] == [
-        ("a", pd.Timestamp("2024-01-01 00:00:00"), 2),
-        ("b", pd.Timestamp("2024-01-01 00:05:00"), 1),
-        ("c", pd.Timestamp("2024-01-02 00:01:00"), 0),
+    assert [_rows(b) for b in batches] == [
+        [
+            ("a", pd.Timestamp("2024-01-01 00:00:00"), 1),
+            ("b", pd.Timestamp("2024-01-01 00:05:00"), 0),
+        ],
+        [
+            ("a", pd.Timestamp("2024-01-01 00:00:00"), 2),
+            ("b", pd.Timestamp("2024-01-01 00:05:00"), 1),
+            ("c", pd.Timestamp("2024-01-02 00:01:00"), 0),
+        ],
     ]
 
 
