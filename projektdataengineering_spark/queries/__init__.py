@@ -110,7 +110,10 @@ _MODULES = (
 #   index-append audits, the cell-probe matches and the keepers CTE
 #   moved the round-20 names that run them, and the Misra-Gries batch
 #   reduce (sketches.mg_add) changed the Python bodies of the two
-#   heavy-hitter queries.
+#   heavy-hitter queries; pipeline_ewma_smooth folds in the JVM
+#   (aggregate over a sorted collect_list) instead of a pandas bucket,
+#   and the LSH pair cosine of sim_cosine_ann_lsh and
+#   dedup_embedding_cosine runs the _cos_fold_col kernel.
 _RECHECK: dict[str, int] = {
     "stream_dedup_stateful": 20,
     "stream_cdc_stateful": 20,
@@ -162,6 +165,9 @@ _RECHECK: dict[str, int] = {
     "multimodal_video_frames": 21,
     "agg_heavy_hitters_mg": 21,
     "stream_heavy_hitters": 21,
+    "pipeline_ewma_smooth": 21,
+    "sim_cosine_ann_lsh": 21,
+    "dedup_embedding_cosine": 21,
 }
 
 # The driver's per-round correctness records live in the repo root.

@@ -157,16 +157,15 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver's sf0.01; the Spark side stays LSH-pruned for scale), so the
     driver hash-match proves the LSH candidate set reached recall 1.0
     on every >=threshold pair — see _EMBED_DUP_ORACLE."""
-    from .similarity import _as_double, _norm, lsh_candidate_cosine_frame
+    from .similarity import _as_double, lsh_candidate_cosine_frame
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_rows = emb.count()  # parquet-stats count for adaptive LSH bits
     vec = _as_double(F.col("embedding"))
     base = emb.select("vec_id", vec.alias("vec"))
     corpus = base.unionByName(_planted_twins(base))
-    e = corpus.select("vec_id", "vec", _norm(F.col("vec")).alias("norm"))
     scored = lsh_candidate_cosine_frame(
-        e, directed=False, n_rows=n_rows + n_rows // _TWIN_EVERY + 1
+        corpus, directed=False, n_rows=n_rows + n_rows // _TWIN_EVERY + 1
     )
     dups = (
         scored.filter(F.col("cos_sim") >= EMBEDDING_DUP_THRESHOLD)
@@ -213,7 +212,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     universe the graduated sim_minhash_lsh estimates over — see
     similarity._portable_mh_bands), so a DuckDB recursive-CTE
     transitive closure replays the clustering value-for-value.
-    Previously rows-only: the xxh64 lane edges had no SQL twin.
+    Previously rows-only: the numpy xxhash64 lane edges had no SQL twin.
     Exactness vs a serial union-find stays pinned in
     tests/test_operators.py.
 

@@ -26,14 +26,10 @@ higher-order lanes ran 2.75 s, explode+codegen'd-min-aggregates 3.54 s
 lane-only Arrow kernel 2.34 s. Stage-level profiling then showed the
 real cost was never the lanes: building the shingle-STRING array
 (token_ngrams concat + xxhash64 + array_distinct) was ~2.3 s on its
-own. Round 2 therefore hashes tokens once JVM-side and moves shingle
-combination + all 16 lanes into one numpy kernel using an exact
-reimplementation of Spark's xxhash64 on longs (functions/xxh64.py,
-bit-identical, JVM-verified) — signature stage ~0.3 s, nothing
-string-shaped past the tokenizer. The registered estimator has since
-moved to the portable md5 lanes (``_portable_mh_bands``), which DuckDB
-replays bit-for-bit; the numpy xxhash64 now serves only the exact
-shingle hashes (``_shingle_hashes``).
+own. The registered estimator (``_portable_mh_bands``) therefore hashes
+each distinct string gram once, with md5, which DuckDB replays
+bit-for-bit, and derives all 16 lanes from that one digest by integer
+folds.
 """
 
 from __future__ import annotations
@@ -45,7 +41,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import artifact, artifact_kind, load_table, spread_small_input
 from ..functions import token_ngrams
-from ..functions.xxh64 import hash_long
 from . import query
 
 # ---- shared embedding helpers (pure column expressions) ----------------
@@ -347,26 +342,15 @@ def _cos_fold_col(va, vb):
 
 def _pair_cosine(e: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact cosine for (id_q, id_n) pairs: the (small) vector table is
-    joined back to both sides — AQE broadcasts it — and an Arrow-
-    vectorized pandas UDF runs one einsum per batch (the interpreted
-    zip_with+aggregate alternative is ~50× slower on millions of pairs,
-    and this path must survive candidate volumes where that matters).
-    Returns (id_q, id_n, cos_sim). The UDF is created here, not at
-    module scope — pandas_udf type parsing needs an active session."""
-
-    @F.pandas_udf("double")
-    def _cos_pd(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if len(va) == 0:  # defensive: np.stack rejects an empty batch
-            return pd.Series([], dtype="float64")
-        ma = np.stack([np.asarray(v, dtype=np.float64) for v in va])
-        mb = np.stack([np.asarray(v, dtype=np.float64) for v in vb])
-        num = np.einsum("ij,ij->i", ma, mb)
-        return pd.Series(num / (np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)))
-
+    joined back to both sides — AQE broadcasts it — and the Arrow
+    left-fold kernel ``_cos_fold_col`` scores each batch of pairs (the
+    interpreted zip_with+aggregate alternative is ~50× slower on
+    millions of pairs, and this path must survive candidate volumes
+    where that matters). Returns (id_q, id_n, cos_sim)."""
     return (
         pairs.join(e.select(F.col("vec_id").alias("id_q"), F.col("vec").alias("vec_q")), "id_q")
         .join(e.select(F.col("vec_id").alias("id_n"), F.col("vec").alias("vec_n")), "id_n")
-        .select("id_q", "id_n", _cos_pd("vec_q", "vec_n").alias("cos_sim"))
+        .select("id_q", "id_n", _cos_fold_col("vec_q", "vec_n").alias("cos_sim"))
     )
 
 
@@ -408,7 +392,7 @@ def ann_lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     wraps it in a recall certification (see below).
 
     Scale shape: see _lsh_candidate_pairs (ids-only shuffle, single
-    signature pass) and _pair_cosine (Arrow BLAS kernel on candidates
+    signature pass) and _pair_cosine (Arrow left-fold kernel on candidates
     only). Per-bucket cost is quadratic in bucket size; bits-per-table
     adapts with N (_bits_for) so bucket occupancy stays flat.
 
@@ -1618,52 +1602,12 @@ def _bucket_pairs(
     )
 
 
-# Promoted to catalog.spread_small_input in round 7 (the multimodal
-# codec queries hit the same single-input-split serialization); this
-# alias keeps the established call sites.
-_spread_small_input = spread_small_input
-
-
-def _token_hashes(docs: DataFrame) -> DataFrame:
-    """doc_id + xxhash64 per token — the only string hashing in the
-    minhash pipeline (one JVM pass over the text); everything downstream
-    operates on fixed-width longs."""
-    return docs.select(
-        "doc_id",
-        F.transform(F.split("text", " "), lambda t: F.xxhash64(t)).alias("ths"),
-    )
-
-
-def _shingle_hashes(docs: DataFrame, n: int = 3) -> DataFrame:
-    """doc_id + distinct chained-xxhash64 per n-token shingle — the
-    exact-Jaccard ground truth the minhash sketch is calibrated against
-    (tests/test_operators.py): xxhash64 chained over the n token hashes,
-    exactly as Spark's multi-argument xxhash64 folds longs."""
-    toked = _token_hashes(docs)
-
-    @F.pandas_udf("array<long>")
-    def shingles(ths: pd.Series) -> pd.Series:
-        out = []
-        for v in ths:
-            a = np.asarray(v, dtype=np.int64)
-            if len(a) < n:
-                out.append(np.empty(0, dtype=np.int64))
-                continue
-            h = hash_long(a, 42)
-            for j in range(1, n):
-                h = hash_long(a[j:], h[: len(a) - j])
-            out.append(np.unique(h[: len(a) - (n - 1)].view(np.int64)))
-        return pd.Series(out)
-
-    return toked.select("doc_id", shingles("ths").alias("hs"))
-
-
 # ---------------------------------------------------------------------------
 # Portable 16-lane MinHash — the SQL-replayable production estimator
 # ---------------------------------------------------------------------------
 #
 # The REGISTERED estimator must be DuckDB-replayable, so its randomness
-# comes from md5 (the round-2 xxh64 lane kernel had no SQL twin).
+# comes from md5 (the round-2 numpy xxhash64 lane kernel had no SQL twin).
 # Round-9 perf fix: the round-8 form computed SIXTEEN md5s per shingle
 # (lane j = min md5(digest || '#j')), which regressed the query 3.8×
 # warm at sf0.1 — ~17 string hashes per (doc, gram) dominated the whole
@@ -1692,7 +1636,7 @@ def _portable_mh_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan."""
     from ..functions import token_ngrams
 
-    docs = _spread_small_input(
+    docs = spread_small_input(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     # size(toks) >= 3 ⟺ size(ghs) > 0, but stays CHEAP when Catalyst
@@ -1818,7 +1762,7 @@ _MINHASH_LSH_SQL = f"""
 def sim_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate candidates with estimated Jaccard = fraction of
     matching minhash lanes — HASH-CHECKED against a full DuckDB replay
-    since round 7 (previously rows-only: the xxh64 lanes had no SQL
+    since round 7 (previously rows-only: the numpy xxhash64 lanes had no SQL
     twin; the md5-seeded affine lanes do — see _portable_mh_bands and
     the module comment above it for the round-9 one-hash-per-gram
     rework that undid the 16-md5s-per-gram perf regression).
@@ -1945,7 +1889,7 @@ def sim_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     at every fixture SF up to sf0.01 every bucket is under the cap,
     so the driver's sf0.01 oracle (capped ≡ FALSE) replays the exact
     same pair set in SQL."""
-    docs = _spread_small_input(
+    docs = spread_small_input(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
     toked = docs.select(
@@ -2061,12 +2005,12 @@ def sim_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the quadratic pair side. The band however is the md5 STRING lane
     (portable — DuckDB has no xxhash64), shared with
     pipeline_doc_signature's lane-0. The oracle intersects strings."""
-    # _spread_small_input: the gram+md5 stage is the dominant cost and
+    # spread_small_input: the gram+md5 stage is the dominant cost and
     # is purely map-side — but a few-file local fixture arrives as 1-2
     # input splits, serializing it on 2 of 32 cores (measured 13.7 s of
     # the 16.9 s sf1 wall). On a real cluster the scan already has
     # thousands of splits and this plans nothing.
-    docs = _spread_small_input(load_table(spark, sf_dir, "documents"))
+    docs = spread_small_input(load_table(spark, sf_dir, "documents"))
     # Filter on size(toks) >= 2 (⟺ at least one bigram), NOT on
     # size(gstr) > 0: a predicate over the gram column gets pushed
     # below the spread exchange with the WHOLE gram pipeline re-inlined

@@ -1,19 +1,18 @@
-"""Time-series operators — sequential recurrences the relational
-algebra can't express per-row, run through ``applyInPandas`` (grouped
-Arrow batches) yet still ORACLE-CHECKED.
+"""Time-series operators — recurrences, gap-fill, resampling and
+interpolation over the event stream, each ORACLE-CHECKED and each run
+in the JVM.
 
 The trick that keeps a recurrence hash-comparable: an EWMA is a left
 fold with a fixed evaluation order, so if BOTH engines fold the same
-ordered list with the same IEEE-double lambda — pandas loop here,
-DuckDB ``list_reduce`` there — the result is bit-identical, the same
-fold-order discipline corpus_ops.py uses for float sums. The sort key
-must be UNIQUE ((ts, event_id) tiebreak) or the fold order, and hence
-the hash, is undefined.
+ordered list with the same IEEE-double lambda — Spark's ``aggregate``
+here, DuckDB ``list_reduce`` there — the result is bit-identical, the
+same fold-order discipline corpus_ops.py uses for float sums. The sort
+key must be UNIQUE ((ts, event_id) tiebreak) or the fold order, and
+hence the hash, is undefined.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -41,54 +40,36 @@ def pipeline_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     a recurrence no window frame can express (each state depends on
     the previous OUTPUT, not a fixed frame of inputs).
 
-    Execution: ``groupBy(bucket).applyInPandas`` over a 64-way hash
-    bucket of users (round 12 — the attribution/stream-dedup
-    round-trip economics applied to the BATCH side: per-USER Arrow
-    groups made the per-group overhead, not the arithmetic, the whole
-    cost); inside a bucket the rows sort (user, ts, event_id) and one
-    pass folds every user's recurrence with EXACTLY the same
-    s = α·x + (1−α)·s evaluation order as before — users stay fully
-    independent. Only (user, n, last_state) leaves Python. The oracle
-    replays the identical left fold with DuckDB's ``list_reduce`` over
-    the identically-ordered list, so the hash certifies the whole
+    Execution: NULL values drop first (they would fold NaN into every
+    later state; an all-NULL user vanishes, like the oracle's WHERE),
+    then one ``groupBy(user_id)`` collects each user's (ts, event_id,
+    value) structs and ``array_sort`` orders them by the unique
+    (ts, event_id) key. ``aggregate`` folds the tail with the head as
+    s₀ and s = α·x + (1−α)·s per step — the oracle's ``list_reduce``
+    over the identically-ordered list, so the hash certifies the whole
     recurrence step-for-step (same doubles, same order), not just its
-    shape. At 100 TB this is the per-key-sequential/cross-key-parallel
-    pattern: state lives inside one bucket's batch, buckets spread
-    over executors, shuffle width is the events table once — and the
-    streaming twin is applyInPandasWithState (streaming/stateful.py),
-    which carries the same state across micro-batches instead."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value"
-    ).withColumn("bucket", (F.col("user_id") % 64).cast("int"))
-
-    def smooth_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # NULL values would fold NaN into every later state; drop them
-        # to match the streaming fold and the oracle's WHERE clause
-        # (an all-NULL user vanishes, exactly like the oracle's WHERE).
-        pdf = pdf.dropna(subset=["value"]).sort_values(
-            ["user_id", "ts", "event_id"]
+    shape. The plan is one hash exchange on user_id and no Python: the
+    per-key-sequential/cross-key-parallel pattern, with each user's
+    fold inside one task. The streaming form carries (s, n) across
+    micro-batches instead (streaming/stateful.py:ewma_stream_bucketed)."""
+    vals = F.col("xs.value")
+    return (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("value").isNotNull())
+        .groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.array_sort(F.collect_list(F.struct("ts", "event_id", "value"))).alias("xs"),
         )
-        out_u, out_n, out_s = [], [], []
-        cur_u, s, n = None, None, 0
-        for uu, x in zip(pdf["user_id"].to_numpy(), pdf["value"].to_numpy()):
-            if uu != cur_u:
-                if cur_u is not None:
-                    out_u.append(cur_u)
-                    out_n.append(n)
-                    out_s.append(s)
-                cur_u, s, n = uu, None, 0
-            s = x if s is None else _ALPHA * x + (1 - _ALPHA) * s
-            n += 1
-        if cur_u is not None:
-            out_u.append(cur_u)
-            out_n.append(n)
-            out_s.append(s)
-        return pd.DataFrame(
-            {"user_id": out_u, "n_events": out_n, "last_ewma": out_s}
+        .select(
+            "user_id",
+            "n_events",
+            F.aggregate(
+                F.slice(vals, 2, F.size(vals)),
+                vals[0],
+                lambda s, x: _ALPHA * x + (1 - _ALPHA) * s,
+            ).alias("last_ewma"),
         )
-
-    return ev.groupBy("bucket").applyInPandas(
-        smooth_bucket, "user_id long, n_events long, last_ewma double"
     )
 
 

@@ -294,8 +294,9 @@ def dedup_stream_first_wins_bucketed(
     )
 
 
-# Stateful streaming EWMA: the cross-batch twin of the batch
-# pipeline_ewma_smooth recurrence (queries/timeseries.py).
+# Stateful streaming EWMA: pipeline_ewma_smooth's recurrence
+# (queries/timeseries.py, a JVM aggregate fold over each user's sorted
+# values), with (s, n) carried across micro-batches.
 EWMA_OUTPUT_SCHEMA = "user_id long, n_events long, last_ewma double"
 
 

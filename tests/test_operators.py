@@ -206,14 +206,16 @@ def test_minhash_estimates_track_exact_jaccard(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from projektdataengineering_spark.catalog import load_table
-    from projektdataengineering_spark.queries.similarity import _shingle_hashes
+    from projektdataengineering_spark.functions import token_ngrams
 
     cands = REGISTRY["sim_minhash_lsh"].fn(spark, sf_dir)
-    # exact Jaccard over the hashed shingle sets — identical to Jaccard
-    # over the shingle strings up to xxhash64 collisions (~0 at this N)
-    docs = _shingle_hashes(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"), 3
-    ).withColumnRenamed("hs", "gs")
+    # exact Jaccard over the distinct string trigram sets — the same
+    # shingles the md5 lanes of _portable_mh_bands sign
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.split("text", " ").alias("toks"))
+        .select("doc_id", F.array_distinct(token_ngrams("toks", 3)).alias("gs"))
+    )
     a = docs.select(F.col("doc_id").alias("doc_a"), F.col("gs").alias("gs_a"))
     b = docs.select(F.col("doc_id").alias("doc_b"), F.col("gs").alias("gs_b"))
     joined = cands.join(a, "doc_a").join(b, "doc_b")
@@ -521,68 +523,6 @@ def test_agg_state_merge_is_batching_independent(spark, sf_dir):
     a = sorted(map(tuple, finalize_agg_state(full).collect()))
     b = sorted(map(tuple, finalize_agg_state(merged).collect()))
     assert a == b
-
-
-def test_numpy_xxh64_matches_jvm(spark):
-    """The numpy XXH64 reimplementation (functions/xxh64.py) must be
-    bit-identical to Spark's xxhash64(long), and to its multi-long chain
-    used for shingle hashing."""
-    from pyspark.sql import functions as F
-
-    from projektdataengineering_spark.functions.xxh64 import (
-        hash_long,
-        xxhash64_long,
-    )
-
-    vals = np.array(
-        [0, 1, -1, 42, 123456789, -987654321, 2**62, -(2**62), 2**63 - 1, -(2**63)],
-        dtype=np.int64,
-    )
-    with np.errstate(over="ignore"):
-        v1, v2 = vals + 1, vals + 2  # wrapping add, precomputed so ANSI JVM math never overflows
-    df = spark.createDataFrame(
-        [(int(a), int(b), int(c)) for a, b, c in zip(vals, v1, v2)], "v long, v1 long, v2 long"
-    )
-    jvm = df.select(
-        F.xxhash64("v").alias("h1"),
-        F.xxhash64("v", "v1", "v2").alias("h3"),
-    ).collect()
-    assert [r.h1 for r in jvm] == xxhash64_long(vals).tolist()
-    chain = hash_long(v2, hash_long(v1, hash_long(vals, 42))).view(np.int64)
-    assert [r.h3 for r in jvm] == chain.tolist()
-
-
-def test_chained_shingle_hashes_match_string_trigrams(spark, sf_dir):
-    """The chained-hash shingle sets must be an injective image
-    of the string trigram sets (up to 64-bit collisions): per-doc
-    distinct counts equal, and pairwise intersection sizes equal — the
-    quantities every Jaccard downstream depends on. Ground truth is
-    computed in pure Python from the raw text."""
-    import duckdb
-
-    from projektdataengineering_spark.catalog import load_table
-    from projektdataengineering_spark.queries.similarity import _shingle_hashes
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(40)
-    got = {
-        r["doc_id"]: set(r["hs"])
-        for r in _shingle_hashes(docs, 3).collect()
-    }
-    raw = duckdb.sql(
-        f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet' ORDER BY doc_id LIMIT 40"
-    ).fetchall()
-    truth = {}
-    for doc_id, text in raw:
-        toks = text.split(" ")
-        truth[doc_id] = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-    assert set(got) == set(truth)
-    ids = sorted(got)
-    for d in ids:
-        assert len(got[d]) == len(truth[d]), d
-    for a in ids[:10]:
-        for b in ids[:10]:
-            if a < b:
-                assert len(got[a] & got[b]) == len(truth[a] & truth[b]), (a, b)
 
 
 def test_lsh_bits_adapt_to_row_count():

@@ -30,9 +30,6 @@ SERVING = [
 
 # Definitions no serving path reaches that stay, each with its reason.
 KEPT: dict[str, str] = {
-    # exact ground truths the tests check against
-    "_shingle_hashes": "exact-Jaccard ground truth of the MinHash estimate test",
-    "xxhash64_long": "numpy xxhash64 of a long column, checked against Spark's",
     # the reference pipeline's I/O seams (SURVEY.md §2.1)
     "read_jdbc_pushdown": "R3 JDBC scan with a pushed-down query",
     "jdbc_pushed_query": "R3 pushed-down JDBC query text",

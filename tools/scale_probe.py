@@ -120,7 +120,7 @@ HEAVY_QUERIES = [
     # at sf1, hence the ~0 heavy-decade slope)
     ("join_fuzzy_jaro", "entity resolution (round 6)"),
     ("pipeline_bpe_train", "corpus_ops (round 6, iterative)"),
-    ("pipeline_ewma_smooth", "timeseries (round 6, applyInPandas)"),
+    ("pipeline_ewma_smooth", "timeseries (JVM aggregate fold)"),
     ("pipeline_time_gapfill", "timeseries (round 6)"),
     ("graph_pagerank", "graph (round 7, iterative, integer-quantized exact sums)"),
     ("agg_hll_merge", "sketches (round 7, mergeable HLL + exact twin)"),
