@@ -3,9 +3,10 @@ approximate half of the LLM-data-pipeline surface (MinHash-LSH,
 random-hyperplane ANN, exact n-gram Jaccard, brute-force cosine top-k).
 
 Determinism policy (driver re-runs must hash identically): every hash
-family is a fixed function of the data only — xxhash64 with literal salt
-strings, hyperplanes from a seeded RNG materialized as plan literals.
-No rand(), no monotonically_increasing_id.
+family is a fixed function of the data only — md5 lanes with literal
+salt strings (MinHash, SimHash), hyperplanes from a seeded RNG
+materialized as plan literals, and xxhash64 only on sim_ngram_jaccard's
+bigrams. No rand(), no monotonically_increasing_id.
 
 Scale design, per operator:
 * brute-force cosine is the *verifier*, quadratic by construction — it
@@ -36,8 +37,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
 from ..catalog import artifact, artifact_kind, load_table, spread_small_input
 from ..functions import token_ngrams
@@ -58,12 +60,16 @@ def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def _embeddings_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings with precomputed L2 norm — computed once per row
-    map-side so pair comparisons only pay the dot product."""
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings table as (vec_id, vec), vec the double array."""
     emb = load_table(spark, sf_dir, "embeddings")
-    vec = _as_double(F.col("embedding"))
-    return emb.select("vec_id", vec.alias("vec"), _norm(vec).alias("norm"))
+    return emb.select("vec_id", _as_double(F.col("embedding")).alias("vec"))
+
+
+def _matrix(col) -> np.ndarray:
+    """(n, dim) float64 matrix of a column's n vectors (an Arrow batch's
+    arrays, or collected rows' lists)."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in col])
 
 
 # Hard ceiling on the broadcast side of sim_cosine_topk: rows × dim
@@ -81,21 +87,43 @@ PQ_CODES_MAX_CELLS = 32_000_000
 
 
 def _collect_broadcast_matrix(emb: DataFrame, dim: int, max_cells: int):
-    """Materialize the broadcast side of an exact-cosine query with a
-    LOUD size guard: count first (cheap — a parquet-stats count), and
-    refuse to collect a side that would not fit a broadcast, naming the
-    scale-path alternatives. This is the fail-fast contract the judge
-    asked for in round 1: no unbounded driver materialization in any
-    registered query."""
+    """Broadcast ``(ids, mat, norms)`` of a (vec_id, vec) frame, the
+    exact-cosine side, behind a LOUD size guard: count first (cheap — a
+    parquet-stats count), and refuse to collect a side that would not
+    fit a broadcast, naming the scale-path alternatives. This is the
+    fail-fast contract the judge asked for in round 1: no unbounded
+    driver materialization in any registered query."""
     n = emb.count()
     if n * dim > max_cells:
         raise ValueError(
-            f"sim_cosine_topk: broadcast side is {n} rows × {dim} dims = "
+            f"exact cosine: broadcast side is {n} rows × {dim} dims = "
             f"{n * dim} cells > limit {max_cells}; exact brute force is only "
             "valid while one side fits in a broadcast — use sim_cosine_ann_lsh "
             "or sim_cosine_ivf at this scale"
         )
-    return emb.toPandas()
+    side = emb.toPandas()
+    mat = _matrix(side["vec"])
+    return emb.sparkSession.sparkContext.broadcast(
+        (side["vec_id"].to_numpy(dtype=np.int64), mat, np.linalg.norm(mat, axis=1))
+    )
+
+
+def _cosine_blocks(batches, side):
+    """Blocked BLAS cosine of (vec_id, vec) Arrow batches against the
+    broadcast ``side`` of _collect_broadcast_matrix: yields ``(ids,
+    cos)`` per block of at most 1024 rows, ``cos`` the block × side
+    matrix, so one step holds 1024 × N doubles. BLAS values only prune;
+    each caller re-scores its survivors with the exact fold."""
+    _, mat_r, norms_r = side.value
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        mat = _matrix(pdf["vec"])
+        norms = np.linalg.norm(mat, axis=1)
+        for s in range(0, len(ids), 1024):
+            cos = (mat[s : s + 1024] @ mat_r.T) / np.outer(norms[s : s + 1024], norms_r)
+            yield ids[s : s + 1024], cos
 
 
 _TOPK_COS_SQL = """
@@ -145,60 +173,40 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot/norm column expressions that match DuckDB's list_reduce
     evaluation order exactly. The emitted cos_sim is the fold value, so
     the final TakeOrdered(50) and the oracle agree bit for bit."""
-    import numpy as np
-    # pandas imported at module level (annotation resolution needs it)
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    right = _collect_broadcast_matrix(emb, 64, TOPK_BROADCAST_MAX_CELLS)
-    ids_r = right["vec_id"].to_numpy()
-    mat_r = np.stack([np.asarray(v, dtype=np.float64) for v in right["embedding"]])
-    norms_r = np.linalg.norm(mat_r, axis=1)
-    bc = spark.sparkContext.broadcast((ids_r, mat_r, norms_r))
+    e = _embeddings(spark, sf_dir)
+    side = _collect_broadcast_matrix(e, 64, TOPK_BROADCAST_MAX_CELLS)
 
     def topk_blocks(batches):
-        ids_r, mat_r, norms_r = bc.value
-        sub = 1024  # bounds the cos matrix at sub × N doubles per step
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids_b = pdf["vec_id"].to_numpy()
-            mat_b = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            norms_b = np.linalg.norm(mat_b, axis=1)
-            for s in range(0, len(ids_b), sub):
-                ids_l, mat_l, norms_l = ids_b[s:s+sub], mat_b[s:s+sub], norms_b[s:s+sub]
-                cos = (mat_l @ mat_r.T) / np.outer(norms_l, norms_r)
-                cos[ids_l[:, None] >= ids_r[None, :]] = -np.inf  # each pair once
-                flat = cos.ravel()
-                if flat.size > 50:
-                    # keep everything within the 1e-9 safety margin of
-                    # the block-local 50th BLAS value — candidates only;
-                    # the authoritative fold value decides the final 50
-                    thresh = np.partition(flat, -50)[-50]
-                    if not np.isfinite(thresh):  # <50 valid pairs in block
-                        thresh = np.finfo(np.float64).min
-                    cand = np.nonzero(flat >= thresh - 1e-9)[0]
-                else:
-                    cand = np.arange(flat.size)
-                cand = cand[np.isfinite(flat[cand])]
-                ia, ib = np.unravel_index(cand, cos.shape)
-                yield pd.DataFrame(
-                    {"id_a": ids_l[ia], "id_b": ids_r[ib]}
-                )
+        ids_r = side.value[0]
+        for ids_l, cos in _cosine_blocks(batches, side):
+            cos[ids_l[:, None] >= ids_r[None, :]] = -np.inf  # each pair once
+            flat = cos.ravel()
+            if flat.size > 50:
+                # keep everything within the 1e-9 safety margin of
+                # the block-local 50th BLAS value — candidates only;
+                # the authoritative fold value decides the final 50
+                thresh = np.partition(flat, -50)[-50]
+                if not np.isfinite(thresh):  # <50 valid pairs in block
+                    thresh = np.finfo(np.float64).min
+                cand = np.nonzero(flat >= thresh - 1e-9)[0]
+            else:
+                cand = np.arange(flat.size)
+            cand = cand[np.isfinite(flat[cand])]
+            ia, ib = np.unravel_index(cand, cos.shape)
+            yield pd.DataFrame({"id_a": ids_l[ia], "id_b": ids_r[ib]})
 
-    cands = emb.mapInPandas(topk_blocks, schema="id_a long, id_b long")
+    cands = e.mapInPandas(topk_blocks, schema="id_a long, id_b long")
     # rescore stays on the interpreted fold EXPRESSIONS here: the block
     # prune leaves only ~50 survivors per block, and the r18 A/B showed
     # the Arrow fold kernel's extra Python stage costs more than it
     # saves at that volume (0.91 → 1.03 s) — contrast the candidate-
     # volume sites (_exact_top3_per_query, _ivfpq_adc_rank) where it won
-    ea = emb.select(
-        F.col("vec_id").alias("id_a"),
-        _as_double(F.col("embedding")).alias("va"),
-    ).select("id_a", "va", _norm(F.col("va")).alias("nrm_a"))
-    eb = emb.select(
-        F.col("vec_id").alias("id_b"),
-        _as_double(F.col("embedding")).alias("vb"),
-    ).select("id_b", "vb", _norm(F.col("vb")).alias("nrm_b"))
+    ea = e.select(
+        F.col("vec_id").alias("id_a"), F.col("vec").alias("va"), _norm(F.col("vec")).alias("nrm_a")
+    )
+    eb = e.select(
+        F.col("vec_id").alias("id_b"), F.col("vec").alias("vb"), _norm(F.col("vec")).alias("nrm_b")
+    )
     return (
         cands.join(ea, "id_a")
         .join(eb, "id_b")
@@ -286,7 +294,7 @@ def _lsh_candidate_pairs(e: DataFrame, n_rows: int | None = None) -> DataFrame:
     def table_buckets(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:  # defensive: np.stack rejects an empty batch
             return pd.Series([], dtype=object)
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        mat = _matrix(vecs)
         bits = (mat @ planes.T) >= 0  # (n, tables*bits)
         bkt = bits.reshape(len(mat), _N_TABLES, n_bits) @ weights
         return pd.Series(list(bkt.astype("int32")))
@@ -323,8 +331,8 @@ def _cos_fold_col(va, vb):
     def _cos_fold(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
             return pd.Series([], dtype="float64")
-        ma = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        mb = np.stack([np.asarray(v, dtype=np.float64) for v in b])
+        ma = _matrix(a)
+        mb = _matrix(b)
         n = len(a)
         dot = np.zeros(n)
         na = np.zeros(n)
@@ -354,6 +362,14 @@ def _pair_cosine(e: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
+def _top3(scored: DataFrame) -> DataFrame:
+    """(id_q, id_n, cos_sim) rows → each query's 3 best, numbered ``rk``
+    by cos_sim descending, ties to the lower id_n: the order every
+    exact-top-3 oracle ranks by."""
+    w = Window.partitionBy("id_q").orderBy(F.col("cos_sim").desc(), F.col("id_n"))
+    return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 3)
+
+
 def lsh_candidate_cosine(
     spark: SparkSession, sf_dir: str, directed: bool = True
 ) -> DataFrame:
@@ -365,7 +381,7 @@ def lsh_candidate_cosine(
 
     ``directed=False`` keeps each undirected pair once (id_n < id_q),
     halving the cosine work for symmetric consumers like dedup."""
-    e = _embeddings_normed(spark, sf_dir)
+    e = _embeddings(spark, sf_dir)
     # adaptive-bits sizing needs only the base row count: a count on the
     # raw scan is answered from parquet stats (no column read)
     n_rows = load_table(spark, sf_dir, "embeddings").count()
@@ -400,14 +416,7 @@ def ann_lsh_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT pay — unlike sim_cosine_ivf's many-pass training loop, the
     recompute is a single small scan+normalize, and the checkpoint job
     costs what it saves.)"""
-    from pyspark.sql import Window
-
-    scored = lsh_candidate_cosine(spark, sf_dir, directed=True)
-    w = Window.partitionBy("id_q").orderBy(F.col("cos_sim").desc(), F.col("id_n"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-    )
+    return _top3(lsh_candidate_cosine(spark, sf_dir, directed=True))
 
 
 # Recall@3 floors for the certification queries. The fixture embeddings
@@ -457,7 +466,7 @@ _EXACT_TOP3_ORACLE = f"""
 
 
 def _exact_top3_per_query(
-    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
+    spark: SparkSession, sf_dir: str, e: DataFrame | None = None
 ) -> DataFrame:
     """EXACT cosine top-3 neighbors per query — the certification
     baseline for the ANN paths, bit-matching DuckDB's all-pairs replay.
@@ -466,84 +475,36 @@ def _exact_top3_per_query(
     PRUNES (per query, keep everything within 1e-9 of its 3rd-best BLAS
     value — wider than the ~1e-13 BLAS-vs-fold divergence on 64
     doubles, so no true top-3 member is ever cut); survivors are
-    re-scored with the left-fold dot/norm column expressions that match
-    DuckDB's list_reduce evaluation order exactly, and the final
-    row_number over the fold value decides rk — so the emitted
-    (id_q, rk, id_n_exact) rows agree with the oracle bit for bit.
-    Exact-side size is guard-railed by _collect_broadcast_matrix.
+    re-scored by _pair_cosine's left fold, which matches DuckDB's
+    list_reduce evaluation order exactly, and _top3 over the fold
+    value decides rk — so the emitted (id_q, rk, id_n_exact) rows agree
+    with the oracle bit for bit. Exact-side size is guard-railed by
+    _collect_broadcast_matrix.
 
-    ``emb`` overrides the membership frame ((vec_id, embedding) rows;
+    ``e`` overrides the membership frame ((vec_id, vec) rows;
     default = the corpus table): the retrain-generation serving query
     certifies against the SERVING membership (corpus ∪ twins), and its
     oracle replays the same all-pairs fold over that union — one
     baseline kernel, parameterized by membership, so the two
     certification surfaces cannot drift."""
-    from pyspark.sql import Window
-
-    if emb is None:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-    right = _collect_broadcast_matrix(emb, 64, TOPK_BROADCAST_MAX_CELLS)
-    ids_r = np.asarray(right["vec_id"].to_numpy(), dtype=np.int64)
-    mat_r = np.stack([np.asarray(v, dtype=np.float64) for v in right["embedding"]])
-    norms_r = np.linalg.norm(mat_r, axis=1)
-    bc = spark.sparkContext.broadcast((ids_r, mat_r, norms_r))
+    if e is None:
+        e = _embeddings(spark, sf_dir)
+    side = _collect_broadcast_matrix(e, 64, TOPK_BROADCAST_MAX_CELLS)
 
     def cand_blocks(batches):
-        ids_r, mat_r, norms_r = bc.value
-        sub = 1024
-        for pdf in batches:
-            if len(pdf) == 0:
+        ids_r = side.value[0]
+        for ids_l, cos in _cosine_blocks(batches, side):
+            cos[ids_l[:, None] == ids_r[None, :]] = -np.inf  # no self
+            k = min(3, cos.shape[1] - 1)
+            if k <= 0:
                 continue
-            ids_b = np.asarray(pdf["vec_id"].to_numpy(), dtype=np.int64)
-            mat_b = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            norms_b = np.linalg.norm(mat_b, axis=1)
-            for s in range(0, len(ids_b), sub):
-                ids_l = ids_b[s : s + sub]
-                cos = (mat_b[s : s + sub] @ mat_r.T) / np.outer(
-                    norms_b[s : s + sub], norms_r
-                )
-                cos[ids_l[:, None] == ids_r[None, :]] = -np.inf  # no self
-                k = min(3, cos.shape[1] - 1)
-                if k <= 0:
-                    continue
-                third = np.partition(cos, -k, axis=1)[:, -k]
-                keep = cos >= (third[:, None] - 1e-9)
-                iq, im = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {"id_q": ids_l[iq], "id_n_exact": ids_r[im]}
-                )
+            third = np.partition(cos, -k, axis=1)[:, -k]
+            iq, im = np.nonzero(cos >= (third[:, None] - 1e-9))
+            yield pd.DataFrame({"id_q": ids_l[iq], "id_n": ids_r[im]})
 
-    cands = emb.mapInPandas(cand_blocks, schema="id_q long, id_n_exact long")
-    # rescore with the Arrow left-fold kernel — bit-identical to the
-    # _dot/_norm fold expressions it replaced (see _cos_fold_col)
-    ea = emb.select(
-        F.col("vec_id").alias("id_q"),
-        _as_double(F.col("embedding")).alias("vq"),
-    )
-    eb = emb.select(
-        F.col("vec_id").alias("id_n_exact"),
-        _as_double(F.col("embedding")).alias("vn"),
-    )
-    rescored = (
-        cands.join(ea, "id_q")
-        .join(eb, "id_n_exact")
-        .select(
-            "id_q",
-            "id_n_exact",
-            _cos_fold_col(F.col("vq"), F.col("vn")).alias("cos_fold"),
-        )
-    )
-    w = Window.partitionBy("id_q").orderBy(
-        F.col("cos_fold").desc(), F.col("id_n_exact")
-    )
-    return (
-        rescored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 3)
-        .select("id_q", "rk", "id_n_exact")
+    cands = e.mapInPandas(cand_blocks, schema="id_q long, id_n long")
+    return _top3(_pair_cosine(e, cands)).select(
+        "id_q", F.col("rk").cast("bigint").alias("rk"), F.col("id_n").alias("id_n_exact")
     )
 
 
@@ -604,27 +565,27 @@ _IVF_ITERS = 2
 _IVF_DIM = 64
 
 
-def _ivf_train_centroids(
-    spark: SparkSession, e: DataFrame, k: int = _IVF_K
+def _lloyd(
+    spark: SparkSession, e: DataFrame, cents: "np.ndarray", iters: int, assign, finish
 ) -> "np.ndarray":
-    """Deterministic spherical k-means: init = unit vectors of the
-    ``k`` (default _IVF_K) smallest vec_ids (no rand()), then
-    _IVF_ITERS Lloyd rounds.
+    """``iters`` deterministic Lloyd rounds over (M, K, sub) centroids:
+    M subspaces of K centroids each, sub = dim / M (IVF is M = 1, PQ
+    trains all M codebooks in one pass). ``assign(mat, cents)`` maps an
+    (n, dim) batch to its (n, M) cells; ``finish(mean)`` turns a cell's
+    new mean into its centroid, or None to keep the old one.
 
     Each round is one distributed pass: a mapInPandas assigns cells with
-    a broadcast centroid matrix (BLAS argmax), emits (cell, pos, val)
-    components, and the new means come from a groupBy with DECIMAL sums
-    — order-independent, so the trained centroids are bit-identical
+    the broadcast centroids, emits (m, cell, pos, val) components, and
+    the new means come from a groupBy with DECIMAL sums —
+    order-independent, so the trained centroids are bit-identical
     across runs and partitionings (double partial sums would drift and
-    move boundary vectors between cells). Only K×dim scalars ever reach
-    the driver. At 100 TB the component explosion would be replaced by
-    per-batch partial sums in the same mapInPandas (one row per
-    cell×dim per batch); the plan shape is otherwise identical."""
-    init = [r["vec"] for r in e.orderBy("vec_id").limit(k).collect()]
-    cents = np.stack([np.asarray(v, dtype=np.float64) for v in init])
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-
-    for _ in range(_IVF_ITERS):
+    move boundary vectors between cells). Empty cells keep their
+    centroid. Only M×K×sub scalars ever reach the driver. At 100 TB the
+    component explosion would be replaced by per-batch partial sums in
+    the same mapInPandas (one row per cell×dim per batch); the plan
+    shape is otherwise identical."""
+    m_sub, _, sub = cents.shape
+    for _ in range(iters):
         bc = spark.sparkContext.broadcast(cents)
 
         def components(batches):
@@ -632,37 +593,66 @@ def _ivf_train_centroids(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-                unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-                cell = np.argmax(unit @ c.T, axis=1)  # ties → lowest cell
+                mat = _matrix(pdf["vec"])
+                cells = assign(mat, c)
                 yield pd.DataFrame(
                     {
-                        "cell": np.repeat(cell, _IVF_DIM).astype("int32"),
-                        "pos": np.tile(np.arange(_IVF_DIM, dtype="int32"), len(cell)),
+                        "m": np.tile(np.repeat(np.arange(m_sub, dtype="int32"), sub), len(mat)),
+                        "cell": np.repeat(cells, sub, axis=1).ravel().astype("int32"),
+                        "pos": np.tile(np.arange(sub, dtype="int32"), len(mat) * m_sub),
                         "val": mat.ravel(),
                     }
                 )
 
         sums = (
             e.select("vec")
-            .mapInPandas(components, "cell int, pos int, val double")
-            .groupBy("cell", "pos")
+            .mapInPandas(components, "m int, cell int, pos int, val double")
+            .groupBy("m", "cell", "pos")
             .agg(
                 F.sum(F.col("val").cast("decimal(28,14)")).cast("double").alias("s"),
                 F.count("val").alias("c"),
             )
             .collect()
         )
-        new = cents.copy()  # empty cells keep their previous centroid
-        means: dict[int, np.ndarray] = {}
+        means: dict[tuple[int, int], np.ndarray] = {}
         for r in sums:
-            means.setdefault(r["cell"], np.zeros(_IVF_DIM))[r["pos"]] = r["s"] / r["c"]
-        for cell, m in means.items():
-            n = np.linalg.norm(m)
-            if n > 0:
-                new[cell] = m / n
-        cents = new
+            means.setdefault((r["m"], r["cell"]), np.zeros(sub))[r["pos"]] = r["s"] / r["c"]
+        cents = cents.copy()
+        for (m, cell), mean in means.items():
+            new = finish(mean)
+            if new is not None:
+                cents[m, cell] = new
     return cents
+
+
+def _ivf_cells(mat: "np.ndarray", cents: "np.ndarray", nprobe: int) -> "np.ndarray":
+    """(n, nprobe) int32 cells of each row of ``mat`` against the unit
+    centroids ``cents`` (K, dim), nearest first by cosine, ties to the
+    lowest cell: column 0 is the cell a vector lives in, the row the
+    cells a query for it probes."""
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    return np.argsort(-(unit @ cents.T), kind="stable", axis=1)[:, :nprobe].astype("int32")
+
+
+def _unit_mean(mean: "np.ndarray") -> "np.ndarray | None":
+    """Spherical k-means' centroid: the cell mean renormalized (None, so
+    the old centroid stays, for a zero mean)."""
+    n = np.linalg.norm(mean)
+    return mean / n if n > 0 else None
+
+
+def _ivf_train_centroids(
+    spark: SparkSession, e: DataFrame, k: int = _IVF_K
+) -> "np.ndarray":
+    """Deterministic spherical k-means: init = unit vectors of the
+    ``k`` (default _IVF_K) smallest vec_ids (no rand()), then
+    _IVF_ITERS _lloyd rounds with the probe assignment's rank-1 cell."""
+    cents = _matrix(r["vec"] for r in e.orderBy("vec_id").limit(k).collect())
+    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
+    return _lloyd(
+        spark, e, cents[None], _IVF_ITERS,
+        lambda mat, c: _ivf_cells(mat, c[0], 1), _unit_mean,
+    )[0]
 
 
 _IVF_CENTROID_CACHE: dict[str, "np.ndarray"] = {}
@@ -751,16 +741,13 @@ def _ivf_assign(df: DataFrame, cents_bc, nprobe: int = _IVF_NPROBE) -> DataFrame
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-            unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            dots = unit @ c.T
-            order = np.argsort(-dots, kind="stable", axis=1)[:, :nprobe]
+            cells = _ivf_cells(_matrix(pdf["vec"]), c, nprobe)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "vec": list(pdf["vec"]),
-                    "cell": order[:, 0].astype("int32"),
-                    "probes": list(order.astype("int32")),
+                    "cell": cells[:, 0],
+                    "probes": list(cells),
                 }
             )
 
@@ -794,7 +781,7 @@ def ivf_top3(
     localCheckpoint'd — one materialization instead of per-consumer
     recompute. At 100 TB the same seam becomes
     persist(MEMORY_AND_DISK) on a real cluster."""
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec").localCheckpoint()
+    e = _embeddings(spark, sf_dir).localCheckpoint()
     cents = _ivf_centroids(spark, sf_dir, e, force_disk_reload=force_disk_reload)
     bc = spark.sparkContext.broadcast(cents)
     a = _ivf_assign(e, bc).localCheckpoint()
@@ -811,8 +798,8 @@ def ivf_top3(
             return pd.DataFrame({"id_q": [], "id_n": [], "cos_sim": []}).astype(
                 {"id_q": "int64", "id_n": "int64", "cos_sim": "float64"}
             )
-        mm = np.stack([np.asarray(v, dtype=np.float64) for v in m["vec"]])
-        qm = np.stack([np.asarray(v, dtype=np.float64) for v in q["vec"]])
+        mm = _matrix(m["vec"])
+        qm = _matrix(q["vec"])
         mu = mm / np.linalg.norm(mm, axis=1, keepdims=True)
         qu = qm / np.linalg.norm(qm, axis=1, keepdims=True)
         ids_m = m["vec_id"].to_numpy()
@@ -829,13 +816,10 @@ def ivf_top3(
             out_c.extend(row[keep])
         return pd.DataFrame({"id_q": out_q, "id_n": out_n, "cos_sim": out_c})
 
-    from pyspark.sql import Window
-
     res = both.groupBy("cell").applyInPandas(cell_topk, "id_q long, id_n long, cos_sim double")
     # a member belongs to exactly one cell, so a (query, neighbor) pair
     # occurs in at most one probed cell — no distinct needed
-    w = Window.partitionBy("id_q").orderBy(F.col("cos_sim").desc(), F.col("id_n"))
-    return res.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 3).drop("rk")
+    return _top3(res).drop("rk")
 
 
 @query("sim_cosine_ivf", oracle=_EXACT_TOP3_ORACLE)
@@ -871,7 +855,7 @@ _PQ_K = 256      # centroids per subspace → 8-bit codes (faiss default)
 _PQ_ITERS = 2    # Lloyd rounds (deterministic, decimal-summed)
 _PQ_RERANK_MIN = 16  # ADC shortlist floor; actual width = max(this, N/100)
 # A FIXED shortlist loses recall as the corpus grows — it scales with N
-# (the faiss k-for-rerank rule). With 8-bit codebooks + max(16, N/100)
+# (the faiss k-for-re-rank rule). With 8-bit codebooks + max(16, N/100)
 # re-rank the measured recall@3 is 0.93 / 0.75 at sf0.01 / sf0.1
 # (4-bit codes measured 0.47 / 0.30 — ADC resolution, not shortlist
 # width, was the limiter); certify at 0.20 so fixture-regeneration
@@ -903,73 +887,44 @@ def _pq_encode_np(mat: "np.ndarray", cb: "np.ndarray") -> "np.ndarray":
 def _pq_train_codebooks(spark: SparkSession, e: DataFrame) -> "np.ndarray":
     """(M, K, dim/M) PQ codebooks by deterministic per-subspace
     k-means: init = the subvectors of the _PQ_K smallest vec_ids, then
-    _PQ_ITERS Lloyd rounds where ONE mapInPandas pass assigns all M
-    subspaces at once (broadcast codebooks, BLAS argmin per subspace)
-    and the new means come from a single groupBy over (m, cell, pos)
-    with DECIMAL sums — order-independent, bit-identical across runs
-    and partitionings (the _ivf_train_centroids discipline, M-way)."""
-    sub = _IVF_DIM // _PQ_M
-    init = [r["vec"] for r in e.orderBy("vec_id").limit(_PQ_K).collect()]
+    _PQ_ITERS _lloyd rounds that assign all M subspaces at once with the
+    encoder (_pq_encode_np)."""
     # K clamps to the corpus size on tiny fixtures (k-means needs K
     # distinct seeds); the codebook file is fingerprint-keyed, so the
     # effective K is consistent per dataset by construction
-    books = np.stack(
-        [np.asarray(v, dtype=np.float64).reshape(_PQ_M, sub) for v in init]
-    ).transpose(1, 0, 2)  # (M, K_eff, sub)
+    seeds = _matrix(r["vec"] for r in e.orderBy("vec_id").limit(_PQ_K).collect())
+    books = seeds.reshape(len(seeds), _PQ_M, -1).transpose(1, 0, 2)  # (M, K_eff, sub)
+    return _lloyd(spark, e, books, _PQ_ITERS, _pq_encode_np, lambda mean: mean)
 
-    for _ in range(_PQ_ITERS):
-        bc = spark.sparkContext.broadcast(books)
 
-        def components(batches):
-            cb = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
-                ).reshape(len(pdf), _PQ_M, sub)
-                out_m, out_c, out_p, out_v = [], [], [], []
-                for m in range(_PQ_M):
-                    x = mat[:, m, :]                      # (n, sub)
-                    d2 = (
-                        (x * x).sum(1, keepdims=True)
-                        - 2.0 * (x @ cb[m].T)
-                        + (cb[m] * cb[m]).sum(1)[None, :]
-                    )
-                    cell = np.argmin(d2, axis=1)          # ties → lowest
-                    out_m.append(np.full(len(x) * sub, m, dtype="int32"))
-                    out_c.append(np.repeat(cell, sub).astype("int32"))
-                    out_p.append(np.tile(np.arange(sub, dtype="int32"), len(x)))
-                    out_v.append(x.ravel())
-                yield pd.DataFrame(
-                    {
-                        "m": np.concatenate(out_m),
-                        "cell": np.concatenate(out_c),
-                        "pos": np.concatenate(out_p),
-                        "val": np.concatenate(out_v),
-                    }
-                )
-
-        sums = (
-            e.select("vec")
-            .mapInPandas(components, "m int, cell int, pos int, val double")
-            .groupBy("m", "cell", "pos")
-            .agg(
-                F.sum(F.col("val").cast("decimal(28,14)")).cast("double").alias("s"),
-                F.count("val").alias("c"),
-            )
-            .collect()
-        )
-        new = books.copy()  # empty cells keep their previous centroid
-        acc: dict[tuple[int, int], np.ndarray] = {}
-        for r in sums:
-            acc.setdefault((r["m"], r["cell"]), np.zeros(sub))[r["pos"]] = (
-                r["s"] / r["c"]
-            )
-        for (m, cell), mean in acc.items():
-            new[m, cell] = mean
-        books = new
-    return books
+def _adc_shortlist(q, ids_q, codes, ids_n, books, width):
+    """Asymmetric distance computation (ADC): per raw query row of ``q``
+    (ids ``ids_q``), the ``width`` corpus rows (ids ``ids_n``, PQ
+    ``codes`` (N, M) against ``books`` (M, K, sub)) of highest score
+    Σ_m unit(q)_m · books[m, codes[:, m]], self excluded; every other
+    row when ``width`` ≥ N. Returns the (id_q, id_n) arrays. Queries
+    run in chunks of 512: one (q, M, K) table of exact
+    subvector·centroid dots per chunk, then the scores are M
+    fancy-indexed gathers, so memory stays at 512 × N doubles."""
+    m_sub, _, sub = books.shape
+    unit = q / np.linalg.norm(q, axis=1, keepdims=True)
+    qsub = unit.reshape(len(q), m_sub, sub)
+    out_q, out_n = [], []
+    for s0 in range(0, len(q), 512):
+        ids = ids_q[s0 : s0 + 512]
+        tables = np.einsum("qms,mks->qmk", qsub[s0 : s0 + 512], books)
+        scores = np.zeros((len(ids), len(ids_n)))
+        for m in range(m_sub):
+            scores += tables[:, m, codes[:, m]]
+        scores[ids[:, None] == ids_n[None, :]] = -np.inf
+        if width >= len(ids_n):
+            top = np.tile(np.arange(len(ids_n)), (len(ids), 1))
+        else:
+            top = np.argpartition(-scores, width, axis=1)[:, :width]
+        iq, ic = np.nonzero(np.take_along_axis(scores, top, axis=1) > -np.inf)
+        out_q.append(ids[iq])
+        out_n.append(ids_n[top[iq, ic]])
+    return np.concatenate(out_q).astype(np.int64), np.concatenate(out_n).astype(np.int64)
 
 
 _PQ_BOOK_CACHE: dict[str, "np.ndarray"] = {}
@@ -993,13 +948,14 @@ def _pq_codebooks(
 
 def pq_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw PQ ANN producer (id_q, id_n, cos_sim): vectors encoded to
-    _PQ_M 4-bit codes against the persisted codebooks; every query
-    scores the WHOLE corpus by asymmetric distance computation — a
-    (M×K) table of exact query-subvector·centroid dots, then corpus
-    scores are pure table lookups over the broadcast code matrix (the
-    memory math that makes PQ the 100-TB path: codes are ~1000×
-    smaller than the vectors) — and the ADC top-max(16, N/100) shortlist
-    is re-scored with exact BLAS cosine for the final top-3.
+    _PQ_M 8-bit codes against the persisted codebooks; every query
+    scores the WHOLE corpus by asymmetric distance computation
+    (_adc_shortlist — a (M×K) table of exact query-subvector·centroid
+    dots, then corpus scores are pure table lookups over the broadcast
+    code matrix: the memory math that makes PQ the 100-TB path, codes
+    are ~1000× smaller than the vectors) — and the ADC
+    top-max(16, N/100) shortlist is re-scored by _pair_cosine's exact
+    fold for the final _top3.
 
     Scale shape: training touches K×dim scalars driver-side (decimal-
     deterministic); encoding is one map-side pass; the code matrix
@@ -1021,7 +977,7 @@ def pq_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _collect_broadcast_matrix contract documents), before any
     # normalization, checkpoint, or codebook work is scheduled — the
     # r14-ADVICE fix for the extra full-scan job the old post-
-    # checkpoint e.count() paid on every call.  _embeddings_normed is
+    # checkpoint e.count() paid on every call.  _embeddings is
     # row-1:1 with the table, so this N is the code-matrix N.
     n_codes = load_table(spark, sf_dir, "embeddings").count()
     if n_codes * _PQ_M > PQ_CODES_MAX_CELLS:
@@ -1033,100 +989,27 @@ def pq_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
             "and ADC-join probe batches against code partitions sharded by "
             "IVF cell (sim_cosine_ivfpq is that operator)"
         )
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec").localCheckpoint()
-    books = _pq_codebooks(spark, sf_dir, e)
-    sub = _IVF_DIM // _PQ_M
-    bc = spark.sparkContext.broadcast(books)
-
-    def encode(batches):
-        cb = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
-            )
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"].to_numpy(),
-                 "codes": list(_pq_encode_np(mat, cb))}
-            )
-
-    enc = e.mapInPandas(encode, "vec_id long, codes array<int>")
-    code_rows = enc.collect()  # N×M small ints — the PQ index itself
+    e = _embeddings(spark, sf_dir).localCheckpoint()
+    bc = spark.sparkContext.broadcast(_pq_codebooks(spark, sf_dir, e))
+    code_rows = _encode_codes_frame(e, bc).collect()  # N×M small ints — the PQ index itself
     # (guarded above: n_codes × _PQ_M ≤ PQ_CODES_MAX_CELLS)
     ids_all = np.array([r["vec_id"] for r in code_rows], dtype=np.int64)
     codes_all = np.stack([np.asarray(r["codes"], dtype=np.int32) for r in code_rows])
     order = np.argsort(ids_all)
-    ids_all, codes_all = ids_all[order], codes_all[order]
-    bidx = spark.sparkContext.broadcast((ids_all, codes_all))
+    bidx = spark.sparkContext.broadcast((ids_all[order], codes_all[order]))
 
     def adc(batches):
-        cb = bc.value
         ids_n, codes = bidx.value
-        # reconstructed (normalized-table) centroids per code, for ADC
+        width = min(max(_PQ_RERANK_MIN, len(ids_n) // 100), len(ids_n) - 1)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qm = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-            qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-            qsub = qn.reshape(len(qm), _PQ_M, sub)
-            ids_q = pdf["vec_id"].to_numpy()
-            rr = min(max(_PQ_RERANK_MIN, len(ids_n) // 100), len(ids_n) - 1)
-            out_q, out_n = [], []
-            # chunked batch ADC: per chunk, (q,M,K) dot tables, then the
-            # corpus scores are M fancy-indexed gathers — vectorized
-            # across queries, memory bounded at chunk × N doubles
-            chunk = 512
-            for s0 in range(0, len(qm), chunk):
-                qs = qsub[s0 : s0 + chunk]
-                tables = np.einsum("qms,mks->qmk", qs, cb)  # (q, M, K)
-                scores = np.zeros((len(qs), len(ids_n)))
-                for m in range(_PQ_M):
-                    scores += tables[:, m, codes[:, m]]
-                scores[ids_q[s0 : s0 + chunk, None] == ids_n[None, :]] = -np.inf
-                top = np.argpartition(-scores, rr, axis=1)[:, :rr]
-                out_q.append(np.repeat(ids_q[s0 : s0 + chunk], rr))
-                out_n.append(ids_n[top].ravel())
-            yield pd.DataFrame(
-                {"id_q": np.concatenate(out_q).astype(np.int64),
-                 "id_n": np.concatenate(out_n).astype(np.int64)}
+            id_q, id_n = _adc_shortlist(
+                _matrix(pdf["vec"]), pdf["vec_id"].to_numpy(), codes, ids_n, bc.value, width
             )
+            yield pd.DataFrame({"id_q": id_q, "id_n": id_n})
 
-    cand = e.mapInPandas(adc, "id_q long, id_n long")
-    a = e.select(F.col("vec_id").alias("id_q"), F.col("vec").alias("vq"))
-    b = e.select(F.col("vec_id").alias("id_n"), F.col("vec").alias("vn"))
-
-    def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"id_q": [], "id_n": [], "cos_sim": []}).astype(
-                {"id_q": "int64", "id_n": "int64", "cos_sim": "float64"}
-            )
-        va = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vq"]])
-        vb = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vn"]])
-        cos = np.einsum("ij,ij->i", va, vb) / (
-            np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)
-        )
-        out = pdf[["id_q", "id_n"]].copy()
-        out["cos_sim"] = cos
-        keep = out.sort_values(["cos_sim", "id_n"], ascending=[False, True])
-        keep = keep.groupby("id_q", sort=False).head(3)
-        return keep[["id_q", "id_n", "cos_sim"]]
-
-    from pyspark.sql import Window
-
-    scored = (
-        cand.join(a, "id_q").join(b, "id_n")
-        .groupBy("id_q")
-        .applyInPandas(
-            lambda pdf: rerank(pdf), "id_q long, id_n long, cos_sim double"
-        )
-    )
-    w = Window.partitionBy("id_q").orderBy(F.col("cos_sim").desc(), F.col("id_n"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .drop("rk")
-    )
+    return _top3(_pair_cosine(e, e.mapInPandas(adc, "id_q long, id_n long"))).drop("rk")
 
 
 @query("sim_cosine_pq", oracle=_EXACT_TOP3_ORACLE)
@@ -1134,7 +1017,7 @@ def sim_cosine_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ANN recall certification, hash-checked (the
     sim_cosine_ann_lsh / sim_cosine_ivf pattern): runs the full
     production PQ path (:func:`pq_top3` — persisted deterministic
-    codebooks, 4-bit product codes, ADC shortlist, exact re-rank),
+    codebooks, 8-bit product codes, ADC shortlist, exact re-rank),
     measures recall@3 against the exact neighbor set, and emits the
     EXACT top-3 rows stamped with ``recall_ok`` (≥ _PQ_RECALL_BOUND =
     less than half the measured recall, so the boolean is a stable
@@ -1166,28 +1049,26 @@ artifact_kind(
 )
 
 
-def _encode_codes_frame(assigned: DataFrame, books_bc) -> DataFrame:
-    """(…, cell, vec_id, vec) → (cell, vec_id, codes): the map-side PQ
-    encode — ONE definition of the code-table row shape, shared by the
-    initial index build (_ivfpq_code_index) and the incremental append
+def _encode_codes_frame(df: DataFrame, books_bc) -> DataFrame:
+    """(…, vec) → (…, codes): the map-side PQ encode, every other
+    column passed through — ONE definition of the encode pass, shared by
+    pq_top3's collected code matrix, the initial index build
+    (_ivfpq_code_index) and the incremental append
     (sim_ivfpq_index_append), so appended codes can never disagree with
     built codes on encoder geometry."""
+    keys = [c for c in df.columns if c != "vec"]
+    schema = StructType(
+        [df.schema[c] for c in keys] + [StructField("codes", ArrayType(IntegerType()))]
+    )
 
-    def encode_members(batches):
+    def encode(batches):
         cb = books_bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-            yield pd.DataFrame(
-                {"cell": pdf["cell"].to_numpy(),
-                 "vec_id": pdf["vec_id"].to_numpy(),
-                 "codes": list(_pq_encode_np(mat, cb))}
-            )
+            yield pdf[keys].assign(codes=list(_pq_encode_np(_matrix(pdf["vec"]), cb)))
 
-    return assigned.select("cell", "vec_id", "vec").mapInPandas(
-        encode_members, "cell int, vec_id long, codes array<int>"
-    )
+    return df.mapInPandas(encode, schema)
 
 
 def _ivfpq_code_index(
@@ -1220,9 +1101,9 @@ def _ivfpq_code_index(
         e = (
             members
             if members is not None
-            else _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+            else _embeddings(spark, sf_dir)
         )
-        assigned = _ivf_assign(e, cents_bc)
+        assigned = _ivf_assign(e, cents_bc).select("cell", "vec_id", "vec")
         codes = _encode_codes_frame(assigned, books_bc)
         # one file per inverted list (the faiss layout): the build-time
         # cell shuffle is paid once per corpus version and keeps the
@@ -1253,9 +1134,9 @@ def ivfpq_top3(
     cells' code lists in a per-cell ADC kernel: one (M, K) exact
     query-subvector·centroid table per query, member scores = M
     fancy-indexed gathers over the cell's code matrix, per-(query,
-    cell) shortlist out. The union of shortlists is re-scored with the
-    exact fold cosine (JVM-side column expressions) and row_number
-    picks the global top-3.
+    cell) shortlist out (_adc_shortlist). The union of shortlists is
+    re-scored by _pair_cosine's exact fold and _top3 picks the global
+    top-3.
 
     Scale shape — the memory math that motivated the guard: per task,
     ADC holds one CELL's codes (N·M/K cells' worth), not the corpus's;
@@ -1276,9 +1157,9 @@ def ivfpq_top3(
     cell/8) per probed cell — relatively ~10× wider than plain PQ's
     global max(16, N/100), so ADC rank truncation contributes almost
     nothing to the composed loss (measured: same recall as the
-    half-cell shortlist at both fixture SFs, at ~1/4 the rerank-join
-    width); production tunes it with the faiss k-for-rerank rule."""
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec").localCheckpoint()
+    half-cell shortlist at both fixture SFs, at ~1/4 the re-rank-join
+    width); production tunes it with the faiss k-for-re-rank rule."""
+    e = _embeddings(spark, sf_dir).localCheckpoint()
     cents = _ivf_centroids(spark, sf_dir, e, force_disk_reload=force_disk_reload)
     books = _pq_codebooks(spark, sf_dir, e, force_disk_reload=force_disk_reload)
     bc_c = spark.sparkContext.broadcast(cents)
@@ -1303,7 +1184,7 @@ def _ivfpq_adc_rank(
     member_codes: DataFrame, probes: DataFrame, e: DataFrame, bc_b
 ) -> DataFrame:
     """The IVFADC probe pipeline — ONE definition of the per-cell ADC
-    kernel + JVM exact re-rank + global top-3, shared by ivfpq_top3
+    kernel + exact fold re-rank + global top-3, shared by ivfpq_top3
     (fixture-K, all-vectors-are-queries) and the √N-K regime probe
     (ivfpq_top3_sqrtk, fixed query budget), so the measured regime row
     exercises exactly the production kernel. ``member_codes`` rows:
@@ -1313,47 +1194,24 @@ def _ivfpq_adc_rank(
         "cell", F.lit(0).alias("role"), "vec_id", "codes",
         F.lit(None).cast("array<double>").alias("vec"),
     )
-    sub = _IVF_DIM // _PQ_M
 
     def adc_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         m = pdf[pdf["role"] == 0]
         q = pdf[pdf["role"] == 1]
-        empty = pd.DataFrame({"id_q": [], "id_n": []}).astype(
-            {"id_q": "int64", "id_n": "int64"}
-        )
         if len(m) == 0 or len(q) == 0:
-            return empty
-        cb = bc_b.value
-        codes = np.stack([np.asarray(c, dtype=np.int64) for c in m["codes"]])
+            return pd.DataFrame({"id_q": [], "id_n": []}).astype(
+                {"id_q": "int64", "id_n": "int64"}
+            )
         ids_m = m["vec_id"].to_numpy()
-        qm = np.stack([np.asarray(v, dtype=np.float64) for v in q["vec"]])
-        qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-        ids_q = q["vec_id"].to_numpy()
-        rr = min(len(ids_m), max(_PQ_RERANK_MIN, len(ids_m) // 8))
-        out_q, out_n = [], []
-        chunk = 512
-        qsub = qn.reshape(len(qn), _PQ_M, sub)
-        for s0 in range(0, len(qn), chunk):
-            qs = qsub[s0 : s0 + chunk]
-            tables = np.einsum("qms,mks->qmk", qs, cb)  # (q, M, K)
-            scores = np.zeros((len(qs), len(ids_m)))
-            for mm in range(_PQ_M):
-                scores += tables[:, mm, codes[:, mm]]
-            scores[ids_q[s0 : s0 + chunk, None] == ids_m[None, :]] = -np.inf
-            if rr >= len(ids_m):
-                top = np.tile(np.arange(len(ids_m)), (len(qs), 1))
-            else:
-                top = np.argpartition(-scores, rr, axis=1)[:, :rr]
-            keep = np.take_along_axis(scores, top, axis=1) > -np.inf
-            iq, ic = np.nonzero(keep)
-            out_q.append(ids_q[s0 : s0 + chunk][iq])
-            out_n.append(ids_m[top[iq, ic]])
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {"id_q": np.concatenate(out_q).astype(np.int64),
-             "id_n": np.concatenate(out_n).astype(np.int64)}
+        id_q, id_n = _adc_shortlist(
+            _matrix(q["vec"]),
+            q["vec_id"].to_numpy(),
+            np.stack([np.asarray(c, dtype=np.int64) for c in m["codes"]]),
+            ids_m,
+            bc_b.value,
+            min(len(ids_m), max(_PQ_RERANK_MIN, len(ids_m) // 8)),
         )
+        return pd.DataFrame({"id_q": id_q, "id_n": id_n})
 
     cand = (
         members.unionByName(probes)
@@ -1363,28 +1221,9 @@ def _ivfpq_adc_rank(
         # same (q, n) pair can shortlist only once (one member cell),
         # so no distinct is needed
     )
-    a = e.select(F.col("vec_id").alias("id_q"), F.col("vec").alias("vq"))
-    b = e.select(F.col("vec_id").alias("id_n"), F.col("vec").alias("vn"))
-    from pyspark.sql import Window
-
-    scored = (
-        cand.join(a, "id_q")
-        .join(b, "id_n")
-        .select(
-            "id_q", "id_n",
-            # Arrow left-fold kernel — bit-identical to the _dot/_norm
-            # fold expressions it replaced (see _cos_fold_col); the ADC
-            # shortlist is the engine's largest fold-rescored pair set,
-            # so the vectorization matters most here
-            _cos_fold_col(F.col("vq"), F.col("vn")).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("id_q").orderBy(F.col("cos_sim").desc(), F.col("id_n"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .drop("rk")
-    )
+    # _pair_cosine's Arrow fold kernel: the ADC shortlist is the
+    # engine's largest fold-rescored pair set
+    return _top3(_pair_cosine(e, cand)).drop("rk")
 
 
 @query("sim_cosine_ivfpq", oracle=_EXACT_TOP3_ORACLE)
@@ -1443,7 +1282,7 @@ def ivfpq_top3_sqrtk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "embeddings").count()
     k = max(_IVF_K, math.isqrt(max(n - 1, 0)) + 1)  # ⌈√N⌉
     nprobe = max(_IVF_NPROBE, math.isqrt(k))
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec").localCheckpoint()
+    e = _embeddings(spark, sf_dir).localCheckpoint()
     cents = _ivf_centroids(spark, sf_dir, e, k=k)
     books = _pq_codebooks(spark, sf_dir, e)
     bc_c = spark.sparkContext.broadcast(cents)
@@ -2178,7 +2017,7 @@ def sim_cosine_exact_pairs(
                 {"vec_a": "int64", "vec_b": "int64"}
             )
         pdf = pdf.sort_values("vec_id")  # triu ⇒ vec_a < vec_b
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+        m = _matrix(pdf["embedding"])
         unit = m / np.linalg.norm(m, axis=1, keepdims=True)
         ids = pdf["vec_id"].to_numpy()
         out_a, out_b = [], []
@@ -2232,8 +2071,6 @@ def sim_cosine_exact_pairs(
         .filter(F.col("cos_sim") >= _EXACT_COS_TAU)
     )
     if per_vector_topk is not None:
-        from pyspark.sql import Window
-
         w = Window.partitionBy("vec_a").orderBy(F.col("cos_sim").desc(), "vec_b")
         res = (
             res.withColumn("rk", F.row_number().over(w))
@@ -2299,8 +2136,7 @@ def _corpus_cell_index(spark: SparkSession, sf_dir: str, cents_bc) -> DataFrame:
 
     def write(p: str) -> None:
         corpus = (
-            _embeddings_normed(spark, sf_dir)
-            .select("vec_id", "vec")
+            _embeddings(spark, sf_dir)
             .filter(~F.expr(_EINC_SPLIT_SPARK))
         )
         _ivf_assign(corpus, cents_bc).select("vec_id", "vec", "cell").write.parquet(p)
@@ -2495,7 +2331,7 @@ def sim_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-sized, cell-partitioned files — same bound."""
     from .dedup import _TWIN_OFFSET
 
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+    e = _embeddings(spark, sf_dir)
     echk = e.localCheckpoint(eager=False)
     cents = _ivf_centroids(spark, sf_dir, echk)
     books = _pq_codebooks(spark, sf_dir, echk)
@@ -2512,8 +2348,10 @@ def sim_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         twins = _einc_arrival_frame(e).filter(
             F.col("vec_id") >= _TWIN_OFFSET
         )
-        tw_codes = _encode_codes_frame(_ivf_assign(twins, bc_c), bc_b)
-        v1.unionByName(tw_codes.select("cell", "vec_id", "codes")).repartition(
+        tw_codes = _encode_codes_frame(
+            _ivf_assign(twins, bc_c).select("cell", "vec_id", "vec"), bc_b
+        )
+        v1.unionByName(tw_codes).repartition(
             "cell"
         ).write.partitionBy("cell").parquet(p)
 
@@ -2540,8 +2378,8 @@ def _cell_threshold_matches(tau: float):
         )
         if len(m) == 0 or len(q) == 0:
             return empty
-        mm = np.stack([np.asarray(v, dtype=np.float64) for v in m["vec"]])
-        qm = np.stack([np.asarray(v, dtype=np.float64) for v in q["vec"]])
+        mm = _matrix(m["vec"])
+        qm = _matrix(q["vec"])
         mu = mm / np.linalg.norm(mm, axis=1, keepdims=True)
         qu = qm / np.linalg.norm(qm, axis=1, keepdims=True)
         ids_m = m["vec_id"].to_numpy()
@@ -2576,7 +2414,7 @@ def _einc_probe_frames(spark: SparkSession, sf_dir: str):
     first cut computed corpus and batch matches as separate aggregates
     — the plan dump showed the whole Union→shuffle→kernel subtree
     duplicated per branch)."""
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+    e = _embeddings(spark, sf_dir)
     cents = _ivf_centroids(
         spark, sf_dir, e.localCheckpoint(eager=False)
     )
@@ -2708,7 +2546,7 @@ def dedup_embedding_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     two partial-aggregated index scans. At 100 TB versions live in a
     catalog manifest and the append is a metadata commit of
     batch-sized, cell-partitioned files — same bound."""
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+    e = _embeddings(spark, sf_dir)
     cents = _ivf_centroids(spark, sf_dir, e.localCheckpoint(eager=False))
     bc = spark.sparkContext.broadcast(cents)
     # read-or-build v1 UNCONDITIONALLY (no-op read when present): a
@@ -2801,7 +2639,7 @@ def stream_embedding_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.makedirs(ledger)
         register_ledger_sink(spark)
 
-        e_all = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+        e_all = _embeddings(spark, sf_dir)
         cents = _ivf_centroids(spark, sf_dir, e_all.localCheckpoint(eager=False))
         bc = spark.sparkContext.broadcast(cents)
         members_c = _corpus_cell_index(spark, sf_dir, bc)
@@ -3194,7 +3032,7 @@ def _cutover_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     would collide silently)."""
     from .dedup import _TWIN_OFFSET
 
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+    e = _embeddings(spark, sf_dir)
     twins = _einc_arrival_frame(e).filter(F.col("vec_id") >= _TWIN_OFFSET)
     return e.unionByName(twins)
 
@@ -3340,7 +3178,7 @@ def ivfpq_retrain_if_skewed(
     members = _cutover_members(spark, sf_dir).localCheckpoint(eager=False)
     cents_gen = _ivf_centroids(spark, sf_dir, members, gen=gen)
     bc_c = spark.sparkContext.broadcast(cents_gen)
-    e = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+    e = _embeddings(spark, sf_dir)
     books = _pq_codebooks(spark, sf_dir, e.localCheckpoint(eager=False))
     _ivfpq_code_index(
         spark,
@@ -3394,7 +3232,7 @@ def sim_ivfpq_gen_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     gen-keyed cell-partitioned code table, and the gen-keyed member
     line — the complete configuration a committed cutover serves)
     through the SHARED ADC kernel (_ivfpq_adc_rank — the same per-cell
-    ADC + exact JVM re-rank + global top-3 every IVFADC query runs),
+    ADC + exact fold re-rank + global top-3 every IVFADC query runs),
     and certify recall against the exact baseline over the SERVING
     membership (corpus ∪ the planted twins — what the gen-1 line
     actually holds), under the same _PQ_RECALL_BOUND as
@@ -3425,7 +3263,7 @@ def sim_ivfpq_gen_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = _cutover_members(spark, sf_dir).localCheckpoint(eager=False)
     cents = ivf_retrain_generation(spark, sf_dir, gen=1)
     bc_c = spark.sparkContext.broadcast(cents)
-    e_corpus = _embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+    e_corpus = _embeddings(spark, sf_dir)
     books = _pq_codebooks(spark, sf_dir, e_corpus.localCheckpoint(eager=False))
     bc_b = spark.sparkContext.broadcast(books)
     member_codes = _ivfpq_code_index(
@@ -3446,10 +3284,7 @@ def sim_ivfpq_gen_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the planner's subtree reuse — materialize once (the ivfpq_top3
     # `assigned` discipline) so the all-pairs Python stage cannot run
     # per branch
-    exact = _exact_top3_per_query(
-        spark, sf_dir,
-        emb=members.select("vec_id", F.col("vec").alias("embedding")),
-    ).localCheckpoint(eager=False)
+    exact = _exact_top3_per_query(spark, sf_dir, e=members).localCheckpoint(eager=False)
     return _recall_certified(exact, ann, _PQ_RECALL_BOUND).select(
         "id_q",
         "rk",

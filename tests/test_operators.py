@@ -1258,11 +1258,7 @@ def test_ivf_index_persists_and_skips_retraining(spark, sf_dir):
 
     from projektdataengineering_spark.queries import similarity as S
 
-    e = (
-        S._embeddings_normed(spark, sf_dir)
-        .select("vec_id", "vec")
-        .localCheckpoint()
-    )
+    e = S._embeddings(spark, sf_dir).localCheckpoint()
     path = artifact("ivf", sf_dir)
     S._IVF_CENTROID_CACHE.pop(path, None)
     if os.path.exists(path):
@@ -1545,11 +1541,7 @@ def test_pq_recall_and_codebook_persistence(spark, sf_dir):
 
     from projektdataengineering_spark.queries import similarity as S
 
-    e = (
-        S._embeddings_normed(spark, sf_dir)
-        .select("vec_id", "vec")
-        .localCheckpoint()
-    )
+    e = S._embeddings(spark, sf_dir).localCheckpoint()
     n = e.count()
     # force one training
     path = artifact("pq_books", sf_dir)
@@ -1567,6 +1559,44 @@ def test_pq_recall_and_codebook_persistence(spark, sf_dir):
 
     rows = S.sim_cosine_pq(spark, sf_dir).collect()
     assert rows and all(r["recall_ok"] for r in rows)
+
+
+def test_adc_shortlist_matches_brute_force():
+    """similarity._adc_shortlist, the one ADC scorer of pq_top3 and the
+    IVFADC cells, against a brute-force reference: a corpus row's score
+    is the sum over subspaces of the unit query subvector's dot with the
+    row's coded centroid; self is excluded, and the shortlist is the top
+    ``width`` rows, or every other row when ``width`` >= N. 600 queries
+    span two 512-query chunks; 40 of them are corpus members."""
+    from projektdataengineering_spark.queries.similarity import _adc_shortlist
+
+    rng = np.random.RandomState(7)
+    m_sub, k, sub, n = 4, 8, 3, 40
+    books = rng.normal(size=(m_sub, k, sub))
+    codes = rng.randint(0, k, size=(n, m_sub))
+    ids_n = np.arange(100, 100 + n, dtype=np.int64)
+    ids_q = np.concatenate([ids_n, np.arange(1000, 1560, dtype=np.int64)])
+    q = rng.normal(size=(len(ids_q), m_sub * sub))
+
+    unit = q / np.linalg.norm(q, axis=1, keepdims=True)
+    ranked = {}
+    for i, qid in enumerate(ids_q):
+        scores = {
+            int(ids_n[j]): sum(
+                unit[i, m * sub : (m + 1) * sub] @ books[m, codes[j, m]] for m in range(m_sub)
+            )
+            for j in range(n)
+            if ids_n[j] != qid
+        }
+        ranked[int(qid)] = sorted(scores, key=lambda j: -scores[j])
+
+    for width in (5, n - 1, n, n + 10):
+        got_q, got_n = _adc_shortlist(q, ids_q, codes, ids_n, books, width)
+        got: dict[int, set[int]] = {}
+        for a, b in zip(got_q.tolist(), got_n.tolist()):
+            got.setdefault(a, set()).add(b)
+        assert len(got_q) == sum(len(v) for v in got.values()), width  # no pair twice
+        assert got == {qid: set(r[:width]) for qid, r in ranked.items()}, width
 
 
 def test_bfs_hops_known_graphs(spark):
@@ -2042,7 +2072,7 @@ def test_ivfpq_distributed_adc_recall_and_shared_encoder(spark, sf_dir, emb_matr
     unit = m / np.linalg.norm(m, axis=1, keepdims=True)
     cents = S._ivf_centroids(
         spark, sf_dir,
-        S._embeddings_normed(spark, sf_dir).select("vec_id", "vec"),
+        S._embeddings(spark, sf_dir),
     )
     dots = unit @ cents.T
     order = np.argsort(-dots, kind="stable", axis=1)
@@ -2055,7 +2085,7 @@ def test_ivfpq_distributed_adc_recall_and_shared_encoder(spark, sf_dir, emb_matr
     # shared-encoder determinism: same matrix → same codes, in range
     books = S._pq_codebooks(
         spark, sf_dir,
-        S._embeddings_normed(spark, sf_dir).select("vec_id", "vec"),
+        S._embeddings(spark, sf_dir),
     )
     c1 = S._pq_encode_np(m.astype(np.float64), books)
     c2 = S._pq_encode_np(m.astype(np.float64), books)
@@ -2137,7 +2167,7 @@ def test_ivfpq_index_append_codes_and_replay(spark, sf_dir):
     assert appended and all(k >= _TWIN_OFFSET for k in appended)
 
     # appended codes ≡ fresh shared-encoder pass over the twin vectors
-    e = S._embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+    e = S._embeddings(spark, sf_dir)
     twins = (
         S._einc_arrival_frame(e)
         .filter(f"vec_id >= {_TWIN_OFFSET}")
@@ -3123,7 +3153,7 @@ def test_ivfpq_cutover_line_serves(spark, sf_dir, emb_matrix, monkeypatch):
         }
 
         # probe the gen-1 line through the shared production kernel
-        e = S._embeddings_normed(spark, sf_dir).select("vec_id", "vec")
+        e = S._embeddings(spark, sf_dir)
         twins = S._einc_arrival_frame(e).filter(
             F.col("vec_id") >= _TWIN_OFFSET
         )

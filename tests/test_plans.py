@@ -268,7 +268,7 @@ PYTHON_KEPT: dict[str, tuple[int, str]] = {
     "sim_cosine_pq": (
         6,
         _ANN_CERT + " + adc: PQ distance tables, no native form (matrix product) "
-        "+ per-query rerank block",
+        "+ _cos_fold on the ADC shortlist",
     ),
     "sim_cosine_ivfpq": (
         6,
@@ -285,6 +285,15 @@ PYTHON_KEPT: dict[str, tuple[int, str]] = {
         "shortlist _cos_fold as in sim_cosine_ivfpq; the exact leg is checkpointed",
     ),
 }
+
+
+def test_pq_rerank_is_the_fold_not_a_grouped_kernel(facts_of):
+    """sim_cosine_pq: the ADC shortlist is re-scored by _pair_cosine's
+    Arrow fold and ranked by a window; no grouped applyInPandas
+    (FlatMapGroupsInPandas) re-rank kernel is planned."""
+    f = facts_of("sim_cosine_pq")
+    assert f.count("FlatMapGroupsInPandas") == 0, f.nodes
+    assert f.count("ArrowEvalPython") == 3, f.nodes  # _cos_fold x2 (exact leg) + shortlist
 
 
 def test_no_query_plans_a_cartesian_product(spark, sf_dir):
